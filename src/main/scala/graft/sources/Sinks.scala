@@ -1,6 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{coalesce, col, concat_ws, lit, nullif}
 
 /** K1 — partitioned parquet sink with idempotent partition rebuild
   * (SURVEY.md §2.2). The reference appends to per-year HDF5 files with
@@ -20,6 +24,34 @@ object Sinks {
       f.delete(): Unit
     }
     rm(new java.io.File(path))
+  }
+
+  private val KeySep = "\u0000"
+  private val NullKey = "\u0001"
+
+  /** A partition tuple as one string key, Spark-side from the partition
+    * columns; [[partitionKeyOf]] builds the same key driver-side from the
+    * values' string forms (the partition column cast to string, or a
+    * directory name's unescaped value). Values are joined with `\u0000`,
+    * so ("a b", "c") and ("a", "b c") stay apart. A null value — and "",
+    * which the partitioned writer files under the same default directory
+    * and reads back as null — keys as `\u0001`, where `concat_ws` alone
+    * would drop it and `String.valueOf` would render "null". */
+  private[graft] def partitionKey(partitionCols: Seq[String]): Column =
+    concat_ws(KeySep, partitionCols.map(c =>
+      coalesce(nullif(col(c).cast("string"), lit("")), lit(NullKey))): _*)
+
+  private[graft] def partitionKeyOf(values: Seq[String]): String =
+    values.map(v => if (v == null || v.isEmpty) NullKey else v).mkString(KeySep)
+
+  /** Eager localCheckpoint that also returns the RDD it persisted, read
+    * from the checkpointed plan's LogicalRDD — not the context's newest
+    * persisted id, which a concurrent caller may own. */
+  private def pin(df: DataFrame): (DataFrame, RDD[_]) = {
+    val out = df.localCheckpoint()
+    val rdd = out.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
+      .getOrElse(sys.error("localCheckpoint plan has no LogicalRDD"))
+    (out, rdd)
   }
 
   /** Rows are clustered by the partition columns before the write: without
@@ -107,53 +139,60 @@ object Sinks {
   def mergeIntoPartitioned(
       path: String, changes: DataFrame, keyCols: Seq[String],
       partitionCols: Seq[String], deleteCol: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions.{col, concat_ws}
     require(keyCols.nonEmpty && partitionCols.nonEmpty,
       "mergeIntoPartitioned needs key and partition columns")
     val spark = changes.sparkSession
     val base = spark.read.parquet(path)
     val pCols = partitionCols.map(col)
-    // changeset partition footprint: where its rows land + where its
-    // keys currently live. Both collects are changeset-bounded (a
-    // changeset touching P partitions yields <= 2P values), never
-    // table-scale; the key-residence probe is itself a pruned-by-nothing
-    // read but only of the partition+key columns (column pruning).
-    val landing = changes.select(pCols: _*).distinct().collect()
-    val residence = base
-      .join(changes.select(keyCols.map(col): _*).distinct(), keyCols, "semi")
-      .select(pCols: _*).distinct().collect()
-    val affected = (landing ++ residence).map(_.toSeq).distinct
-    if (affected.nonEmpty) {
-      val pTuple = concat_ws("\u0000", pCols.map(_.cast("string")): _*)
-      val affectedKeys = affected.map(_.map(String.valueOf).mkString("\u0000"))
-      val inAffected = pTuple.isin(affectedKeys: _*)
-      // pruned base read: only affected partitions' files are opened
-      val pruned = base.where(inAffected)
-      val survivors = pruned.join(
-        changes.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-      val incoming = deleteCol.map(d => changes.where(!col(d)).drop(d))
-        .getOrElse(changes)
-        .select(base.columns.map(col).toIndexedSeq: _*)
-      // materialize before the write: Spark refuses to overwrite a path
-      // its plan is also reading (correctly — commit deletes the files
-      // under the scan). The checkpoint holds only the AFFECTED
-      // partitions' survivors + the changeset, i.e. the changeset's
-      // footprint, never the table; a real lakehouse writes a staging
-      // dir + atomic swap, same bounded intermediate.
-      val out = survivors.unionByName(incoming).localCheckpoint()
-      writePartitioned(out, path, partitionCols)
-      // emptied partitions: affected but absent from the output — their
-      // stale directories survive dynamic overwrite and must go
-      val remaining = out.select(pCols: _*).distinct().collect()
-        .map(_.toSeq.map(String.valueOf).mkString("\u0000")).toSet
-      affected.map(_.map(String.valueOf))
-        .filterNot(v => remaining.contains(v.mkString("\u0000")))
-        .foreach { v =>
-          val dir = partitionCols.zip(v)
-            .map { case (c, x) => s"$c=$x" }.mkString("/")
-          rmrf(s"$path/$dir")
-        }
-    }
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    try {
+      // the changeset is read four times below (landing, residence,
+      // anti-join, incoming): evaluate its plan once
+      val (ch, chRdd) = pin(changes)
+      pinned += chRdd
+      val chKeys = ch.select(keyCols.map(col): _*).distinct()
+      // changeset partition footprint: where its rows land + where its
+      // keys currently live. Both collects are changeset-bounded (a
+      // changeset touching P partitions yields <= 2P values), never
+      // table-scale; the key-residence probe is itself a pruned-by-nothing
+      // read but only of the partition+key columns (column pruning).
+      // Values are collected as strings: Spark's own cast is what both the
+      // key and the writer's directory name are built from.
+      def footprint(df: DataFrame): Array[Seq[String]] =
+        df.select(pCols.map(_.cast("string")): _*).distinct().collect()
+          .map(r => Seq.tabulate(r.length)(r.getString))
+      val affected = (footprint(ch) ++ footprint(base.join(chKeys, keyCols, "semi")))
+        .distinctBy(partitionKeyOf)
+      if (affected.nonEmpty) {
+        val pTuple = partitionKey(partitionCols)
+        // pruned base read: only affected partitions' files are opened
+        val pruned = base.where(pTuple.isin(affected.map(partitionKeyOf): _*))
+        val survivors = pruned.join(chKeys, keyCols, "left_anti")
+        val incoming = deleteCol.map(d => ch.where(!col(d)).drop(d))
+          .getOrElse(ch)
+          .select(base.columns.map(col).toIndexedSeq: _*)
+        // materialize before the write: Spark refuses to overwrite a path
+        // its plan is also reading (correctly — commit deletes the files
+        // under the scan). The checkpoint holds only the AFFECTED
+        // partitions' survivors + the changeset, i.e. the changeset's
+        // footprint, never the table; a real lakehouse writes a staging
+        // dir + atomic swap, same bounded intermediate.
+        val (out, outRdd) = pin(survivors.unionByName(incoming))
+        pinned += outRdd
+        writePartitioned(out, path, partitionCols)
+        // emptied partitions: affected but absent from the output — their
+        // stale directories survive dynamic overwrite and must go
+        val remaining = out.select(pTuple).distinct().collect()
+          .map(_.getString(0)).toSet
+        affected.filterNot(v => remaining.contains(partitionKeyOf(v)))
+          .foreach { v =>
+            val dir = partitionCols.zip(v)
+              .map { case (c, x) => ExternalCatalogUtils.getPartitionPathString(c, x) }
+              .mkString("/")
+            rmrf(s"$path/$dir")
+          }
+      }
+    } finally pinned.foreach(_.unpersist(blocking = false))
   }
 
   /** Per-partition parquet file census of a partitioned table: partition
@@ -196,7 +235,7 @@ object Sinks {
   def compactPartitions(spark: org.apache.spark.sql.SparkSession,
       path: String, partitionCols: Seq[String],
       targetBytes: Long = 128L << 20): Int = {
-    import org.apache.spark.sql.functions.{col, lit, concat_ws, pmod, xxhash64, when, coalesce}
+    import org.apache.spark.sql.functions.{pmod, xxhash64, when}
     val stats = partitionFileStats(path, partitionCols)
     val want = stats.map { case (vals, n, bytes) =>
       vals -> math.max(1L, (bytes + targetBytes - 1) / targetBytes)
@@ -208,28 +247,32 @@ object Sinks {
     else {
       val base = spark.read.parquet(path)
       val dataCols = base.columns.filterNot(partitionCols.contains)
-      val pTuple = concat_ws(" ", partitionCols.map(col(_).cast("string")): _*)
-      val pruned = base.where(pTuple.isin(affected.map(_.mkString(" ")): _*))
+      val pTuple = partitionKey(partitionCols)
+      // directory names → the values the scan reads back
+      val key = affected.map(vals => vals -> partitionKeyOf(vals.map(v =>
+        if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+        else ExternalCatalogUtils.unescapePathName(v)))).toMap
+      val pruned = base.where(pTuple.isin(affected.map(key): _*))
       // per-partition salt: hash the data row into [0, target) — one
       // write task per (partition, salt) after the clustered exchange.
       // The target map is literal CASE arms (partition-count-bounded).
       val targetCol = affected.tail.foldLeft(
-        when(pTuple === affected.head.mkString(" "),
-          lit(want(affected.head)))) { (acc, vals) =>
-        acc.when(pTuple === vals.mkString(" "), lit(want(vals)))
+        when(pTuple === key(affected.head), lit(want(affected.head)))) {
+        (acc, vals) => acc.when(pTuple === key(vals), lit(want(vals)))
       }
       val salted = pruned.withColumn("__salt",
         pmod(xxhash64(dataCols.map(col).toIndexedSeq: _*),
           coalesce(targetCol, lit(1L))))
-      salted
+      // reading and overwriting the same path: stage, write, release
+      val (staged, rdd) = pin(salted
         .repartition((partitionCols :+ "__salt").map(col): _*)
-        .drop("__salt")
-        .localCheckpoint() // reading and overwriting the same path
-        .write
+        .drop("__salt"))
+      try staged.write
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partitionCols: _*)
         .parquet(path)
+      finally rdd.unpersist(blocking = false)
       affected.size
     }
   }

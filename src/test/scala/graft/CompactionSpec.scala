@@ -94,4 +94,31 @@ class CompactionSpec extends SparkSpec {
     assert((2020 to 2022).map(y => files(path, s"yr=$y")).toList == once,
       "second pass rewrote files")
   }
+
+  test("partition values that collide under a space, and a null value") {
+    val path = Scratch.dir("compact_keys")
+    def append(rows: Seq[(Long, String, String)]): Unit =
+      rows.toDF("k", "p1", "p2").coalesce(1)
+        .write.mode("append").partitionBy("p1", "p2").parquet(path)
+    // ("a b", "c") and (null, "x") fragmented; ("a", "b c") compact — the
+    // same "a b c" under a space-joined key
+    (0 until 4).foreach { chunk =>
+      append(Seq.tabulate(5)(i => (chunk * 10L + i, "a b", "c")))
+      append(Seq.tabulate(5)(i => (100 + chunk * 10L + i, null, "x")))
+    }
+    append(Seq.tabulate(5)(i => (200L + i, "a", "b c")))
+    val nullDir = "p1=__HIVE_DEFAULT_PARTITION__/p2=x"
+    assert(files(path, nullDir).size == 4)
+    val compact = files(path, "p1=a/p2=b c")
+    assert(compact.size == 1)
+    val before = spark.read.parquet(path)
+      .select("k", "p1", "p2").as[(Long, String, String)].collect().toSet
+    assert(Sinks.compactPartitions(spark, path, Seq("p1", "p2")) == 2)
+    assert(files(path, "p1=a/p2=b c") == compact,
+      "a partition that only collides under a space was rewritten")
+    assert(files(path, "p1=a b/p2=c").size == 1)
+    assert(files(path, nullDir).size == 1, "the null partition was not compacted")
+    assert(spark.read.parquet(path).select("k", "p1", "p2")
+      .as[(Long, String, String)].collect().toSet == before)
+  }
 }

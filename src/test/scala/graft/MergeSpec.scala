@@ -87,12 +87,13 @@ class MergeSpec extends SparkSpec {
     val path = Scratch.dir("merge_prune")
     writeBase(path)
     // the merge's pruning predicate is an expression over partition
-    // attributes only (concat_ws of the partition tuple) — assert it
+    // attributes only (the shared partition key) — assert it
     // reaches PartitionFilters AND that the executed scan opened only
     // the affected partition's files (numFiles metric; inputFiles would
     // report the unpruned listing by definition)
-    val pTuple = concat_ws(" ", col("yr").cast("string"))
-    val pruned = spark.read.parquet(path).where(pTuple.isin("2021"))
+    val pTuple = Sinks.partitionKey(Seq("yr"))
+    val pruned = spark.read.parquet(path)
+      .where(pTuple.isin(Sinks.partitionKeyOf(Seq("2021"))))
     val qe = pruned.queryExecution
     assert(qe.toRdd.count() == 2)
     val scan = qe.executedPlan.collectLeaves().head
@@ -103,5 +104,48 @@ class MergeSpec extends SparkSpec {
     val want = files(path, "yr=2021").size.toLong
     assert(numFiles.contains(want),
       s"scan read $numFiles files, expected $want (the affected partition)")
+  }
+
+  test("a merge releases every RDD it pinned; results are unchanged") {
+    val path = Scratch.dir("merge_pins")
+    writeBase(path)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // a lazy changeset with a shuffle: evaluated once, then released
+    val changes = Seq((3L, "c2", 33.0, 2021, false), (5L, "e", 50.0, 2022, true))
+      .toDF("k", "v", "amt", "yr", "del").repartition(3)
+    Sinks.mergeIntoPartitioned(path, changes, Seq("k"), Seq("yr"),
+      deleteCol = Some("del"))
+    assert(sc.getPersistentRDDs.keySet == before,
+      s"merge left ${sc.getPersistentRDDs.keySet -- before} persisted")
+    assert(state(path) == Set((1L, "a", 10.0, 2020), (2L, "b", 20.0, 2020),
+      (3L, "c2", 33.0, 2021), (4L, "d", 40.0, 2021)))
+    assert(!new java.io.File(s"$path/yr=2022").exists())
+  }
+
+  test("partition values that collide under a space, and null values") {
+    val path = Scratch.dir("merge_keys")
+    Sinks.writePartitioned(Seq(
+        (1L, "x", "a b", "c"), (2L, "y", "a", "b c"),
+        (3L, "z", null, "n"), (4L, "w", null, "n"), (5L, "v", null, "gone"))
+      .toDF("k", "v", "p1", "p2"), path, Seq("p1", "p2"))
+    val neighbour = files(path, "p1=a/p2=b c")
+    assert(neighbour.nonEmpty)
+    // k=1 updated in place; k=3 updated inside a null partition that also
+    // holds k=4; k=5, the only row of (null, "gone"), deleted
+    val changes = Seq(
+        (1L, "x2", "a b", "c", false), (3L, "z2", null, "n", false),
+        (5L, "v", null, "gone", true))
+      .toDF("k", "v", "p1", "p2", "del")
+    Sinks.mergeIntoPartitioned(path, changes, Seq("k"), Seq("p1", "p2"),
+      deleteCol = Some("del"))
+    val got = spark.read.parquet(path).select("k", "v", "p1", "p2")
+      .as[(Long, String, String, String)].collect().toSet
+    assert(got == Set((1L, "x2", "a b", "c"), (2L, "y", "a", "b c"),
+      (3L, "z2", null, "n"), (4L, "w", null, "n")))
+    assert(files(path, "p1=a/p2=b c") == neighbour,
+      "a partition that only collides under a space was rewritten")
+    assert(!new java.io.File(s"$path/p1=__HIVE_DEFAULT_PARTITION__/p2=gone").exists(),
+      "emptied null partition directory survived")
   }
 }
