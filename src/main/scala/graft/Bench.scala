@@ -165,12 +165,11 @@ object Bench {
     def runPass(tag: String, skip: Set[String]): Seq[(String, Double)] =
       catalog.filterNot(q => skip.contains(q.name)).map { q =>
         val it = timeOne(q, tag)
-        // iterative operators (BFS, label propagation) cache
-        // intermediates the caller can never unpersist; 86 queries of
-        // leaked cache blocks degrade every later query (measured: q67
-        // at 19s in the full run vs 1.8s standalone). Clearing between
-        // queries bills each query its own cost — the clear itself is
-        // outside the timed window.
+        // drop CacheManager entries a query left behind (measured: q67 at
+        // 19s in the full run vs 1.8s standalone) so each query is billed
+        // its own cost — the clear itself is outside the timed window.
+        // It does NOT free `localCheckpoint` blocks; the iterative
+        // operators release their own through `Fixpoint`.
         spark.catalog.clearCache()
         q.name -> it.t
       }

@@ -91,7 +91,7 @@ object GraftExtensions {
     * — for COLUMN-ONLY helpers (pqCodes, assignColumn, hyperplaneSketch)
     * whose signatures carry no session or DataFrame. Safe in this
     * codebase because every session is built with the extension
-    * installed (Bench/Verify/Plans/Profile configs and the shared test
+    * installed (Bench/Verify/Plans configs and the shared test
     * session); in a hypothetical process where the checked session had
     * the extension but the DataFrame's session did not, the failure mode
     * is an unresolved-function ANALYSIS error, never a wrong answer —

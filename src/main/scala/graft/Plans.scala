@@ -14,7 +14,7 @@ object Plans {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      // full parity with the Bench/Verify/Profile session config — the
+      // full parity with the Bench/Verify session config — the
       // captured plans must be generated under the config the bench
       // executes (r09 advice)
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Fixpoint
 
 /** G2 — shortest paths.
   *
@@ -16,97 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Lineage cut for iterative state. `durable = false` →
-    * `localCheckpoint()`: blocks pinned in executor memory — fastest on a
-    * single box, but NOT fault-tolerant (a lost executor loses the blocks
-    * and kills the whole multi-round job). `durable = true` → reliable
-    * `checkpoint()` against the SparkContext checkpoint directory: each
-    * round's state is written to the (distributed) filesystem, so a lost
-    * executor re-reads instead of recomputing 40 rounds of lineage — the
-    * right trade for a long iterative job on a real cluster, at the cost
-    * of one state write per round. Both paths cut lineage eagerly (one
-    * job per round, no geometric plan growth) and produce bit-identical
-    * state ([[GraphClusterPlanSpec]] pins the hash parity). */
-  private def cut(df: DataFrame, durable: Boolean): DataFrame =
-    if (durable) df.checkpoint() else df.localCheckpoint()
-
-  /** [[cut]] for ROUND STATE, with durable-path retention: each tracked
-    * checkpoint supersedes the one from two rounds back, which is
-    * deleted — without this a 40-round durable job accumulates 40 full
-    * state copies in the checkpoint dir (r07 advice/verdict item 5). Two
-    * are kept because the converged loops hand back the PREVIOUS state
-    * when the probe trips. Long-lived checkpoints (the deduped edge set,
-    * re-read by every round) use the untracked [[cut]] and are never
-    * pruned. */
-  private def cut(df: DataFrame, durable: Boolean, ret: Retention)
-      : DataFrame = {
-    val out = cut(df, durable)
-    if (durable) ret.track(out.sparkSession.sparkContext)
-    else ret.trackLocal(out.sparkSession.sparkContext)
-    out
-  }
-
-  /** Per-operator-invocation tracker of superseded durable state
-    * checkpoints. `track()` records the newest `rdd-<id>` dir under the
-    * context's current checkpoint dir (the one the checkpoint that just
-    * materialized wrote — ids are session-monotonic, and the operator's
-    * dir is private to this invocation: `setCheckpointDir` mints a fresh
-    * UUID subdir per call) and deletes everything it tracked beyond the
-    * newest two. Only paths this instance tracked are ever deleted, so
-    * edge/init checkpoints and other operators' state are untouchable. */
-  private final class Retention {
-    private var kept: List[org.apache.hadoop.fs.Path] = Nil // newest first
-    private var keptLocal: List[(Int, org.apache.spark.rdd.RDD[_])] = Nil
-
-    /** Local-mode twin of [[track]]: record the newest persisted RDD —
-      * the `localCheckpoint` that just materialized; ids are context-
-      * monotonic — and unpersist everything THIS instance tracked beyond
-      * the newest two. Without it a k-round loop pins k superseded state
-      * copies in the block manager until the RDD objects happen to be
-      * GC'd — the leaked-blocks pressure the Profile tool's clearCache
-      * note measured (q191: 35 s vs 9 s) and the r09-advice auth-half-
-      * step leak in hitsConverged. Keep-newest-2 is the same invariant
-      * the durable path already enforces by DELETING files, so any plan
-      * that re-read older state would already be broken on durable runs;
-      * frames that ARE re-read later (edge sets, Brandes level frames)
-      * use the untracked [[cut]] and are never unpersisted. */
-    def trackLocal(sc: org.apache.spark.SparkContext): Unit = {
-      if (sys.env.contains("SPARK_GRAFT_NO_LOCAL_RET")) return
-      val newest = sc.getPersistentRDDs.toSeq.sortBy(_._1).lastOption
-      newest.filterNot(n => keptLocal.exists(_._1 == n._1)).foreach { n =>
-        keptLocal = n :: keptLocal
-        keptLocal.drop(2).foreach(_._2.unpersist(false))
-        keptLocal = keptLocal.take(2)
-      }
-    }
-
-    def track(sc: org.apache.spark.SparkContext): Unit =
-      sc.getCheckpointDir.foreach { d =>
-        val dir = new org.apache.hadoop.fs.Path(d)
-        val fs = dir.getFileSystem(sc.hadoopConfiguration)
-        if (fs.exists(dir)) {
-          val newest = fs.listStatus(dir).toSeq
-            .filter(_.getPath.getName.startsWith("rdd-"))
-            .sortBy(_.getPath.getName.stripPrefix("rdd-").toLong)
-            .lastOption.map(_.getPath)
-          newest.filterNot(kept.contains).foreach { p =>
-            kept = p :: kept
-            kept.drop(2).foreach(old => fs.delete(old, true))
-            kept = kept.take(2)
-          }
-        }
-      }
-  }
-
-  /** Run `body` with `checkpointDir` routed to the context (when given),
-    * restoring the PREVIOUS checkpoint-dir setting afterwards — without
-    * this the per-operator override leaks into every later `checkpoint()`
-    * user of the session (r07 advice). Restoration writes the raw
-    * internal value back (reflection on the bytecode-public
-    * `checkpointDir_$eq` setter): re-calling `setCheckpointDir` would
-    * mint a fresh UUID subdir instead of the original one. The eager
-    * per-round checkpoints have all materialized before `body` returns,
-    * so restoring immediately is safe for the returned lazy frame. */
   /** Planning regime per loop (r09, measured both ways at sf0.1 AND at
     * the 10× sf1 probe): with the DEFAULT (checkpointed-RDD) edge path,
     * AQE must stay ON — its runtime small-side broadcast conversion is
@@ -123,39 +33,18 @@ object Graph {
     * (the 10× probe, 5.9 M edges) adaptive wins (q232-composed probe
     * 48.6 s adaptive vs 103.5 s static — coalescing and runtime
     * broadcasts matter again once the per-round stages carry real
-    * data). Threshold `spark.graft.iterative.staticMaxBytes` (default
-    * 32 MB ≈ 1 MB/bucket at 32 buckets) sits between the two measured
-    * points; above it — including any cluster-scale table — rounds
-    * plan adaptively. */
+    * data). The 32 MB threshold (≈ 1 MB/bucket at 32 buckets) sits
+    * between the two measured points; above it — including any
+    * cluster-scale table — rounds plan adaptively. */
   private def withStaticLoop[T](df: DataFrame, prepared: Boolean)
       (body: => T): T = {
     val static = prepared && {
-      val cap = BigInt(df.sparkSession.conf
-        .get("spark.graft.iterative.staticMaxBytes", (32L << 20).toString))
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes <= cap
+      try df.queryExecution.optimizedPlan.stats.sizeInBytes <= (32L << 20)
       catch { case _: Throwable => false }
     }
     if (static)
       graft.operators.IterPlan.withLoopPlanning(df.sparkSession)(body)
     else body
-  }
-
-  private def withDurable[T](df: DataFrame, dir: Option[String])
-      (body: Boolean => T): T = {
-    val sc = df.sparkSession.sparkContext
-    if (dir.isEmpty) body(false)
-    else {
-      val saved = sc.getCheckpointDir
-      sc.setCheckpointDir(dir.get)
-      try body(true)
-      finally {
-        val setter = sc.getClass.getMethods
-          .find(_.getName == "checkpointDir_$eq")
-          .getOrElse(throw new NoSuchMethodException(
-            "SparkContext.checkpointDir_$eq"))
-        setter.invoke(sc, saved): Unit
-      }
-    }
   }
 
   /** Dense APSP with predecessor matrix. Infinity = Double.MaxValue/4. */
@@ -226,7 +115,7 @@ object Graph {
                edgesPrepared: Boolean = false): DataFrame = {
     require(iterations >= 1, "pageRank needs at least one iteration")
     withStaticLoop(edges, edgesPrepared) {
-    withDurable(edges, checkpointDir) { durable =>
+    Fixpoint.run(edges, checkpointDir) { s =>
     // The contributions join hits `e` on src every round. Two ways to pay
     // for that, A/B-measured at sf0.1 local[32] (r06, per-round times):
     //  - materialized-RDD checkpoint (this code): each round re-shuffles
@@ -251,17 +140,9 @@ object Graph {
     // reintroduce the per-round edge exchange. GraphClusterPlanSpec locks
     // the zero-edge-side-exchange plan and the hash parity of both paths;
     // q179 runs the bucketed variant under the driver's oracle gate.
-    val e =
-      if (edgesPrepared) edges.select(col("src"), col("dst"))
-      else cut(edges.select(col("src"), col("dst")).distinct(), durable)
-    val ret = new Retention
-    var state = cut(prInit(e), durable, ret)
-    var it = 0
-    while (it < iterations) {
-      state = cut(prRound(state, e, damping, teleport), durable, ret)
-      it += 1
-    }
-    state.select(col("node"), col("rank"))
+    val e = prepEdges(s, edges, edgesPrepared)
+    s.iterate(prInit(e), iterations)((st, _) => prRound(st, e, damping, teleport))
+      .select(col("node"), col("rank"))
     }
     }
   }
@@ -285,6 +166,26 @@ object Graph {
         round(lit(1.0) / col("n"), 12).as("rank"))
   }
 
+  /** SHUFFLE_HASH hints for the node-scale sides of the per-round joins.
+    * The planner sees
+    * checkpointed-RDD state with unknown (defaultSizeInBytes) stats, so
+    * without the hint each round either sort-merges (static planning —
+    * the r09-measured 5× task blowup) or AQE re-plans the join at
+    * runtime, typically into a per-round BROADCAST whose build (collect
+    * to driver + rebroadcast) is pure driver latency paid every round.
+    * The hint fixes the STRATEGY at plan time without faking stats:
+    * shuffled-hash is the plan these joins get at any volume — node-
+    * scale state cannot broadcast at 100 TB, hash-building the state/
+    * aggregate side per partition is exactly the regime the r09 session
+    * conf (maxShuffledHashJoinLocalMapThreshold=256m) already opted
+    * into at runtime — and AQE stays ON for skew splitting and
+    * coalescing. Same-session A/B (stop readouts identical):
+    * q182 shape 22.5 → 13.5 s at sf0.1 AND 82.3 → 58.0 s at the 10×
+    * probe volume, so the win is volume-robust, unlike the measured
+    * fixed-partition-count variants which invert at 10×. Hints never
+    * change results — planning only. */
+  private def shjHint(df: DataFrame): DataFrame = df.hint("shuffle_hash")
+
   /** One PageRank round over (node, outdeg, n, rank) state — the plan a
     * cluster pays `iterations` times: one state⋈edges join on src (edge
     * side exchange-free when e is bucketed by src), one dst aggregation,
@@ -300,30 +201,6 @@ object Graph {
     * state instead of a full aggregation job per round (r07 verdict
     * item 7: halves per-round driver actions). The output re-carries
     * `__prev := input rank` for the next round's delta. */
-  /** SHUFFLE_HASH hints for the node-scale sides of the per-round joins
-    * (`spark.graft.iterative.shjHints`, default ON). The planner sees
-    * checkpointed-RDD state with unknown (defaultSizeInBytes) stats, so
-    * without the hint each round either sort-merges (static planning —
-    * the r09-measured 5× task blowup) or AQE re-plans the join at
-    * runtime, typically into a per-round BROADCAST whose build (collect
-    * to driver + rebroadcast) is pure driver latency paid every round.
-    * The hint fixes the STRATEGY at plan time without faking stats:
-    * shuffled-hash is the plan these joins get at any volume — node-
-    * scale state cannot broadcast at 100 TB, hash-building the state/
-    * aggregate side per partition is exactly the regime the r09 session
-    * conf (maxShuffledHashJoinLocalMapThreshold=256m) already opted
-    * into at runtime — and AQE stays ON for skew splitting and
-    * coalescing. LoopLab A/B (same session, stop readouts identical):
-    * q182 shape 22.5 → 13.5 s at sf0.1 AND 82.3 → 58.0 s at the 10×
-    * probe volume, so the win is volume-robust, unlike the measured
-    * fixed-partition-count variants which invert at 10×. Hints never
-    * change results — planning only. */
-  private def shjHint(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf
-        .get("spark.graft.iterative.shjHints", "true").toBoolean)
-      df.hint("shuffle_hash")
-    else df
-
   private[graft] def prRound(state0: DataFrame, e: DataFrame,
                              damping: Double, teleport: Double,
                              trackDelta: Boolean = false): DataFrame = {
@@ -389,64 +266,29 @@ object Graph {
                         edgesPrepared: Boolean = false): DataFrame = {
     require(tol > 0 && maxIter >= 1, "need tol > 0 and maxIter >= 1")
     withStaticLoop(edges, edgesPrepared) {
-    withDurable(edges, checkpointDir) { durable =>
-    val e =
-      if (edgesPrepared) edges.select(col("src"), col("dst"))
-      else cut(edges.select(col("src"), col("dst")).distinct(), durable)
+    Fixpoint.run(edges, checkpointDir) { s =>
+    val e = prepEdges(s, edges, edgesPrepared)
     val init = prInit(e).withColumn("__prev", lit(null).cast("double"))
-    val (state, iters, delta) = probeLoop(init, durable, tol, maxIter,
-      s => prRound(s, e, damping, teleport, trackDelta = true))
+    val (state, iters, delta) = s.probe(init, tol, maxIter, rankDelta)(
+      st => prRound(st, e, damping, teleport, trackDelta = true))
     state.select(col("node"), col("rank"),
       lit(iters).as("iters"), round(lit(delta), 12).as("l1_delta"))
     }
     }
   }
 
-  /** The shared converged-iteration driver: run `round` (which must emit
-    * a broadcast `__delta` column — null on the first round) until the
-    * probed delta drops below `tol` or `maxIter` rounds, returning
-    * (final state, rounds run, final delta). When round k+1's probe
-    * shows Δ_k < tol the PREVIOUS state (round k) is returned — the
-    * same state the eager-check loop would return. If `maxIter` caps
-    * the loop instead, the final delta needs the one direct aggregate
-    * the probe never ran. */
-  private def probeLoop(init: DataFrame, durable: Boolean, tol: Double,
-                        maxIter: Int, round: DataFrame => DataFrame,
-                        capDelta: DataFrame => Double = st =>
-                          st.agg(deltaExpr(col("rank"), col("__prev")))
-                            .head().getDouble(0))
-      : (DataFrame, Int, Double) = {
-    val ret = new Retention
-    var state = cut(init, durable, ret)
-    var it = 0
-    var result: DataFrame = null
-    var delta = Double.NaN
-    while (result == null && it < maxIter) {
-      val next = cut(round(state), durable, ret)
-      // limit-1 probe of the just-checkpointed state; a state with NO
-      // ROWS (e.g. SSSP with zero matching seeds) is its own fixed
-      // point — probe it as converged-at-zero instead of head()-ing an
-      // empty frame
-      val probed: Any = next.select(col("__delta")).take(1) match {
-        case Array(row) => row.get(0)
-        case _ => java.lang.Double.valueOf(0.0)
-      }
-      if (probed != null && probed.asInstanceOf[Double] < tol) {
-        delta = probed.asInstanceOf[Double]
-        result = state
-      } else {
-        state = next
-        it += 1
-      }
-    }
-    if (result == null) {
-      // maxIter cap: the final round's delta was never probed (it would
-      // ride the round after) — one direct aggregate over the final state
-      delta = capDelta(state)
-      result = state
-    }
-    (result, it, delta)
-  }
+  /** Final L1 rank delta of a state the [[Fixpoint.Scope.probe]] cap
+    * stopped: one direct aggregate of the carried `__prev`. */
+  private def rankDelta(st: DataFrame): Double =
+    st.agg(deltaExpr(col("rank"), col("__prev"))).head().getDouble(0)
+
+  /** The deduped (src, dst) edge set the rank rounds re-read, pinned for
+    * the scope. A prepared edge frame is used as given: a distinct or a
+    * cut would destroy the bucketed scan's output partitioning. */
+  private def prepEdges(s: Fixpoint.Scope, edges: DataFrame,
+                        edgesPrepared: Boolean): DataFrame =
+    if (edgesPrepared) edges.select(col("src"), col("dst"))
+    else s.cut(edges.select(col("src"), col("dst")).distinct())
 
   /** HITS hubs and authorities (Kleinberg, JACM 1999) — the
     * query-dependent companion to [[pageRank]]: on a bipartite
@@ -472,7 +314,7 @@ object Graph {
            edgesByDst: Option[DataFrame] = None): DataFrame = {
     require(iterations >= 1, "hits needs at least one iteration")
     withStaticLoop(edges, edgesPrepared) {
-    withDurable(edges, checkpointDir) { durable =>
+    Fixpoint.run(edges, checkpointDir) { s =>
     // HITS joins edges on src (auth half-step) AND on dst (hub
     // half-step), so the cluster layout that zeroes per-round edge
     // movement is TWO one-time bucketed copies of the same deduped edge
@@ -481,22 +323,16 @@ object Graph {
     // the per-round edge traffic. GraphClusterPlanSpec locks both
     // half-step plans edge-exchange-free and the hash parity vs the
     // default path.
-    val (e, eDst) = hitsEdges(edges, edgesByDst, edgesPrepared, durable)
-    val ret = new Retention
-    var state = cut(hitsInit(e), durable, ret)
-    var it = 0
-    while (it < iterations) {
-      // one cut PER HALF-STEP is deliberate: each half-step references
-      // its input state twice (the contribution join and the score
-      // re-attach), so an un-checkpointed auth output would have its
-      // whole subtree re-executed in both branches of the hub step's
-      // diamond — fusing the two cuts was tried in r09 and DOUBLED the
-      // round's task time (q134 run_ms 65k → 135-178k); reverted.
-      val afterAuth = cut(hitsAuthStep(state, e), durable, ret)
-      state = cut(hitsHubStep(afterAuth, eDst), durable, ret)
-      it += 1
+    val (e, eDst) = hitsEdges(s, edges, edgesByDst, edgesPrepared)
+    // one cut PER HALF-STEP is deliberate: each half-step references its
+    // input state twice (the contribution join and the score re-attach),
+    // so an un-checkpointed auth output would have its whole subtree
+    // re-executed in both branches of the hub step's diamond — fusing the
+    // two cuts was tried in r09 and DOUBLED the round's task time (q134
+    // run_ms 65k → 135-178k); reverted.
+    s.iterate(hitsInit(e), iterations) { (st, _) =>
+      hitsHubStep(s.round(hitsAuthStep(st, e), "auth"), eDst)
     }
-    state
     }
     }
   }
@@ -507,14 +343,11 @@ object Graph {
     * the src side was deduped (r07 advice). Prepared callers own dedup
     * for both copies (a distinct here would destroy the bucketed scan's
     * output partitioning). */
-  private def hitsEdges(edges: DataFrame, edgesByDst: Option[DataFrame],
-                        edgesPrepared: Boolean, durable: Boolean)
+  private def hitsEdges(s: Fixpoint.Scope, edges: DataFrame,
+                        edgesByDst: Option[DataFrame], edgesPrepared: Boolean)
       : (DataFrame, DataFrame) = {
-    val prep = (d: DataFrame) =>
-      if (edgesPrepared) d.select(col("src"), col("dst"))
-      else cut(d.select(col("src"), col("dst")).distinct(), durable)
-    val e = prep(edges)
-    (e, edgesByDst.map(prep).getOrElse(e))
+    val e = prepEdges(s, edges, edgesPrepared)
+    (e, edgesByDst.map(prepEdges(s, _, edgesPrepared)).getOrElse(e))
   }
 
   /** HITS state init: every node at hub = auth = 1/n. */
@@ -547,8 +380,8 @@ object Graph {
                     edgesByDst: Option[DataFrame] = None): DataFrame = {
     require(tol > 0 && maxIter >= 1, "need tol > 0 and maxIter >= 1")
     withStaticLoop(edges, edgesPrepared) {
-    withDurable(edges, checkpointDir) { durable =>
-    val (e, eDst) = hitsEdges(edges, edgesByDst, edgesPrepared, durable)
+    Fixpoint.run(edges, checkpointDir) { s =>
+    val (e, eDst) = hitsEdges(s, edges, edgesByDst, edgesPrepared)
     import graft.operators.Guards
     val init = hitsInit(e)
       .withColumn("__phub", lit(null).cast("double"))
@@ -559,24 +392,23 @@ object Graph {
     // the auth half-step output is re-referenced twice by the hub
     // half-step (contribution join + score re-attach) — cut it per round
     // or the whole auth subtree re-executes in both branches (the q134
-    // diamond, r09: fused round ran at 2× the task time). Own retention
-    // so durable runs keep O(1) auth states.
-    val authRet = new Retention
-    val (state, iters, delta) = probeLoop(init, durable, tol, maxIter, s => {
+    // diamond, r09: fused round ran at 2× the task time). Its own series,
+    // so it keeps O(1) auth states.
+    val (state, iters, delta) = s.probe(init, tol, maxIter,
+        st => hitsDelta(st).head().getDouble(0)) { st =>
       // the iteration's delta (vs the carried previous scores) is ONE
       // one-row aggregate broadcast onto the new state — inside the
       // round's job, not a separate driver action
-      val dAgg = hitsDelta(s).withColumn("__k", Guards.constKey(col("__delta")))
-      // s may still carry last round's broadcast __delta; rebuild the
+      val dAgg = hitsDelta(st).withColumn("__k", Guards.constKey(col("__delta")))
+      // st may still carry last round's broadcast __delta; rebuild the
       // carry from scratch so this round's broadcast is the only one
-      val carried = s.select(col("node"), col("hub"), col("auth"),
+      val carried = st.select(col("node"), col("hub"), col("auth"),
         col("hub").as("__phub"), col("auth").as("__pauth"))
-      val afterAuth = cut(hitsAuthStep(carried, e), durable, authRet)
-      hitsHubStep(afterAuth, eDst)
+      hitsHubStep(s.round(hitsAuthStep(carried, e), "auth"), eDst)
         .withColumn("__k", Guards.constKey(col("node")))
         .join(broadcast(dAgg), "__k")
         .drop("__k")
-    }, capDelta = st => hitsDelta(st).head().getDouble(0))
+    }
     state.select(col("node"), col("hub"), col("auth"),
       lit(iters).as("iters"), round(lit(delta), 12).as("l1_delta"))
     }
@@ -647,22 +479,19 @@ object Graph {
   def bfsHops(edges: DataFrame, maxHops: Int,
               checkpointDir: Option[String] = None): DataFrame = {
     // edges: (src, dst)
-    withDurable(edges, checkpointDir) { durable =>
-    val ret = new Retention
-    var known = cut(edges.select(col("src"), col("dst"), lit(1L).as("hops"))
-      .groupBy("src", "dst").agg(min("hops").as("hops")), durable, ret)
-    var reach = 1L
-    while (reach < maxHops) {
+    Fixpoint.run(edges, checkpointDir) { s =>
+    // ceil(log2(maxHops)) doublings reach maxHops
+    val rounds = Iterator.iterate(1L)(_ * 2).takeWhile(_ < maxHops).size
+    s.iterate(edges.select(col("src"), col("dst"), lit(1L).as("hops"))
+        .groupBy("src", "dst").agg(min("hops").as("hops")), rounds) { (known, _) =>
       val doubled = known.alias("a")
         .join(known.alias("b"), col("a.dst") === col("b.src"))
         .select(col("a.src").as("src"), col("b.dst").as("dst"),
           (col("a.hops") + col("b.hops")).as("hops"))
-      known = cut(known.unionByName(doubled)
+      known.unionByName(doubled)
         .groupBy("src", "dst").agg(min("hops").as("hops"))
-        .where(col("hops") <= maxHops), durable, ret)
-      reach *= 2
+        .where(col("hops") <= maxHops)
     }
-    known
     }
   }
 
@@ -688,20 +517,14 @@ object Graph {
                            checkpointDir: Option[String] = None,
                            edgesPrepared: Boolean = false): DataFrame = {
     require(iterations >= 1, "personalizedPageRank needs at least one iteration")
-    withDurable(edges, checkpointDir) { durable =>
-    val e =
-      if (edgesPrepared) edges.select(col("src"), col("dst"))
-      else cut(edges.select(col("src"), col("dst")).distinct(), durable)
-    val ret = new Retention
-    var state = cut(pprInit(e, isSource), durable, ret)
-    require(state.where(col("p") > 0).limit(1).count() == 1L,
-      "personalizedPageRank: the source predicate matched no node")
-    var it = 0
-    while (it < iterations) {
-      state = cut(pprRound(state, e, damping, teleport), durable, ret)
-      it += 1
-    }
-    state.select(col("node"), col("rank"))
+    Fixpoint.run(edges, checkpointDir) { s =>
+    val e = prepEdges(s, edges, edgesPrepared)
+    s.iterate(pprInit(e, isSource), iterations) { (st, i) =>
+      // the seed check reads the pinned init state, before round one
+      if (i == 0) require(st.where(col("p") > 0).limit(1).count() == 1L,
+        "personalizedPageRank: the source predicate matched no node")
+      pprRound(st, e, damping, teleport)
+    }.select(col("node"), col("rank"))
     }
   }
 
@@ -773,10 +596,8 @@ object Graph {
                                     edgesPrepared: Boolean = false)
       : DataFrame = {
     require(tol > 0 && maxIter >= 1, "need tol > 0 and maxIter >= 1")
-    withDurable(edges, checkpointDir) { durable =>
-    val e =
-      if (edgesPrepared) edges.select(col("src"), col("dst"))
-      else cut(edges.select(col("src"), col("dst")).distinct(), durable)
+    Fixpoint.run(edges, checkpointDir) { s =>
+    val e = prepEdges(s, edges, edgesPrepared)
     val init = pprInit(e, isSource)
       .withColumn("__prev", lit(null).cast("double"))
     // seed-presence guard as limit-1 probes of the edge frame — the old
@@ -788,11 +609,21 @@ object Graph {
       .where(isSource(col("node"))).limit(1).count() == 1L
     require(hasSeed("src") || hasSeed("dst"),
       "personalizedPageRankConverged: the source predicate matched no node")
-    val (state, iters, delta) = probeLoop(init, durable, tol, maxIter,
-      s => pprRound(s, e, damping, teleport, trackDelta = true))
+    val (state, iters, delta) = s.probe(init, tol, maxIter, rankDelta)(
+      st => pprRound(st, e, damping, teleport, trackDelta = true))
     state.select(col("node"), col("rank"),
       lit(iters).as("iters"), round(lit(delta), 12).as("l1_delta"))
     }
+  }
+
+  /** The undirected neighbor list (both directions, no self-loops,
+    * deduped) the LPA, k-core and random-walk rounds re-read, pinned for
+    * the scope. */
+  private def undirected(s: Fixpoint.Scope, edges: DataFrame): DataFrame = {
+    val e = edges.select(col("src"), col("dst"))
+    s.cut(e.select(col("src").as("a"), col("dst").as("b"))
+      .unionByName(e.select(col("dst").as("a"), col("src").as("b")))
+      .where(col("a") =!= col("b")).distinct())
   }
 
   /** One synchronous label-propagation round (Raghavan et al. 2007, the
@@ -805,7 +636,7 @@ object Graph {
     * input carries `__prev` (last round's label, null on round one) and
     * the number of nodes whose label CHANGED in the transition the
     * input represents rides a one-row broadcast as `__delta`, making
-    * the [[probeLoop]] stop (changed = 0 ⟺ delta < 0.5) a limit-1
+    * the [[Fixpoint.Scope.probe]] stop (changed = 0 ⟺ delta < 0.5) a limit-1
     * probe. Edges must be an UNDIRECTED neighbor list (both directions
     * present), as [[labelPropagationConverged]] prepares. */
   private[graft] def lpaRound(state0: DataFrame, und: DataFrame,
@@ -874,21 +705,16 @@ object Graph {
                                 checkpointDir: Option[String] = None)
       : DataFrame = {
     require(maxIter >= 1, "labelPropagationConverged needs maxIter >= 1")
-    withDurable(edges, checkpointDir) { durable =>
-    val e = edges.select(col("src"), col("dst"))
-    val und = cut(
-      e.select(col("src").as("a"), col("dst").as("b"))
-        .unionByName(e.select(col("dst").as("a"), col("src").as("b")))
-        .where(col("a") =!= col("b")).distinct(), durable)
+    Fixpoint.run(edges, checkpointDir) { s =>
+    val und = undirected(s, edges)
     val init = und.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("lab"),
         lit(null).cast("string").as("__prev"))
     // changed = 0 stops; tol 0.5 on the integer-valued change count
-    val (state, iters, changed) = probeLoop(init, durable, 0.5, maxIter,
-      s => lpaRound(s, und, trackDelta = true),
-      capDelta = st => st.agg(
+    val (state, iters, changed) = s.probe(init, 0.5, maxIter,
+      st => st.agg(
         sum((col("lab") =!= col("__prev")).cast("long")).cast("double"))
-        .head().getDouble(0))
+        .head().getDouble(0))(st => lpaRound(st, und, trackDelta = true))
     state.select(col("node"), col("lab").as("label"),
       lit(iters).as("iters"), lit(changed).cast("long").as("changed"))
     }
@@ -914,16 +740,17 @@ object Graph {
     * (u,v,w) credits all three vertices via a 3-row explode; the final
     * count is an integer groupBy. Returns (node, triangles), nodes with
     * ≥1 triangle only. */
-  def triangleCount(edges: DataFrame): DataFrame = {
+  def triangleCount(edges: DataFrame): DataFrame =
+    Fixpoint.run(edges, None) { s =>
     // und feeds the degree census (two endpoint projections) and the
     // orientation join, and `oriented` feeds both wedge sides plus the
     // closure lookup — without explicit cuts the (typically expensive)
     // edge-construction subtree re-executes per branch (measured 44 s →
     // 13 s at sf0.1 from these two lines)
-    val und = edges.select(
+    val und = s.cut(edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct().localCheckpoint()
+      .where(col("a") =!= col("b")).distinct())
     val deg = und.select(col("a").as("node"))
       .unionByName(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -934,11 +761,10 @@ object Graph {
       .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val oriented = withDeg.select(
+    val oriented = s.cut(withDeg.select(
       when(aFirst, col("a")).otherwise(col("b")).as("u"),
       when(aFirst, col("b")).otherwise(col("a")).as("v"),
-      when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-      .localCheckpoint()
+      when(aFirst, col("db")).otherwise(col("da")).as("dv")))
     // wedges from the center u: unordered neighbor pairs, ordered by the
     // SAME (deg, id) total order so the closing edge is looked up in its
     // oriented direction
@@ -952,7 +778,7 @@ object Graph {
     triangles
       .select(explode(array(col("u"), col("x"), col("y"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("triangles"))
-  }
+    }
 
   /** k-core: the maximal subgraph where every member has ≥ k neighbors
     * INSIDE the subgraph (Seidman 1983; Batagelj-Zaveršnik peeling) —
@@ -967,7 +793,7 @@ object Graph {
     * round shape, and at 100 TB the same src-bucketed edge layout makes
     * the edge side exchange-free.
     *
-    * The kill census rides the round's one-row broadcast ([[probeLoop]]
+    * The kill census rides the round's one-row broadcast ([[Fixpoint.Scope.probe]]
     * transport): zero kills stops the loop as a limit-1 probe. Because
     * peeling is monotone, the capped run equals the gated run wherever
     * maxIter ≥ peel depth, and the oracle can unroll rounds UNGATED —
@@ -979,12 +805,8 @@ object Graph {
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 30,
             checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1 && maxIter >= 1, "kCore needs k >= 1 and maxIter >= 1")
-    withDurable(edges, checkpointDir) { durable =>
-    val e = edges.select(col("src"), col("dst"))
-    val und = cut(
-      e.select(col("src").as("a"), col("dst").as("b"))
-        .unionByName(e.select(col("dst").as("a"), col("src").as("b")))
-        .where(col("a") =!= col("b")).distinct(), durable)
+    Fixpoint.run(edges, checkpointDir) { s =>
+    val und = undirected(s, edges)
     // state carries the MAINTAINED live-degree (r10, verdict item 7):
     // init = full degree (every und node appears as `a` — both edge
     // directions are present), each round then only DECREMENTS by the
@@ -994,11 +816,10 @@ object Graph {
       .agg(count(lit(1)).as("deg"))
       .select(col("node"), lit(true).as("alive"), col("deg"),
         lit(null).cast("boolean").as("__prev"))
-    val (state, iters, _) = probeLoop(init, durable, 0.5, maxIter,
-      s => kcoreRound(s, und, k),
-      capDelta = st => st.agg(
+    val (state, iters, _) = s.probe(init, 0.5, maxIter,
+      st => st.agg(
         sum((col("alive") =!= col("__prev")).cast("long")).cast("double"))
-        .head().getDouble(0))
+        .head().getDouble(0))(st => kcoreRound(st, und, k))
     val core = state.where(col("alive")).select(col("node"))
     val coreDeg = und
       .join(core.withColumnRenamed("node", "a"), "a")
@@ -1069,7 +890,7 @@ object Graph {
     * rounds UNGATED (the [[kCore]] treatment). The stop is probed: the
     * change census (newly-reached + strictly-improved rows) rides each
     * round's one-row broadcast and the loop stops when a transition
-    * changed nothing, via the shared [[probeLoop]] transport —
+    * changed nothing, via the shared [[Fixpoint.Scope.probe]] transport —
     * `iters` = 1 + the number of state-changing transitions.
     *
     * `isSource` must be an engine-portable predicate over the node id.
@@ -1079,17 +900,16 @@ object Graph {
   def sssp(edges: DataFrame, isSource: Column => Column, maxIter: Int = 30,
            checkpointDir: Option[String] = None): DataFrame = {
     require(maxIter >= 1, "sssp needs maxIter >= 1")
-    withDurable(edges, checkpointDir) { durable =>
-    val e = cut(edges.select(col("src"), col("dst"),
-      col("w").cast("long").as("w")), durable)
+    Fixpoint.run(edges, checkpointDir) { s =>
+    val e = s.cut(edges.select(col("src"), col("dst"),
+      col("w").cast("long").as("w")))
     val init = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
       .where(isSource(col("node")))
       .select(col("node"), lit(0L).as("dist"),
         lit(null).cast("long").as("__prev"))
-    val (state, iters, _) = probeLoop(init, durable, 0.5, maxIter,
-      s => ssspRound(s, e),
-      capDelta = st => st.agg(ssspCensus(st)).head().getDouble(0))
+    val (state, iters, _) = s.probe(init, 0.5, maxIter,
+      st => st.agg(ssspCensus(st)).head().getDouble(0))(ssspRound(_, e))
     state.select(col("node"), col("dist"), lit(iters).as("iters"))
     }
   }
@@ -1176,30 +996,24 @@ object Graph {
                          edgesByDst: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 2, "betweennessSampled needs maxHops >= 2")
     withStaticLoop(edges, edgesPrepared) {
-    withDurable(edges, checkpointDir) { durable =>
+    Fixpoint.run(edges, checkpointDir) { s =>
     // forward expands through e on src, backward pushes dependency back
     // through eDst on dst — the HITS dual-copy cluster layout applies
     // verbatim ([[hitsEdges]]: pass src- and dst-bucketed copies with
     // edgesPrepared = true and both phases are edge-exchange-free)
-    val (e, eDst) = hitsEdges(edges, edgesByDst, edgesPrepared, durable)
-    val ret = new Retention
-    var settled = cut(
-      e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node"))).distinct()
-        .where(isSource(col("node")))
-        .select(col("node").as("seed"), col("node"),
-          lit(0).as("hop"), lit(1L).as("sigma")), durable, ret)
-    var h = 0
-    var growing = true
-    while (growing && h < maxHops) {
-      settled = cut(settled.unionByName(
-        betwForwardRound(settled, e, h)), durable, ret)
-      growing = settled.where(col("hop") === h + 1).limit(1).count() > 0
-      h += 1
-    }
-    // deepest populated hop: when the loop stopped on `growing`, round
-    // h's expansion found nothing, so hop h is empty
-    val deepest = if (growing) h else h - 1
+    val (e, eDst) = hitsEdges(s, edges, edgesByDst, edgesPrepared)
+    val seeds = e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct()
+      .where(isSource(col("node")))
+      .select(col("node").as("seed"), col("node"),
+        lit(0).as("hop"), lit(1L).as("sigma"))
+    // round r settles hop r: stop at the first round that settled nothing
+    val (settled, rounds, emptied) = s.until(seeds, maxHops) { (st, h) =>
+      st.unionByName(betwForwardRound(st, e, h))
+    } { (st, r) => r > 0 && st.where(col("hop") === r).limit(1).count() == 0 }
+    // deepest populated hop: when the loop stopped on an empty hop, round
+    // `rounds`'s expansion found nothing, so that hop is empty
+    val deepest = if (emptied) rounds - 1 else rounds
     // Backward accumulation on PER-LEVEL frames (r09): hop h's δ depends
     // only on hop h+1's FINAL δ and the hop-h settled rows, so each level
     // is one join + one aggregation over LEVEL-sized frames — the old
@@ -1210,23 +1024,22 @@ object Graph {
     // replays the same recurrence); only which rows ride each checkpoint
     // differs. Levels above deepest−1 stay structural no-ops and are
     // still skipped on the engine side.
-    // Level frames are UNTRACKED cuts (r10, advice item 1): every level
+    // Level frames are long-lived cuts (r10, advice item 1): every level
     // is re-read by the FINAL union after later levels checkpoint, and
     // `settled` itself is re-sliced per level — the keep-newest-2
-    // retention invariant does not hold for either, so tracking them
-    // (as r09 did) had a durable run with deepest >= 3 deleting the
-    // settled checkpoint (and all but two levels) out from under the
-    // final aggregate. Untracked frames are bounded by maxHops per
+    // round-state invariant does not hold for either, so treating them
+    // as round state (as r09 did) had a durable run with deepest >= 3
+    // deleting the settled checkpoint (and all but two levels) out from
+    // under the final aggregate. Level frames are bounded by maxHops per
     // invocation — the same boundedness argument as the edge set.
     val levels = scala.collection.mutable.Map.empty[Int, DataFrame]
     if (deepest >= 1) {
-      levels(deepest) = cut(settled.where(col("hop") === deepest)
-        .withColumn("delta", lit(0.0)), durable)
+      levels(deepest) = s.cut(settled.where(col("hop") === deepest)
+        .withColumn("delta", lit(0.0)))
       var lv = math.min(maxHops - 1, deepest - 1)
       while (lv >= 1) {
-        levels(lv) = cut(betwBackwardLevelFrames(
-          settled.where(col("hop") === lv), levels(lv + 1), eDst),
-          durable)
+        levels(lv) = s.cut(betwBackwardLevelFrames(
+          settled.where(col("hop") === lv), levels(lv + 1), eDst))
         lv -= 1
       }
     }
@@ -1279,15 +1092,13 @@ object Graph {
                            checkpointDir: Option[String] = None)
       : DataFrame = {
     require(k >= 2 && maxHops >= 1, "need k >= 2 and maxHops >= 1")
-    withDurable(edges, checkpointDir) { durable =>
-    val e = cut(edges.select(col("src"), col("dst")).distinct(), durable)
-    val ret = new Retention
-    var state = cut(
+    Fixpoint.run(edges, checkpointDir) { s =>
+    val e = s.cut(edges.select(col("src"), col("dst")).distinct())
+    var state = s.round(
       e.select(col("src").as("node"))
         .unionByName(e.select(col("dst").as("node"))).distinct()
         .select(col("node"), array(graft.functions.Text
-          .md5Hash64(col("node").cast("string"), seed)).as("kmv")),
-      durable, ret)
+          .md5Hash64(col("node").cast("string"), seed)).as("kmv")))
     // (k−1)·2^60 as ONE exact literal — both engines parse the same
     // constant instead of re-deriving it in their own literal types
     val scaleC = (k - 1).toDouble * 1.152921504606846976e18
@@ -1311,16 +1122,15 @@ object Graph {
         if (graft.GraftExtensions.has(edges.sparkSession, "graft_bottomk"))
           call_function("graft_bottomk", col("h"), lit(k))
         else slice(array_sort(collect_set(col("h"))), 1, k)
-      state = cut(hashes.groupBy("node").agg(bottomK.as("kmv")),
-        durable, ret)
+      state = s.round(hashes.groupBy("node").agg(bottomK.as("kmv")))
       val row = state.agg(count(lit(1)).as("n"),
         coalesce(sum(round(estCol, 4).cast("decimal(38,4)")).cast("double"),
           lit(0.0)).as("p"))
         .head()
       (h, row.getLong(0), row.getDouble(1))
     }
-    val s = edges.sparkSession
-    import s.implicits._
+    val spark = edges.sparkSession
+    import spark.implicits._
     out.toDF("hop", "n_nodes", "est_pairs")
     }
   }
@@ -1391,13 +1201,13 @@ object Graph {
     * Q repeated on every row (the driver-gate-friendly shape). */
   def modularity(edges: DataFrame, labels: DataFrame,
                  nodeCol: String = "node", labCol: String = "label")
-      : DataFrame = {
+      : DataFrame = Fixpoint.run(edges, None) { s =>
     import graft.operators.Guards
     val lab = labels.select(col(nodeCol).as("node"), col(labCol).as("lab"))
-    val und = edges.select(
+    val und = s.cut(edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct().localCheckpoint()
+      .where(col("a") =!= col("b")).distinct())
     val mRow = und.agg(count(lit(1)).cast("double").as("m"))
       .withColumn("__k", Guards.constKey(col("m")))
     val deg = und.select(col("a").as("node"))
@@ -1455,13 +1265,8 @@ object Graph {
                   checkpointDir: Option[String] = None): DataFrame = {
     require(walkLen >= 1 && walksPerSeed >= 1,
       "randomWalks needs walkLen >= 1 and walksPerSeed >= 1")
-    withDurable(edges, checkpointDir) { durable =>
-    val e = edges.select(col("src"), col("dst"))
-    val und = cut(
-      e.select(col("src").as("a"), col("dst").as("b"))
-        .unionByName(e.select(col("dst").as("a"), col("src").as("b")))
-        .where(col("a") =!= col("b")).distinct(), durable)
-    val ret = new Retention
+    Fixpoint.run(edges, checkpointDir) { s =>
+    val und = undirected(s, edges)
     val reps = array((1 to walksPerSeed).map(lit): _*)
     // the walk string rides the frontier state and grows by one token
     // per step (r08 verdict nit): the former shape accumulated a
@@ -1474,30 +1279,27 @@ object Graph {
     // endpoints and `und` is symmetric), so the output is row-for-row
     // identical to the trace formulation — steps is walkLen+1 for
     // every walker by construction.
-    var frontier = cut(
-      und.select(col("a").as("node")).distinct()
-        .where(isSeed(col("node")))
-        .select(explode(reps).as("r"), col("node"))
-        .select(concat(col("node").cast("string"), lit("#"), col("r"))
-          .as("wid"), col("node"),
-          col("node").cast("string").as("walk")), durable, ret)
-    var t = 1
-    while (t <= walkLen) {
+    val seeds = und.select(col("a").as("node")).distinct()
+      .where(isSeed(col("node")))
+      .select(explode(reps).as("r"), col("node"))
+      .select(concat(col("node").cast("string"), lit("#"), col("r"))
+        .as("wid"), col("node"),
+        col("node").cast("string").as("walk"))
+    s.iterate(seeds, walkLen) { (frontier, i) =>
+      val t = i + 1
       val hashed = shjHint(frontier).join(und, frontier("node") === und("a"))
         .select(col("wid"), col("walk"),
           struct(graft.functions.Text.md5Hash64(
             concat(col("wid"), lit(":"), lit(t.toString), lit(":"),
               col("b").cast("string")), seed).as("h"),
             col("b").as("n")).as("hn"))
-      frontier = cut(hashed.groupBy("wid")
+      hashed.groupBy("wid")
         .agg(min(col("hn")).getField("n").as("node"),
           min(col("walk")).as("__w"))
         .select(col("wid"), col("node"),
           concat(col("__w"), lit(" "), col("node").cast("string"))
-            .as("walk")), durable, ret)
-      t += 1
-    }
-    frontier.select(col("wid").as("walk_id"),
+            .as("walk"))
+    }.select(col("wid").as("walk_id"),
       lit(walkLen + 1L).as("steps"), col("walk"))
     }
   }
@@ -1549,10 +1351,11 @@ object Graph {
                  topK: Int = 50, seed: Int = 7): DataFrame = {
     require(maxCenterDeg >= 2 && sampleMod >= 1 && topK >= 1,
       "adamicAdar needs maxCenterDeg >= 2, sampleMod >= 1, topK >= 1")
+    Fixpoint.run(edges, None) { s =>
     val e = edges.select(col("src"), col("dst"))
-    val ec = e.select(least(col("src"), col("dst")).as("n1"),
+    val ec = s.cut(e.select(least(col("src"), col("dst")).as("n1"),
         greatest(col("src"), col("dst")).as("n2"))
-      .where(col("n1") =!= col("n2")).distinct().localCheckpoint()
+      .where(col("n1") =!= col("n2")).distinct())
     val und = ec.select(col("n1").as("a"), col("n2").as("b"))
       .unionByName(ec.select(col("n2").as("a"), col("n1").as("b")))
     val deg = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("d"))
@@ -1573,6 +1376,7 @@ object Graph {
       .limit(topK)
       .select(col("n1").as("node1"), col("n2").as("node2"), col("common"),
         round(col("__aa"), 9).as("aa"))
+    }
   }
 
   /** [[sssp]] with PER-SEED provenance — state keyed (seed, node), so
@@ -1589,17 +1393,16 @@ object Graph {
                   maxIter: Int = 30,
                   checkpointDir: Option[String] = None): DataFrame = {
     require(maxIter >= 1, "ssspPerSeed needs maxIter >= 1")
-    withDurable(edges, checkpointDir) { durable =>
-    val e = cut(edges.select(col("src"), col("dst"),
-      col("w").cast("long").as("w")), durable)
+    Fixpoint.run(edges, checkpointDir) { s =>
+    val e = s.cut(edges.select(col("src"), col("dst"),
+      col("w").cast("long").as("w")))
     val init = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
       .where(isSource(col("node")))
       .select(col("node").as("seed"), col("node"), lit(0L).as("dist"),
         lit(null).cast("long").as("__prev"))
-    val (state, iters, _) = probeLoop(init, durable, 0.5, maxIter,
-      s => ssspPerSeedRound(s, e),
-      capDelta = st => st.agg(ssspCensus(st)).head().getDouble(0))
+    val (state, iters, _) = s.probe(init, 0.5, maxIter,
+      st => st.agg(ssspCensus(st)).head().getDouble(0))(ssspPerSeedRound(_, e))
     state.select(col("seed"), col("node"), col("dist"),
       lit(iters).as("iters"))
     }

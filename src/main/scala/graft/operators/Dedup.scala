@@ -500,7 +500,8 @@ object Dedup {
     * long-chain graphs the large-star/small-star contraction (Kiveris et
     * al.) halves diameter per round and would slot in here.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
+    Fixpoint.run(pairs, None) { s =>
     // symmetrize by exploding each pair into both directions — a
     // union(pairs, pairs.reversed) would put the upstream candidate
     // pipeline (minhash + banding, the expensive part) in the lineage
@@ -511,37 +512,31 @@ object Dedup {
     // plan (and AQE's explain string) grows geometrically with rounds —
     // measured as an OOM in explainString by round ~15 and a 10x
     // re-analysis tax on q78. Checkpointing cuts the lineage to a leaf.
-    val edges = pairs.select(explode(array(
+    val edges = s.cut(pairs.select(explode(array(
         struct(col("id1").as("u"), col("id2").as("v")),
         struct(col("id2").as("u"), col("id1").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
-      .distinct().localCheckpoint(true)
+      .distinct())
     // seed with min(self, neighbors) — one propagation round for free
-    var labels = edges
+    val seed = edges
       .select(col("u").as("id"), least(col("u"), col("v")).as("component"))
       .groupBy("id").agg(min("component").as("component"))
-      .localCheckpoint(true)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0)
     // min-propagation strictly DECREASES the label total until the fixed
-    // point, so convergence is one cheap aggregation on the cached frame
-    // (materializing it in the same job) instead of a join + count.
-    // An empty edge set sums to null — that's the trivially-converged
-    // empty result, not a frame to iterate on.
-    var prevSum = labelSum(labels)
-    var converged = prevSum == null
-    var i = 0
-    while (!converged && i < maxIter) {
+    // point, so convergence is one cheap aggregation on the cut frame
+    // instead of a join + count. An empty edge set sums to null — that's
+    // the trivially-converged empty result, not a frame to iterate on.
+    var prevSum: java.math.BigDecimal = null
+    val (labels, _, converged) = s.until(seed, maxIter) { (labels, _) =>
       val prop = edges.join(labels, edges("v") === labels("id"))
         .select(edges("u").as("id"), col("component"))
-      val next = labels.unionByName(prop)
+      labels.unionByName(prop)
         .groupBy("id").agg(min("component").as("component"))
-        .localCheckpoint(true)
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-      i += 1
+    } { (labels, i) =>
+      val total = labels.agg(sum(col("component").cast("decimal(38,0)")))
+        .head().getDecimal(0)
+      val done = total == null || (i > 0 && total.compareTo(prevSum) == 0)
+      prevSum = total
+      done
     }
     // a silent exit at maxIter would hand back partially-propagated (wrong)
     // canonical ids for components deeper than the iteration budget
@@ -550,7 +545,7 @@ object Dedup {
         "component diameter exceeds the budget — raise maxIter or use " +
         "connectedComponentsStar for long-chain graphs")
     labels
-  }
+    }
 
   /** Connected components by alternating star contraction (the
     * large-star/small-star method of Kiveris et al., "Connected
@@ -569,20 +564,20 @@ object Dedup {
     * The fixed point is a forest of stars rooted at each component's
     * minimum id; output = (id, component) including the roots.
     */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    val spark = pairs.sparkSession
+  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 30): DataFrame =
+    Fixpoint.run(pairs, None) { s =>
     // canonical undirected edge set as parent links child -> parent
     // (child > parent); self-loops drop
     // each round's operators reference the edge frame SEVERAL times
     // (symmetrize, per-node minima, relink), so without lineage
     // truncation the logical plan grows ~4x per round and analysis OOMs
-    // around round 7 — localCheckpoint materializes the round AND cuts
-    // the plan back to a leaf (cache alone only shortcuts execution)
-    var edges = pairs
+    // around round 7 — a cut materializes the round AND cuts the plan
+    // back to a leaf (cache alone only shortcuts execution)
+    val init = pairs
       .select(greatest(col("id1"), col("id2")).as("u"),
         least(col("id1"), col("id2")).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct().localCheckpoint(true)
+      .distinct()
     def checksum(df: DataFrame): (Long, java.math.BigDecimal) = {
       val r = df.agg(count(lit(1)),
         sum((col("u") * 31 + col("v")).cast("decimal(38,0)"))).head()
@@ -611,29 +606,24 @@ object Dedup {
         .where(col("u") =!= col("v"))
         .distinct()
     }
-    var (prevN, prevSum) = checksum(edges)
-    var converged = prevN == 0
-    var i = 0
-    while (!converged && i < maxIter) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(true)
-      val (n, s) = checksum(next)
-      converged = n == prevN && s == prevSum
-      prevN = n; prevSum = s
-      edges.unpersist()
-      edges = next
-      i += 1
+    // an empty edge set is its own fixed point
+    var prev: (Long, java.math.BigDecimal) = null
+    val (edges, _, converged) = s.until(init, maxIter)(
+        (e, _) => smallStar(largeStar(e))) { (e, i) =>
+      val total = checksum(e)
+      val done = total._1 == 0 || (i > 0 && total == prev)
+      prev = total
+      done
     }
-    require(converged || prevN == 0,
+    require(converged,
       s"connectedComponentsStar did not converge within $maxIter rounds")
     // stars: u -> root v; roots appear as their own component
     val members = edges.select(col("u").as("id"), col("v").as("component"))
     val roots = edges.select(col("v").as("id")).distinct()
       .withColumn("component", col("id"))
-    val out = members.unionByName(roots)
+    members.unionByName(roots)
       .groupBy("id").agg(min("component").as("component"))
-    edges.unpersist()
-    out
-  }
+    }
 
   /** Incremental connected components — fold a batch of NEW edges into
     * an existing canonical labeling WITHOUT re-clustering the corpus

@@ -20,13 +20,10 @@ import org.apache.spark.sql.SparkSession
   *    training) whose per-round query is one partial-aggregated scan
   *    with nothing for AQE to re-decide (q127: 8.2 s → 6.5 s).
   * Restores the session's AQE setting afterwards, so query-level plans
-  * outside the loop are untouched. On a cluster where even these rounds
-  * are skew-prone, `spark.graft.iterative.aqe=true` re-enables adaptive
-  * rounds — the trade is documented where it is paid.
+  * outside the loop are untouched.
   */
 object IterPlan {
   private val Key = "spark.sql.adaptive.enabled"
-  private val Override = "spark.graft.iterative.aqe"
 
   // The save/set/restore below mutates SESSION-GLOBAL state, so two
   // threads interleaving it on one session can leave AQE disabled for
@@ -54,12 +51,20 @@ object IterPlan {
       l
     }
 
+  /** Run `body` with AQE off on `spark`, holding the session's lock.
+    *
+    * No cross-thread nesting: `body` must not hand work that itself calls
+    * `withLoopPlanning` on the same session to another thread and then
+    * wait for it. The lock is reentrant for the holding thread only, so
+    * the worker blocks on the lock its waiting caller holds and both
+    * hang. Callers that parallelize (q181's branch pool) must fork
+    * OUTSIDE any wrapped loop, never inside one. */
   def withLoopPlanning[T](spark: SparkSession)(body: => T): T = {
     val lock = lockOf(spark)
     lock.lock()
     try {
       val saved = spark.conf.get(Key)
-      spark.conf.set(Key, spark.conf.get(Override, "false"))
+      spark.conf.set(Key, "false")
       try body finally spark.conf.set(Key, saved)
     } finally lock.unlock()
   }

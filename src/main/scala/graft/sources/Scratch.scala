@@ -40,7 +40,7 @@ object Scratch {
   }
 
   /** Stable within a process (same name → same dir, so overwrite-mode
-    * rewrites and Profile's repeat iterations are safe); unique across
+    * rewrites and repeated runs in one process are safe); unique across
     * processes. */
   def dir(name: String): String = new java.io.File(root, name).getPath
 }

@@ -1,9 +1,9 @@
 package graft.sources
 
+import graft.operators.Fixpoint
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{coalesce, col, concat_ws, lit, nullif}
 
 /** K1 — partitioned parquet sink with idempotent partition rebuild
@@ -43,16 +43,6 @@ object Sinks {
 
   private[graft] def partitionKeyOf(values: Seq[String]): String =
     values.map(v => if (v == null || v.isEmpty) NullKey else v).mkString(KeySep)
-
-  /** Eager localCheckpoint that also returns the RDD it persisted, read
-    * from the checkpointed plan's LogicalRDD — not the context's newest
-    * persisted id, which a concurrent caller may own. */
-  private def pin(df: DataFrame): (DataFrame, RDD[_]) = {
-    val out = df.localCheckpoint()
-    val rdd = out.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
-      .getOrElse(sys.error("localCheckpoint plan has no LogicalRDD"))
-    (out, rdd)
-  }
 
   /** Rows are clustered by the partition columns before the write: without
     * it, EVERY upstream task holding rows of a partition value opens its
@@ -148,7 +138,7 @@ object Sinks {
     try {
       // the changeset is read four times below (landing, residence,
       // anti-join, incoming): evaluate its plan once
-      val (ch, chRdd) = pin(changes)
+      val (ch, chRdd) = Fixpoint.pin(changes, durable = false)
       pinned += chRdd
       val chKeys = ch.select(keyCols.map(col): _*).distinct()
       // changeset partition footprint: where its rows land + where its
@@ -177,7 +167,8 @@ object Sinks {
         // partitions' survivors + the changeset, i.e. the changeset's
         // footprint, never the table; a real lakehouse writes a staging
         // dir + atomic swap, same bounded intermediate.
-        val (out, outRdd) = pin(survivors.unionByName(incoming))
+        val (out, outRdd) = Fixpoint.pin(survivors.unionByName(incoming),
+          durable = false)
         pinned += outRdd
         writePartitioned(out, path, partitionCols)
         // emptied partitions: affected but absent from the output — their
@@ -192,7 +183,7 @@ object Sinks {
             rmrf(s"$path/$dir")
           }
       }
-    } finally pinned.foreach(_.unpersist(blocking = false))
+    } finally pinned.foreach(Fixpoint.release)
   }
 
   /** Per-partition parquet file census of a partitioned table: partition
@@ -264,15 +255,15 @@ object Sinks {
         pmod(xxhash64(dataCols.map(col).toIndexedSeq: _*),
           coalesce(targetCol, lit(1L))))
       // reading and overwriting the same path: stage, write, release
-      val (staged, rdd) = pin(salted
+      val (staged, rdd) = Fixpoint.pin(salted
         .repartition((partitionCols :+ "__salt").map(col): _*)
-        .drop("__salt"))
+        .drop("__salt"), durable = false)
       try staged.write
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partitionCols: _*)
         .parquet(path)
-      finally rdd.unpersist(blocking = false)
+      finally Fixpoint.release(rdd)
       affected.size
     }
   }

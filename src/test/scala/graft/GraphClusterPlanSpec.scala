@@ -272,8 +272,9 @@ class GraphClusterPlanSpec extends SparkSpec {
     val before = sc.getCheckpointDir
     val dir = Scratch.dir("gcp_retention")
     val local = ranksOf(Graph.pageRank(rawEdges, iterations = 8))
-    val durable = ranksOf(Graph.pageRank(rawEdges, iterations = 8,
-      checkpointDir = Some(dir)))
+    val durableOut = Graph.pageRank(rawEdges, iterations = 8,
+      checkpointDir = Some(dir))
+    val durable = ranksOf(durableOut)
     assert(durable == local, "retention-pruned durable run changed results")
     // the per-operator override must not leak into the session
     assert(sc.getCheckpointDir == before,
@@ -288,6 +289,25 @@ class GraphClusterPlanSpec extends SparkSpec {
     assert(rdds.length <= 3,
       s"retention failed: ${rdds.length} rdd-* checkpoints remain " +
         rdds.map(_.getName).mkString("[", ",", "]"))
+    // on exit only the checkpoints the returned frame reads remain — also
+    // for hitsConverged, whose auth half-step is a series of its own
+    def readCheckpoints(df: DataFrame): Set[String] =
+      df.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.getCheckpointFile
+      }.flatten.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
+    def remaining(d: String): Set[String] =
+      new java.io.File(d).listFiles().flatMap(_.listFiles())
+        .map(_.getName).filter(_.startsWith("rdd-")).toSet
+    assert(remaining(dir) == readCheckpoints(durableOut),
+      s"pageRank left ${remaining(dir)} for a result reading " +
+        readCheckpoints(durableOut))
+    val hitsDir = Scratch.dir("gcp_retention_hits")
+    val hitsOut = Graph.hitsConverged(rawEdges, tol = 1e-6, maxIter = 40,
+      checkpointDir = Some(hitsDir))
+    assert(hitsOut.count() > 0)
+    assert(remaining(hitsDir) == readCheckpoints(hitsOut),
+      s"hitsConverged left ${remaining(hitsDir)} for a result reading " +
+        readCheckpoints(hitsOut))
   }
 
   test("hitsConverged stops at the tolerance and matches the fixed-round twin") {
