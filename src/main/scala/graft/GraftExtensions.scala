@@ -86,20 +86,4 @@ object GraftExtensions {
       try spark.catalog.functionExists(fn)
       catch { case _: Throwable => false }
     }
-
-  /** [[has]] against the thread's active session (or the process default)
-    * — for COLUMN-ONLY helpers (pqCodes, assignColumn, hyperplaneSketch)
-    * whose signatures carry no session or DataFrame. Safe in this
-    * codebase because every session is built with the extension
-    * installed (Bench/Verify/Plans configs and the shared test
-    * session); in a hypothetical process where the checked session had
-    * the extension but the DataFrame's session did not, the failure mode
-    * is an unresolved-function ANALYSIS error, never a wrong answer —
-    * and with neither an active nor a default session the helpers keep
-    * their HOF fallback. */
-  def hasActive(fn: String): Boolean = {
-    val s = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    s.exists(has(_, fn))
-  }
 }

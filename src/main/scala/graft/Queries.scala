@@ -2287,9 +2287,10 @@ object Queries {
     * (TaxiDataHelper.py:195-320) over a synthetic GPS projection of the
     * events table: status change, long gap, long jump, long stop
     * (forward stationary time), last-point-before-a-stop (backward
-    * stationary time) — both stationary times are conditional-reset
-    * running sums built with the nested-window trick (see
-    * pipelines/Taxi.scala). Thresholds are scaled to this data's
+    * stationary time) — the operator computes both stationary times
+    * with one sequential [[graft.pipelines.Taxi.Scan]] per vehicle; the
+    * SQL oracle below builds them as conditional-reset running sums
+    * with the nested-window form. Thresholds are scaled to this data's
     * inter-event gaps (hours, not GPS seconds); the reference's real
     * constants are the operator defaults and the unit fixture's values.
     * All five predicates fire here (status 3099 / gap 710 / dist 1052 /
@@ -4514,10 +4515,10 @@ object Queries {
         k = 16, m = 8, dims = 64, iters = 2)
       val query = cb(5)
       val table = Quantization.adcTable(query, cb, 8)
-      e.withColumn("codes", Quantization.pqCodes(col("embedding"), cb, 8, 64))
+      e.withColumn("codes", Quantization.pqCodes(s, col("embedding"), cb, 8, 64))
         .withColumn("approx_d", Quantization.adcScore(col("codes"), table))
         .withColumn("exact_d",
-          round(Quantization.exactDist(col("embedding"), query), 6))
+          round(Quantization.exactDist(s, col("embedding"), query), 6))
         .orderBy(col("approx_d"), col("vec_id")).limit(20)
         .select(col("vec_id"), col("approx_d"), col("exact_d"))
     },
@@ -4590,14 +4591,14 @@ object Queries {
         .take(2).map(_._1)
       // coarse assignment = PQ argmin with one subspace spanning all dims
       val cellIdx = element_at(
-        Quantization.pqCodes(col("embedding"), cents, 1, 64), 1)
+        Quantization.pqCodes(s, col("embedding"), cents, 1, 64), 1)
       val cellOf = element_at(array(cellIds.map(lit): _*), cellIdx + 1)
       e.withColumn("cell", cellOf)
         .where(col("cell").isin(probeCells: _*))
-        .withColumn("codes", Quantization.pqCodes(col("embedding"), cb, 8, 64))
+        .withColumn("codes", Quantization.pqCodes(s, col("embedding"), cb, 8, 64))
         .withColumn("approx_d", Quantization.adcScore(col("codes"), table))
         .withColumn("exact_d",
-          round(Quantization.exactDist(col("embedding"), qv), 6))
+          round(Quantization.exactDist(s, col("embedding"), qv), 6))
         .orderBy(col("approx_d"), col("vec_id")).limit(10)
         .select(col("vec_id"), col("cell"), col("approx_d"), col("exact_d"))
     },

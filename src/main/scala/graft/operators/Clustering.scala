@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed Lloyd k-means over an embedding column — the clustering
@@ -38,17 +38,19 @@ object Clustering {
     * codegen `references` array, so Lloyd rounds re-literalizing the
     * centroids reuse ONE compiled source (r09 §11 / r10 verdict item 3).
     * Same ascending fold, same null semantics → bit-identical. */
-  private def assignColumn(vec: Column, cents: IndexedSeq[Seq[Double]]): Column = {
+  private def assignColumn(s: SparkSession, vec: Column,
+      cents: IndexedSeq[Seq[Double]]): Column = {
     val scored = cents.zipWithIndex.map { case (cv, cid) =>
-      struct(round(distToLit(vec, cv), 6).as("d"), lit(cid).as("c"))
+      struct(round(distToLit(s, vec, cv), 6).as("d"), lit(cid).as("c"))
     }
     least(scored: _*).getField("c")
   }
 
   /** Squared L2 against one literal centroid — native kernel or the
-    * bit-identical HOF fallback. */
-  private def distToLit(vec: Column, cv: Seq[Double]): Column =
-    if (graft.GraftExtensions.hasActive("graft_dist2"))
+    * bit-identical HOF fallback, chosen by the session `s` the column
+    * runs in. */
+  private def distToLit(s: SparkSession, vec: Column, cv: Seq[Double]): Column =
+    if (graft.GraftExtensions.has(s, "graft_dist2"))
       call_function("graft_dist2", vec, typedLit(cv))
     else {
       val w = array(cv.map(lit): _*)
@@ -70,7 +72,7 @@ object Clustering {
     val pts = prep(points, idCol, vecCol)
     var cents = initCentroids(pts, k)
     for (_ <- 1 to iters) cents = lloydRound(pts, cents, k)
-    pts.withColumn("cluster", assignColumn(col("__v"), cents))
+    pts.withColumn("cluster", assignColumn(pts.sparkSession, col("__v"), cents))
       .select(col("__id").as(idCol), col("cluster").cast("long").as("cluster"))
   }
 
@@ -90,7 +92,7 @@ object Clustering {
     * 6 dp; an empty cluster keeps its previous centroid. */
   private def lloydRound(pts: DataFrame, cents: IndexedSeq[Seq[Double]],
       k: Int): IndexedSeq[Seq[Double]] = {
-    val rows = pts.withColumn("cluster", assignColumn(col("__v"), cents))
+    val rows = pts.withColumn("cluster", assignColumn(pts.sparkSession, col("__v"), cents))
       .select(col("cluster"), posexplode(col("__v")).as(Seq("pos", "x")))
       .groupBy("cluster", "pos")
       .agg(round(sum(col("x").cast("decimal(28,12)")).cast("double")
@@ -141,7 +143,7 @@ object Clustering {
       it += 1
       done = shift < tol
     }
-    pts.withColumn("cluster", assignColumn(col("__v"), cents))
+    pts.withColumn("cluster", assignColumn(pts.sparkSession, col("__v"), cents))
       .select(col("__id").as(idCol), col("cluster").cast("long").as("cluster"),
         lit(it).as("iters"), round(lit(shift), 6).as("shift"))
   }
@@ -188,7 +190,7 @@ object Clustering {
       (0L, seed.getLong(0), None))
     for (r <- 1 until k) {
       val far = pts
-        .select(col("__id"), col("__v"), minDistColumn(col("__v"), centers).as("d"))
+        .select(col("__id"), col("__v"), minDistColumn(spark, col("__v"), centers).as("d"))
         .orderBy(col("d").desc, col("__id")).limit(1)
         .collect()(0)
       picks += ((r.toLong, far.getLong(0), Some(far.getDouble(2))))
@@ -213,8 +215,8 @@ object Clustering {
     // the min distance IS the assigned center's distance (argmin), so one
     // literal projection yields both columns
     val assigned = pts
-      .withColumn("cluster", assignColumn(col("__v"), cents))
-      .withColumn("d", minDistColumn(col("__v"), cents))
+      .withColumn("cluster", assignColumn(pts.sparkSession, col("__v"), cents))
+      .withColumn("d", minDistColumn(pts.sparkSession, col("__v"), cents))
       .groupBy(col("cluster").cast("long").as("round"))
       .agg(count(lit(1)).as("n_assigned"), max(col("d")).as("coverage"))
     picks.join(assigned, "round")
@@ -223,9 +225,9 @@ object Clustering {
   }
 
   /** Min 6-dp-rounded squared-L2 distance to a literal center matrix. */
-  private def minDistColumn(vec: Column,
+  private def minDistColumn(s: SparkSession, vec: Column,
       cents: IndexedSeq[IndexedSeq[Double]]): Column = {
-    val ds = cents.map(cv => round(distToLit(vec, cv), 6))
+    val ds = cents.map(cv => round(distToLit(s, vec, cv), 6))
     if (ds.size == 1) ds.head else least(ds: _*)
   }
 
@@ -341,7 +343,7 @@ object Clustering {
     // is fiction (a projection computed under the join ships its output)
     val b = pts
       .withColumn("__codes",
-        Quantization.pqCodes(col("__v"), codebook, m, dims))
+        Quantization.pqCodes(points.sparkSession, col("__v"), codebook, m, dims))
       .withColumn("n2", Similarity.norm(points.sparkSession,
         Quantization.decode(col("__codes"), codebook, m, dims)))
       .select(col("__id").as("id2"), col("__codes"), col("n2"), col("cluster"))

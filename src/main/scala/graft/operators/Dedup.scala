@@ -474,7 +474,8 @@ object Dedup {
     // (inline in the join output they would re-reduce the array once per
     // candidate pair)
     val s = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("bucket", Similarity.hyperplaneSketch(col("v"), planes, dims))
+      .withColumn("bucket",
+        Similarity.hyperplaneSketch(df.sparkSession, col("v"), planes, dims))
       .withColumn("nrm", Similarity.norm(df.sparkSession, col("v")))
     val a = s.as("a"); val b = s.as("b")
     val nn = col("a.nrm") * col("b.nrm")

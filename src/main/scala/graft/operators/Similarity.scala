@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -93,11 +93,13 @@ object Similarity {
     * shipped as an array literal — the per-row work is `planes` fused
     * zip_with/aggregate reductions, nothing else. (The earlier form derived
     * each weight with md5+conv PER ROW per plane per dimension; measured
-    * ~8x slower on the ANN query.)
+    * ~8x slower on the ANN query.) `session` is the session the column
+    * runs in (see dotLit).
     */
-  def hyperplaneSketch(vec: Column, planes: Int, dims: Int): Column = {
+  def hyperplaneSketch(session: SparkSession, vec: Column, planes: Int,
+      dims: Int): Column = {
     val signs = (0 until planes).map { p =>
-      val proj = dotLit(vec, (0 until dims).map(i => planeWeight(p, i)))
+      val proj = dotLit(session, vec, (0 until dims).map(i => planeWeight(p, i)))
       when(proj >= 0, shiftleft(lit(1L), p)).otherwise(0L)
     }
     // a dims mismatch null-pads the zip_with, nulls the projection, and
@@ -241,7 +243,7 @@ object Similarity {
     val ss = corpus.sparkSession
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
         norm(ss, col(vecCol)).as("__cn"))
-      .withColumn("bucket", hyperplaneSketch(col("__cv"), planes, dims))
+      .withColumn("bucket", hyperplaneSketch(ss, col("__cv"), planes, dims))
     // multi-probe: each probe also searches the `planes` buckets one
     // hyperplane-sign flip away (the classic recall knob — a vector near
     // a plane lands on either side with near-even odds, so the 1-bit
@@ -256,7 +258,7 @@ object Similarity {
     // but free to avoid).
     val pBase = probes.select(col(probeIdCol).as("probe_id"),
         col(vecCol).as("__pv"), norm(ss, col(vecCol)).as("__pn"))
-      .withColumn("__sig", hyperplaneSketch(col("__pv"), planes, dims))
+      .withColumn("__sig", hyperplaneSketch(ss, col("__pv"), planes, dims))
     val probeBuckets: Column =
       if (multiProbe)
         explode(concat(
@@ -290,21 +292,23 @@ object Similarity {
     * instead of sign bits. The fold is an index-ordered sequential
     * aggregate, so an oracle replaying it with an ordered list_reduce
     * gets bit-identical doubles. */
-  def rpProject(vec: Column, rDims: Int, dims: Int): Column =
+  def rpProject(session: SparkSession, vec: Column, rDims: Int,
+      dims: Int): Column =
     array((0 until rDims).map { p =>
-      dotLit(vec, (0 until dims).map(i => planeWeight(p, i)))
+      dotLit(session, vec, (0 until dims).map(i => planeWeight(p, i)))
     }: _*)
 
   /** Dot product against a LITERAL weight vector — the native fused
-    * kernel when the active session carries the extension (the literal
-    * rides the codegen `references` array: one compiled source per
-    * operator shape however many distinct weight vectors appear), HOF
-    * otherwise. Column-only helpers (hyperplaneSketch/rpProject) carry
-    * no session, hence the active-session check — see
-    * [[graft.GraftExtensions.hasActive]]. Bit-identical either way:
-    * same ascending fold, same widen-to-double, same null semantics. */
-  private def dotLit(vec: Column, weights: Seq[Double]): Column =
-    if (graft.GraftExtensions.hasActive("graft_dot"))
+    * kernel when the column's session carries the extension (the
+    * literal rides the codegen `references` array: one compiled source
+    * per operator shape however many distinct weight vectors appear),
+    * HOF otherwise. `session` is the session the column runs in (the
+    * caller's DataFrame's), never the thread's active one — see
+    * [[graft.GraftExtensions.has]]. Bit-identical either way: same
+    * ascending fold, same widen-to-double, same null semantics. */
+  private def dotLit(session: SparkSession, vec: Column,
+      weights: Seq[Double]): Column =
+    if (graft.GraftExtensions.has(session, "graft_dot"))
       call_function("graft_dot", vec, typedLit(weights))
     else {
       val w = array(weights.map(lit): _*)
@@ -327,9 +331,9 @@ object Similarity {
     require(cand >= k, "candidate pool must cover k")
     val ss = corpus.sparkSession
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-      rpProject(col(vecCol), rDims, dims).as("__cp"))
+      rpProject(ss, col(vecCol), rDims, dims).as("__cp"))
     val p = probes.select(col(probeIdCol).as("probe_id"), col(vecCol).as("__pv"),
-      rpProject(col(vecCol), rDims, dims).as("__pp"))
+      rpProject(ss, col(vecCol), rDims, dims).as("__pp"))
     val projScore = c.join(broadcast(p), col("neighbor_id") =!= col("probe_id"))
       .withColumn("__pcos", {
         val d = dot(ss, col("__cp"), col("__pp"))

@@ -1,9 +1,11 @@
 package graft.pipelines
 
 import graft.graph.{Graph, Viterbi}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.collection.mutable.ArrayBuffer
 
 /** G1+G3+G4+G5 — the reference's integrated taxi map-matching chain
   * (sftaxi_wrangler.py:172-204): GPS trip points -> candidate link states
@@ -16,10 +18,15 @@ import org.apache.spark.sql.functions._
   * Execution model: the network is config-scale (10^3-10^4 links — the
   * reference holds it in memory per process) so link geometry and the
   * all-pairs link skim are DRIVER-side and broadcast; GPS points are
-  * data-scale and stay distributed throughout. The only non-relational
-  * stage is the per-trip Viterbi DP (`mapGroups` over trips, kernel in
-  * graph/Viterbi.scala); projection, allocation, merge, and stats are
-  * window/groupBy relational plans.
+  * data-scale and stay distributed throughout. The skim is kept as
+  * Floyd–Warshall leaves it — a dense time array and a predecessor array
+  * ([[MapMatch.Skim]]) behind a `Map` view — so it broadcasts as two
+  * primitive arrays and a link path is rebuilt only for the legs the
+  * decoder picks. Two stages are per-group kernels: the Viterbi DP, one
+  * `flatMapGroups` per trip (kernel in graph/Viterbi.scala), and the
+  * travel-time allocation with its consecutive-link merge, one pass per
+  * trip in (leg, pos) order. Candidate projection and link stats are
+  * relational plans.
   *
   * Skim convention: skim(s, e) = free-flow seconds over the best link
   * sequence s..e INCLUSIVE of both endpoint links' full traversal, so the
@@ -99,7 +106,8 @@ object MapMatch {
     * (links u->v connected iff u ends where v starts), free-flow time
     * only: total seconds s..e inclusive, plus the link sequence.
     * Guarded: this is the reference's in-memory network regime, not a
-    * data-scale structure. */
+    * data-scale structure. The map is a view over a [[Skim]]: lookups
+    * rebuild the link sequence from the predecessor array. */
   def linkSkim(links: Seq[Link], maxLinks: Int = 3000)
       : Map[(Long, Long), (Double, Vector[Long])] =
     skimOver(links, geometricMovements(links), penalized = false, maxLinks)
@@ -115,17 +123,81 @@ object MapMatch {
       : Map[(Long, Long), (Double, Vector[Long])] =
     skimOver(links, movements, penalized = true, maxLinks)
 
+  /** The all-pairs skim as Floyd–Warshall leaves it, over link indices in
+    * the `links` order: `time(s*n + e)` is the inclusive free-flow total
+    * and `pred(s*n + e)` the predecessor of e on the best s..e path, -1
+    * when e is unreachable from s (the diagonal holds s). A link id
+    * listed twice resolves to its last index, as a `toMap` would. */
+  final class Skim private[MapMatch] (val ids: Array[Long],
+      sortedIds: Array[Long], sortedAt: Array[Int],
+      time: Array[Double], pred: Array[Int]) extends Serializable {
+    private val n = ids.length
+
+    /** Index of a link id, -1 when the skim does not know it. */
+    def indexOf(id: Long): Int = {
+      val k = java.util.Arrays.binarySearch(sortedIds, id)
+      if (k < 0) -1 else sortedAt(k)
+    }
+    def reachable(s: Int, e: Int): Boolean = pred(s * n + e) >= 0
+    def timeAt(s: Int, e: Int): Double = time(s * n + e)
+
+    /** Link ids of the best s..e path, both ends included. */
+    def path(s: Int, e: Int): Vector[Long] = {
+      var seq = List(ids(e))
+      var j = e
+      while (j != s) { j = pred(s * n + j); seq = ids(j) :: seq }
+      seq.toVector
+    }
+
+    /** Link indices the id lookup resolves to, ascending. */
+    private[MapMatch] def live: Array[Int] = sortedAt.sorted
+  }
+
+  /** The `Map` that linkSkim returns: reads straight from a [[Skim]]. */
+  private final class SkimMap(val skim: Skim)
+      extends scala.collection.immutable.AbstractMap[(Long, Long), (Double, Vector[Long])]
+      with Serializable {
+    private def at(k: (Long, Long)): Option[(Int, Int)] = {
+      val s = skim.indexOf(k._1); val e = skim.indexOf(k._2)
+      if (s >= 0 && e >= 0 && skim.reachable(s, e)) Some((s, e)) else None
+    }
+    def get(k: (Long, Long)): Option[(Double, Vector[Long])] =
+      at(k).map { case (s, e) => (skim.timeAt(s, e), skim.path(s, e)) }
+    override def contains(k: (Long, Long)): Boolean = at(k).isDefined
+    def iterator: Iterator[((Long, Long), (Double, Vector[Long]))] = {
+      val live = skim.live
+      for (s <- live.iterator; e <- live.iterator if skim.reachable(s, e))
+        yield ((skim.ids(s), skim.ids(e)), (skim.timeAt(s, e), skim.path(s, e)))
+    }
+    override lazy val size: Int = {
+      val live = skim.live
+      live.iterator.map(s => live.count(skim.reachable(s, _))).sum
+    }
+    override def knownSize: Int = size
+    def removed(k: (Long, Long)): Map[(Long, Long), (Double, Vector[Long])] =
+      Map.from(this).removed(k)
+    def updated[V1 >: (Double, Vector[Long])](k: (Long, Long), v: V1)
+        : Map[(Long, Long), V1] = Map.from(this).updated(k, v)
+  }
+
+  /** The [[Skim]] behind a map from linkSkim/linkSkimPenalized. */
+  private def denseOf(skim: Map[(Long, Long), (Double, Vector[Long])]): Skim =
+    skim match {
+      case m: SkimMap => m.skim
+      case _ => throw new IllegalArgumentException(
+        "skim must come from MapMatch.linkSkim or linkSkimPenalized")
+    }
+
   private def skimOver(
       links: Seq[Link], movements: Seq[(Long, Long)], penalized: Boolean,
       maxLinks: Int): Map[(Long, Long), (Double, Vector[Long])] = {
-    // the bound reflects what dense APSP + materialized path vectors can
-    // actually do on a driver (n^3 relax steps, up to n^2 stored paths):
-    // ~3k links = ~27e9 relaxations and a few GB of paths, the ceiling of
-    // the reference's own in-memory regime — NOT a data-scale structure
+    // the bound reflects what dense APSP can actually do on a driver (n^3
+    // relax steps): ~3k links = ~27e9 relaxations, the ceiling of the
+    // reference's own in-memory regime — NOT a data-scale structure
     require(links.size <= maxLinks,
       s"linkSkim is a driver-side dense APSP for config-scale networks; " +
         s"got ${links.size} links > $maxLinks")
-    val ids = links.map(_.linkId).toVector
+    val ids = links.map(_.linkId).toArray
     val idx = ids.zipWithIndex.toMap
     val byId = links.map(l => l.linkId -> l).toMap
     // edge u->v weighted by ff(v) (+ turn penalty u->v when penalized);
@@ -135,19 +207,18 @@ object MapMatch {
         val pen = if (penalized) turnPenalty(byId(u), byId(v)) else 0.0
         (idx(u), idx(v), byId(v).ffSec + pen)
     }
-    val (dist, pred) = Graph.floydWarshall(ids.size, edges)
+    val n = ids.length
+    val (dist, pred) = Graph.floydWarshall(n, edges)
     val INF = Double.MaxValue / 8
-    val out = for {
-      s <- ids.indices; e <- ids.indices
-      if dist(s)(e) < INF
-    } yield {
-      // trace e back to s through the predecessor matrix
-      var seq = List(ids(e))
-      var j = e
-      while (j != s) { j = pred(s)(j); seq = ids(j) :: seq }
-      (ids(s), ids(e)) -> (byId(ids(s)).ffSec + dist(s)(e), seq.toVector)
+    val time = new Array[Double](n * n)
+    val predFlat = new Array[Int](n * n)
+    for (s <- 0 until n; e <- 0 until n) {
+      val reach = dist(s)(e) < INF
+      time(s * n + e) = if (reach) byId(ids(s)).ffSec + dist(s)(e) else Double.NaN
+      predFlat(s * n + e) = if (!reach) -1 else if (s == e) s else pred(s)(e)
     }
-    out.toMap
+    val sortedIds = idx.keys.toArray.sorted
+    new SkimMap(new Skim(ids, sortedIds, sortedIds.map(idx), time, predFlat))
   }
 
   /** G1 — candidate link states per GPS point, relationally: each point
@@ -222,18 +293,6 @@ object MapMatch {
       .drop("ax", "ay", "bx", "by", "len", "__gcx", "__gcy")
   }
 
-  /** G4 — most-likely trajectory per trip via the Viterbi kernel, one
-    * `mapGroups` per trip (distributed across trips): point score =
-    * -distFromGPS (weight ThetaPoint), path score = -(path_tt +
-    * max(path_tt - observed_dt, 0)) (weight ThetaPath; the
-    * double-penalty for paths slower than observed, Trajectory.py:62-85),
-    * candidate paths excluded beyond max(TimeLimitMinimum,
-    * TimeLimitFactor * observed_dt) free-flow seconds
-    * (HwyNetwork.py:471-474). Emits one Leg per consecutive point pair.
-    *
-    * `cands` must carry (tripCol, ptCol string-sortable, ts epoch double
-    * `tsCol`, link_id, offset_ratio, cand_dist, cand_rank).
-    */
   /** Per-trip observation assembly: points in time order with the point
     * id as tie-break (duplicate GPS timestamps are common; hash-map order
     * must not leak into the decoded path); candidates in rank order. */
@@ -250,77 +309,97 @@ object MapMatch {
     * trans = ThetaPath * (path_tt + max(path_tt - observed_dt, 0)) —
     * used identically by the decode and the smoother, exactly as the
     * reference feeds one LearningTrajectory to both TrajectoryViterbi1
-    * and TrajectorySmoother1 (Trajectory.py:188-235). */
+    * and TrajectorySmoother1 (Trajectory.py:188-235). `at(t)(s)` is the
+    * skim index of state s at observation t (-1 when the skim lacks its
+    * link), so a transition probes the dense arrays by index. */
   private def costFns(
-      pts: Array[(Long, Double, Array[State])],
-      skimM: Map[(Long, Long), (Double, Vector[Long])],
-      linkM: Map[Long, Link])
+      pts: Array[(Long, Double, Array[State])], at: Array[Array[Int]],
+      skim: Skim, linkM: Map[Long, Link])
       : ((Int, Int) => Double, (Int, Int, Int) => Double) = {
     // path free-flow tt between two states; +inf when no path or over
     // the time limit. Same-link paths clamp the end offset forward
     // (HwyNetwork.py:404-410) and bypass the limit.
-    def pathTT(a: State, b: State, dt: Double): Double =
+    def pathTT(a: State, ia: Int, b: State, ib: Int, dt: Double): Double =
       if (a.linkId == b.linkId) {
         val ff = linkM(a.linkId).ffSec
         (math.max(a.offsetRatio, b.offsetRatio) - a.offsetRatio) * ff
-      } else skimM.get((a.linkId, b.linkId)) match {
-        case Some((tt, _))
-          if tt <= math.max(TimeLimitMinimum, TimeLimitFactor * dt) =>
-          tt - a.offsetRatio * linkM(a.linkId).ffSec -
-            (1.0 - b.offsetRatio) * linkM(b.linkId).ffSec
-        case _ => Double.PositiveInfinity
-      }
+      } else if (ia >= 0 && ib >= 0 && skim.reachable(ia, ib) &&
+          skim.timeAt(ia, ib) <= math.max(TimeLimitMinimum, TimeLimitFactor * dt))
+        skim.timeAt(ia, ib) - a.offsetRatio * linkM(a.linkId).ffSec -
+          (1.0 - b.offsetRatio) * linkM(b.linkId).ffSec
+      else Double.PositiveInfinity
     val emit = (t: Int, s: Int) => ThetaPoint * pts(t)._3(s).dist
     val trans = (t: Int, s1: Int, s2: Int) => {
       val dt = pts(t)._2 - pts(t - 1)._2
-      val tt = pathTT(pts(t - 1)._3(s1), pts(t)._3(s2), dt)
+      val tt = pathTT(pts(t - 1)._3(s1), at(t - 1)(s1), pts(t)._3(s2),
+        at(t)(s2), dt)
       ThetaPath * (tt + math.max(tt - dt, 0.0))
     }
     (emit, trans)
   }
 
+  /** One row per candidate, typed for the per-trip kernels. */
+  private def candRows(cands: DataFrame, tripCol: String, ptCol: String,
+      tsCol: String): Dataset[(String, Long, Double, Long, Double, Double, Int)] = {
+    import cands.sparkSession.implicits._
+    cands.select(col(tripCol).cast("string").as("trip"),
+        col(ptCol).cast("long").as("pt"), col(tsCol).cast("double").as("ts"),
+        col("link_id"), col("offset_ratio").cast("double"),
+        col("cand_dist").cast("double"), col("cand_rank"))
+      .as[(String, Long, Double, Long, Double, Double, Int)]
+  }
+
+  /** G4 — most-likely trajectory per trip via the Viterbi kernel, one
+    * `flatMapGroups` per trip (distributed across trips): point score =
+    * -distFromGPS (weight ThetaPoint), path score = -(path_tt +
+    * max(path_tt - observed_dt, 0)) (weight ThetaPath; the
+    * double-penalty for paths slower than observed, Trajectory.py:62-85),
+    * candidate paths excluded beyond max(TimeLimitMinimum,
+    * TimeLimitFactor * observed_dt) free-flow seconds
+    * (HwyNetwork.py:471-474). Emits one Leg per consecutive point pair.
+    *
+    * `cands` must carry (tripCol, ptCol string-sortable, ts epoch double
+    * `tsCol`, link_id, offset_ratio, cand_dist, cand_rank); `skim` must
+    * come from linkSkim or linkSkimPenalized — its dense arrays are what
+    * is broadcast, and a leg's link path is rebuilt only once decoded.
+    */
   def viterbiLegs(
       cands: DataFrame, tripCol: String, ptCol: String, tsCol: String,
       skim: Map[(Long, Long), (Double, Vector[Long])],
       linksById: Map[Long, Link]): Dataset[Leg] = {
     val spark = cands.sparkSession
     import spark.implicits._
-    val bcSkim = spark.sparkContext.broadcast(skim)
+    val bcSkim = spark.sparkContext.broadcast(denseOf(skim))
     val bcLinks = spark.sparkContext.broadcast(linksById)
-    val rows = cands.select(col(tripCol).cast("string").as("trip"),
-        col(ptCol).cast("long").as("pt"), col(tsCol).cast("double").as("ts"),
-        col("link_id"), col("offset_ratio").cast("double"),
-        col("cand_dist").cast("double"), col("cand_rank"))
-      .as[(String, Long, Double, Long, Double, Double, Int)]
-    rows.groupByKey(_._1).flatMapGroups { (trip, it) =>
-      val skimM = bcSkim.value
+    candRows(cands, tripCol, ptCol, tsCol).groupByKey(_._1).flatMapGroups { (trip, it) =>
+      val sk = bcSkim.value
       val linkM = bcLinks.value
       val pts = assemblePts(it)
       val nObs = pts.length
       if (nObs < 2) Iterator.empty
       else {
-        val (emit, trans) = costFns(pts, skimM, linkM)
+        val at = pts.map(_._3.map(st => sk.indexOf(st.linkId)))
+        val (emit, trans) = costFns(pts, at, sk, linkM)
         val path = Viterbi.decodeVar(nObs, t => pts(t)._3.length,
           emit, trans)
         (1 until nObs).iterator.map { i =>
           val a = pts(i - 1)._3(path(i - 1)); val b = pts(i)._3(path(i))
+          val ia = at(i - 1)(path(i - 1)); val ib = at(i)(path(i))
           if (a.linkId == b.linkId) {
             val endR = math.max(a.offsetRatio, b.offsetRatio)
             Leg(trip, i, pts(i - 1)._2, pts(i)._2, Vector(a.linkId),
               a.offsetRatio, endR, moved = endR != a.offsetRatio)
-          } else skimM.get((a.linkId, b.linkId)) match {
-            case Some((_, links)) =>
-              Leg(trip, i, pts(i - 1)._2, pts(i)._2, links,
-                a.offsetRatio, b.offsetRatio, moved = true)
-            case None =>
-              // no finite path between ANY candidate pair at this step
-              // (Viterbi ties resolved to index 0 over all-infinite
-              // costs): the reference's path==None `continue` — emit an
-              // unmoved leg so allocation skips it rather than crashing
-              // the stage (TaxiDataHelper.py:425-427)
-              Leg(trip, i, pts(i - 1)._2, pts(i)._2, Vector(a.linkId),
-                a.offsetRatio, a.offsetRatio, moved = false)
-          }
+          } else if (ia >= 0 && ib >= 0 && sk.reachable(ia, ib))
+            Leg(trip, i, pts(i - 1)._2, pts(i)._2, sk.path(ia, ib),
+              a.offsetRatio, b.offsetRatio, moved = true)
+          else
+            // no finite path between ANY candidate pair at this step
+            // (Viterbi ties resolved to index 0 over all-infinite
+            // costs): the reference's path==None `continue` — emit an
+            // unmoved leg so allocation skips it rather than crashing
+            // the stage (TaxiDataHelper.py:425-427)
+            Leg(trip, i, pts(i - 1)._2, pts(i)._2, Vector(a.linkId),
+              a.offsetRatio, a.offsetRatio, moved = false)
         }
       }
     }
@@ -340,19 +419,16 @@ object MapMatch {
       linksById: Map[Long, Link]): DataFrame = {
     val spark = cands.sparkSession
     import spark.implicits._
-    val bcSkim = spark.sparkContext.broadcast(skim)
+    val bcSkim = spark.sparkContext.broadcast(denseOf(skim))
     val bcLinks = spark.sparkContext.broadcast(linksById)
-    val rows = cands.select(col(tripCol).cast("string").as("trip"),
-        col(ptCol).cast("long").as("pt"), col(tsCol).cast("double").as("ts"),
-        col("link_id"), col("offset_ratio").cast("double"),
-        col("cand_dist").cast("double"), col("cand_rank"))
-      .as[(String, Long, Double, Long, Double, Double, Int)]
-    rows.groupByKey(_._1).flatMapGroups { (trip, it) =>
+    candRows(cands, tripCol, ptCol, tsCol).groupByKey(_._1).flatMapGroups { (trip, it) =>
+      val sk = bcSkim.value
       val pts = assemblePts(it)
       val nObs = pts.length
       if (nObs == 0) Iterator.empty
       else {
-        val (emit, trans) = costFns(pts, bcSkim.value, bcLinks.value)
+        val at = pts.map(_._3.map(st => sk.indexOf(st.linkId)))
+        val (emit, trans) = costFns(pts, at, sk, bcLinks.value)
         val gamma = Viterbi.smooth(nObs, t => pts(t)._3.length, emit, trans)
         pts.iterator.zipWithIndex.flatMap { case ((pt, _, states), t) =>
           states.iterator.zipWithIndex.map { case (st, s) =>
@@ -363,61 +439,72 @@ object MapMatch {
     }.toDF("trip", "pt", "link_id", "offset_ratio", "cand_dist", "prob")
   }
 
+  /** Columns of allocateTravelTimes before `start_ts` is cast from epoch
+    * seconds. */
+  private val AllocSchema = StructType(Seq(
+    StructField("trip", StringType), StructField("run", LongType),
+    StructField("link_id", LongType, nullable = false),
+    StructField("traversal_ratio", DoubleType),
+    StructField("travel_time", DoubleType), StructField("start_s", DoubleType)))
+
   /** G5 — observed travel time allocated to the links of each matched leg
     * proportional to partial free-flow time (equal split when effectively
     * stationary, HwyNetwork.py:569-610), then the consecutive-link merge
-    * and cumulative start times (TaxiDataHelper.py:440-485) — windows over
-    * (trip, leg, pos), no kernel. Returns one row per merged traversal:
-    * (trip, link_id, traversal_ratio, travel_time, start_ts).
+    * and cumulative start times (TaxiDataHelper.py:440-485). One pass per
+    * trip over its moved legs in (leg, pos) order; links absent from
+    * `links` (whose ids are unique) drop out before the merge but still
+    * count in their leg's equal split. Returns one row per merged
+    * traversal: (trip, run, link_id, traversal_ratio, travel_time,
+    * start_ts).
     */
   def allocateTravelTimes(legs: Dataset[Leg], links: Seq[Link]): DataFrame = {
-    val spark = legs.sparkSession
-    import spark.implicits._
-    val ffDf = links.map(l => (l.linkId, l.ffSec)).toDF("link_id", "ff_sec")
-    val exploded = legs.where(col("moved"))
-      .select(col("trip"), col("leg"), col("tStart"), col("tEnd"),
-        col("startRatio"), col("endRatio"),
-        posexplode(col("links")).as(Seq("pos", "link_id")),
-        size(col("links")).as("n_links"))
-      .join(broadcast(ffDf), "link_id")
-    // traversal ratio: 1, minus the untraversed head of the first link and
-    // tail of the last (both on the same element for single-link paths)
-    val ratio = lit(1.0) -
-      when(col("pos") === 0, col("startRatio")).otherwise(0.0) -
-      when(col("pos") === col("n_links") - 1, lit(1.0) - col("endRatio"))
-        .otherwise(0.0)
-    val wLeg = Window.partitionBy("trip", "leg")
-    val alloc = exploded
-      .withColumn("ratio", ratio)
-      .withColumn("ff_part", col("ratio") * col("ff_sec"))
-      .withColumn("tot_ff", sum("ff_part").over(wLeg))
-      .withColumn("tt",
-        when(col("tot_ff") < 0.1,
-          (col("tEnd") - col("tStart")) / col("n_links"))
-          .otherwise((col("tEnd") - col("tStart")) * col("ff_part") / col("tot_ff")))
-    // consecutive-link merge: a new run starts whenever the link changes
-    // along the (leg, pos) order; runs then collapse to one row each
-    val wOrd = Window.partitionBy("trip").orderBy("leg", "pos")
-    val runs = alloc
-      .withColumn("chg",
-        (lag("link_id", 1).over(wOrd).isNull ||
-          col("link_id") =!= lag("link_id", 1).over(wOrd)).cast("int"))
-      .withColumn("run", sum("chg").over(
-        wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("trip_t0", min("tStart").over(Window.partitionBy("trip")))
-      .groupBy("trip", "run", "link_id")
-      .agg(sum("ratio").as("traversal_ratio"), sum("tt").as("travel_time"),
-        min("trip_t0").as("trip_t0"))
-    // start times: the trip's first path start plus the running tt sum of
-    // the preceding merged traversals (TaxiDataHelper.py:476-485)
-    val wRun = Window.partitionBy("trip").orderBy("run")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    runs
-      .withColumn("start_ts",
-        to_timestamp(col("trip_t0") + sum("travel_time").over(wRun) -
-          col("travel_time")))
-      .select(col("trip"), col("run"), col("link_id"),
-        col("traversal_ratio"), col("travel_time"), col("start_ts"))
+    val ff = links.map(l => l.linkId -> l.ffSec).toMap
+    legs.where(col("moved")).groupByKey(_.trip)(Encoders.STRING)
+      .flatMapGroups((trip: String, it: Iterator[Leg]) => allocateTrip(trip, it, ff))(
+        Encoders.row(AllocSchema))
+      .withColumn("start_ts", to_timestamp(col("start_s")))
+      .drop("start_s")
+  }
+
+  /** One trip's allocation and merge; sums accumulate from 0.0 in
+    * (leg, pos) order, as Spark's `sum` does over the same rows. */
+  private def allocateTrip(trip: String, legs: Iterator[Leg],
+      ff: Map[Long, Double]): Iterator[Row] = {
+    // (link, ratio, tt) per kept link
+    val parts = legs.toArray.sortBy(_.leg).iterator.flatMap { l =>
+      val n = l.links.length
+      val kept = l.links.iterator.zipWithIndex.collect {
+        case (id, pos) if ff.contains(id) =>
+          // traversal ratio: 1, minus the untraversed head of the first
+          // link and tail of the last (both on one link for single-link
+          // paths)
+          val ratio = 1.0 - (if (pos == 0) l.startRatio else 0.0) -
+            (if (pos == n - 1) 1.0 - l.endRatio else 0.0)
+          (id, ratio, ratio * ff(id))
+      }.toArray
+      var totFf = 0.0
+      kept.foreach(k => totFf += k._3)
+      val dt = l.tEnd - l.tStart
+      kept.iterator.map { case (id, ratio, ffPart) =>
+        (id, ratio, if (totFf < 0.1) dt / n else dt * ffPart / totFf, l.tStart)
+      }
+    }.toArray
+    if (parts.isEmpty) return Iterator.empty
+    var t0 = parts(0)._4
+    parts.foreach(p => if (p._4 < t0 || t0.isNaN) t0 = p._4)
+    // consecutive-link merge: a new run whenever the link changes
+    val runs = ArrayBuffer.empty[(Long, Double, Double)]
+    parts.foreach { case (id, ratio, tt, _) =>
+      if (runs.isEmpty || runs.last._1 != id) runs += ((id, 0.0 + ratio, 0.0 + tt))
+      else runs(runs.length - 1) = (id, runs.last._2 + ratio, runs.last._3 + tt)
+    }
+    // start: the trip's first path start plus the running tt sum of the
+    // preceding merged traversals (TaxiDataHelper.py:476-485)
+    var cum = 0.0
+    runs.iterator.zipWithIndex.map { case ((id, ratio, tt), r) =>
+      cum += tt
+      Row(trip, (r + 1).toLong, id, ratio, tt, t0 + cum - tt)
+    }
   }
 
   /** A10 — link travel-time stats: mostly-traversed observations only

@@ -29,12 +29,15 @@ import java.sql.Timestamp
   *    context, so a vehicle resuming later still gets exact deltas; a
   *    second idle horizon garbage-collects the context.
   *
-  * The recurrences mirror Taxi.segmentPoints' window algebra exactly
+  * The recurrence is Taxi.segmentPoints' own [[graft.pipelines.Taxi.Scan]]
   * (fwd: reset-to-zero-else-accumulate; bwd: bwd(i) = 0 if next point is
-  * fast/missing else seconds(i+1) + bwd(i+1)); StreamingTaxiSpec proves
-  * row-level batch/stream parity on a fixture exercising all 5 break
-  * predicates. Late data behind the last finalized point is dropped
-  * (the batch path is the replay story there).
+  * fast/missing else seconds(i+1) + bwd(i+1)), resumed from the state's
+  * forward context; only the seconds arithmetic differs (epoch
+  * milliseconds here, Spark's timestamp-to-double cast in batch).
+  * StreamingTaxiSpec proves row-level batch/stream parity on a fixture
+  * exercising all 5 break predicates. Late data behind the last
+  * finalized point is dropped (the batch path is the replay story
+  * there).
   */
 object StreamingTaxi {
 
@@ -52,11 +55,7 @@ object StreamingTaxi {
   final case class TaxiState(
       prev: Option[Raw], fwdSt: Double, tripCount: Long, buffer: Vector[Raw])
 
-  /** Forward-resolved point. */
-  private final case class F(raw: Raw, seconds: Option[Double],
-      feet: Option[Double], speed: Option[Double], statusChg: Boolean,
-      fwdSt: Double)
-
+  import graft.pipelines.Taxi
   import graft.pipelines.Taxi.{SpeedThresholdMph, StationarySeconds,
     MaxSecondsBetween, MaxFeetBetween}
 
@@ -75,74 +74,29 @@ object StreamingTaxi {
       .sortBy(p => (p.tsMs, p.tie))
     if (pts.isEmpty) return (Vector.empty, st)
 
-    // forward pass — the reference's first iterrows sweep
-    val fs = new Array[F](pts.length)
-    var prev = st.prev
-    var fwdAcc = st.fwdSt
-    var i = 0
-    while (i < pts.length) {
-      val p = pts(i)
-      val seconds = prev.map(q => (p.tsMs - q.tsMs) / 1000.0)
-      val feet = prev.map(q =>
-        math.sqrt(math.pow(p.x - q.x, 2) + math.pow(p.y - q.y, 2)))
-      val statusChg = prev.exists(_.status != p.status)
-      val speed = (seconds, feet) match {
-        case (Some(s), Some(f)) if s > 0 => Some(f / s * 0.681818)
-        case _ => None
-      }
-      val fwdReset = seconds.isEmpty || seconds.contains(0.0) ||
-        speed.exists(_ >= SpeedThresholdMph)
-      fwdAcc = if (fwdReset) 0.0 else fwdAcc + seconds.get
-      fs(i) = F(p, seconds, feet, speed, statusChg, fwdAcc)
-      prev = Some(p)
-      i += 1
-    }
-
-    // backward pass: bwd(i) = 0 if the NEXT point is fast/zero-gap/missing,
-    // else seconds(i+1) + bwd(i+1); exactly known only once that recursion
-    // hits a reset (or end-of-stream)
-    val bwd = new Array[Double](pts.length)
-    val known = new Array[Boolean](pts.length)
-    i = pts.length - 1
-    while (i >= 0) {
-      if (i == pts.length - 1) {
-        // no next point yet: resolved (to 0) only at end of stream
-        bwd(i) = 0.0; known(i) = endOfStream
-      } else {
-        val s2 = fs(i + 1).seconds; val sp2 = fs(i + 1).speed
-        val br = s2.isEmpty || s2.contains(0.0) ||
-          sp2.exists(_ >= SpeedThresholdMph)
-        if (br) { bwd(i) = 0.0; known(i) = true }
-        else { bwd(i) = s2.get + bwd(i + 1); known(i) = known(i + 1) }
-      }
-      i -= 1
-    }
-
-    val nFinal = {
-      var k = 0
-      while (k < pts.length && known(k)) k += 1
-      k
-    }
-    var trips = st.tripCount
+    // the batch recurrence, resumed from the last finalized point: a
+    // point is emitted once a later point (or end-of-stream) resolves its
+    // backward stationary time; the rest stay buffered
+    val scan = new Taxi.Scan[Raw](SpeedThresholdMph, StationarySeconds,
+      MaxSecondsBetween, MaxFeetBetween, st.fwdSt, st.tripCount)
     val out = Vector.newBuilder[SegOut]
-    i = 0
-    while (i < nFinal) {
-      val f = fs(i)
-      val isBreak = f.seconds.isEmpty || f.statusChg ||
-        f.seconds.exists(_ > MaxSecondsBetween) ||
-        f.feet.exists(_ > MaxFeetBetween) ||
-        f.fwdSt > StationarySeconds ||
-        (bwd(i) > StationarySeconds && f.fwdSt > 0)
-      if (isBreak) trips += 1
-      out += SegOut("", new Timestamp(f.raw.tsMs), f.raw.tie,
-        f.seconds, f.feet, f.speed, f.fwdSt, bwd(i),
-        if (isBreak) 1 else 0, trips)
-      i += 1
+    var last: Option[(Raw, Double)] = None
+    val emit: (Raw, Taxi.Seg) => Unit = (p, s) => {
+      out += SegOut("", new Timestamp(p.tsMs), p.tie, s.step.seconds,
+        s.step.feet, s.speed, s.fwd, s.bwd,
+        if (s.isBreak.contains(true)) 1 else 0, s.tripId)
+      last = Some((p, s.fwd))
     }
-    val newPrev = if (nFinal > 0) Some(fs(nFinal - 1).raw) else st.prev
-    val newFwd = if (nFinal > 0) fs(nFinal - 1).fwdSt else st.fwdSt
-    (out.result(),
-      TaxiState(newPrev, newFwd, trips, pts.drop(nFinal)))
+    var prev = st.prev
+    pts.foreach { p =>
+      scan.push(p, Taxi.Step(prev.map(q => (p.tsMs - q.tsMs) / 1000.0),
+        prev.map(q => Taxi.feet(q.x, q.y, p.x, p.y)),
+        Some(prev.exists(_.status != p.status))))(emit)
+      prev = Some(p)
+    }
+    if (endOfStream) scan.finish(emit)
+    (out.result(), TaxiState(last.map(_._1).orElse(st.prev),
+      last.fold(st.fwdSt)(_._2), scan.tripCount, scan.pending.toVector))
   }
 
   def update(flushHorizonMs: Long)(

@@ -143,7 +143,7 @@ class NativeExprSpec extends SparkSpec {
       val df = spark.range(10).select(col("id"),
         transform(sequence(lit(0), lit(7)),
           i => (i.cast("double") + col("id")).cast("float")).as("v"))
-      df.select(Quantization.pqCodes(col("v"), cb, 2, 8).as("codes"))
+      df.select(Quantization.pqCodes(spark, col("v"), cb, 2, 8).as("codes"))
         .queryExecution.executedPlan
         .asInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]
         .doCodeGen()._2.body
@@ -301,5 +301,35 @@ class NativeExprSpec extends SparkSpec {
       (h, r.getLong(0), r.getDouble(1))
     }
     assert(nat === manual, "native ANF diverged from the collect_set form")
+  }
+
+  test("operators pick the native kernel from the DataFrame's session, even on a thread with none") {
+    import graft.operators.{Clustering, Dedup, Quantization}
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    val df = Seq((1L, Seq(0.0, 0.0, 1.0, 2.0)), (2L, Seq(10.0, 10.0, 3.0, 1.0)),
+      (3L, Seq(0.5, 0.0, 1.0, 2.5))).toDF("id", "v")
+    val cb = IndexedSeq(IndexedSeq(0.0, 0.0, 1.0, 2.0), IndexedSeq(9.0, 9.0, 3.0, 1.0))
+    var built: Seq[DataFrame] = Nil
+    var failure: Throwable = null
+    // the new thread inherits this thread's active session; it drops
+    // it, and the process default is cleared, so nothing but the
+    // DataFrame names a session
+    val t = new Thread(() => try {
+      SparkSession.clearActiveSession()
+      built = Seq(
+        Clustering.kmeansAssign(df, "id", "v", k = 2, iters = 1),
+        Dedup.embeddingNearDupPairs(df, "id", "v", 0.9, planes = 4, dims = 4),
+        df.select(Quantization.pqCodes(df.sparkSession, col("v"), cb, 2, 4)))
+    } catch { case e: Throwable => failure = e })
+    SparkSession.clearDefaultSession()
+    try { t.start(); t.join() }
+    finally SparkSession.setDefaultSession(spark)
+    if (failure != null) throw failure
+    // the HOF fallback would show as aggregate(zip_with(...))
+    val plans = built.map(_.queryExecution.analyzed.toString)
+    plans.foreach(p => assert(!p.contains("zip_with"), p))
+    assert(plans(0).contains("graft_dist2"), plans(0))
+    assert(plans(1).contains("graft_dot"), plans(1))
+    assert(plans(2).contains("graft_dist2s"), plans(2))
   }
 }
