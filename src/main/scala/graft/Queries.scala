@@ -10868,23 +10868,19 @@ object Queries {
         AND (r.valid_to IS NULL OR r.valid_to > sp.as_of)
       GROUP BY 1, 2 ORDER BY 1, 2"""))
 
-  /** The cluster deployment shape, composed (r08 verdict item 2): the
-    * convergence-stopped ranker ([[graft.graph.Graph.pageRankConverged]],
-    * q182's contract) run over the ONE-TIME src-bucketed edge layout
-    * (q179's contract) — every probed round joins the bucketed scan with
-    * zero edge-side exchanges AND the loop stops at the data-dependent
-    * L1 fixed point instead of a pinned count. Same tol/maxIter as q182
-    * and the staged table IS q182's deduped edge set, so ranks, round
-    * count and stop delta must hash-match q182's gated-unroll oracle
-    * bit-for-bit — the correctness proof that the two mechanisms
-    * compose without interfering (GraphClusterPlanSpec locks the
-    * per-round plan edge-exchange-free under the converged transport). */
+  /** The convergence-stopped ranker ([[graft.graph.Graph.pageRankConverged]],
+    * q182's contract) run over the src-bucketed edge table q179 stages.
+    * The ranker reads the table once into its own node-partitioned
+    * adjacency, so the layout changes nothing about its rounds. Same
+    * tol/maxIter as q182 and the staged table IS q182's deduped edge
+    * set, so ranks, round count and stop delta must hash-match q182's
+    * gated-unroll oracle bit-for-bit (GraphClusterPlanSpec locks the
+    * converged plan: one edge shuffle per call, at most one per round). */
   val q232PagerankTolBucketed = Q(
     "q232_pagerank_tol_bucketed",
     (s, d) => {
       graft.graph.Graph.pageRankConverged(
-          s.table(stagedBucketedEdges(s, d)), tol = 0.02, maxIter = 30,
-          edgesPrepared = true)
+          s.table(stagedBucketedEdges(s, d)), tol = 0.02, maxIter = 30)
         .where(col("node").startsWith("s"))
         .orderBy(col("rank").desc, col("node"))
         .limit(30)

@@ -1,7 +1,10 @@
 package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.operators.Fixpoint
 
 /** G2 — shortest paths.
@@ -115,7 +118,7 @@ object Graph {
                edgesPrepared: Boolean = false): DataFrame = {
     require(iterations >= 1, "pageRank needs at least one iteration")
     withStaticLoop(edges, edgesPrepared) {
-    Fixpoint.run(edges, checkpointDir) { s =>
+    Fixpoint.run("pageRank", edges, checkpointDir) { s =>
     // The contributions join hits `e` on src every round. Two ways to pay
     // for that, A/B-measured at sf0.1 local[32] (r06, per-round times):
     //  - materialized-RDD checkpoint (this code): each round re-shuffles
@@ -189,49 +192,27 @@ object Graph {
   /** One PageRank round over (node, outdeg, n, rank) state — the plan a
     * cluster pays `iterations` times: one state⋈edges join on src (edge
     * side exchange-free when e is bucketed by src), one dst aggregation,
-    * two one-row constKey broadcasts.
-    *
-    * `trackDelta` serves [[pageRankConverged]]: the input carries a
-    * `__prev` column (last round's rank, null on round one) and the
-    * dangling one-row aggregate ALSO computes the L1 delta
-    * Σ round(|rank − __prev|, 12) of the transition the input state
-    * represents — so the delta rides the broadcast that every round
-    * already pays, attached to every output row as `__delta`, and the
-    * driver's stop check becomes a limit-1 probe of the checkpointed
-    * state instead of a full aggregation job per round (r07 verdict
-    * item 7: halves per-round driver actions). The output re-carries
-    * `__prev := input rank` for the next round's delta. */
-  private[graft] def prRound(state0: DataFrame, e: DataFrame,
-                             damping: Double, teleport: Double,
-                             trackDelta: Boolean = false): DataFrame = {
+    * one one-row constKey broadcast. */
+  private[graft] def prRound(state: DataFrame, e: DataFrame,
+                             damping: Double, teleport: Double): DataFrame = {
     import graft.operators.Guards
-    // the input may still carry last round's broadcast __delta — stale
-    // and colliding with this round's
-    val state = state0.drop("__delta")
     val exactSum12 = (c: Column) =>
       sum(round(c, 12).cast("decimal(28,12)")).cast("double")
     val contribs = shjHint(state.where(col("outdeg").isNotNull))
       .join(e, state("node") === e("src"))
       .groupBy(col("dst").as("node"))
       .agg(exactSum12(col("rank") / col("outdeg")).as("in_sum"))
-    val massCol = coalesce(
-      exactSum12(when(col("outdeg").isNull, col("rank"))), lit(0.0)).as("mass")
-    val dangling =
-      (if (trackDelta)
-        state.agg(massCol, deltaExpr(col("rank"), col("__prev")).as("__delta"))
-      else state.agg(massCol))
-        .withColumn("__k", Guards.constKey(col("mass")))
+    val dangling = state.agg(coalesce(
+        exactSum12(when(col("outdeg").isNull, col("rank"))), lit(0.0)).as("mass"))
+      .withColumn("__k", Guards.constKey(col("mass")))
     val newRank = round(lit(teleport) / col("n") +
       lit(damping) * (coalesce(col("in_sum"), lit(0.0)) +
         col("mass") / col("n")), 12).as("rank")
-    val joined = state.withColumnRenamed("rank", "__rold")
+    state.withColumnRenamed("rank", "__rold")
       .join(shjHint(contribs), Seq("node"), "left")
       .withColumn("__k", Guards.constKey(col("node")))
       .join(broadcast(dangling), "__k")
-    if (trackDelta)
-      joined.select(col("node"), col("outdeg"), col("n"), newRank,
-        col("__rold").as("__prev"), col("__delta"))
-    else joined.select(col("node"), col("outdeg"), col("n"), newRank)
+      .select(col("node"), col("outdeg"), col("n"), newRank)
   }
 
   /** L1 delta of a state transition with 12-dp-rounded addends and exact
@@ -253,29 +234,96 @@ object Graph {
     * through unchanged and `iters`/`delta` freeze — a fixed-point
     * emulation in plain CTEs.
     *
-    * Per round the delta rides the dangling-mass broadcast
-    * ([[prRound]] `trackDelta`), so the stop check is a limit-1 probe of
-    * the just-checkpointed state — round k+1's probe reads Δ_k. The loop
-    * therefore runs one speculative round past the fixed point and hands
-    * back the PREVIOUS state when the probe trips; output is identical
-    * to checking Δ_k before round k+1, but k probes replace k full
-    * aggregation jobs. */
+    * Runs as message-passing rounds ([[Fixpoint.Scope.messages]]): the
+    * deduped out-adjacency is hash-partitioned by node once per call, and
+    * each round is one job — every node sends round(rank/outdeg, 12) to
+    * its out-neighbours, one `reduceByKey` sums them, and the same job
+    * reduces the L1 delta and the next round's dangling mass. Every sum
+    * is of 12-dp fixed-point `Long` addends, exactly the decimal(28,12)
+    * sums of the relational form, so no sum depends on partition order.
+    * The stop is read after each round, so no round runs past it. */
   def pageRankConverged(edges: DataFrame, tol: Double, maxIter: Int = 50,
                         damping: Double = 0.85, teleport: Double = 0.15,
-                        checkpointDir: Option[String] = None,
-                        edgesPrepared: Boolean = false): DataFrame = {
+                        checkpointDir: Option[String] = None): DataFrame = {
     require(tol > 0 && maxIter >= 1, "need tol > 0 and maxIter >= 1")
-    withStaticLoop(edges, edgesPrepared) {
-    Fixpoint.run(edges, checkpointDir) { s =>
-    val e = prepEdges(s, edges, edgesPrepared)
-    val init = prInit(e).withColumn("__prev", lit(null).cast("double"))
-    val (state, iters, delta) = s.probe(init, tol, maxIter, rankDelta)(
-      st => prRound(st, e, damping, teleport, trackDelta = true))
-    state.select(col("node"), col("rank"),
-      lit(iters).as("iters"), round(lit(delta), 12).as("l1_delta"))
+    Fixpoint.run("pageRankConverged", edges, checkpointDir) { s =>
+    // a null id never matched the relational joins on src or dst: it is
+    // a node with no out-edges, and what is sent to it is dropped
+    val g = s.adjacency(edges, "src", "dst") { (a, b) =>
+      Iterator((a, if (a == null) None else Some(b)), (b, None))
     }
+    val n = g.nodes
+    val r0 = round12(1.0 / n)
+    val init = g.entries.mapPartitions(_.map { case (node, nbrs) =>
+      InternalRow(node, if (nbrs.isEmpty) null else nbrs.length.toLong, r0, null)
+    })
+    val c0 = RankCensus(0L,
+      if (g.sinks == 0) 0L else Math.multiplyExact(g.sinks, fix12(r0)))
+    val schema = StructType(Seq(
+      StructField("node", g.keyType, nodeNullable(edges)),
+      StructField("outdeg", LongType), StructField("rank", DoubleType),
+      StructField("__prev", DoubleType)))
+    val (state, iters, c, _) = s.messages(g, init, c0, maxIter,
+        new RankKernel(n, damping, teleport), schema) { (c, i) =>
+      n == 0 || (i > 0 && unfix12(c.delta) < tol)
+    }
+    state.select(col("node"), col("rank"),
+        lit(iters).as("iters"), round(lit(unfix12(c.delta)), 12).as("l1_delta"))
     }
   }
+
+  /** Census of a PageRank state: Σ round(|rank − prev|, 12) and the
+    * dangling mass Σ round(rank, 12) over sinks, both 12-dp fixed-point. */
+  private final case class RankCensus(delta: Long, mass: Long)
+
+  /** State row (node, outdeg, rank, prev); outdeg null marks a sink. */
+  private final class RankKernel(n: Long, damping: Double, teleport: Double)
+      extends Fixpoint.Kernel[Long, RankCensus] {
+    def send(node: Any, nbrs: Array[Any], st: InternalRow, c: RankCensus) =
+      if (st.isNullAt(1)) Iterator.empty
+      else {
+        val share = fix12(st.getDouble(2) / st.getLong(1).toDouble)
+        nbrs.iterator.map(d => (d, share))
+      }
+    def merge(a: Long, b: Long): Long = Math.addExact(a, b)
+    def update(node: Any, nbrs: Array[Any], st: InternalRow, in: Long,
+               c: RankCensus): InternalRow = {
+      val inSum = if (node == null) 0.0 else unfix12(in)
+      val rank = round12(teleport / n.toDouble +
+        damping * (inSum + unfix12(c.mass) / n.toDouble))
+      InternalRow(node, if (st.isNullAt(1)) null else st.getLong(1), rank,
+        st.getDouble(2))
+    }
+    def census(rows: Iterator[InternalRow]): RankCensus = {
+      var delta, mass = 0L
+      rows.foreach { r =>
+        val rank = r.getDouble(2)
+        delta = Math.addExact(delta, fix12(math.abs(rank - r.getDouble(3))))
+        if (r.isNullAt(1)) mass = Math.addExact(mass, fix12(rank))
+      }
+      RankCensus(delta, mass)
+    }
+    def combine(a: RankCensus, b: RankCensus): RankCensus =
+      RankCensus(Math.addExact(a.delta, b.delta), Math.addExact(a.mass, b.mass))
+  }
+
+  /** Spark's `round(x, 12)` of a double. */
+  private[graft] def round12(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** `cast(round(x, 12) as decimal(28,12))` as its unscaled `Long`: the
+    * addend of every exact 12-dp sum. */
+  private[graft] def fix12(x: Double): Long = {
+    val d = Decimal(round12(x))
+    require(d.changePrecision(28, 12), s"$x overflows decimal(28,12)")
+    d.toUnscaledLong
+  }
+
+  /** A 12-dp fixed-point sum cast to double, as Spark casts the
+    * decimal(38,12) sum. */
+  private[graft] def unfix12(sum: Long): Double = Decimal(sum, 38, 12).toDouble
 
   /** Final L1 rank delta of a state the [[Fixpoint.Scope.probe]] cap
     * stopped: one direct aggregate of the carried `__prev`. */
@@ -314,7 +362,7 @@ object Graph {
            edgesByDst: Option[DataFrame] = None): DataFrame = {
     require(iterations >= 1, "hits needs at least one iteration")
     withStaticLoop(edges, edgesPrepared) {
-    Fixpoint.run(edges, checkpointDir) { s =>
+    Fixpoint.run("hits", edges, checkpointDir) { s =>
     // HITS joins edges on src (auth half-step) AND on dst (hub
     // half-step), so the cluster layout that zeroes per-round edge
     // movement is TWO one-time bucketed copies of the same deduped edge
@@ -380,7 +428,7 @@ object Graph {
                     edgesByDst: Option[DataFrame] = None): DataFrame = {
     require(tol > 0 && maxIter >= 1, "need tol > 0 and maxIter >= 1")
     withStaticLoop(edges, edgesPrepared) {
-    Fixpoint.run(edges, checkpointDir) { s =>
+    Fixpoint.run("hitsConverged", edges, checkpointDir) { s =>
     val (e, eDst) = hitsEdges(s, edges, edgesByDst, edgesPrepared)
     import graft.operators.Guards
     val init = hitsInit(e)
@@ -479,7 +527,7 @@ object Graph {
   def bfsHops(edges: DataFrame, maxHops: Int,
               checkpointDir: Option[String] = None): DataFrame = {
     // edges: (src, dst)
-    Fixpoint.run(edges, checkpointDir) { s =>
+    Fixpoint.run("bfsHops", edges, checkpointDir) { s =>
     // ceil(log2(maxHops)) doublings reach maxHops
     val rounds = Iterator.iterate(1L)(_ * 2).takeWhile(_ < maxHops).size
     s.iterate(edges.select(col("src"), col("dst"), lit(1L).as("hops"))
@@ -517,7 +565,7 @@ object Graph {
                            checkpointDir: Option[String] = None,
                            edgesPrepared: Boolean = false): DataFrame = {
     require(iterations >= 1, "personalizedPageRank needs at least one iteration")
-    Fixpoint.run(edges, checkpointDir) { s =>
+    Fixpoint.run("personalizedPageRank", edges, checkpointDir) { s =>
     val e = prepEdges(s, edges, edgesPrepared)
     s.iterate(pprInit(e, isSource), iterations) { (st, i) =>
       // the seed check reads the pinned init state, before round one
@@ -596,7 +644,7 @@ object Graph {
                                     edgesPrepared: Boolean = false)
       : DataFrame = {
     require(tol > 0 && maxIter >= 1, "need tol > 0 and maxIter >= 1")
-    Fixpoint.run(edges, checkpointDir) { s =>
+    Fixpoint.run("personalizedPageRankConverged", edges, checkpointDir) { s =>
     val e = prepEdges(s, edges, edgesPrepared)
     val init = pprInit(e, isSource)
       .withColumn("__prev", lit(null).cast("double"))
@@ -626,98 +674,95 @@ object Graph {
       .where(col("a") =!= col("b")).distinct())
   }
 
-  /** One synchronous label-propagation round (Raghavan et al. 2007, the
-    * self-vote stabilized variant): every node adopts the most frequent
-    * label among its neighbors PLUS its own current label (one vote —
-    * the retention term that damps the bipartite oscillation plain
-    * synchronous LPA is prone to), ties to the smallest label. All
-    * counting is integer-exact, so the argmax is engine-portable with
-    * no decimal regime needed. `trackDelta` mirrors [[prRound]]: the
-    * input carries `__prev` (last round's label, null on round one) and
-    * the number of nodes whose label CHANGED in the transition the
-    * input represents rides a one-row broadcast as `__delta`, making
-    * the [[Fixpoint.Scope.probe]] stop (changed = 0 ⟺ delta < 0.5) a limit-1
-    * probe. Edges must be an UNDIRECTED neighbor list (both directions
-    * present), as [[labelPropagationConverged]] prepares. */
-  private[graft] def lpaRound(state0: DataFrame, und: DataFrame,
-                              trackDelta: Boolean = false): DataFrame = {
-    import graft.operators.Guards
-    val state = state0.drop("__delta")
-    // CHANGED-NEIGHBOR vote recomputation (r10, verdict item 7): a
-    // node's winning label is a deterministic function of the multiset
-    // {own label} ∪ {neighbor labels}, so only nodes with a changed
-    // neighbor — or a changed own label — can flip; every other node's
-    // recomputed winner would equal the winner it already carries.
-    // Recompute votes for that AFFECTED set only and carry everyone
-    // else's label through a left join. Round one (`__prev` null, the
-    // [[ssspRound]] frontier convention) marks every node changed, so
-    // the first round is the full recomputation it must be. The label
-    // sequence, change census, iters and output are bit-identical to
-    // the full-recompute form the oracle's gated unroll replays.
-    val frontier = state.where(
-        col("__prev").isNull || col("lab") =!= col("__prev"))
-      .select(col("node"))
-    val affected = frontier
-      .unionByName(und.join(frontier.withColumnRenamed("node", "a"), "a")
-        .select(col("b").as("node")))
-      .distinct()
-    val votes = und
-      .join(affected.withColumnRenamed("node", "b"), "b")
-      .join(shjHint(state), und("a") === state("node"))
-      .select(col("b").as("node"), col("lab"))
-      .unionByName(state
-        .join(affected, Seq("node"), "left_semi")
-        .select(col("node"), col("lab")))
-    val winner = votes.groupBy(col("node"), col("lab"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("node"))
-      .agg(min(struct((-col("cnt")).as("nc"), col("lab").as("l")))
-        .getField("l").as("newlab"))
-    val joined = state.withColumnRenamed("lab", "__lold")
-      .join(shjHint(winner), Seq("node"), "left")
-      .withColumn("__lab", coalesce(col("newlab"), col("__lold")))
-    if (trackDelta) {
-      val changed =
-        state.agg(sum((col("lab") =!= col("__prev")).cast("long"))
-          .cast("double").as("__delta"))
-        .withColumn("__k", Guards.constKey(col("__delta")))
-      joined
-        .withColumn("__k", Guards.constKey(col("node")))
-        .join(broadcast(changed), "__k")
-        .select(col("node"), col("__lab").as("lab"),
-          col("__lold").as("__prev"), col("__delta"))
-    } else joined.select(col("node"), col("__lab").as("lab"))
-  }
+  /** The undirected adjacency (both directions, no self-loops, deduped)
+    * the LPA and k-core rounds pass messages over. An edge with a null
+    * endpoint is dropped, as the relational `a =!= b` filter dropped it. */
+  private def undirectedAdjacency(s: Fixpoint.Scope, edges: DataFrame)
+      : Fixpoint.Adjacency =
+    s.adjacency(edges, "src", "dst") { (a, b) =>
+      if (a == null || b == null || a == b) Iterator.empty
+      else Iterator((a, Some(b)), (b, Some(a)))
+    }
 
-  /** Community detection by synchronous label propagation run to its
-    * fixed point: iterate [[lpaRound]] until NO node changes label (or
-    * `maxIter` rounds — synchronous LPA can oscillate on pathological
-    * structures; the self-vote damps the common cases and the cap
-    * bounds the rest, deterministically either way). Returns
+  /** Community detection by synchronous label propagation (Raghavan et
+    * al. 2007, the self-vote stabilized variant) run to its fixed point:
+    * every round, every node adopts the most frequent label among its
+    * neighbors PLUS its own current label (one vote — the retention term
+    * that damps the bipartite oscillation plain synchronous LPA is prone
+    * to), ties to the smallest label in Spark's ordering of the id type
+    * (UTF8 byte order for strings). Rounds run until NO node changes
+    * label, or `maxIter` rounds — synchronous LPA can oscillate on
+    * pathological structures; the self-vote damps the common cases and
+    * the cap bounds the rest, deterministically either way. All counting
+    * is integer-exact, so the argmax is engine-portable. Returns
     * (node, label, iters, changed) where `label` is the community id
     * (the minimal member id in the usual converged case) and `changed`
-    * is the stop transition's change count (0 at a true fixed point).
-    * Same probe transport and gated-unroll oracle treatment as
-    * [[pageRankConverged]] (q188). Per round: one state⋈edges shuffle
-    * join + two integer aggregations — edge side exchange-free under
-    * the same src-bucketed layout as PageRank's. */
+    * is the stop transition's change count (0 at a true fixed point);
+    * the q188 oracle replays it as a gated unroll.
+    *
+    * Runs as message-passing rounds ([[Fixpoint.Scope.messages]]) over
+    * the undirected adjacency: each round is one job in which every node
+    * sends its label to its neighbors, one `reduceByKey` counts each
+    * node's votes, and the change census is reduced by the same job. */
   def labelPropagationConverged(edges: DataFrame, maxIter: Int = 20,
                                 checkpointDir: Option[String] = None)
       : DataFrame = {
     require(maxIter >= 1, "labelPropagationConverged needs maxIter >= 1")
-    Fixpoint.run(edges, checkpointDir) { s =>
-    val und = undirected(s, edges)
-    val init = und.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("lab"),
-        lit(null).cast("string").as("__prev"))
-    // changed = 0 stops; tol 0.5 on the integer-valued change count
-    val (state, iters, changed) = s.probe(init, 0.5, maxIter,
-      st => st.agg(
-        sum((col("lab") =!= col("__prev")).cast("long")).cast("double"))
-        .head().getDouble(0))(st => lpaRound(st, und, trackDelta = true))
-    state.select(col("node"), col("lab").as("label"),
-      lit(iters).as("iters"), lit(changed).cast("long").as("changed"))
+    Fixpoint.run("labelPropagationConverged", edges, checkpointDir) { s =>
+    val g = undirectedAdjacency(s, edges)
+    val init = g.entries.mapPartitions(_.map { case (node, _) =>
+      InternalRow(node, node, null)
+    })
+    val schema = StructType(Seq(
+      StructField("node", g.keyType, nodeNullable(edges)),
+      StructField("lab", g.keyType, nodeNullable(edges)),
+      StructField("__prev", g.keyType)))
+    val (state, iters, changed, _) = s.messages(g, init, 0L, maxIter,
+        new LabelKernel(g.keyType), schema) { (changed, i) =>
+      g.nodes == 0 || (i > 0 && changed == 0L)
     }
+    state.select(col("node"), col("lab").as("label"), lit(iters).as("iters"),
+        lit(changed.toDouble).cast("long").as("changed"))
+    }
+  }
+
+  /** Whether a node column over both endpoints of `edges` is nullable. */
+  private def nodeNullable(edges: DataFrame): Boolean =
+    edges.schema("src").nullable || edges.schema("dst").nullable
+
+  /** State rows whose value at `now` differs from the previous round's
+    * at `prev` (null before the first round, which counts as no change). */
+  private def changedCount(rows: Iterator[InternalRow], now: Int, prev: Int,
+                           dt: DataType): Long =
+    rows.count(r => !r.isNullAt(prev) && r.get(now, dt) != r.get(prev, dt)).toLong
+
+  /** Votes per label. */
+  private type Votes = scala.collection.mutable.HashMap[Any, Long]
+
+  /** State row (node, lab, prev); a message is the votes of neighbours. */
+  private final class LabelKernel(dt: DataType)
+      extends Fixpoint.Kernel[Votes, Long] {
+    private val ord = PhysicalDataType.ordering(dt)
+    def send(node: Any, nbrs: Array[Any], st: InternalRow, c: Long) = {
+      val lab = st.get(1, dt)
+      nbrs.iterator.map(d => (d, new Votes += lab -> 1L))
+    }
+    def merge(a: Votes, b: Votes): Votes = {
+      b.foreach { case (l, n) => a(l) = a.getOrElse(l, 0L) + n }
+      a
+    }
+    def update(node: Any, nbrs: Array[Any], st: InternalRow, in: Votes,
+               c: Long): InternalRow = {
+      val own = st.get(1, dt)
+      val votes = if (in == null) new Votes else in
+      votes(own) = votes.getOrElse(own, 0L) + 1
+      val (best, _) = votes.reduce { (x, y) =>
+        if (y._2 > x._2 || (y._2 == x._2 && ord.lt(y._1, x._1))) y else x
+      }
+      InternalRow(node, best, own)
+    }
+    def census(rows: Iterator[InternalRow]): Long = changedCount(rows, 1, 2, dt)
+    def combine(a: Long, b: Long): Long = a + b
   }
 
   /** Exact per-node triangle counts by degree-ordered edge orientation
@@ -741,7 +786,7 @@ object Graph {
     * count is an integer groupBy. Returns (node, triangles), nodes with
     * ≥1 triangle only. */
   def triangleCount(edges: DataFrame): DataFrame =
-    Fixpoint.run(edges, None) { s =>
+    Fixpoint.run("triangleCount", edges, None) { s =>
     // und feeds the degree census (two endpoint projections) and the
     // orientation join, and `oriented` feeds both wedge sides plus the
     // closure lookup — without explicit cuts the (typically expensive)
@@ -788,87 +833,65 @@ object Graph {
     * Synchronous distributed peeling: every round recomputes each live
     * node's degree among live nodes and kills all nodes under k AT ONCE;
     * monotone (the live set only shrinks), so it reaches the unique
-    * fixed point in at most peel-depth rounds — each round is one
-    * state⋈edges shuffle join + one integer aggregation, the PageRank
-    * round shape, and at 100 TB the same src-bucketed edge layout makes
-    * the edge side exchange-free.
+    * fixed point in at most peel-depth rounds.
     *
-    * The kill census rides the round's one-row broadcast ([[Fixpoint.Scope.probe]]
-    * transport): zero kills stops the loop as a limit-1 probe. Because
-    * peeling is monotone, the capped run equals the gated run wherever
-    * maxIter ≥ peel depth, and the oracle can unroll rounds UNGATED —
-    * a converged round recomputes the identical live set, so the unroll
-    * is naturally idempotent past the fixed point (no MATERIALIZED
-    * state gating needed; contrast q188's oscillation-capable LPA).
-    * Returns core members only: (node, core_deg, iters) with
-    * core_deg ≥ k by construction. */
+    * Runs as message-passing rounds ([[Fixpoint.Scope.messages]]) over
+    * the undirected adjacency. The state carries each node's MAINTAINED
+    * live degree: init is the full degree, and each round only the nodes
+    * killed in the previous round send a decrement to each neighbor, so
+    * a round moves |edges touching the kill frontier|, not |live edges|
+    * (deg at round t is the degree among the round-(t−1) live set: each
+    * dead node decrements each neighbor exactly once, in the round after
+    * it died). One job per round, which also reduces the kill census;
+    * zero kills stops. Because peeling is monotone, the capped run
+    * equals the gated run wherever maxIter ≥ peel depth, and the oracle
+    * can unroll rounds UNGATED. Returns core members only:
+    * (node, core_deg, iters) with core_deg ≥ k by construction. A state
+    * at its fixed point already carries each member's degree in the
+    * core; a run `maxIter` capped takes one more round for it. */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 30,
             checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1 && maxIter >= 1, "kCore needs k >= 1 and maxIter >= 1")
-    Fixpoint.run(edges, checkpointDir) { s =>
-    val und = undirected(s, edges)
-    // state carries the MAINTAINED live-degree (r10, verdict item 7):
-    // init = full degree (every und node appears as `a` — both edge
-    // directions are present), each round then only DECREMENTS by the
-    // edges incident to last round's kills instead of recomputing the
-    // degree census over all live edges (see [[kcoreRound]]).
-    val init = und.groupBy(col("a").as("node"))
-      .agg(count(lit(1)).as("deg"))
-      .select(col("node"), lit(true).as("alive"), col("deg"),
-        lit(null).cast("boolean").as("__prev"))
-    val (state, iters, _) = s.probe(init, 0.5, maxIter,
-      st => st.agg(
-        sum((col("alive") =!= col("__prev")).cast("long")).cast("double"))
-        .head().getDouble(0))(st => kcoreRound(st, und, k))
-    val core = state.where(col("alive")).select(col("node"))
-    val coreDeg = und
-      .join(core.withColumnRenamed("node", "a"), "a")
-      .join(core.withColumnRenamed("node", "b"), "b")
-      .groupBy(col("a").as("node")).agg(count(lit(1)).as("core_deg"))
-    core.join(coreDeg, Seq("node"))
-      .select(col("node"), col("core_deg"), lit(iters).as("iters"))
+    Fixpoint.run("kCore", edges, checkpointDir) { s =>
+    val g = undirectedAdjacency(s, edges)
+    val init = g.entries.mapPartitions(_.map { case (node, nbrs) =>
+      InternalRow(node, true, nbrs.length.toLong, null)
+    })
+    // the round after the cap leaves (prev, deg) = (members, degree in
+    // the core) — exactly what a fixed point carries
+    val schema = StructType(Seq(
+      StructField("node", g.keyType, nodeNullable(edges)),
+      StructField("alive", BooleanType, nullable = false),
+      StructField("deg", LongType, nullable = false),
+      StructField("__prev", BooleanType)))
+    val (state, rounds, _, _) = s.messages(g, init, 0L, maxIter + 1,
+        new CoreKernel(k), schema) { (kills, i) =>
+      g.nodes == 0 || (i > 0 && kills == 0L)
+    }
+    state.where(col("__prev") && col("deg") > 0)
+      .select(col("node"), col("deg").as("core_deg"),
+        lit(math.min(rounds, maxIter)).as("iters"))
     }
   }
 
-  /** One synchronous peel round, DECREMENT-ONLY (r10, verdict item 7):
-    * instead of recomputing every live node's degree among live nodes
-    * (two |live-edges|-sized joins per round — the r09 shape), the
-    * state's maintained `deg` is decremented by the edges incident to
-    * the nodes KILLED in the previous transition (__prev ∧ ¬alive), so
-    * the per-round join volume is |edges touching the kill frontier|,
-    * not |live edges| — the frontier-compaction argument of
-    * [[ssspRound]] applied to peeling. Equivalence (inductive): deg at
-    * round t equals the degree among the round-(t−1) live set — init is
-    * the full degree (= degree among the all-alive set), and each dead
-    * node decrements each neighbor exactly once, in the round after it
-    * died. The alive sequence, probe census, iters and final output are
-    * bit-identical to the recompute form (the oracle's UNGATED unroll
-    * replays the recompute recurrence and hash-matches). Round one's
-    * kill frontier is empty by construction (__prev is null). The kill
-    * census rides the broadcast like [[lpaRound]]'s change census. */
-  private[graft] def kcoreRound(state0: DataFrame, und: DataFrame,
-                                k: Int): DataFrame = {
-    import graft.operators.Guards
-    val state = state0.drop("__delta")
-    val killed = state.where(col("__prev") && !col("alive"))
-      .select(col("node").as("b"))
-    val dec = und
-      .join(killed, "b")
-      .groupBy(col("a").as("node")).agg(count(lit(1)).as("__dec"))
-    val flips = state.agg(
-        sum((col("alive") =!= col("__prev")).cast("long"))
-          .cast("double").as("__delta"))
-      .withColumn("__k", Guards.constKey(col("__delta")))
-    val newDeg = col("__dold") - coalesce(col("__dec"), lit(0L))
-    state.select(col("node"), col("alive").as("__aold"),
-        col("deg").as("__dold"))
-      .join(shjHint(dec), Seq("node"), "left")
-      .withColumn("__k", Guards.constKey(col("node")))
-      .join(broadcast(flips), "__k")
-      .select(col("node"),
-        (col("__aold") && newDeg >= k).as("alive"),
-        newDeg.as("deg"),
-        col("__aold").as("__prev"), col("__delta"))
+  /** State row (node, alive, deg, prev); a message counts neighbours
+    * killed in the previous round. */
+  private final class CoreKernel(k: Int)
+      extends Fixpoint.Kernel[Long, Long] {
+    def send(node: Any, nbrs: Array[Any], st: InternalRow, c: Long) =
+      if (!st.isNullAt(3) && st.getBoolean(3) && !st.getBoolean(1))
+        nbrs.iterator.map(d => (d, 1L))
+      else Iterator.empty
+    def merge(a: Long, b: Long): Long = a + b
+    def update(node: Any, nbrs: Array[Any], st: InternalRow, in: Long,
+               c: Long): InternalRow = {
+      val alive = st.getBoolean(1)
+      val deg = st.getLong(2) - in
+      InternalRow(node, alive && deg >= k, deg, alive)
+    }
+    def census(rows: Iterator[InternalRow]): Long =
+      changedCount(rows, 1, 3, BooleanType)
+    def combine(a: Long, b: Long): Long = a + b
   }
 
   /** Multi-source WEIGHTED shortest paths: synchronous Bellman–Ford
@@ -900,7 +923,7 @@ object Graph {
   def sssp(edges: DataFrame, isSource: Column => Column, maxIter: Int = 30,
            checkpointDir: Option[String] = None): DataFrame = {
     require(maxIter >= 1, "sssp needs maxIter >= 1")
-    Fixpoint.run(edges, checkpointDir) { s =>
+    Fixpoint.run("sssp", edges, checkpointDir) { s =>
     val e = s.cut(edges.select(col("src"), col("dst"),
       col("w").cast("long").as("w")))
     val init = e.select(col("src").as("node"))
@@ -996,7 +1019,7 @@ object Graph {
                          edgesByDst: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 2, "betweennessSampled needs maxHops >= 2")
     withStaticLoop(edges, edgesPrepared) {
-    Fixpoint.run(edges, checkpointDir) { s =>
+    Fixpoint.run("betweennessSampled", edges, checkpointDir) { s =>
     // forward expands through e on src, backward pushes dependency back
     // through eDst on dst — the HITS dual-copy cluster layout applies
     // verbatim ([[hitsEdges]]: pass src- and dst-bucketed copies with
@@ -1092,7 +1115,7 @@ object Graph {
                            checkpointDir: Option[String] = None)
       : DataFrame = {
     require(k >= 2 && maxHops >= 1, "need k >= 2 and maxHops >= 1")
-    Fixpoint.run(edges, checkpointDir) { s =>
+    Fixpoint.run("neighborhoodFunction", edges, checkpointDir) { s =>
     val e = s.cut(edges.select(col("src"), col("dst")).distinct())
     var state = s.round(
       e.select(col("src").as("node"))
@@ -1201,7 +1224,7 @@ object Graph {
     * Q repeated on every row (the driver-gate-friendly shape). */
   def modularity(edges: DataFrame, labels: DataFrame,
                  nodeCol: String = "node", labCol: String = "label")
-      : DataFrame = Fixpoint.run(edges, None) { s =>
+      : DataFrame = Fixpoint.run("modularity", edges, None) { s =>
     import graft.operators.Guards
     val lab = labels.select(col(nodeCol).as("node"), col(labCol).as("lab"))
     val und = s.cut(edges.select(
@@ -1265,7 +1288,7 @@ object Graph {
                   checkpointDir: Option[String] = None): DataFrame = {
     require(walkLen >= 1 && walksPerSeed >= 1,
       "randomWalks needs walkLen >= 1 and walksPerSeed >= 1")
-    Fixpoint.run(edges, checkpointDir) { s =>
+    Fixpoint.run("randomWalks", edges, checkpointDir) { s =>
     val und = undirected(s, edges)
     val reps = array((1 to walksPerSeed).map(lit): _*)
     // the walk string rides the frontier state and grows by one token
@@ -1351,7 +1374,7 @@ object Graph {
                  topK: Int = 50, seed: Int = 7): DataFrame = {
     require(maxCenterDeg >= 2 && sampleMod >= 1 && topK >= 1,
       "adamicAdar needs maxCenterDeg >= 2, sampleMod >= 1, topK >= 1")
-    Fixpoint.run(edges, None) { s =>
+    Fixpoint.run("adamicAdar", edges, None) { s =>
     val e = edges.select(col("src"), col("dst"))
     val ec = s.cut(e.select(least(col("src"), col("dst")).as("n1"),
         greatest(col("src"), col("dst")).as("n2"))
@@ -1393,7 +1416,7 @@ object Graph {
                   maxIter: Int = 30,
                   checkpointDir: Option[String] = None): DataFrame = {
     require(maxIter >= 1, "ssspPerSeed needs maxIter >= 1")
-    Fixpoint.run(edges, checkpointDir) { s =>
+    Fixpoint.run("ssspPerSeed", edges, checkpointDir) { s =>
     val e = s.cut(edges.select(col("src"), col("dst"),
       col("w").cast("long").as("w")))
     val init = e.select(col("src").as("node"))

@@ -2,8 +2,12 @@ package graft.operators
 
 import graft.functions.Text
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Deduplication operators for training-data pipelines: exact,
   * blocked n-gram Jaccard, MinHash-LSH, SimHash. Designed scale-first:
@@ -492,50 +496,41 @@ object Dedup {
     * similarity into dedup DECISIONS: every doc in a component keeps the
     * component's minimum id as its canonical representative.
     *
-    * Distributed min-label propagation: each iteration joins the frontier
-    * against the (undirected) edge set and keeps per-node minima — one
-    * shuffle join + one partial-aggregated groupBy per round, converging
-    * in O(component diameter) iterations, NOT graph size. Near-dup
-    * components are shallow (planted dups cluster around an original), so
-    * the iteration count stays small at any scale; for adversarial
-    * long-chain graphs the large-star/small-star contraction (Kiveris et
-    * al.) halves diameter per round and would slot in here.
+    * Distributed min-label propagation, run as message-passing rounds
+    * ([[Fixpoint.Scope.messages]]): the pairs are read ONCE into an
+    * undirected adjacency hash-partitioned by id — the upstream candidate
+    * pipeline (minhash + banding, the expensive part) is evaluated once,
+    * not once per direction — and each round is one job in which every
+    * node sends its label to its neighbors, a `reduceByKey` keeps each
+    * node's minimum (Spark's ordering of the id type), and the same job
+    * sums the labels as decimal(38,0). Min-propagation strictly
+    * DECREASES that total until the fixed point, so an unchanged total
+    * stops. The first round turns the identity labels into
+    * min(self, neighbors). Converges in O(component diameter) rounds,
+    * NOT graph size. Near-dup components are shallow (planted dups
+    * cluster around an original), so the round count stays small at any
+    * scale; for adversarial long-chain graphs use
+    * [[connectedComponentsStar]]. A null id never sends its label (the
+    * relational join on it never matched) but still receives.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    Fixpoint.run(pairs, None) { s =>
-    // symmetrize by exploding each pair into both directions — a
-    // union(pairs, pairs.reversed) would put the upstream candidate
-    // pipeline (minhash + banding, the expensive part) in the lineage
-    // TWICE and evaluate it twice before materialization (measured ~2x the
-    // wall-clock of this whole operator at sf0.1)
-    // localCheckpoint (eager), not cache: cache shortcuts EXECUTION but
-    // the logical plan still nests every previous iteration, so the
-    // plan (and AQE's explain string) grows geometrically with rounds —
-    // measured as an OOM in explainString by round ~15 and a 10x
-    // re-analysis tax on q78. Checkpointing cuts the lineage to a leaf.
-    val edges = s.cut(pairs.select(explode(array(
-        struct(col("id1").as("u"), col("id2").as("v")),
-        struct(col("id2").as("u"), col("id1").as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .distinct())
-    // seed with min(self, neighbors) — one propagation round for free
-    val seed = edges
-      .select(col("u").as("id"), least(col("u"), col("v")).as("component"))
-      .groupBy("id").agg(min("component").as("component"))
-    // min-propagation strictly DECREASES the label total until the fixed
-    // point, so convergence is one cheap aggregation on the cut frame
-    // instead of a join + count. An empty edge set sums to null — that's
-    // the trivially-converged empty result, not a frame to iterate on.
+    Fixpoint.run("connectedComponents", pairs, None) { s =>
+    val g = s.adjacency(pairs, "id1", "id2") { (a, b) =>
+      Iterator((a, Some(b)), (b, Some(a)))
+    }
+    val init = g.entries.mapPartitions(_.map { case (id, _) => InternalRow(id, id) })
+    val toDecimal = Cast(BoundReference(0, g.keyType, nullable = true),
+      DecimalType(38, 0))
+    val nullable = pairs.schema("id1").nullable || pairs.schema("id2").nullable
+    val schema = StructType(Seq(StructField("id", g.keyType, nullable),
+      StructField("component", g.keyType)))
+    // an empty edge set sums to null — the trivially-converged empty
+    // result, not a state to iterate on
     var prevSum: java.math.BigDecimal = null
-    val (labels, _, converged) = s.until(seed, maxIter) { (labels, _) =>
-      val prop = edges.join(labels, edges("v") === labels("id"))
-        .select(edges("u").as("id"), col("component"))
-      labels.unionByName(prop)
-        .groupBy("id").agg(min("component").as("component"))
-    } { (labels, i) =>
-      val total = labels.agg(sum(col("component").cast("decimal(38,0)")))
-        .head().getDecimal(0)
-      val done = total == null || (i > 0 && total.compareTo(prevSum) == 0)
+    val (labels, _, _, converged) = s.messages(g, init, null: java.math.BigDecimal,
+        maxIter + 1, new MinLabelKernel(g.keyType, toDecimal), schema) { (total, i) =>
+      val done = g.nodes == 0 || (i > 0 &&
+        (total == null || (i > 1 && total.compareTo(prevSum) == 0)))
       prevSum = total
       done
     }
@@ -547,6 +542,37 @@ object Dedup {
         "connectedComponentsStar for long-chain graphs")
     labels
     }
+
+  /** State row (id, component); a message is a neighbour's label, the
+    * census the label total as decimal(38,0) (null when every label is). */
+  private final class MinLabelKernel(dt: DataType, toDecimal: Cast)
+      extends Fixpoint.Kernel[Any, java.math.BigDecimal] {
+    private val ord = PhysicalDataType.ordering(dt)
+    private def least(a: Any, b: Any): Any =
+      if (a == null) b else if (b == null || ord.lteq(a, b)) a else b
+    def send(id: Any, nbrs: Array[Any], st: InternalRow, c: java.math.BigDecimal) =
+      if (id == null) Iterator.empty
+      else {
+        val lab = st.get(1, dt)
+        nbrs.iterator.map(d => (d, lab))
+      }
+    def merge(a: Any, b: Any): Any = least(a, b)
+    def update(id: Any, nbrs: Array[Any], st: InternalRow, in: Any,
+               c: java.math.BigDecimal): InternalRow =
+      InternalRow(id, least(st.get(1, dt), in))
+    def census(rows: Iterator[InternalRow]): java.math.BigDecimal = {
+      val one = new GenericInternalRow(1)
+      rows.foldLeft(null: java.math.BigDecimal) { (sum, r) =>
+        one.update(0, r.get(1, dt))
+        toDecimal.eval(one) match {
+          case null => sum
+          case d: Decimal => if (sum == null) d.toJavaBigDecimal else sum.add(d.toJavaBigDecimal)
+        }
+      }
+    }
+    def combine(a: java.math.BigDecimal, b: java.math.BigDecimal): java.math.BigDecimal =
+      if (a == null) b else if (b == null) a else a.add(b)
+  }
 
   /** Connected components by alternating star contraction (the
     * large-star/small-star method of Kiveris et al., "Connected
@@ -566,7 +592,7 @@ object Dedup {
     * minimum id; output = (id, component) including the roots.
     */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 30): DataFrame =
-    Fixpoint.run(pairs, None) { s =>
+    Fixpoint.run("connectedComponentsStar", pairs, None) { s =>
     // canonical undirected edge set as parent links child -> parent
     // (child > parent); self-loops drop
     // each round's operators reference the edge frame SEVERAL times

@@ -1,20 +1,27 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftFrames}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
 /** The one owner of iterative state. Every lineage cut an iterative
   * operator makes goes through a [[Scope]], which records the RDD each cut
   * pinned, keeps round state at the newest two per series, and on exit
-  * frees every pin the operator's returned frame does not read. The three
+  * frees every pin the operator's returned frame does not read. The four
   * loop runners on the scope — [[Scope.iterate]] (fixed rounds),
-  * [[Scope.probe]] (a broadcast delta probed after each round) and
-  * [[Scope.until]] (a driver-side check) — are the only iterative loops of
-  * the graph family and of Dedup's connected components.
+  * [[Scope.probe]] (a broadcast delta probed after each round),
+  * [[Scope.until]] (a driver-side check) and [[Scope.messages]]
+  * (message-passing rounds of one job each over a pinned adjacency) — are
+  * the only iterative loops of the graph family and of Dedup's connected
+  * components. Each labels its round jobs `<op>/round <k>` (the Spark job
+  * description), so per-round cost is attributable from any listener.
   */
 object Fixpoint {
 
@@ -52,22 +59,22 @@ object Fixpoint {
   private def read(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.analyzed.collectWithSubqueries { case r: LogicalRDD => r.rdd }
 
-  /** Run `body` with a fresh scope and free what it pinned, except what the
-    * returned frame reads. `checkpointDir` makes every cut durable: the
-    * directory is routed to the context for the call and the PREVIOUS
-    * setting restored afterwards — without this the per-operator override
-    * leaks into every later `checkpoint()` user of the session.
-    * Restoration writes the raw internal value back (reflection on the
-    * bytecode-public `checkpointDir_$eq` setter): re-calling
-    * `setCheckpointDir` would mint a fresh UUID subdir instead of the
-    * original one. The cuts are eager, so every checkpoint has
+  /** Run `body` with a fresh scope for operator `op` and free what it
+    * pinned, except what the returned frame reads. `checkpointDir` makes
+    * every cut durable: the directory is routed to the context for the
+    * call and the PREVIOUS setting restored afterwards — without this the
+    * per-operator override leaks into every later `checkpoint()` user of
+    * the session. Restoration writes the raw internal value back
+    * (reflection on the bytecode-public `checkpointDir_$eq` setter):
+    * re-calling `setCheckpointDir` would mint a fresh UUID subdir instead
+    * of the original one. The cuts are eager, so every checkpoint has
     * materialized before `body` returns. */
-  def run(df: DataFrame, checkpointDir: Option[String])
+  def run(op: String, df: DataFrame, checkpointDir: Option[String])
       (body: Scope => DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val saved = sc.getCheckpointDir
     checkpointDir.foreach(sc.setCheckpointDir)
-    val scope = new Scope(checkpointDir.isDefined)
+    val scope = new Scope(op, df, checkpointDir.isDefined)
     var out: DataFrame = null
     try { out = body(scope); out }
     finally {
@@ -83,13 +90,49 @@ object Fixpoint {
     }
   }
 
+  /** A graph for [[Scope.messages]]: one (node, neighbours) entry per
+    * node, hash-partitioned by node and pinned for the scope, with its
+    * node count and how many nodes have no neighbour. Nodes are Catalyst
+    * internal values of `keyType`. */
+  final class Adjacency private[Fixpoint] (
+      val entries: RDD[(Any, Array[Any])], val nodes: Long, val sinks: Long,
+      val keyType: DataType)
+
+  /** What a node does in one round of [[Scope.messages]]. `M` is a
+    * message — `merge` may update its first argument and return it — and
+    * `C` the census of a state: every round's census rides the job that
+    * materializes the state, and the next round's `send` and `update`
+    * see it. */
+  trait Kernel[M, C] extends Serializable {
+    def send(node: Any, nbrs: Array[Any], state: InternalRow, c: C): Iterator[(Any, M)]
+    def merge(a: M, b: M): M
+    /** The node's next state row; `in`, its merged messages, is null (0
+      * for a primitive `M`) when nothing arrived. */
+    def update(node: Any, nbrs: Array[Any], state: InternalRow, in: M, c: C): InternalRow
+    def census(rows: Iterator[InternalRow]): C
+    def combine(a: C, b: C): C
+  }
+
+  private val JobDescription = "spark.job.description"
+
   /** Everything one operator invocation pinned. */
-  final class Scope private[Fixpoint] (durable: Boolean) {
+  final class Scope private[Fixpoint] (op: String, input: DataFrame,
+                                       durable: Boolean) {
     private val longLived = mutable.ArrayBuffer.empty[RDD[_]]
     private val series = mutable.Map.empty[String, List[RDD[_]]]
 
     private[Fixpoint] def pins: Seq[RDD[_]] =
       longLived.toSeq ++ series.values.flatten
+
+    /** Run `body` with the job description `<op>/round <k>`, restoring the
+      * caller's afterwards. Descriptions are thread-local, so concurrent
+      * callers on one context do not mix. */
+    private def labelled[T](k: Int)(body: => T): T = {
+      val sc = input.sparkSession.sparkContext
+      val saved = sc.getLocalProperty(JobDescription)
+      sc.setJobDescription(s"$op/round $k")
+      try body finally sc.setLocalProperty(JobDescription, saved)
+    }
 
     /** A frame later rounds re-read (edge sets, Brandes level frames):
       * pinned until the scope exits. */
@@ -104,19 +147,32 @@ object Fixpoint {
       * its probe trips. */
     def round(df: DataFrame, name: String = "state"): DataFrame = {
       val (out, rdd) = pin(df, durable)
+      keep(rdd, name)
+      out
+    }
+
+    private def keep(rdd: RDD[_], name: String): Unit = {
       val kept = rdd :: series.getOrElse(name, Nil)
       kept.drop(2).foreach(release)
       series(name) = kept.take(2)
-      out
+    }
+
+    /** Pin `state` as round state, in one job that materializes it and
+      * reduces `k`'s census over its partitions. */
+    private def pinned[C: ClassTag](state: RDD[InternalRow], k: Kernel[_, C]): C = {
+      if (durable) state.checkpoint() else state.localCheckpoint()
+      val parts = state.context.runJob(state, k.census _)
+      keep(state, "state")
+      parts.reduce(k.combine)
     }
 
     /** `k` rounds of `step` (given the state and the 0-based round). */
     def iterate(init: DataFrame, k: Int)
         (step: (DataFrame, Int) => DataFrame): DataFrame = {
-      var state = round(init)
+      var state = labelled(0)(round(init))
       var i = 0
       while (i < k) {
-        state = round(step(state, i))
+        state = labelled(i + 1)(round(step(state, i)))
         i += 1
       }
       state
@@ -129,13 +185,14 @@ object Fixpoint {
     def until(init: DataFrame, maxIter: Int)
         (step: (DataFrame, Int) => DataFrame)
         (stop: (DataFrame, Int) => Boolean): (DataFrame, Int, Boolean) = {
-      var state = round(init)
+      var state = labelled(0)(round(init))
       var i = 0
-      var done = stop(state, 0)
+      var done = labelled(0)(stop(state, 0))
       while (!done && i < maxIter) {
-        state = round(step(state, i))
-        i += 1
-        done = stop(state, i)
+        val k = i + 1
+        state = labelled(k)(round(step(state, i)))
+        i = k
+        done = labelled(k)(stop(state, i))
       }
       (state, i, done)
     }
@@ -153,18 +210,20 @@ object Fixpoint {
     def probe(init: DataFrame, tol: Double, maxIter: Int,
               capDelta: DataFrame => Double)
         (step: DataFrame => DataFrame): (DataFrame, Int, Double) = {
-      var state = round(init)
+      var state = labelled(0)(round(init))
       var it = 0
       var result: DataFrame = null
       var delta = Double.NaN
       while (result == null && it < maxIter) {
-        val next = round(step(state))
-        // a state with NO ROWS (e.g. SSSP with zero matching seeds) is its
-        // own fixed point — probe it as converged-at-zero instead of
-        // head()-ing an empty frame
-        val probed: Any = next.select(col("__delta")).take(1) match {
-          case Array(row) => row.get(0)
-          case _ => java.lang.Double.valueOf(0.0)
+        val (next, probed) = labelled(it + 1) {
+          val next = round(step(state))
+          // a state with NO ROWS (e.g. SSSP with zero matching seeds) is
+          // its own fixed point — probe it as converged-at-zero instead of
+          // head()-ing an empty frame
+          (next, next.select(col("__delta")).take(1) match {
+            case Array(row) => row.get(0)
+            case _ => java.lang.Double.valueOf(0.0)
+          })
         }
         if (probed != null && probed.asInstanceOf[Double] < tol) {
           delta = probed.asInstanceOf[Double]
@@ -175,10 +234,110 @@ object Fixpoint {
         }
       }
       if (result == null) {
-        delta = capDelta(state)
+        delta = labelled(it)(capDelta(state))
         result = state
       }
       (result, it, delta)
     }
+
+    /** The adjacency of `edges`' `(src, dst)` for [[messages]], built by
+      * one shuffle and pinned for the scope: `pairs` maps each edge, as
+      * Catalyst internal values of the two columns' common type, to the
+      * (node, neighbour) entries it contributes — `None` adds the node
+      * with no neighbour. Neighbours are deduplicated. The edge frame is
+      * evaluated once. Node ids of a type without value equality are
+      * rejected. */
+    def adjacency(edges: DataFrame, src: String, dst: String)
+        (pairs: (Any, Any) => Iterator[(Any, Option[Any])]): Adjacency = {
+      // the type a union of the two columns widens to — what the
+      // relational node set of both endpoints would carry
+      val keyType = edges.select(col(src).as("n"))
+        .unionByName(edges.select(col(dst).as("n"))).schema("n").dataType
+      require(keyType match {
+          case _: NumericType | _: StringType | BooleanType | DateType |
+               TimestampType | TimestampNTZType => true
+          case _ => false
+        }, s"$op: node ids of type ${keyType.sql} are not supported")
+      val key = keyOf(keyType)
+      labelled(0) {
+      val ends = edges.select(col(src).cast(keyType), col(dst).cast(keyType))
+        .queryExecution.toRdd
+        .flatMap(r => pairs(key(r, 0), key(r, 1)))
+      val entries = ends.combineByKey[mutable.HashSet[Any]](
+          (v: Option[Any]) => mutable.HashSet.empty[Any] ++= v,
+          (s: mutable.HashSet[Any], v: Option[Any]) => s ++= v,
+          (a: mutable.HashSet[Any], b: mutable.HashSet[Any]) => a ++= b,
+          new HashPartitioner(partitions))
+        .mapValues(_.toArray)
+      if (durable) entries.checkpoint() else entries.localCheckpoint()
+      val counts = entries.context.runJob(entries,
+        (it: Iterator[(Any, Array[Any])]) =>
+          it.foldLeft((0L, 0L)) { case ((n, z), (_, nbrs)) =>
+            (n + 1, if (nbrs.isEmpty) z + 1 else z)
+          })
+      longLived += entries
+      new Adjacency(entries, counts.map(_._1).sum, counts.map(_._2).sum, keyType)
+      }
+    }
+
+    private def partitions: Int =
+      input.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+
+    /** Message-passing rounds (the Pregel model, Malewicz et al. SIGMOD
+      * 2010) over `g`, from `init` — one state row per adjacency entry, in
+      * the adjacency's own partition order — whose census is `c0`. Each
+      * round is ONE job: the state is zipped with the adjacency partition
+      * by partition, each node sends its messages, a `reduceByKey` on the
+      * adjacency's partitioner delivers them, and each node's next row is
+      * computed beside its adjacency entry — no join, no broadcast. The
+      * job pins the new state (series "state", so the newest two stay)
+      * and reduces its census, which `stop(census, rounds run)` reads on
+      * the driver — checked on `c0` and after every round — up to
+      * `maxRounds` rounds. Returns (the final state as a frame of
+      * `schema`, rounds run, its census, whether `stop` held). The frame's
+      * plan reads the pinned state itself, so the exit rule of [[run]]
+      * keeps exactly that pin. */
+    def messages[M: ClassTag, C: ClassTag](g: Adjacency,
+        init: RDD[InternalRow], c0: C, maxRounds: Int, k: Kernel[M, C],
+        schema: StructType)
+        (stop: (C, Int) => Boolean): (DataFrame, Int, C, Boolean) = {
+      val part = g.entries.partitioner.get
+      var state = init
+      var c = c0
+      var i = 0
+      var done = stop(c, 0)
+      while (!done && i < maxRounds) {
+        val ci = c
+        val inbox = g.entries.zipPartitions(state) { (a, s) =>
+            a.zip(s).flatMap { case ((n, nbrs), row) => k.send(n, nbrs, row, ci) }
+          }.reduceByKey(part, k.merge(_, _))
+        val next = g.entries.zipPartitions(state, inbox) { (a, s, m) =>
+          val got = new java.util.HashMap[Any, M]
+          m.foreach { case (n, b) => got.put(n, b) }
+          a.zip(s).map { case ((n, nbrs), row) => k.update(n, nbrs, row, got.get(n), ci) }
+        }
+        i += 1
+        c = labelled(i)(pinned(next, k))
+        state = next
+        done = stop(c, i)
+      }
+      if (i == 0) labelled(0)(pinned(state, k))
+      (GraftFrames.fromInternal(input.sparkSession, state, schema), i, c, done)
+    }
+  }
+
+  /** Reads column `i` of a row as the internal value a node key holds:
+    * strings copied out of the (reused) row buffer, floating-point zero
+    * and NaN normalized the way Spark's grouping and joins normalize
+    * them. */
+  private def keyOf(dt: DataType): (InternalRow, Int) => Any = dt match {
+    case _: StringType => (r, i) => if (r.isNullAt(i)) null else r.getUTF8String(i).clone()
+    case DoubleType => (r, i) =>
+      if (r.isNullAt(i)) null
+      else { val d = r.getDouble(i); if (d == 0.0) 0.0 else if (d.isNaN) Double.NaN else d }
+    case FloatType => (r, i) =>
+      if (r.isNullAt(i)) null
+      else { val f = r.getFloat(i); if (f == 0.0f) 0.0f else if (f.isNaN) Float.NaN else f }
+    case _ => (r, i) => if (r.isNullAt(i)) null else r.get(i, dt)
   }
 }

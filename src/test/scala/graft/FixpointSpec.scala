@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 
 /** Pinned iterative state has one owner: every graph/Dedup operator call
   * leaves persisted exactly the RDDs its returned frame reads, concurrent
-  * calls on one context do not free each other's state, and the runner
-  * adds no job to any loop. */
+  * calls on one context do not free each other's state, round jobs are
+  * labelled, and the message-passing operators run one job per round. */
 class FixpointSpec extends SparkSpec {
   import spark.implicits._
 
@@ -102,14 +102,41 @@ class FixpointSpec extends SparkSpec {
     finally spark.sparkContext.removeSparkListener(l)
   }
 
+  test("round jobs are labelled <op>/round <k> and the caller's description is restored") {
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descs.add)
+    }
+    drain()
+    sc.addSparkListener(l)
+    val iters = try {
+      sc.setJobDescription("caller")
+      try {
+        val got = Seq(
+          "pageRankConverged" -> Graph.pageRankConverged(graph, tol = 1e-9, maxIter = 6),
+          "kCore" -> Graph.kCore(graph, 3),
+          "hitsConverged" -> Graph.hitsConverged(graph, tol = 1e-9, maxIter = 4))
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+        got.map { case (op, df) => op -> df.select("iters").head().getInt(0) }
+      } finally sc.setJobDescription(null)
+    } finally { drain(); sc.removeSparkListener(l) }
+    iters.foreach { case (op, n) =>
+      assert(n >= 1, s"$op ran no round")
+      (1 to n).foreach(k => assert(descs.contains(s"$op/round $k"),
+        s"no job labelled $op/round $k among ${descs.toArray.distinct.mkString(", ")}"))
+    }
+  }
+
   test("jobs per call stay at their measured counts") {
-    // Counts of the loops as hand-written before the Fixpoint runner,
-    // result collect included. kCore measured 38 or 39 from run to run
-    // (AQE stage timing), so each count is a ceiling: one extra job per
-    // round would exceed it.
+    // Counts measured with the message-passing kernels, result collect
+    // included: one adjacency job, one job per round, the collect. Each
+    // count is a ceiling: one extra job per round would exceed it.
     val pinned = Seq(
-      "pageRankConverged" -> 60, "labelPropagationConverged" -> 59,
-      "kCore" -> 39, "connectedComponents" -> 42)
+      "pageRankConverged" -> 8, "labelPropagationConverged" -> 6,
+      "kCore" -> 5, "connectedComponents" -> 10)
     pinned.foreach { case (name, max) =>
       val op = ops.toMap.apply(name)
       val got = jobsOf(op().collect())

@@ -177,38 +177,64 @@ class GraphClusterPlanSpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS gcp_edges_par")
   }
 
+  /** Per job of `run`: its description, and for each stage it actually
+    * ran (skipped stages excluded) whether that is a shuffle-map stage
+    * and whether it scans a file. */
+  private def stagesOf(run: => Any): Seq[(String, Seq[(Boolean, Boolean)])] = {
+    import org.apache.spark.scheduler._
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[Int])]
+    val ran = new java.util.concurrent.ConcurrentHashMap[Int, Boolean]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((Option(e.properties).map(_.getProperty("spark.job.description"))
+          .orNull, e.stageIds)): Unit
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        ran.put(e.stageInfo.stageId,
+          e.stageInfo.rddInfos.exists(_.name.contains("FileScanRDD"))): Unit
+    }
+    val sc = spark.sparkContext
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus): Unit
+    }
+    drain()
+    sc.addSparkListener(l)
+    try { run; drain() } finally sc.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq.map { case (desc, ids) =>
+      // a job's result stage is created after its parents: the highest id
+      desc -> ids.filter(ran.containsKey).map(id => (id != ids.max, ran.get(id)))
+    }
+  }
+
   test("pageRankConverged over a src-bucketed edge table: zero edge-side exchanges + parity") {
-    // the actual cluster deployment shape (r08 verdict item 3): the
-    // data-dependent stop COMPOSED with the one-time bucketed layout —
-    // the probed round's plan must stay edge-exchange-free exactly like
-    // the fixed-round round, and the converged result must hash-match
-    // the default distinct+checkpoint path bit-for-bit
+    // the ranker reads the edge table once, into its own node-partitioned
+    // adjacency: the edge input is shuffled once per call, and no round
+    // moves edges — each runs at most one shuffle, its message combine —
+    // whatever the table's layout. The converged result must hash-match
+    // the default path bit-for-bit.
     val e = rawEdges.distinct()
     Sinks.writeBucketed(e, "gcp_edges_conv", 4, "src")
     try {
       val bucketed = spark.table("gcp_edges_conv")
         .select(col("src"), col("dst"))
-      withPlanConf {
-        // the converged transport's per-round plan is prRound with
-        // trackDelta = true (the delta rides the dangling broadcast) —
-        // assert THAT plan, not the plain round's
-        val state = Graph.prInit(bucketed)
-          .withColumn("__prev", lit(null).cast("double")).localCheckpoint()
-        val round = Graph.prRound(state, bucketed, 0.85, 0.15,
-          trackDelta = true)
-        val plan = round.queryExecution.executedPlan
-        val sides = edgeSides(plan)
-        assert(sides.nonEmpty,
-          s"no shuffle join reads the bucketed scan:\n$plan")
-        sides.foreach(side => assert(shuffles(side).isEmpty,
-          s"edge side of the converged round join still shuffles:\n$side"))
+      val jobs = stagesOf(Graph.pageRankConverged(bucketed, tol = 1e-6,
+        maxIter = 60).collect())
+      val edgeShuffles = jobs.flatMap(_._2).count { case (map, scan) => map && scan }
+      assert(edgeShuffles == 1,
+        s"the edge input was shuffled $edgeShuffles times, not once:\n${jobs.mkString("\n")}")
+      val round = "pageRankConverged/round [1-9][0-9]*".r
+      val rounds = jobs.filter(j => Option(j._1).exists(round.matches))
+      assert(rounds.nonEmpty, s"no round jobs:\n${jobs.mkString("\n")}")
+      rounds.foreach { case (desc, stages) =>
+        assert(stages.count(_._1) <= 1, s"$desc ran ${stages.count(_._1)} shuffles")
       }
       val default = Graph.pageRankConverged(rawEdges, tol = 1e-6,
           maxIter = 60)
         .select(col("node"), col("rank"), col("iters"), col("l1_delta"))
         .as[(String, Double, Int, Double)].collect().toSet
       val prepared = Graph.pageRankConverged(bucketed, tol = 1e-6,
-          maxIter = 60, edgesPrepared = true)
+          maxIter = 60)
         .select(col("node"), col("rank"), col("iters"), col("l1_delta"))
         .as[(String, Double, Int, Double)].collect().toSet
       assert(prepared == default,
