@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every catalog query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Each query is forced
@@ -28,33 +27,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // object-typed aggregates (graft_bottomk, graft_simhash) keep tiny
-      // ≤8k-byte buffers per group; the default 128-key fallback turns
-      // every such aggregation sort-based and spills the exploded input
-      // (q202 spilled a constant 5.9 GB/iteration from exactly this)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      // convert sort-merge joins to shuffled-hash AT RUNTIME when every
-      // build-side partition is observed under the threshold (opt guide
-      // §3.1): the iterative graph family pays 2-4 sorts per round under
-      // SMJ for node-scale states that hash-build in microseconds. The
-      // AQE rewrite (not the static preferSortMergeJoin flag) is the safe
-      // form — the static planner sees checkpointed-RDD state with
-      // unknown (defaultSizeInBytes = huge) stats and would build the
-      // hash map on the EDGE side (measured: q182 18 s → 25-39 s under
-      // the static flag; reverted). Runtime sizes pick the right side at
-      // any scale; threshold = the advisory partition size class.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        "256m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // task-level telemetry: per-iteration GC time, shuffle/agg spill,
     // summed executor run time and approximate scheduler delay
@@ -282,8 +255,7 @@ object Bench {
         }
         val samples = probe {
           graft.graph.Graph
-            .pageRank(spark.table("bench_sf1_edges"), iterations = 6,
-              edgesPrepared = true)
+            .pageRank(spark.table("bench_sf1_edges"), iterations = 6)
             .write.mode("overwrite").format("noop").save()
         }
         // the convergence-stopped ranker over the same bucketed table,

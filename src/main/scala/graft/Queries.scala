@@ -6856,7 +6856,7 @@ object Queries {
         round(y, 6) AS ewma
       FROM r"""))
 
-  private def pprRoundSql(prev: String, k: Int): String = s"""
+  private def pprIterSql(prev: String, k: Int): String = s"""
       pc$k AS (
         SELECT e.dst AS node,
           CAST(sum(CAST(round(s.rank / s.outdeg, 12) AS DECIMAL(28,12))) AS DOUBLE) AS in_sum
@@ -6910,7 +6910,7 @@ object Queries {
                       AND CAST(substring(nd.node, 2) AS BIGINT) % 97 = 0
                 THEN CAST(1.0 AS DOUBLE) / m.ns ELSE 0.0 END, 12) AS rank
         FROM nodes nd LEFT JOIN deg dg USING (node) CROSS JOIN m),
-      ${(1 to 4).map(k => pprRoundSql(s"ps${k - 1}", k)).mkString(",\n")}
+      ${(1 to 4).map(k => pprIterSql(s"ps${k - 1}", k)).mkString(",\n")}
       SELECT node, rank FROM ps4
       WHERE node LIKE 's%'
       ORDER BY rank DESC, node LIMIT 30"""))
@@ -7526,17 +7526,6 @@ object Queries {
           AS jaccard
       FROM i JOIN n na ON i.s1 = na.source JOIN n nb ON i.s2 = nb.source"""))
 
-  /** q123's cluster layout, under the oracle gate: the SAME customer→
-    * supplier PageRank, but the deduped edge set is first written ONCE as
-    * a src-bucketed table ([[graft.sources.Sinks.writeBucketed]]) and the
-    * ranker runs with `edgesPrepared = true` — no re-distinct, no
-    * checkpoint of the edge frame — so every one of the 6 rounds joins
-    * the bucketed scan with ZERO edge-side exchanges
-    * (GraphClusterPlanSpec locks the plan; this query locks the hashes:
-    * same oracle as q123, bit-identical ranks). This is the one-time
-    * layout that replaces q123's per-round ~20 MB edge re-shuffle when
-    * the edge set is 100 TB-class: the bucketing IS the exchange, paid
-    * once at write time. */
   /** q179's bucketed edge table, staged ONCE per (process, sfDir): the
     * one-time layout write is setup, not the per-round ranker under
     * test — re-writing it on every bench iteration billed the layout to
@@ -7562,22 +7551,27 @@ object Queries {
         .select(concat(lit("c"), col("o_custkey")).as("src"),
           concat(lit("s"), col("l_suppkey")).as("dst"))
         .distinct()
-      // 32 buckets = the session's core count: buckets bound the
-      // zero-exchange path's per-round parallelism (scan+join+agg all
-      // run bucket-wise), and the r08 sf1 probe measured 8 buckets
-      // leaving 3/4 of local[32] idle — 6 rounds over 10x the edges
-      // ran FASTER at 32 buckets than this query did at 8. On a
-      // cluster you'd size buckets to the executor-core fleet.
+      // 32 buckets: the scan that reads the table into the ranker's
+      // adjacency runs one task per bucket
       graft.sources.Sinks.writeBucketed(e, name, 32, "src")
       name
     })
   }
 
+  /** q123's ranker over a one-time layout, under the oracle gate: the
+    * SAME customer→supplier PageRank, but the deduped edge set is first
+    * written ONCE as a src-bucketed table
+    * ([[graft.sources.Sinks.writeBucketed]]) and the ranker reads that
+    * table. The ranker reads its edge input once per call into its own
+    * node-partitioned adjacency, so the layout changes nothing about its
+    * rounds (GraphClusterPlanSpec locks the plan: one edge shuffle per
+    * call, at most one per round); this query locks the hashes: same
+    * oracle as q123, bit-identical ranks. */
   val q179PagerankBucketed = Q(
     "q179_pagerank_bucketed",
     (s, d) => {
       graft.graph.Graph.pageRank(s.table(stagedBucketedEdges(s, d)),
-          iterations = 6, edgesPrepared = true)
+          iterations = 6)
         .where(col("node").startsWith("s"))
         .orderBy(col("rank").desc, col("node"))
         .limit(30)
@@ -7883,7 +7877,7 @@ object Queries {
       FROM hs20
       ORDER BY auth DESC, node LIMIT 20"""))
 
-  /** One converged-PPR iteration as gated CTEs — [[pprRoundSql]] under
+  /** One converged-PPR iteration as gated CTEs — [[pprIterSql]] under
     * the fixed-point gating, teleport/dangling mass routed to the
     * personalization vector. */
   private def pprConvergedRoundSql(k: Int, tol: Double): String = {

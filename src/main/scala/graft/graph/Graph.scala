@@ -1,54 +1,34 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftFrames}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.Fixpoint
 
-/** G2 — shortest paths.
+/** Graph operators over edge DataFrames (src, dst[, w]).
   *
-  * The reference precomputes a dense all-pairs link-to-link cost matrix on
-  * the driver with scipy (HwyNetwork.py:227-294) — valid for its ~10^3-link
-  * network. This module offers both regimes:
+  * G2 — shortest paths. The reference precomputes a dense all-pairs
+  * link-to-link cost matrix on the driver with scipy
+  * (HwyNetwork.py:227-294) — valid for its ~10^3-link network. This
+  * module offers both regimes:
   *  - `floydWarshall`: plain-Scala dense APSP for small graphs, meant to be
   *    `broadcast` and probed inside expressions/mapGroups (the reference's
   *    pattern, G3);
-  *  - `bfsHops`: min-plus pointer doubling over an edge
-  *    DataFrame — the plan that still works when the graph itself is big.
+  *  - `bfsHops`, `sssp`, `ssspPerSeed`: rounds over an edge DataFrame —
+  *    the plans that still work when the graph itself is big.
+  *
+  * Every iterative operator runs its rounds under a [[Fixpoint]] scope,
+  * in one of two forms:
+  *  - message-passing kernels ([[Fixpoint.Scope.messages]]): the four
+  *    PageRank variants, label propagation and k-core — one adjacency job
+  *    per call, then one job per round;
+  *  - relational rounds of keyed joins and aggregations, cut each round:
+  *    HITS, shortest paths, betweenness, the neighborhood function and
+  *    random walks.
   */
 object Graph {
-
-  /** Planning regime per loop (r09, measured both ways at sf0.1 AND at
-    * the 10× sf1 probe): with the DEFAULT (checkpointed-RDD) edge path,
-    * AQE must stay ON — its runtime small-side broadcast conversion is
-    * what keeps each round's state⋈edges and state⋈contribs joins
-    * sort-free (forcing static plans quintupled round task time: q182
-    * run_ms 85k → 400k, q188 5.5 s → 12.1 s, q199 17 s → 33 s). With a
-    * PREPARED bucketed edge table the co-partitioning is statically
-    * known — but whether AQE still earns its per-round replan latency
-    * depends on VOLUME, so the choice is derived from the edge table's
-    * size, not hard-coded (opt guide §2: scale-adaptive, not a constant
-    * tuned for one mode). Measured crossover: at ~10 MB of edges
-    * (sf0.1) static rounds win big (q232 44 s → 15.9 s, q179 13 s →
-    * 4.6 s — AQE is pure latency when every stage is tiny); at ~100 MB
-    * (the 10× probe, 5.9 M edges) adaptive wins (q232-composed probe
-    * 48.6 s adaptive vs 103.5 s static — coalescing and runtime
-    * broadcasts matter again once the per-round stages carry real
-    * data). The 32 MB threshold (≈ 1 MB/bucket at 32 buckets) sits
-    * between the two measured points; above it — including any
-    * cluster-scale table — rounds plan adaptively. */
-  private def withStaticLoop[T](df: DataFrame, prepared: Boolean)
-      (body: => T): T = {
-    val static = prepared && {
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes <= (32L << 20)
-      catch { case _: Throwable => false }
-    }
-    if (static)
-      graft.operators.IterPlan.withLoopPlanning(df.sparkSession)(body)
-    else body
-  }
 
   /** Dense APSP with predecessor matrix. Infinity = Double.MaxValue/4. */
   def floydWarshall(n: Int, edges: Seq[(Int, Int, Double)])
@@ -84,22 +64,19 @@ object Graph {
     * domain/link graphs (Page et al. 1999; Common Crawl publishes exactly
     * this family of host-level rank).
     *
-    * Plan shape per iteration (the standard Pregel decomposition, kept
-    * relational so Catalyst plans it):
-    *  - state is one frame (node, outdeg, rank); edges are joined on
-    *    node = src and contributions aggregated by dst — the only two
-    *    data-proportional shuffles, both on the node key, so at scale a
-    *    bucketing of both sides by node makes every round co-partitioned;
-    *  - the dangling mass (rank parked on sink nodes) and the node count
-    *    are ONE-row aggregates broadcast back on a non-foldable constant
-    *    key ([[graft.operators.Guards.constKey]] — the plan-canary
-    *    contract for one-row joins);
-    *  - `localCheckpoint` cuts lineage each round (the [[bfsHops]]
-    *    lesson: no geometric plan growth, one job per round).
+    * Runs `iterations` message-passing rounds of [[RankKernel]]
+    * ([[rankRounds]]): the deduped out-adjacency is hash-partitioned by
+    * node once per call, and each round is one job — every node sends
+    * round(rank/outdeg, 12) to its out-neighbours, one `reduceByKey` sums
+    * them, and the same job reduces the next round's dangling mass (the
+    * rank parked on sinks). The edge input is read and shuffled once
+    * whatever its layout, so a src-bucketed edge table (q179) and a raw
+    * edge frame run the same plan and give the same ranks.
     *
     * Cross-engine float determinism (the kmeans decimal-sum discipline):
     * every cross-row reduction — contribution sums and the dangling mass —
-    * rounds its addends to 12 dp and sums EXACT decimal(28,12); scalar
+    * rounds its addends to 12 dp and sums them as 12-dp fixed-point
+    * `Long`s, exactly the decimal(28,12) sums an SQL oracle runs; scalar
     * per-row arithmetic is identical IEEE on both engines; each new rank
     * is re-rounded to 12 dp, so iteration K's state is bit-identical to
     * the oracle's unrolled CTE chain.
@@ -114,59 +91,13 @@ object Graph {
     */
   def pageRank(edges: DataFrame, iterations: Int = 8,
                damping: Double = 0.85, teleport: Double = 0.15,
-               checkpointDir: Option[String] = None,
-               edgesPrepared: Boolean = false): DataFrame = {
+               checkpointDir: Option[String] = None): DataFrame = {
     require(iterations >= 1, "pageRank needs at least one iteration")
-    withStaticLoop(edges, edgesPrepared) {
     Fixpoint.run("pageRank", edges, checkpointDir) { s =>
-    // The contributions join hits `e` on src every round. Two ways to pay
-    // for that, A/B-measured at sf0.1 local[32] (r06, per-round times):
-    //  - materialized-RDD checkpoint (this code): each round re-shuffles
-    //    the compact deduped edge RDD into the join — ~1-2 s/round; the
-    //    checkpointed LogicalRDD reports UnknownPartitioning under AQE,
-    //    so the exchange is NOT elided, but it moves only ~20 MB of
-    //    UnsafeRows already in RAM;
-    //  - repartition(src) + persist: the cached InMemoryTableScan DOES
-    //    keep hashpartitioning(src) and the plan provably drops the
-    //    edge-side exchange (and outdeg's), yet rounds run 2-10x SLOWER
-    //    (2.5-22 s): per-round columnar-cache decompression costs more
-    //    than the small shuffle it saves at this scale.
-    // So: checkpoint locally. On a real cluster, where the per-round
-    // shuffle is network-bound and the cache is distributed, the
-    // co-location win flips the trade — the cluster answer is a bucketed
-    // edge table on src (one-time layout, zero per-round edge movement).
-    // That path is `edgesPrepared = true`: the caller passes an
-    // already-DEDUPED (src, dst) frame — typically `spark.table` over a
-    // [[graft.sources.Sinks.writeBucketed]] table bucketed by src — and
-    // this code must NOT re-distinct or checkpoint it, either of which
-    // would destroy the scan's bucketed output partitioning and
-    // reintroduce the per-round edge exchange. GraphClusterPlanSpec locks
-    // the zero-edge-side-exchange plan and the hash parity of both paths;
-    // q179 runs the bucketed variant under the driver's oracle gate.
-    val e = prepEdges(s, edges, edgesPrepared)
-    s.iterate(prInit(e), iterations)((st, _) => prRound(st, e, damping, teleport))
-      .select(col("node"), col("rank"))
+    val (state, _, _) = rankRounds(s, edges, None, damping, teleport,
+      iterations)((_, i) => i >= iterations)
+    state.select(col("node"), col("rank"))
     }
-    }
-  }
-
-  /** PageRank state init: (node, outdeg, n, rank=1/n). Package-private so
-    * the plan canary can inspect a single round against a bucketed edge
-    * table without the post-checkpoint plan truncation hiding it. */
-  private[graft] def prInit(e: DataFrame): DataFrame = {
-    import graft.operators.Guards
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-    val outdeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
-    // (node, outdeg) with outdeg null for sinks; N broadcast on constKey
-    val meta = nodes.agg(count(lit(1)).as("n"))
-      .withColumn("__k", Guards.constKey(col("n")))
-    nodes.join(outdeg, Seq("node"), "left")
-      .withColumn("__k", Guards.constKey(col("node")))
-      .join(broadcast(meta), "__k")
-      .select(col("node"), col("outdeg"), col("n"),
-        round(lit(1.0) / col("n"), 12).as("rank"))
   }
 
   /** SHUFFLE_HASH hints for the node-scale sides of the per-round joins.
@@ -189,32 +120,6 @@ object Graph {
     * change results — planning only. */
   private def shjHint(df: DataFrame): DataFrame = df.hint("shuffle_hash")
 
-  /** One PageRank round over (node, outdeg, n, rank) state — the plan a
-    * cluster pays `iterations` times: one state⋈edges join on src (edge
-    * side exchange-free when e is bucketed by src), one dst aggregation,
-    * one one-row constKey broadcast. */
-  private[graft] def prRound(state: DataFrame, e: DataFrame,
-                             damping: Double, teleport: Double): DataFrame = {
-    import graft.operators.Guards
-    val exactSum12 = (c: Column) =>
-      sum(round(c, 12).cast("decimal(28,12)")).cast("double")
-    val contribs = shjHint(state.where(col("outdeg").isNotNull))
-      .join(e, state("node") === e("src"))
-      .groupBy(col("dst").as("node"))
-      .agg(exactSum12(col("rank") / col("outdeg")).as("in_sum"))
-    val dangling = state.agg(coalesce(
-        exactSum12(when(col("outdeg").isNull, col("rank"))), lit(0.0)).as("mass"))
-      .withColumn("__k", Guards.constKey(col("mass")))
-    val newRank = round(lit(teleport) / col("n") +
-      lit(damping) * (coalesce(col("in_sum"), lit(0.0)) +
-        col("mass") / col("n")), 12).as("rank")
-    state.withColumnRenamed("rank", "__rold")
-      .join(shjHint(contribs), Seq("node"), "left")
-      .withColumn("__k", Guards.constKey(col("node")))
-      .join(broadcast(dangling), "__k")
-      .select(col("node"), col("outdeg"), col("n"), newRank)
-  }
-
   /** L1 delta of a state transition with 12-dp-rounded addends and exact
     * decimal summation — the same cross-engine determinism regime as the
     * rank sums, so an SQL oracle replays the identical stop decision. */
@@ -234,50 +139,105 @@ object Graph {
     * through unchanged and `iters`/`delta` freeze — a fixed-point
     * emulation in plain CTEs.
     *
-    * Runs as message-passing rounds ([[Fixpoint.Scope.messages]]): the
-    * deduped out-adjacency is hash-partitioned by node once per call, and
-    * each round is one job — every node sends round(rank/outdeg, 12) to
-    * its out-neighbours, one `reduceByKey` sums them, and the same job
-    * reduces the L1 delta and the next round's dangling mass. Every sum
-    * is of 12-dp fixed-point `Long` addends, exactly the decimal(28,12)
-    * sums of the relational form, so no sum depends on partition order.
-    * The stop is read after each round, so no round runs past it. */
+    * The rounds are [[pageRank]]'s; the job that materializes each
+    * round's state also reduces its L1 delta, the exact sum of
+    * round(|rank − prev|, 12), and the stop is read after each round, so
+    * no round runs past it. */
   def pageRankConverged(edges: DataFrame, tol: Double, maxIter: Int = 50,
                         damping: Double = 0.85, teleport: Double = 0.15,
                         checkpointDir: Option[String] = None): DataFrame = {
     require(tol > 0 && maxIter >= 1, "need tol > 0 and maxIter >= 1")
     Fixpoint.run("pageRankConverged", edges, checkpointDir) { s =>
-    // a null id never matched the relational joins on src or dst: it is
-    // a node with no out-edges, and what is sent to it is dropped
+    convergedRanks(s, edges, None, damping, teleport, tol, maxIter)
+    }
+  }
+
+  /** The converged variants: [[rankRounds]] until the L1 delta of a
+    * round falls below `tol`, or `maxIter` rounds; returns
+    * (node, rank, iters, l1_delta). */
+  private def convergedRanks(s: Fixpoint.Scope, edges: DataFrame,
+                             seeds: Option[(Column => Column, String)],
+                             damping: Double, teleport: Double, tol: Double,
+                             maxIter: Int): DataFrame = {
+    val (state, iters, c) = rankRounds(s, edges, seeds, damping, teleport,
+      maxIter)((c, i) => i > 0 && unfix12(c.delta) < tol)
+    state.select(col("node"), col("rank"),
+      lit(iters).as("iters"), round(lit(unfix12(c.delta)), 12).as("l1_delta"))
+  }
+
+  /** The rounds of all four PageRank variants: [[RankKernel]] over the
+    * deduped out-adjacency of `edges` until `stop(census, rounds run)`
+    * holds or `maxRounds` rounds have run; an empty graph stops at once.
+    * A null id never matched the relational joins on src or dst: it is a
+    * node with no out-edges, and what is sent to it is dropped.
+    *
+    * With `seeds` = (isSource, message), teleport and dangling mass go to
+    * the personalization vector p — round(1/|S|, 12) on the nodes
+    * `isSource` holds for, else 0 — instead of 1/n, and the start rank is
+    * p. The predicate is evaluated once, as a narrow projection over a
+    * frame of the adjacency's node keys (so it may name the column
+    * `node`), zipped with the adjacency partition by partition; one job
+    * counts the seeds, and none fails with `message`.
+    *
+    * Returns the final state (node, outdeg, rank, __prev[, p]), the rounds
+    * run and its census. */
+  private def rankRounds(s: Fixpoint.Scope, edges: DataFrame,
+                         seeds: Option[(Column => Column, String)],
+                         damping: Double, teleport: Double, maxRounds: Int)
+      (stop: (RankCensus, Int) => Boolean): (DataFrame, Int, RankCensus) = {
     val g = s.adjacency(edges, "src", "dst") { (a, b) =>
       Iterator((a, if (a == null) None else Some(b)), (b, None))
     }
-    val n = g.nodes
-    val r0 = round12(1.0 / n)
-    val init = g.entries.mapPartitions(_.map { case (node, nbrs) =>
-      InternalRow(node, if (nbrs.isEmpty) null else nbrs.length.toLong, r0, null)
-    })
-    val c0 = RankCensus(0L,
-      if (g.sinks == 0) 0L else Math.multiplyExact(g.sinks, fix12(r0)))
-    val schema = StructType(Seq(
-      StructField("node", g.keyType, nodeNullable(edges)),
-      StructField("outdeg", LongType), StructField("rank", DoubleType),
-      StructField("__prev", DoubleType)))
-    val (state, iters, c, _) = s.messages(g, init, c0, maxIter,
-        new RankKernel(n, damping, teleport), schema) { (c, i) =>
-      n == 0 || (i > 0 && unfix12(c.delta) < tol)
+    val outdeg = (nbrs: Array[Any]) => if (nbrs.isEmpty) null else nbrs.length.toLong
+    val node = StructField("node", g.keyType, nodeNullable(edges))
+    val fields = Seq(node, StructField("outdeg", LongType),
+      StructField("rank", DoubleType), StructField("__prev", DoubleType))
+    val (init, c0, schema) = seeds match {
+      case None =>
+        val r0 = round12(1.0 / g.nodes)
+        (g.entries.mapPartitions(_.map { case (n, nbrs) =>
+            InternalRow(n, outdeg(nbrs), r0, null)
+          }),
+          RankCensus(0L,
+            if (g.sinks == 0) 0L else Math.multiplyExact(g.sinks, fix12(r0))),
+          StructType(fields))
+      case Some((isSource, message)) =>
+        val keys = GraftFrames.fromInternal(edges.sparkSession,
+          g.entries.map { case (n, _) => InternalRow(n) }, StructType(Seq(node)))
+        val flags = keys.select(isSource(col("node"))).queryExecution.toRdd
+          .map(r => !r.isNullAt(0) && r.getBoolean(0))
+        val tagged = g.entries.zipPartitions(flags)(_.zip(_))
+        // (seeds, seeds without out-edges)
+        val (ns, sinkSeeds) = tagged.aggregate((0L, 0L))(
+          { case ((k, z), ((_, nbrs), src)) =>
+              if (src) (k + 1, if (nbrs.isEmpty) z + 1 else z) else (k, z) },
+          { case ((k1, z1), (k2, z2)) => (k1 + k2, z1 + z2) })
+        require(ns > 0, message)
+        val p1 = round12(1.0 / ns)
+        (tagged.mapPartitions(_.map { case ((n, nbrs), src) =>
+            val p = if (src) p1 else 0.0
+            InternalRow(n, outdeg(nbrs), p, null, p)
+          }),
+          RankCensus(0L, Math.multiplyExact(sinkSeeds, fix12(p1))),
+          StructType(fields :+ StructField("p", DoubleType)))
     }
-    state.select(col("node"), col("rank"),
-        lit(iters).as("iters"), round(lit(unfix12(c.delta)), 12).as("l1_delta"))
+    val (state, rounds, c, _) = s.messages(g, init, c0, maxRounds,
+        new RankKernel(g.nodes, damping, teleport, seeds.isDefined), schema) {
+      (c, i) => g.nodes == 0 || stop(c, i)
     }
+    (state, rounds, c)
   }
 
   /** Census of a PageRank state: Σ round(|rank − prev|, 12) and the
     * dangling mass Σ round(rank, 12) over sinks, both 12-dp fixed-point. */
   private final case class RankCensus(delta: Long, mass: Long)
 
-  /** State row (node, outdeg, rank, prev); outdeg null marks a sink. */
-  private final class RankKernel(n: Long, damping: Double, teleport: Double)
+  /** State row (node, outdeg, rank, prev), plus the personalization p
+    * when `personalized`; outdeg null marks a sink. The new rank keeps
+    * the relational form's double operation order: teleport/n +
+    * damping·(in + mass/n), or teleport·p + damping·(in + mass·p). */
+  private final class RankKernel(n: Long, damping: Double, teleport: Double,
+                                 personalized: Boolean)
       extends Fixpoint.Kernel[Long, RankCensus] {
     def send(node: Any, nbrs: Array[Any], st: InternalRow, c: RankCensus) =
       if (st.isNullAt(1)) Iterator.empty
@@ -289,10 +249,16 @@ object Graph {
     def update(node: Any, nbrs: Array[Any], st: InternalRow, in: Long,
                c: RankCensus): InternalRow = {
       val inSum = if (node == null) 0.0 else unfix12(in)
-      val rank = round12(teleport / n.toDouble +
-        damping * (inSum + unfix12(c.mass) / n.toDouble))
-      InternalRow(node, if (st.isNullAt(1)) null else st.getLong(1), rank,
-        st.getDouble(2))
+      val mass = unfix12(c.mass)
+      val outdeg = if (st.isNullAt(1)) null else st.getLong(1)
+      if (personalized) {
+        val p = st.getDouble(4)
+        InternalRow(node, outdeg,
+          round12(teleport * p + damping * (inSum + mass * p)), st.getDouble(2), p)
+      } else
+        InternalRow(node, outdeg,
+          round12(teleport / n.toDouble + damping * (inSum + mass / n.toDouble)),
+          st.getDouble(2))
     }
     def census(rows: Iterator[InternalRow]): RankCensus = {
       var delta, mass = 0L
@@ -325,18 +291,10 @@ object Graph {
     * decimal(38,12) sum. */
   private[graft] def unfix12(sum: Long): Double = Decimal(sum, 38, 12).toDouble
 
-  /** Final L1 rank delta of a state the [[Fixpoint.Scope.probe]] cap
-    * stopped: one direct aggregate of the carried `__prev`. */
-  private def rankDelta(st: DataFrame): Double =
-    st.agg(deltaExpr(col("rank"), col("__prev"))).head().getDouble(0)
-
-  /** The deduped (src, dst) edge set the rank rounds re-read, pinned for
-    * the scope. A prepared edge frame is used as given: a distinct or a
-    * cut would destroy the bucketed scan's output partitioning. */
-  private def prepEdges(s: Fixpoint.Scope, edges: DataFrame,
-                        edgesPrepared: Boolean): DataFrame =
-    if (edgesPrepared) edges.select(col("src"), col("dst"))
-    else s.cut(edges.select(col("src"), col("dst")).distinct())
+  /** The deduped (src, dst) edge set relational rounds re-read, pinned
+    * for the scope. */
+  private def dedupedEdges(s: Fixpoint.Scope, edges: DataFrame): DataFrame =
+    s.cut(edges.select(col("src"), col("dst")).distinct())
 
   /** HITS hubs and authorities (Kleinberg, JACM 1999) — the
     * query-dependent companion to [[pageRank]]: on a bipartite
@@ -352,26 +310,14 @@ object Graph {
     * aggregate hubs by dst, one-row total broadcast on a non-foldable
     * key, normalize + round 12 dp), then the mirror hub half-step on
     * dst. Two node-keyed shuffle joins + two bounded aggregations per
-    * round — the PageRank cost shape exactly, with the same
-    * `localCheckpoint` lineage cut per half-step and the same cluster
-    * note: bucket both sides by node and every round is co-partitioned.
+    * round over one deduped cut of the edges, with a `localCheckpoint`
+    * lineage cut per half-step.
     */
   def hits(edges: DataFrame, iterations: Int = 4,
-           checkpointDir: Option[String] = None,
-           edgesPrepared: Boolean = false,
-           edgesByDst: Option[DataFrame] = None): DataFrame = {
+           checkpointDir: Option[String] = None): DataFrame = {
     require(iterations >= 1, "hits needs at least one iteration")
-    withStaticLoop(edges, edgesPrepared) {
     Fixpoint.run("hits", edges, checkpointDir) { s =>
-    // HITS joins edges on src (auth half-step) AND on dst (hub
-    // half-step), so the cluster layout that zeroes per-round edge
-    // movement is TWO one-time bucketed copies of the same deduped edge
-    // set: `edges` bucketed by src and `edgesByDst` bucketed by dst
-    // (pass both with edgesPrepared = true). One copy alone still halves
-    // the per-round edge traffic. GraphClusterPlanSpec locks both
-    // half-step plans edge-exchange-free and the hash parity vs the
-    // default path.
-    val (e, eDst) = hitsEdges(s, edges, edgesByDst, edgesPrepared)
+    val e = dedupedEdges(s, edges)
     // one cut PER HALF-STEP is deliberate: each half-step references its
     // input state twice (the contribution join and the score re-attach),
     // so an un-checkpointed auth output would have its whole subtree
@@ -379,23 +325,9 @@ object Graph {
     // two cuts was tried in r09 and DOUBLED the round's task time (q134
     // run_ms 65k → 135-178k); reverted.
     s.iterate(hitsInit(e), iterations) { (st, _) =>
-      hitsHubStep(s.round(hitsAuthStep(st, e), "auth"), eDst)
+      hitsHubStep(s.round(hitsAuthStep(st, e), "auth"), e)
     }
     }
-    }
-  }
-
-  /** Shared HITS edge preparation: on the default path BOTH edge copies
-    * get the same distinct()+cut — an un-deduped dst-side copy would
-    * silently double-count duplicate edges in the hub half-step while
-    * the src side was deduped (r07 advice). Prepared callers own dedup
-    * for both copies (a distinct here would destroy the bucketed scan's
-    * output partitioning). */
-  private def hitsEdges(s: Fixpoint.Scope, edges: DataFrame,
-                        edgesByDst: Option[DataFrame], edgesPrepared: Boolean)
-      : (DataFrame, DataFrame) = {
-    val e = prepEdges(s, edges, edgesPrepared)
-    (e, edgesByDst.map(prepEdges(s, _, edgesPrepared)).getOrElse(e))
   }
 
   /** HITS state init: every node at hub = auth = 1/n. */
@@ -415,21 +347,18 @@ object Graph {
   /** [[hits]] with the [[pageRankConverged]] L1 stop: iterate until
     * Σ round(|hub−hub'|,12) + Σ round(|auth−auth'|,12) < `tol` (or
     * `maxIter`), returning (node, hub, auth, iters, l1_delta). The delta
-    * rides the hub half-step's existing one-row total broadcast
-    * ([[hitsHubStep]] `trackDelta`) against the previous full iteration's
-    * scores carried as `__phub`/`__pauth`, so the stop check is the same
-    * limit-1 probe as PageRank's — no extra aggregation job per round.
+    * against the previous full iteration's scores, carried as
+    * `__phub`/`__pauth`, is one one-row aggregate broadcast onto the new
+    * state, so the stop check is a limit-1 probe of the just-cut state
+    * ([[Fixpoint.Scope.probe]]) — no extra aggregation job per round.
     * After `iters` rounds the scores are bit-identical to
     * `hits(e, iters)`; the q183 oracle unrolls gated rounds (fixed-point
     * pass-through) exactly like q182's. */
   def hitsConverged(edges: DataFrame, tol: Double, maxIter: Int = 30,
-                    checkpointDir: Option[String] = None,
-                    edgesPrepared: Boolean = false,
-                    edgesByDst: Option[DataFrame] = None): DataFrame = {
+                    checkpointDir: Option[String] = None): DataFrame = {
     require(tol > 0 && maxIter >= 1, "need tol > 0 and maxIter >= 1")
-    withStaticLoop(edges, edgesPrepared) {
     Fixpoint.run("hitsConverged", edges, checkpointDir) { s =>
-    val (e, eDst) = hitsEdges(s, edges, edgesByDst, edgesPrepared)
+    val e = dedupedEdges(s, edges)
     import graft.operators.Guards
     val init = hitsInit(e)
       .withColumn("__phub", lit(null).cast("double"))
@@ -452,14 +381,13 @@ object Graph {
       // carry from scratch so this round's broadcast is the only one
       val carried = st.select(col("node"), col("hub"), col("auth"),
         col("hub").as("__phub"), col("auth").as("__pauth"))
-      hitsHubStep(s.round(hitsAuthStep(carried, e), "auth"), eDst)
+      hitsHubStep(s.round(hitsAuthStep(carried, e), "auth"), e)
         .withColumn("__k", Guards.constKey(col("node")))
         .join(broadcast(dAgg), "__k")
         .drop("__k")
     }
     state.select(col("node"), col("hub"), col("auth"),
       lit(iters).as("iters"), round(lit(delta), 12).as("l1_delta"))
-    }
     }
   }
 
@@ -548,12 +476,9 @@ object Graph {
     * SOURCE SET instead of all nodes — p(v) = 1/|S| for v ∈ S, else 0 —
     * and dangling mass returns to the sources, so rank measures
     * proximity to the seeds ("suppliers these customers are closest
-    * to"), not global importance. Same Pregel decomposition, shuffle
-    * budget, decimal(28,12) round-then-exact-sum regime, and
-    * per-round `localCheckpoint` discipline as [[pageRank]]; the
-    * personalization vector rides the state frame as one extra rounded
-    * column, so each round stays one edge join + one dst aggregation +
-    * two one-row broadcasts.
+    * to"), not global importance. [[pageRank]]'s rounds, its fixed-point
+    * sums and its one job per round; the personalization vector rides
+    * the state as one extra rounded column ([[rankRounds]]).
     *
     * `isSource` must be an engine-portable predicate over the node id
     * (the oracle evaluates the identical expression). Returns
@@ -562,105 +487,31 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, isSource: Column => Column,
                            iterations: Int, damping: Double = 0.85,
                            teleport: Double = 0.15,
-                           checkpointDir: Option[String] = None,
-                           edgesPrepared: Boolean = false): DataFrame = {
+                           checkpointDir: Option[String] = None): DataFrame = {
     require(iterations >= 1, "personalizedPageRank needs at least one iteration")
     Fixpoint.run("personalizedPageRank", edges, checkpointDir) { s =>
-    val e = prepEdges(s, edges, edgesPrepared)
-    s.iterate(pprInit(e, isSource), iterations) { (st, i) =>
-      // the seed check reads the pinned init state, before round one
-      if (i == 0) require(st.where(col("p") > 0).limit(1).count() == 1L,
-        "personalizedPageRank: the source predicate matched no node")
-      pprRound(st, e, damping, teleport)
-    }.select(col("node"), col("rank"))
+    val (state, _, _) = rankRounds(s, edges,
+        Some((isSource, "personalizedPageRank: the source predicate matched no node")),
+        damping, teleport, iterations)((_, i) => i >= iterations)
+    state.select(col("node"), col("rank"))
     }
   }
 
-  /** PPR state init: (node, outdeg, p, rank=p) with p the seed-uniform
-    * personalization vector. */
-  private[graft] def pprInit(e: DataFrame, isSource: Column => Column)
-      : DataFrame = {
-    import graft.operators.Guards
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-    val outdeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
-    val meta = nodes.where(isSource(col("node")))
-      .agg(count(lit(1)).as("ns"))
-      .withColumn("__k", Guards.constKey(col("ns")))
-    nodes.join(outdeg, Seq("node"), "left")
-      .withColumn("__k", Guards.constKey(col("node")))
-      .join(broadcast(meta), "__k")
-      .select(col("node"), col("outdeg"),
-        round(when(isSource(col("node")),
-          lit(1.0) / col("ns")).otherwise(lit(0.0)), 12).as("p"))
-      .withColumn("rank", col("p"))
-  }
-
-  /** One PPR round — [[prRound]] with the teleport/dangling mass routed
-    * to the personalization vector `p` instead of 1/n; `trackDelta` works
-    * identically (delta rides the dangling broadcast, output re-carries
-    * `__prev`). */
-  private[graft] def pprRound(state0: DataFrame, e: DataFrame,
-                              damping: Double, teleport: Double,
-                              trackDelta: Boolean = false): DataFrame = {
-    import graft.operators.Guards
-    val state = state0.drop("__delta")
-    val exactSum12 = (c: Column) =>
-      sum(round(c, 12).cast("decimal(28,12)")).cast("double")
-    val contribs = shjHint(state.where(col("outdeg").isNotNull))
-      .join(e, state("node") === e("src"))
-      .groupBy(col("dst").as("node"))
-      .agg(exactSum12(col("rank") / col("outdeg")).as("in_sum"))
-    val massCol = coalesce(
-      exactSum12(when(col("outdeg").isNull, col("rank"))), lit(0.0)).as("mass")
-    val dangling =
-      (if (trackDelta)
-        state.agg(massCol, deltaExpr(col("rank"), col("__prev")).as("__delta"))
-      else state.agg(massCol))
-        .withColumn("__k", Guards.constKey(col("mass")))
-    val newRank = round(lit(teleport) * col("p") +
-      lit(damping) * (coalesce(col("in_sum"), lit(0.0)) +
-        col("mass") * col("p")), 12).as("rank")
-    val joined = state.withColumnRenamed("rank", "__rold")
-      .join(shjHint(contribs), Seq("node"), "left")
-      .withColumn("__k", Guards.constKey(col("node")))
-      .join(broadcast(dangling), "__k")
-    if (trackDelta)
-      joined.select(col("node"), col("outdeg"), col("p"), newRank,
-        col("__rold").as("__prev"), col("__delta"))
-    else joined.select(col("node"), col("outdeg"), col("p"), newRank)
-  }
-
   /** [[personalizedPageRank]] with the [[pageRankConverged]] L1 stop —
-    * same probe-not-aggregate delta transport, same gated-unroll oracle
-    * treatment (q184). Returns (node, rank, iters, l1_delta). */
+    * same stop rule, same gated-unroll oracle treatment (q184). Returns
+    * (node, rank, iters, l1_delta). */
   def personalizedPageRankConverged(edges: DataFrame,
                                     isSource: Column => Column,
                                     tol: Double, maxIter: Int = 50,
                                     damping: Double = 0.85,
                                     teleport: Double = 0.15,
-                                    checkpointDir: Option[String] = None,
-                                    edgesPrepared: Boolean = false)
+                                    checkpointDir: Option[String] = None)
       : DataFrame = {
     require(tol > 0 && maxIter >= 1, "need tol > 0 and maxIter >= 1")
     Fixpoint.run("personalizedPageRankConverged", edges, checkpointDir) { s =>
-    val e = prepEdges(s, edges, edgesPrepared)
-    val init = pprInit(e, isSource)
-      .withColumn("__prev", lit(null).cast("double"))
-    // seed-presence guard as limit-1 probes of the edge frame — the old
-    // check ran init's whole pipeline (node distinct + outdeg joins) a
-    // second time just to learn a seed exists (r09). Endpoints are
-    // exposed AS `node` because caller predicates may reference the
-    // column by name (q165/q184 do).
-    def hasSeed(c: String): Boolean = e.select(col(c).as("node"))
-      .where(isSource(col("node"))).limit(1).count() == 1L
-    require(hasSeed("src") || hasSeed("dst"),
-      "personalizedPageRankConverged: the source predicate matched no node")
-    val (state, iters, delta) = s.probe(init, tol, maxIter, rankDelta)(
-      st => pprRound(st, e, damping, teleport, trackDelta = true))
-    state.select(col("node"), col("rank"),
-      lit(iters).as("iters"), round(lit(delta), 12).as("l1_delta"))
+    convergedRanks(s, edges, Some((isSource,
+        "personalizedPageRankConverged: the source predicate matched no node")),
+      damping, teleport, tol, maxIter)
     }
   }
 
@@ -917,9 +768,7 @@ object Graph {
     * `iters` = 1 + the number of state-changing transitions.
     *
     * `isSource` must be an engine-portable predicate over the node id.
-    * Returns (node, dist, iters) for reached nodes only. Cluster note:
-    * like [[pageRank]], bucketing edges by `src` makes every round's
-    * join exchange-free on the edge side. */
+    * Returns (node, dist, iters) for reached nodes only. */
   def sssp(edges: DataFrame, isSource: Column => Column, maxIter: Int = 30,
            checkpointDir: Option[String] = None): DataFrame = {
     require(maxIter >= 1, "sssp needs maxIter >= 1")
@@ -988,9 +837,8 @@ object Graph {
     * variant) — the cap is what bounds BOTH the round count and the
     * σ path counts, and makes a fixed SQL unroll total.
     *
-    * Two phases, both rounds of keyed equi-joins (the [[pageRank]]
-    * cost shape; src-bucketed edges make the forward side
-    * exchange-free at scale):
+    * Two phases, both rounds of keyed equi-joins over one deduped cut of
+    * the edges:
     *  - FORWARD: per-seed BFS with path counting. State is settled
     *    (seed, node, hop, σ) — σ the exact BIGINT number of shortest
     *    paths; each round expands the hop-h frontier through the edge
@@ -1014,17 +862,12 @@ object Graph {
     */
   def betweennessSampled(edges: DataFrame, isSource: Column => Column,
                          maxHops: Int,
-                         checkpointDir: Option[String] = None,
-                         edgesPrepared: Boolean = false,
-                         edgesByDst: Option[DataFrame] = None): DataFrame = {
+                         checkpointDir: Option[String] = None): DataFrame = {
     require(maxHops >= 2, "betweennessSampled needs maxHops >= 2")
-    withStaticLoop(edges, edgesPrepared) {
     Fixpoint.run("betweennessSampled", edges, checkpointDir) { s =>
     // forward expands through e on src, backward pushes dependency back
-    // through eDst on dst — the HITS dual-copy cluster layout applies
-    // verbatim ([[hitsEdges]]: pass src- and dst-bucketed copies with
-    // edgesPrepared = true and both phases are edge-exchange-free)
-    val (e, eDst) = hitsEdges(s, edges, edgesByDst, edgesPrepared)
+    // through e on dst
+    val e = dedupedEdges(s, edges)
     val seeds = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
       .where(isSource(col("node")))
@@ -1062,7 +905,7 @@ object Graph {
       var lv = math.min(maxHops - 1, deepest - 1)
       while (lv >= 1) {
         levels(lv) = s.cut(betwBackwardLevelFrames(
-          settled.where(col("hop") === lv), levels(lv + 1), eDst))
+          settled.where(col("hop") === lv), levels(lv + 1), e))
         lv -= 1
       }
     }
@@ -1074,7 +917,6 @@ object Graph {
       .groupBy("node")
       .agg(round(betwSumDec12(col("delta")), 6).as("betweenness"))
       .where(col("betweenness") > 0)
-    }
     }
   }
 
@@ -1097,8 +939,7 @@ object Graph {
     * the k smallest per node under one keyed window, re-pack. Bottom-k
     * of a union IS the bottom-k of unioned bottom-k's, so truncation
     * per round is lossless for the estimator. Two node-keyed shuffles
-    * per round; the src-bucketed edge layout removes the edge-side
-    * exchange as usual. (A custom TypedImperativeAggregate that
+    * per round. (A custom TypedImperativeAggregate that
     * truncates partial states to k would halve the shuffled bytes —
     * the production refinement; the window formulation keeps every
     * intermediate bounded and portable.)
@@ -1277,8 +1118,7 @@ object Graph {
     * while still decorrelating walks across walkers and steps.
     *
     * Per step: one walker⋈edges equi-join on the current node + one
-    * min-struct aggregation per walker — the [[pageRank]] round shape
-    * (src-bucketed edges make the edge side exchange-free at scale),
+    * min-struct aggregation per walker,
     * `walkLen` bounded rounds, walker-scale state. Walks move on the
     * UNDIRECTED view so no walker dead-ends. Returns one row per walk:
     * (walk_id, steps, walk) with `walk` the space-joined node

@@ -7,20 +7,17 @@ import org.apache.spark.sql.SparkSession
   *
   * AQE does two things to an iterative round: it converts joins whose
   * materialized side turns out tiny into runtime broadcasts (a big WIN
-  * for the default checkpointed-RDD graph rounds — forcing static plans
-  * there quintupled round task time, so those loops DO NOT use this),
-  * and it re-plans/re-materializes after every exchange (pure per-round
-  * LATENCY when the plan cannot improve). Two loop families are in the
-  * second camp and run under this wrapper:
-  *  - rounds over a PREPARED bucketed edge table, where co-partitioning
-  *    is statically known and the static plan is exactly the zero-
-  *    exchange plan the layout bought (q232: 44 s with AQE → 16.5 s
-  *    static; q179: 13 s → 4.6 s at sf0.1 local[32]);
-  *  - collect-driven trainer rounds (Lloyd iterations, PQ codebook
-  *    training) whose per-round query is one partial-aggregated scan
-  *    with nothing for AQE to re-decide (q127: 8.2 s → 6.5 s).
-  * Restores the session's AQE setting afterwards, so query-level plans
-  * outside the loop are untouched.
+  * for the relational graph rounds — forcing static plans there
+  * quintupled round task time, so those loops DO NOT use this), and it
+  * re-plans/re-materializes after every exchange (pure per-round
+  * LATENCY when the plan cannot improve). The collect-driven trainer
+  * rounds (Lloyd iterations, PQ codebook training) are in the second
+  * camp and run under this wrapper: each round's query is one
+  * partial-aggregated scan with nothing for AQE to re-decide (q127:
+  * 8.2 s → 6.5 s at sf0.1 local[32]; at 4 cores, q93 1.28 → 1.47 s and
+  * q120 4.86 → 4.95 s without the wrapper). Restores the session's AQE
+  * setting afterwards, so query-level plans outside the loop are
+  * untouched.
   */
 object IterPlan {
   private val Key = "spark.sql.adaptive.enabled"

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit helper: print the formatted physical plan (and exchange/
   * sort/window counts) for one or more catalog queries.
   * Usage: runMain graft.tools.Explain <sfDir> <querySubstr>[,<substr>...]
@@ -9,12 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args.take(2)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val wanted = names.split(",").toSeq
     graft.Queries.all

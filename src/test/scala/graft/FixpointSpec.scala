@@ -116,11 +116,18 @@ class FixpointSpec extends SparkSpec {
       sc.setJobDescription("caller")
       try {
         val got = Seq(
+          "pageRank" -> Graph.pageRank(graph, iterations = 3),
           "pageRankConverged" -> Graph.pageRankConverged(graph, tol = 1e-9, maxIter = 6),
+          "personalizedPageRank" -> Graph.personalizedPageRank(graph, seeds, 3),
+          "personalizedPageRankConverged" ->
+            Graph.personalizedPageRankConverged(graph, seeds, tol = 1e-9, maxIter = 4),
           "kCore" -> Graph.kCore(graph, 3),
           "hitsConverged" -> Graph.hitsConverged(graph, tol = 1e-9, maxIter = 4))
         assert(sc.getLocalProperty("spark.job.description") == "caller")
-        got.map { case (op, df) => op -> df.select("iters").head().getInt(0) }
+        // the fixed-round ops run their 3 iterations
+        got.map { case (op, df) =>
+          op -> (if (df.columns.contains("iters")) df.select("iters").head().getInt(0) else 3)
+        }
       } finally sc.setJobDescription(null)
     } finally { drain(); sc.removeSparkListener(l) }
     iters.foreach { case (op, n) =>
@@ -132,10 +139,12 @@ class FixpointSpec extends SparkSpec {
 
   test("jobs per call stay at their measured counts") {
     // Counts measured with the message-passing kernels, result collect
-    // included: one adjacency job, one job per round, the collect. Each
-    // count is a ceiling: one extra job per round would exceed it.
+    // included: one adjacency job, one job per round, the collect; the
+    // personalized ranks add one job that counts the seeds. Each count
+    // is a ceiling: one extra job per round would exceed it.
     val pinned = Seq(
-      "pageRankConverged" -> 8, "labelPropagationConverged" -> 6,
+      "pageRank" -> 5, "pageRankConverged" -> 8, "personalizedPageRank" -> 6,
+      "personalizedPageRankConverged" -> 7, "labelPropagationConverged" -> 6,
       "kCore" -> 5, "connectedComponents" -> 10)
     pinned.foreach { case (name, max) =>
       val op = ops.toMap.apply(name)

@@ -8,19 +8,19 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
-/** Proves the cluster plan the graph family's comments claim (VERDICT r06
-  * item 1): with the edge set written ONCE as a bucketed table on the join
-  * key, every per-round state⋈edges join plans with ZERO exchanges on the
-  * edge side — the per-round edge movement that dominates a 1000-executor
-  * PageRank disappears into a one-time layout. Locked three ways:
-  *  - plan: the round's join reads the bucketed scan with no shuffle
-  *    between scan and join (and the same round over a plain parquet dir
-  *    DOES shuffle the edge side — the contrast that keeps the canary
-  *    honest);
-  *  - result: the bucketed/prepared path hashes identically to the
-  *    default distinct+checkpoint path;
+/** The plans the graph family runs at cluster scale, and the parities
+  * that make them interchangeable:
+  *  - PageRank (every variant) reads its edge input once per call into a
+  *    node-partitioned adjacency, so no round moves edges whatever the
+  *    input's layout: each call shuffles the edge scan once and each
+  *    round job runs at most one shuffle, its message combine;
+  *  - the relational rounds (HITS half-steps, Brandes forward and
+  *    backward rounds) join a bucketed edge scan with ZERO exchanges on
+  *    the edge side;
+  *  - result: a bucketed-table input hashes identically to raw edges;
   *  - durability: reliable `checkpoint(dir)` state (the fault-tolerant
-  *    cluster option) hashes identically to `localCheckpoint` state.
+  *    cluster option) hashes identically to `localCheckpoint` state;
+  *  - converged variants match their fixed-round twins at their stop.
   */
 class GraphClusterPlanSpec extends SparkSpec {
   import spark.implicits._
@@ -75,32 +75,10 @@ class GraphClusterPlanSpec extends SparkSpec {
   test("pageRank round over a src-bucketed edge table: zero edge-side exchanges") {
     val e = rawEdges.distinct()
     Sinks.writeBucketed(e, "gcp_edges_src", 4, "src")
-    try withPlanConf {
+    try {
       val bucketed = spark.table("gcp_edges_src").select(col("src"), col("dst"))
-      val state = Graph.prInit(bucketed).localCheckpoint()
-      val round = Graph.prRound(state, bucketed, 0.85, 0.15)
-      val plan = round.queryExecution.executedPlan
-      val sides = edgeSides(plan)
-      assert(sides.nonEmpty, s"no shuffle join reads the bucketed scan:\n$plan")
-      sides.foreach { side =>
-        assert(shuffles(side).isEmpty,
-          s"edge side of the round join still shuffles:\n$side")
-      }
-      // contrast: the same round over a PLAIN parquet dir must shuffle the
-      // edge side — otherwise the assertion above proves nothing
-      val plainDir = Scratch.dir("gcp_edges_plain")
-      e.write.mode("overwrite").parquet(plainDir)
-      val plain = spark.read.parquet(plainDir).select(col("src"), col("dst"))
-      val plainPlan = Graph.prRound(Graph.prInit(plain).localCheckpoint(),
-        plain, 0.85, 0.15).queryExecution.executedPlan
-      val plainJoinSides = collectPlan(plainPlan).collect {
-        case j: SortMergeJoinExec => j.children
-        case j: ShuffledHashJoinExec => j.children
-      }.flatten.filter(c => collectPlan(c).exists {
-        case f: FileSourceScanExec => true; case _ => false
-      })
-      assert(plainJoinSides.exists(shuffles(_).nonEmpty),
-        s"plain-parquet round did not shuffle the edge side — contrast lost:\n$plainPlan")
+      assertKernelShape("pageRank",
+        stagesOf(Graph.pageRank(bucketed, iterations = 4).collect()))
     } finally spark.sql("DROP TABLE IF EXISTS gcp_edges_src")
   }
 
@@ -111,8 +89,7 @@ class GraphClusterPlanSpec extends SparkSpec {
     try withPlanConf {
       val eSrc = spark.table("gcp_edges_src2").select(col("src"), col("dst"))
       val eDst = spark.table("gcp_edges_dst2").select(col("src"), col("dst"))
-      val state = Graph.hits(eSrc, iterations = 1, edgesPrepared = true,
-        edgesByDst = Some(eDst))
+      val state = Graph.hits(eSrc, iterations = 1)
       // per-half-step plans, pre-checkpoint (the result's own plan is a
       // post-checkpoint RDD scan and shows nothing)
       val s0 = state.select(col("node"), col("hub"), col("auth")).localCheckpoint()
@@ -152,13 +129,11 @@ class GraphClusterPlanSpec extends SparkSpec {
             s"$nm: edge side of the round join still shuffles:\n$side"))
         }
       }
-      // result parity: prepared dual-bucketed path == default path
-      def bw(df: DataFrame, prepared: Boolean, byDst: Option[DataFrame]) =
-        Graph.betweennessSampled(df, _ => lit(true), maxHops = 4,
-            edgesPrepared = prepared, edgesByDst = byDst)
+      // result parity: bucketed table == raw edges
+      def bw(df: DataFrame) =
+        Graph.betweennessSampled(df, _ => lit(true), maxHops = 4)
           .as[(String, Double)].collect().toMap
-      assert(bw(eSrc, prepared = true, Some(eDst)) ===
-        bw(rawEdges, prepared = false, None),
+      assert(bw(eSrc) === bw(rawEdges),
         "bucketed betweenness diverged from the default path")
     } finally {
       spark.sql("DROP TABLE IF EXISTS gcp_edges_bw_src")
@@ -172,7 +147,7 @@ class GraphClusterPlanSpec extends SparkSpec {
     try {
       val default = ranksOf(Graph.pageRank(e, iterations = 5))
       val prepared = ranksOf(Graph.pageRank(spark.table("gcp_edges_par"),
-        iterations = 5, edgesPrepared = true))
+        iterations = 5))
       assert(prepared == default, "bucketed-edge path diverged from default")
     } finally spark.sql("DROP TABLE IF EXISTS gcp_edges_par")
   }
@@ -207,6 +182,21 @@ class GraphClusterPlanSpec extends SparkSpec {
     }
   }
 
+  /** A kernel's job shape: the edge input shuffled once per call, and
+    * at most one shuffle in each `<op>/round k` job. */
+  private def assertKernelShape(op: String,
+                                jobs: Seq[(String, Seq[(Boolean, Boolean)])]): Unit = {
+    val edgeShuffles = jobs.flatMap(_._2).count { case (map, scan) => map && scan }
+    assert(edgeShuffles == 1,
+      s"the edge input was shuffled $edgeShuffles times, not once:\n${jobs.mkString("\n")}")
+    val round = s"$op/round [1-9][0-9]*".r
+    val rounds = jobs.filter(j => Option(j._1).exists(round.matches))
+    assert(rounds.nonEmpty, s"no round jobs:\n${jobs.mkString("\n")}")
+    rounds.foreach { case (desc, stages) =>
+      assert(stages.count(_._1) <= 1, s"$desc ran ${stages.count(_._1)} shuffles")
+    }
+  }
+
   test("pageRankConverged over a src-bucketed edge table: zero edge-side exchanges + parity") {
     // the ranker reads the edge table once, into its own node-partitioned
     // adjacency: the edge input is shuffled once per call, and no round
@@ -218,17 +208,8 @@ class GraphClusterPlanSpec extends SparkSpec {
     try {
       val bucketed = spark.table("gcp_edges_conv")
         .select(col("src"), col("dst"))
-      val jobs = stagesOf(Graph.pageRankConverged(bucketed, tol = 1e-6,
-        maxIter = 60).collect())
-      val edgeShuffles = jobs.flatMap(_._2).count { case (map, scan) => map && scan }
-      assert(edgeShuffles == 1,
-        s"the edge input was shuffled $edgeShuffles times, not once:\n${jobs.mkString("\n")}")
-      val round = "pageRankConverged/round [1-9][0-9]*".r
-      val rounds = jobs.filter(j => Option(j._1).exists(round.matches))
-      assert(rounds.nonEmpty, s"no round jobs:\n${jobs.mkString("\n")}")
-      rounds.foreach { case (desc, stages) =>
-        assert(stages.count(_._1) <= 1, s"$desc ran ${stages.count(_._1)} shuffles")
-      }
+      assertKernelShape("pageRankConverged", stagesOf(Graph.pageRankConverged(
+        bucketed, tol = 1e-6, maxIter = 60).collect()))
       val default = Graph.pageRankConverged(rawEdges, tol = 1e-6,
           maxIter = 60)
         .select(col("node"), col("rank"), col("iters"), col("l1_delta"))

@@ -3,15 +3,16 @@ package graft
 import graft.graph.Graph
 import graft.operators.Dedup
 import graft.sources.Scratch
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The message-passing PageRank, LPA, k-core and connected-components
-  * kernels against the relational rounds they replaced
-  * ([[GraphReference]]): equal schemas, nullability included, and equal
-  * rows with doubles compared by `==` — ranks, `iters`, `l1_delta` and
-  * `changed` alike. */
+/** The message-passing PageRank (fixed, converged, personalized and
+  * personalized converged), LPA, k-core and connected-components kernels
+  * against the relational rounds they replaced ([[GraphReference]]):
+  * equal schemas, nullability included, and equal rows with doubles
+  * compared by `==` — ranks, `iters`, `l1_delta` and `changed` alike. A
+  * call the reference rejects must fail with the same message. */
 class GraphKernelParitySpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,9 +34,16 @@ class GraphKernelParitySpec extends SparkSpec {
     (edges ++ isolated).toDF("src", "dst")
   }
 
-  /** Exact equality: schema (nullability included), then rows. */
+  /** Exact equality: schema (nullability included), then rows; or the
+    * same `require` failure from both. */
   private def same(kernel: => DataFrame, reference: => DataFrame, what: String): Unit = {
-    val (k, r) = (kernel, reference)
+    def run(df: => DataFrame) =
+      try Right(df) catch { case e: IllegalArgumentException => Left(e.getMessage) }
+    val (k, r) = (run(kernel), run(reference)) match {
+      case (Right(k), Right(r)) => (k, r)
+      case (k, r) =>
+        assert(k.isLeft && k == r, s"$what: kernel $k, reference $r"); return
+    }
     assert(k.schema == r.schema, s"$what: schema ${k.schema} != ${r.schema}")
     def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString("\u0000"))
     val (kr, rr) = (rows(k), rows(r))
@@ -43,13 +51,29 @@ class GraphKernelParitySpec extends SparkSpec {
     kr.zip(rr).foreach { case (a, b) => assert(a == b, s"$what: $a != $b") }
   }
 
-  /** All four operators at the given settings. */
-  private def allFour(e: DataFrame, what: String, prTol: Double = 1e-9,
-                      prIter: Int = 4, lpaIter: Int = 2, k: Int = 3,
-                      dir: Option[String] = None, components: Boolean = true): Unit = {
+  /** Seeds on Long-castable ids: the multiples of 5. */
+  private val fives = (c: Column) => pmod(c.cast("long"), lit(5L)) === 0
+
+  /** Every kernel at the given settings; `seeds` picks personalized
+    * PageRank's source set, `prIter` its and PageRank's fixed rounds. */
+  private def allKernels(e: DataFrame, what: String, prTol: Double = 1e-9,
+                         prIter: Int = 4, lpaIter: Int = 2, k: Int = 3,
+                         seeds: Column => Column = fives, dir: Option[String] = None,
+                         components: Boolean = true): Unit = {
+    same(Graph.pageRank(e, iterations = prIter, checkpointDir = dir),
+      GraphReference.pageRank(e, iterations = prIter, checkpointDir = dir),
+      s"$what pageRank")
     same(Graph.pageRankConverged(e, tol = prTol, maxIter = prIter, checkpointDir = dir),
       GraphReference.pageRankConverged(e, tol = prTol, maxIter = prIter, checkpointDir = dir),
       s"$what pageRankConverged")
+    same(Graph.personalizedPageRank(e, seeds, prIter, checkpointDir = dir),
+      GraphReference.personalizedPageRank(e, seeds, prIter, checkpointDir = dir),
+      s"$what personalizedPageRank")
+    same(Graph.personalizedPageRankConverged(e, seeds, tol = prTol, maxIter = prIter,
+        checkpointDir = dir),
+      GraphReference.personalizedPageRankConverged(e, seeds, tol = prTol,
+        maxIter = prIter, checkpointDir = dir),
+      s"$what personalizedPageRankConverged")
     same(Graph.labelPropagationConverged(e, maxIter = lpaIter, checkpointDir = dir),
       GraphReference.labelPropagationConverged(e, maxIter = lpaIter, checkpointDir = dir),
       s"$what labelPropagationConverged")
@@ -65,8 +89,8 @@ class GraphKernelParitySpec extends SparkSpec {
   test("seeded bench-shaped graphs, at the benchmark's settings and run to convergence") {
     Seq(4242L, 4243L).foreach { seed =>
       val e = taps(seed).cache()
-      allFour(e, s"seed $seed")
-      allFour(e, s"seed $seed converged", prTol = 1e-6, prIter = 40, lpaIter = 20, k = 2)
+      allKernels(e, s"seed $seed")
+      allKernels(e, s"seed $seed converged", prTol = 1e-6, prIter = 40, lpaIter = 20, k = 2)
       e.unpersist()
     }
   }
@@ -81,36 +105,38 @@ class GraphKernelParitySpec extends SparkSpec {
     val pairs = Seq(("～", "￦"), ("😀", "￦"))
     // connected components sum its labels as decimal(38,0), so its string
     // ids must be numeric — whose byte order is not their numeric order
-    allFour((ring ++ star ++ pairs).toDF("src", "dst"), "strings", k = 2,
-      components = false)
-    allFour(pairs.toDF("src", "dst"), "string pairs", k = 1, components = false)
-    allFour(Seq(("10", "9"), ("9", "-3"), ("+4", "10"), ("20", "3"), ("3", "100"))
+    // a seed predicate may name the node column instead of its argument
+    allKernels((ring ++ star ++ pairs).toDF("src", "dst"), "strings", k = 2,
+      seeds = _ => col("node").isin("😀", "a", "hub"), components = false)
+    allKernels(pairs.toDF("src", "dst"), "string pairs", k = 1,
+      seeds = _.isin("～", "𝔸"), components = false)
+    allKernels(Seq(("10", "9"), ("9", "-3"), ("+4", "10"), ("20", "3"), ("3", "100"))
       .toDF("src", "dst"), "numeric strings", k = 1)
   }
 
   test("negative Long ids") {
     val e = Seq((-5L, -1L), (-1L, 3L), (3L, -5L), (-7L, -5L), (-9L, -8L), (-8L, -9L),
       (Long.MinValue, -1L)).toDF("src", "dst")
-    allFour(e, "negative", k = 2)
+    allKernels(e, "negative", k = 2)
   }
 
   test("self-loops, duplicate edges, sinks with dangling mass, isolated pairs") {
     val e = Seq((1L, 1L), (1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L),
       (4L, 4L), (5L, 4L), (6L, 7L), (8L, 8L), (9L, 10L), (10L, 9L), (2L, 11L))
       .toDF("src", "dst")
-    allFour(e, "degenerate", prTol = 1e-6, prIter = 30, lpaIter = 10, k = 2)
+    allKernels(e, "degenerate", prTol = 1e-6, prIter = 30, lpaIter = 10, k = 2)
   }
 
   test("null ids") {
     val e = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null), (null, 3L),
       (3L, 1L), (null, null), (4L, 5L)).toDF("src", "dst")
-    allFour(e, "nulls", prTol = 1e-6, prIter = 10, lpaIter = 10, k = 1)
+    allKernels(e, "nulls", prTol = 1e-6, prIter = 10, lpaIter = 10, k = 1)
   }
 
   test("an empty edge set") {
-    allFour(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+    allKernels(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       StructType(Seq(StructField("src", LongType), StructField("dst", LongType)))), "empty")
-    allFour(Seq.empty[(String, String)].toDF("src", "dst"), "empty strings")
+    allKernels(Seq.empty[(String, String)].toDF("src", "dst"), "empty strings")
   }
 
   test("a bipartite graph on which LPA oscillates until maxIter") {
@@ -130,6 +156,18 @@ class GraphKernelParitySpec extends SparkSpec {
     same(Graph.kCore(e, 4, maxIter = 1), GraphReference.kCore(e, 4, maxIter = 1), "capped")
   }
 
+  test("personalized PageRank whose predicate matches no node fails as before") {
+    val e = taps(4246L)
+    val none = (c: Column) => c < 0
+    def message(run: => DataFrame): String =
+      intercept[IllegalArgumentException](run.collect()).getMessage
+    assert(message(Graph.personalizedPageRank(e, none, 3)) ==
+      "requirement failed: personalizedPageRank: the source predicate matched no node")
+    assert(message(Graph.personalizedPageRankConverged(e, none, tol = 1e-9)) ==
+      "requirement failed: personalizedPageRankConverged: the source predicate " +
+        "matched no node")
+  }
+
   test("connectedComponents with too small a maxIter fails with the same message") {
     val chain = (1L to 12L).map(i => (i, i + 1)).toDF("id1", "id2")
     def message(run: => DataFrame): String =
@@ -139,6 +177,6 @@ class GraphKernelParitySpec extends SparkSpec {
   }
 
   test("the durable checkpointDir path") {
-    allFour(taps(4245L), "durable", dir = Some(Scratch.dir("gkp_ckpt")))
+    allKernels(taps(4245L), "durable", dir = Some(Scratch.dir("gkp_ckpt")))
   }
 }

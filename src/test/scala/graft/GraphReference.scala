@@ -1,14 +1,15 @@
 package graft
 
-import graft.graph.Graph
 import graft.operators.Fixpoint
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The relational forms the message-passing kernels replaced, kept
-  * verbatim as test references: PageRank's `prRound(trackDelta = true)`
-  * under the probe, `lpaRound`, `kcoreRound` and Dedup's min-label
-  * propagation loop. GraphKernelParitySpec holds the kernels to them. */
+  * verbatim as test references: PageRank's `prInit`/`prRound` (fixed
+  * rounds, and under the probe with `trackDelta = true`), personalized
+  * PageRank's `pprInit`/`pprRound` likewise, `lpaRound`, `kcoreRound`
+  * and Dedup's min-label propagation loop. GraphKernelParitySpec holds
+  * the kernels to them. */
 object GraphReference {
 
   private def shjHint(df: DataFrame): DataFrame = df.hint("shuffle_hash")
@@ -18,6 +19,23 @@ object GraphReference {
 
   private def rankDelta(st: DataFrame): Double =
     st.agg(deltaExpr(col("rank"), col("__prev"))).head().getDouble(0)
+
+  /** PageRank state init: (node, outdeg, n, rank=1/n). */
+  def prInit(e: DataFrame): DataFrame = {
+    import graft.operators.Guards
+    val nodes = e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct()
+    val outdeg = e.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("outdeg"))
+    // (node, outdeg) with outdeg null for sinks; N broadcast on constKey
+    val meta = nodes.agg(count(lit(1)).as("n"))
+      .withColumn("__k", Guards.constKey(col("n")))
+    nodes.join(outdeg, Seq("node"), "left")
+      .withColumn("__k", Guards.constKey(col("node")))
+      .join(broadcast(meta), "__k")
+      .select(col("node"), col("outdeg"), col("n"),
+        round(lit(1.0) / col("n"), 12).as("rank"))
+  }
 
   def prRound(state0: DataFrame, e: DataFrame,
               damping: Double, teleport: Double,
@@ -52,15 +70,124 @@ object GraphReference {
     else joined.select(col("node"), col("outdeg"), col("n"), newRank)
   }
 
+  def pageRank(edges: DataFrame, iterations: Int = 8,
+               damping: Double = 0.85, teleport: Double = 0.15,
+               checkpointDir: Option[String] = None): DataFrame = {
+    require(iterations >= 1, "pageRank needs at least one iteration")
+    Fixpoint.run("pageRank", edges, checkpointDir) { s =>
+    val e = s.cut(edges.select(col("src"), col("dst")).distinct())
+    s.iterate(prInit(e), iterations)((st, _) => prRound(st, e, damping, teleport))
+      .select(col("node"), col("rank"))
+    }
+  }
+
   def pageRankConverged(edges: DataFrame, tol: Double, maxIter: Int = 50,
                         damping: Double = 0.85, teleport: Double = 0.15,
                         checkpointDir: Option[String] = None): DataFrame = {
     require(tol > 0 && maxIter >= 1, "need tol > 0 and maxIter >= 1")
     Fixpoint.run("pageRankConverged", edges, checkpointDir) { s =>
     val e = s.cut(edges.select(col("src"), col("dst")).distinct())
-    val init = Graph.prInit(e).withColumn("__prev", lit(null).cast("double"))
+    val init = prInit(e).withColumn("__prev", lit(null).cast("double"))
     val (state, iters, delta) = s.probe(init, tol, maxIter, rankDelta)(
       st => prRound(st, e, damping, teleport, trackDelta = true))
+    state.select(col("node"), col("rank"),
+      lit(iters).as("iters"), round(lit(delta), 12).as("l1_delta"))
+    }
+  }
+
+  /** PPR state init: (node, outdeg, p, rank=p) with p the seed-uniform
+    * personalization vector. */
+  def pprInit(e: DataFrame, isSource: Column => Column)
+      : DataFrame = {
+    import graft.operators.Guards
+    val nodes = e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct()
+    val outdeg = e.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("outdeg"))
+    val meta = nodes.where(isSource(col("node")))
+      .agg(count(lit(1)).as("ns"))
+      .withColumn("__k", Guards.constKey(col("ns")))
+    nodes.join(outdeg, Seq("node"), "left")
+      .withColumn("__k", Guards.constKey(col("node")))
+      .join(broadcast(meta), "__k")
+      .select(col("node"), col("outdeg"),
+        round(when(isSource(col("node")),
+          lit(1.0) / col("ns")).otherwise(lit(0.0)), 12).as("p"))
+      .withColumn("rank", col("p"))
+  }
+
+  /** One PPR round — [[prRound]] with the teleport/dangling mass routed
+    * to the personalization vector `p` instead of 1/n; `trackDelta` works
+    * identically (delta rides the dangling broadcast, output re-carries
+    * `__prev`). */
+  def pprRound(state0: DataFrame, e: DataFrame,
+               damping: Double, teleport: Double,
+               trackDelta: Boolean = false): DataFrame = {
+    import graft.operators.Guards
+    val state = state0.drop("__delta")
+    val exactSum12 = (c: Column) =>
+      sum(round(c, 12).cast("decimal(28,12)")).cast("double")
+    val contribs = shjHint(state.where(col("outdeg").isNotNull))
+      .join(e, state("node") === e("src"))
+      .groupBy(col("dst").as("node"))
+      .agg(exactSum12(col("rank") / col("outdeg")).as("in_sum"))
+    val massCol = coalesce(
+      exactSum12(when(col("outdeg").isNull, col("rank"))), lit(0.0)).as("mass")
+    val dangling =
+      (if (trackDelta)
+        state.agg(massCol, deltaExpr(col("rank"), col("__prev")).as("__delta"))
+      else state.agg(massCol))
+        .withColumn("__k", Guards.constKey(col("mass")))
+    val newRank = round(lit(teleport) * col("p") +
+      lit(damping) * (coalesce(col("in_sum"), lit(0.0)) +
+        col("mass") * col("p")), 12).as("rank")
+    val joined = state.withColumnRenamed("rank", "__rold")
+      .join(shjHint(contribs), Seq("node"), "left")
+      .withColumn("__k", Guards.constKey(col("node")))
+      .join(broadcast(dangling), "__k")
+    if (trackDelta)
+      joined.select(col("node"), col("outdeg"), col("p"), newRank,
+        col("__rold").as("__prev"), col("__delta"))
+    else joined.select(col("node"), col("outdeg"), col("p"), newRank)
+  }
+
+  def personalizedPageRank(edges: DataFrame, isSource: Column => Column,
+                           iterations: Int, damping: Double = 0.85,
+                           teleport: Double = 0.15,
+                           checkpointDir: Option[String] = None): DataFrame = {
+    require(iterations >= 1, "personalizedPageRank needs at least one iteration")
+    Fixpoint.run("personalizedPageRank", edges, checkpointDir) { s =>
+    val e = s.cut(edges.select(col("src"), col("dst")).distinct())
+    s.iterate(pprInit(e, isSource), iterations) { (st, i) =>
+      // the seed check reads the pinned init state, before round one
+      if (i == 0) require(st.where(col("p") > 0).limit(1).count() == 1L,
+        "personalizedPageRank: the source predicate matched no node")
+      pprRound(st, e, damping, teleport)
+    }.select(col("node"), col("rank"))
+    }
+  }
+
+  def personalizedPageRankConverged(edges: DataFrame,
+                                    isSource: Column => Column,
+                                    tol: Double, maxIter: Int = 50,
+                                    damping: Double = 0.85,
+                                    teleport: Double = 0.15,
+                                    checkpointDir: Option[String] = None)
+      : DataFrame = {
+    require(tol > 0 && maxIter >= 1, "need tol > 0 and maxIter >= 1")
+    Fixpoint.run("personalizedPageRankConverged", edges, checkpointDir) { s =>
+    val e = s.cut(edges.select(col("src"), col("dst")).distinct())
+    val init = pprInit(e, isSource)
+      .withColumn("__prev", lit(null).cast("double"))
+    // seed-presence guard as limit-1 probes of the edge frame; endpoints
+    // are exposed AS `node` because caller predicates may reference the
+    // column by name
+    def hasSeed(c: String): Boolean = e.select(col(c).as("node"))
+      .where(isSource(col("node"))).limit(1).count() == 1L
+    require(hasSeed("src") || hasSeed("dst"),
+      "personalizedPageRankConverged: the source predicate matched no node")
+    val (state, iters, delta) = s.probe(init, tol, maxIter, rankDelta)(
+      st => pprRound(st, e, damping, teleport, trackDelta = true))
     state.select(col("node"), col("rank"),
       lit(iters).as("iters"), round(lit(delta), 12).as("l1_delta"))
     }

@@ -81,7 +81,18 @@ class StreamingTaxiSpec extends SparkSpec {
         Pt("zz", new Timestamp(maxTs + 3 * 3600 * 1000), 0L, 0.0, 0.0, 0L)))
       .write.mode("append").parquet(dir)
     q.processAllAvailable()
-    q.processAllAvailable() // extra cycle for the timeout-only batch
+    // the flush is an event-time timeout: it fires in the no-data batch
+    // that follows the sentinel's, which processAllAvailable() does not
+    // wait for — poll until a batch after the sentinel's has run
+    val sentinelBatch = q.recentProgress.filter(_.numInputRows > 0).last.batchId
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (!q.recentProgress.exists(p =>
+        p.batchId > sentinelBatch && p.durationMs.containsKey("addBatch"))) {
+      q.exception.foreach(e => fail(s"stream failed: $e"))
+      if (System.nanoTime() > deadline)
+        fail(s"no batch ran after the sentinel's (batch $sentinelBatch) within 60 s")
+      Thread.sleep(50)
+    }
     val streamed = spark.sql("SELECT * FROM taxi_seg_out")
       .as[StreamingTaxi.SegOut].collect()
       .filter(_.cab != "zz")
