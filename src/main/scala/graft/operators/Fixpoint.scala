@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, GraftFrames}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
@@ -22,6 +22,15 @@ import scala.reflect.ClassTag
   * the only iterative loops of the graph family and of Dedup's connected
   * components. Each labels its round jobs `<op>/round <k>` (the Spark job
   * description), so per-round cost is attributable from any listener.
+  *
+  * [[Scope.messages]] keeps its state as one block per partition: the
+  * adjacency is one `Array[(node, nbrs)]` per partition, each round's
+  * state one `Array[InternalRow]`, and each sending task ships one map of
+  * merged messages per destination partition. Spark then sizes and
+  * shuffles a handful of objects per round, not one per node. Its result
+  * frame reads the pinned state through a flattening view, so the exit
+  * rule of [[run]] keeps every pin in the lineage of what the returned
+  * frame reads.
   */
 object Fixpoint {
 
@@ -46,9 +55,11 @@ object Fixpoint {
   }
 
   /** Free a pin: drop its blocks and, for a durable pin, delete its
-    * checkpoint files. */
+    * checkpoint files. Goes to the context directly: `RDD.unpersist`
+    * warns, for every locally checkpointed RDD, that its lineage is
+    * gone — which is the point of a pin. */
   def release(rdd: RDD[_]): Unit = {
-    rdd.unpersist(blocking = false)
+    GraftFrames.unpersist(rdd.context, rdd.id)
     rdd.getCheckpointFile.foreach { f =>
       val p = new Path(f)
       p.getFileSystem(rdd.context.hadoopConfiguration).delete(p, true): Unit
@@ -59,8 +70,23 @@ object Fixpoint {
   private def read(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.analyzed.collectWithSubqueries { case r: LogicalRDD => r.rdd }
 
+  /** The ids of `roots` and of every RDD they depend on. A pin's
+    * dependencies end at its checkpoint, so the walk stops there. */
+  private def lineage(roots: Seq[RDD[_]]): Set[Int] = {
+    val seen = mutable.Set.empty[Int]
+    var todo = roots.toList
+    while (todo.nonEmpty) {
+      val r = todo.head
+      todo = todo.tail
+      if (seen.add(r.id)) todo = r.dependencies.map(_.rdd).toList ++ todo
+    }
+    seen.toSet
+  }
+
   /** Run `body` with a fresh scope for operator `op` and free what it
-    * pinned, except what the returned frame reads. `checkpointDir` makes
+    * pinned, except what the returned frame reads: the RDDs of its plan
+    * and their lineage, which reaches the pin under a view such as
+    * [[Scope.messages]]' result. `checkpointDir` makes
     * every cut durable: the directory is routed to the context for the
     * call and the PREVIOUS setting restored afterwards — without this the
     * per-operator override leaks into every later `checkpoint()` user of
@@ -85,18 +111,22 @@ object Fixpoint {
             "SparkContext.checkpointDir_$eq"))
         setter.invoke(sc, saved): Unit
       }
-      val kept = Option(out).map(read(_).map(_.id).toSet).getOrElse(Set.empty)
+      val kept = Option(out).map(o => lineage(read(o))).getOrElse(Set.empty)
       scope.pins.filterNot(r => kept(r.id)).foreach(release)
     }
   }
 
   /** A graph for [[Scope.messages]]: one (node, neighbours) entry per
-    * node, hash-partitioned by node and pinned for the scope, with its
-    * node count and how many nodes have no neighbour. Nodes are Catalyst
-    * internal values of `keyType`. */
+    * node, hash-partitioned by node, with its node count and how many
+    * nodes have no neighbour. Nodes are Catalyst internal values of
+    * `keyType`. `blocks` holds each partition's entries as one array and
+    * is pinned for the scope; `entries` is a flattening view of it, one
+    * record per node in block order. */
   final class Adjacency private[Fixpoint] (
-      val entries: RDD[(Any, Array[Any])], val nodes: Long, val sinks: Long,
-      val keyType: DataType)
+      private[Fixpoint] val blocks: RDD[Array[(Any, Array[Any])]],
+      val nodes: Long, val sinks: Long, val keyType: DataType) {
+    val entries: RDD[(Any, Array[Any])] = blocks.mapPartitions(_.flatMap(_.iterator))
+  }
 
   /** What a node does in one round of [[Scope.messages]]. `M` is a
     * message — `merge` may update its first argument and return it — and
@@ -159,9 +189,10 @@ object Fixpoint {
 
     /** Pin `state` as round state, in one job that materializes it and
       * reduces `k`'s census over its partitions. */
-    private def pinned[C: ClassTag](state: RDD[InternalRow], k: Kernel[_, C]): C = {
+    private def pinned[C: ClassTag](state: RDD[Array[InternalRow]], k: Kernel[_, C]): C = {
       if (durable) state.checkpoint() else state.localCheckpoint()
-      val parts = state.context.runJob(state, k.census _)
+      val parts = state.context.runJob(state,
+        (it: Iterator[Array[InternalRow]]) => k.census(it.flatMap(_.iterator)))
       keep(state, "state")
       parts.reduce(k.combine)
     }
@@ -241,10 +272,13 @@ object Fixpoint {
     }
 
     /** The adjacency of `edges`' `(src, dst)` for [[messages]], built by
-      * one shuffle and pinned for the scope: `pairs` maps each edge, as
-      * Catalyst internal values of the two columns' common type, to the
-      * (node, neighbour) entries it contributes — `None` adds the node
-      * with no neighbour. Neighbours are deduplicated. The edge frame is
+      * one shuffle and pinned for the scope as one `Array[(node, nbrs)]`
+      * per partition: `pairs` maps each edge, as Catalyst internal values
+      * of the two columns' common type, to the (node, neighbour) entries
+      * it contributes — `None` adds the node with no neighbour. Each map
+      * task groups its entries per destination partition in a plain hash
+      * map and ships one map per non-empty destination through a shuffle
+      * with no aggregator. Neighbours are deduplicated. The edge frame is
       * evaluated once. Node ids of a type without value equality are
       * rejected. */
     def adjacency(edges: DataFrame, src: String, dst: String)
@@ -259,24 +293,30 @@ object Fixpoint {
           case _ => false
         }, s"$op: node ids of type ${keyType.sql} are not supported")
       val key = keyOf(keyType)
+      val parts = partitions
       labelled(0) {
       val ends = edges.select(col(src).cast(keyType), col(dst).cast(keyType))
         .queryExecution.toRdd
-        .flatMap(r => pairs(key(r, 0), key(r, 1)))
-      val entries = ends.combineByKey[mutable.HashSet[Any]](
-          (v: Option[Any]) => mutable.HashSet.empty[Any] ++= v,
-          (s: mutable.HashSet[Any], v: Option[Any]) => s ++= v,
-          (a: mutable.HashSet[Any], b: mutable.HashSet[Any]) => a ++= b,
-          new HashPartitioner(partitions))
-        .mapValues(_.toArray)
-      if (durable) entries.checkpoint() else entries.localCheckpoint()
-      val counts = entries.context.runJob(entries,
-        (it: Iterator[(Any, Array[Any])]) =>
-          it.foldLeft((0L, 0L)) { case ((n, z), (_, nbrs)) =>
-            (n + 1, if (nbrs.isEmpty) z + 1 else z)
-          })
-      longLived += entries
-      new Adjacency(entries, counts.map(_._1).sum, counts.map(_._2).sum, keyType)
+        .mapPartitions { rows =>
+          combineByPartition(rows.flatMap(r => pairs(key(r, 0), key(r, 1))), parts,
+            (v: Option[Any]) => mutable.HashSet.empty[Any] ++= v,
+            (s: mutable.HashSet[Any], v: Option[Any]) => s ++= v)
+        }
+      val blocks = shuffled(ends, parts).mapPartitions { in =>
+        val m = gather(in, (a: mutable.HashSet[Any], b: mutable.HashSet[Any]) => a ++= b)
+        val out = new Array[(Any, Array[Any])](m.size)
+        var j = 0
+        m.forEach((n, nbrs) => { out(j) = (n, nbrs.toArray); j += 1 })
+        Iterator(out)
+      }
+      if (durable) blocks.checkpoint() else blocks.localCheckpoint()
+      val counts = blocks.context.runJob(blocks,
+        (it: Iterator[Array[(Any, Array[Any])]]) => {
+          val b = it.next()
+          (b.length.toLong, b.count(_._2.isEmpty).toLong)
+        })
+      longLived += blocks
+      new Adjacency(blocks, counts.map(_._1).sum, counts.map(_._2).sum, keyType)
       }
     }
 
@@ -285,36 +325,45 @@ object Fixpoint {
 
     /** Message-passing rounds (the Pregel model, Malewicz et al. SIGMOD
       * 2010) over `g`, from `init` — one state row per adjacency entry, in
-      * the adjacency's own partition order — whose census is `c0`. Each
-      * round is ONE job: the state is zipped with the adjacency partition
-      * by partition, each node sends its messages, a `reduceByKey` on the
-      * adjacency's partitioner delivers them, and each node's next row is
-      * computed beside its adjacency entry — no join, no broadcast. The
-      * job pins the new state (series "state", so the newest two stay)
-      * and reduces its census, which `stop(census, rounds run)` reads on
-      * the driver — checked on `c0` and after every round — up to
-      * `maxRounds` rounds. Returns (the final state as a frame of
-      * `schema`, rounds run, its census, whether `stop` held). The frame's
-      * plan reads the pinned state itself, so the exit rule of [[run]]
-      * keeps exactly that pin. */
-    def messages[M: ClassTag, C: ClassTag](g: Adjacency,
+      * the order of [[Adjacency.entries]] — whose census is `c0`. The
+      * state is kept as one `Array[InternalRow]` per partition, row j
+      * beside entry j of the adjacency block. Each round is ONE job: each
+      * node sends its messages, the sending task merges them with
+      * `k.merge` into one map per destination partition and ships those
+      * maps (at most P² shuffle records for P partitions), and each
+      * node's next row is computed beside its adjacency entry — no join,
+      * no broadcast. The job pins the new state (series "state", so the
+      * newest two stay) and reduces its census, which
+      * `stop(census, rounds run)` reads on the driver — checked on `c0`
+      * and after every round — up to `maxRounds` rounds. Returns (the
+      * final state as a frame of `schema`, rounds run, its census, whether
+      * `stop` held). The frame reads the pinned state through a
+      * flattening view, whose lineage the exit rule of [[run]] follows to
+      * keep exactly that pin. */
+    def messages[M, C: ClassTag](g: Adjacency,
         init: RDD[InternalRow], c0: C, maxRounds: Int, k: Kernel[M, C],
         schema: StructType)
         (stop: (C, Int) => Boolean): (DataFrame, Int, C, Boolean) = {
-      val part = g.entries.partitioner.get
-      var state = init
+      val parts = g.blocks.getNumPartitions
+      var state = init.mapPartitions(rows => Iterator(rows.toArray))
       var c = c0
       var i = 0
       var done = stop(c, 0)
       while (!done && i < maxRounds) {
         val ci = c
-        val inbox = g.entries.zipPartitions(state) { (a, s) =>
-            a.zip(s).flatMap { case ((n, nbrs), row) => k.send(n, nbrs, row, ci) }
-          }.reduceByKey(part, k.merge(_, _))
-        val next = g.entries.zipPartitions(state, inbox) { (a, s, m) =>
-          val got = new java.util.HashMap[Any, M]
-          m.foreach { case (n, b) => got.put(n, b) }
-          a.zip(s).map { case ((n, nbrs), row) => k.update(n, nbrs, row, got.get(n), ci) }
+        val sent = g.blocks.zipPartitions(state) { (a, s) =>
+          val (nb, st) = (a.next(), s.next())
+          combineByPartition(Iterator.range(0, nb.length).flatMap { j =>
+              k.send(nb(j)._1, nb(j)._2, st(j), ci)
+            }, parts, (m: M) => m, k.merge)
+        }
+        val next = g.blocks.zipPartitions(state, shuffled(sent, parts)) { (a, s, in) =>
+          val got = gather(in, k.merge)
+          val (nb, st) = (a.next(), s.next())
+          Iterator(Array.tabulate(nb.length) { j =>
+            val (n, nbrs) = nb(j)
+            k.update(n, nbrs, st(j), got.get(n), ci)
+          })
         }
         i += 1
         c = labelled(i)(pinned(next, k))
@@ -322,8 +371,50 @@ object Fixpoint {
         done = stop(c, i)
       }
       if (i == 0) labelled(0)(pinned(state, k))
-      (GraftFrames.fromInternal(input.sparkSession, state, schema), i, c, done)
+      (GraftFrames.fromInternal(input.sparkSession, state.mapPartitions(_.flatMap(_.iterator)),
+        schema), i, c, done)
     }
+  }
+
+  /** The partitioner of a [[shuffled]] block: its key is the partition. */
+  private final class ByPartition(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  }
+
+  /** Groups `(node, v)` records by the partition of `parts` the node
+    * hashes to, into one plain hash map per destination — `create` starts a
+    * node's value, `add` folds one more in — and emits one (partition,
+    * map) record per non-empty destination. */
+  private def combineByPartition[V, B](records: Iterator[(Any, V)], parts: Int,
+      create: V => B, add: (B, V) => B): Iterator[(Int, java.util.HashMap[Any, B])] = {
+    val part = new HashPartitioner(parts)
+    val maps = new Array[java.util.HashMap[Any, B]](parts)
+    records.foreach { case (n, v) =>
+      val p = part.getPartition(n)
+      if (maps(p) == null) maps(p) = new java.util.HashMap[Any, B]
+      val m = maps(p)
+      m.put(n, if (m.containsKey(n)) add(m.get(n), v) else create(v))
+    }
+    Iterator.range(0, parts).collect { case p if maps(p) != null => (p, maps(p)) }
+  }
+
+  /** Ships each (partition, map) record to its partition with no
+    * aggregator: the bypass-merge writer, with nothing for Spark to size
+    * record by record. */
+  private def shuffled[B](blocks: RDD[(Int, java.util.HashMap[Any, B])], parts: Int)
+      : RDD[(Int, java.util.HashMap[Any, B])] =
+    new ShuffledRDD[Int, java.util.HashMap[Any, B], java.util.HashMap[Any, B]](
+      blocks, new ByPartition(parts))
+
+  /** The maps a partition received, merged into one with `merge` (which
+    * may update its first argument). */
+  private def gather[B](in: Iterator[(Int, java.util.HashMap[Any, B])],
+                        merge: (B, B) => B): java.util.HashMap[Any, B] = {
+    val got = if (in.hasNext) in.next()._2 else new java.util.HashMap[Any, B]
+    in.foreach { case (_, m) =>
+      m.forEach((n, b) => got.put(n, if (got.containsKey(n)) merge(got.get(n), b) else b))
+    }
+    got
   }
 
   /** Reads column `i` of a row as the internal value a node key holds:

@@ -2,9 +2,12 @@ package graft
 
 import graft.graph.Graph
 import graft.operators.Dedup
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 
 /** Pinned iterative state has one owner: every graph/Dedup operator call
   * leaves persisted exactly the RDDs its returned frame reads, concurrent
@@ -53,8 +56,12 @@ class FixpointSpec extends SparkSpec {
 
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** The persisted RDDs a frame reads: those of its plan and, through
+    * their dependencies, those under a view such as the message-passing
+    * operators' result. A freed pin keeps its storage level, so it still
+    * counts here. */
   private def readIds(df: DataFrame): Set[Int] =
-    df.queryExecution.analyzed.collectWithSubqueries { case r: LogicalRDD => r.rdd.id }.toSet
+    FixpointSpec.lineage(df).filter(_.getStorageLevel != StorageLevel.NONE).map(_.id).toSet
 
   test("each operator leaves persisted exactly the RDDs its result reads") {
     ops.foreach { case (name, op) =>
@@ -151,5 +158,90 @@ class FixpointSpec extends SparkSpec {
       val got = jobsOf(op().collect())
       assert(got <= max, s"$name ran $got jobs, more than its measured $max")
     }
+  }
+
+  test("each message-passing round job writes at most P² shuffle records") {
+    // a sending task merges its messages into one map per destination
+    // partition, so a round writes at most P maps per task — however many
+    // nodes the messages reach
+    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val sc = spark.sparkContext
+    val kernels = Set("pageRankConverged", "labelPropagationConverged", "kCore",
+      "connectedComponents")
+    val RoundJob = "(.+)/round ([0-9]+)".r
+    // written only from the listener bus thread; read after a drain
+    val stageJob = mutable.Map.empty[Int, (String, Int)]
+    val written = mutable.Map.empty[(String, Int), Long].withDefaultValue(0L)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(q => Option(q.getProperty("spark.job.description")))
+          .foreach {
+            case d @ RoundJob(op, k) if kernels(op) && k.toInt >= 1 =>
+              e.stageIds.foreach(stageJob(_) = (d, e.jobId))
+            case _ =>
+          }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        for (job <- stageJob.get(e.stageId); m <- Option(e.taskMetrics))
+          written(job) += m.shuffleWriteMetrics.recordsWritten
+    }
+    drain()
+    sc.addSparkListener(l)
+    try {
+      kernels.foreach(op => ops.toMap.apply(op)().collect())
+      drain()
+    } finally sc.removeSparkListener(l)
+    val jobs = stageJob.values.toSet
+    kernels.foreach(op =>
+      assert(jobs.exists(_._1.startsWith(s"$op/")), s"$op ran no round job"))
+    assert(written.values.exists(_ > 0), "no round job wrote a shuffle record")
+    jobs.foreach { job =>
+      assert(written(job) <= p * p,
+        s"${job._1} (job ${job._2}) wrote ${written(job)} shuffle records, more than $p²")
+    }
+  }
+
+  test("releasing pinned state logs no lost-lineage warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("fixpoint-spec-warn", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    def warned = lines.toArray.map(_.toString).filter(_.contains("was locally checkpointed"))
+    try {
+      // the capture sees the warning RDD.unpersist logs for a local pin
+      val probe = spark.sparkContext.parallelize(1 to 4).localCheckpoint()
+      probe.count()
+      probe.unpersist()
+      assert(warned.nonEmpty, "the appender did not capture RDD.unpersist's warning")
+      lines.clear()
+      assert(Graph.pageRankConverged(graph, tol = 1e-9, maxIter = 6).collect().nonEmpty)
+      assert(warned.isEmpty, s"pageRankConverged logged ${warned.mkString("; ")}")
+    } finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+}
+
+object FixpointSpec {
+
+  /** The RDDs a frame's plan reads and every RDD they depend on; a
+    * checkpointed RDD's dependencies end at its checkpoint. */
+  def lineage(df: DataFrame): Seq[RDD[_]] = {
+    val seen = mutable.LinkedHashMap.empty[Int, RDD[_]]
+    def walk(r: RDD[_]): Unit =
+      if (!seen.contains(r.id)) { seen(r.id) = r; r.dependencies.foreach(d => walk(d.rdd)) }
+    df.queryExecution.analyzed.collectWithSubqueries { case r: LogicalRDD => r.rdd }
+      .foreach(walk)
+    seen.values.toSeq
   }
 }

@@ -298,10 +298,10 @@ class GraphClusterPlanSpec extends SparkSpec {
         rdds.map(_.getName).mkString("[", ",", "]"))
     // on exit only the checkpoints the returned frame reads remain — also
     // for hitsConverged, whose auth half-step is a series of its own
+    // (a frame may read its checkpoint through a view: follow the lineage)
     def readCheckpoints(df: DataFrame): Set[String] =
-      df.queryExecution.analyzed.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.getCheckpointFile
-      }.flatten.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
+      FixpointSpec.lineage(df).flatMap(_.getCheckpointFile)
+        .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
     def remaining(d: String): Set[String] =
       new java.io.File(d).listFiles().flatMap(_.listFiles())
         .map(_.getName).filter(_.startsWith("rdd-")).toSet

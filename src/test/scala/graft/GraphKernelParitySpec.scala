@@ -51,6 +51,14 @@ class GraphKernelParitySpec extends SparkSpec {
     kr.zip(rr).foreach { case (a, b) => assert(a == b, s"$what: $a != $b") }
   }
 
+  /** Run `body` with `spark.sql.shuffle.partitions` at `n`. */
+  private def withPartitions(n: Int)(body: => Unit): Unit = {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, saved)
+  }
+
   /** Seeds on Long-castable ids: the multiples of 5. */
   private val fives = (c: Column) => pmod(c.cast("long"), lit(5L)) === 0
 
@@ -131,6 +139,24 @@ class GraphKernelParitySpec extends SparkSpec {
     val e = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null), (null, 3L),
       (3L, 1L), (null, null), (4L, 5L)).toDF("src", "dst")
     allKernels(e, "nulls", prTol = 1e-6, prIter = 10, lpaIter = 10, k = 1)
+    // null ids all hash to partition 0: alone there, and among 64 blocks
+    Seq(1, 64).foreach(n => withPartitions(n)(allKernels(e, s"nulls at $n partitions",
+      prTol = 1e-6, prIter = 10, lpaIter = 10, k = 1)))
+  }
+
+  test("state blocks: one partition, mostly empty blocks, partitions no message reaches") {
+    // every node, message and state row in one block
+    withPartitions(1)(allKernels(taps(4247L), "one partition"))
+    // 64 blocks for ≤ 10 nodes: most adjacency and state blocks are empty
+    val small = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (6L, 7L),
+      (8L, 8L), (9L, 10L), (10L, 9L)).toDF("src", "dst")
+    withPartitions(64)(allKernels(small, "64 partitions", prTol = 1e-6,
+      prIter = 20, lpaIter = 10, k = 2))
+    // every edge ends at the hub, so each PageRank round sends to one
+    // partition only; the leaves die in k-core's first round, and its
+    // second sends to the hub alone
+    val star = (1L to 9L).map(i => (i, 0L)).toDF("src", "dst")
+    allKernels(star, "star", prTol = 1e-6, prIter = 20, lpaIter = 10, k = 2)
   }
 
   test("an empty edge set") {
