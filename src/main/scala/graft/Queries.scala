@@ -4515,10 +4515,10 @@ object Queries {
         k = 16, m = 8, dims = 64, iters = 2)
       val query = cb(5)
       val table = Quantization.adcTable(query, cb, 8)
-      e.withColumn("codes", Quantization.pqCodes(s, col("embedding"), cb, 8, 64))
+      e.withColumn("codes", Quantization.pqCodes(col("embedding"), cb, 8, 64))
         .withColumn("approx_d", Quantization.adcScore(col("codes"), table))
         .withColumn("exact_d",
-          round(Quantization.exactDist(s, col("embedding"), query), 6))
+          round(Quantization.exactDist(col("embedding"), query), 6))
         .orderBy(col("approx_d"), col("vec_id")).limit(20)
         .select(col("vec_id"), col("approx_d"), col("exact_d"))
     },
@@ -4591,14 +4591,14 @@ object Queries {
         .take(2).map(_._1)
       // coarse assignment = PQ argmin with one subspace spanning all dims
       val cellIdx = element_at(
-        Quantization.pqCodes(s, col("embedding"), cents, 1, 64), 1)
+        Quantization.pqCodes(col("embedding"), cents, 1, 64), 1)
       val cellOf = element_at(array(cellIds.map(lit): _*), cellIdx + 1)
       e.withColumn("cell", cellOf)
         .where(col("cell").isin(probeCells: _*))
-        .withColumn("codes", Quantization.pqCodes(s, col("embedding"), cb, 8, 64))
+        .withColumn("codes", Quantization.pqCodes(col("embedding"), cb, 8, 64))
         .withColumn("approx_d", Quantization.adcScore(col("codes"), table))
         .withColumn("exact_d",
-          round(Quantization.exactDist(s, col("embedding"), qv), 6))
+          round(Quantization.exactDist(col("embedding"), qv), 6))
         .orderBy(col("approx_d"), col("vec_id")).limit(10)
         .select(col("vec_id"), col("cell"), col("approx_d"), col("exact_d"))
     },

@@ -27,16 +27,14 @@ import org.apache.spark.sql.types._
   * Null hashes are skipped (a null element carries no set member —
   * matching collect_set). An empty group evaluates to an empty array
   * (matching `slice(array_sort(collect_set(...)))` over no rows — the
-  * caller's coalesce decides the semantics, as with the fallback).
+  * caller's coalesce decides the semantics).
   *
   * `k` must be a foldable positive INT literal — the sketch width is a
   * plan-time constant (the codebook convention), not data.
   *
-  * Registered as `graft_bottomk` by [[graft.GraftExtensions]];
-  * [[graft.graph.Graph.neighborhoodFunction]] goes through it when the
-  * extension is installed and falls back to the collect_set expression
-  * form otherwise — sessions without it lose only shuffle bytes, never
-  * answers.
+  * [[graft.graph.Graph.neighborhoodFunction]] builds it through
+  * [[Native.bottomK]]; SQL callers reach it as `graft_bottomk`, the name
+  * [[graft.GraftExtensions]] registers.
   */
 case class BottomKAgg(
     child: Expression,

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 /** Native symmetric discrete Hausdorff distance over two
   * array<struct<t: double, v: double>> trajectory columns.
   *
-  * The HOF form (TrajectorySim's fallback) nests transform inside
+  * The HOF form nests transform inside
   * transform — every directed pass allocates an |B|-element array per
   * point of A and walks it with interpreted-ish lambdas; for a blocked
   * pairwise join that is the dominant cost (measured 40 s for q106 at
@@ -23,6 +23,10 @@ import org.apache.spark.sql.types._
   * Empty trajectories return NaN (the operator never builds one — a
   * groupBy trajectory has >= 1 point); null inputs return null via the
   * standard binary-expression null contract.
+  *
+  * TrajectorySim.hausdorffTopK builds it through [[Native.hausdorff]];
+  * SQL callers reach it as `graft_hausdorff`, the name
+  * [[graft.GraftExtensions]] registers.
   */
 case class HausdorffDistance(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -65,8 +69,8 @@ object HausdorffDistance {
     *
     * PRECONDITION: no NaN coordinates. The `d < mn` comparison ignores
     * NaN distances (an all-NaN row would leave mn = +Infinity), while
-    * the HOF fallback's array_min/array_max order NaN as the largest
-    * double — the two paths agree only on NaN-free input, which
+    * the HOF form's array_min/array_max order NaN as the largest
+    * double — the two agree only on NaN-free input, which
     * TrajectorySim.traj enforces by dropping NaN-valued points. */
   private def directed(a: ArrayData, b: ArrayData): Double = {
     val na = a.numElements(); val nb = b.numElements()

@@ -40,6 +40,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * (the PODS'12 merge — keeps the additive error bound while truncating
   * back to k slots). Null keys are skipped (no set member, matching
   * count(col) semantics).
+  *
+  * Sketches.heavyHitters builds it through [[Native.misraGries]]; SQL
+  * callers reach it as `graft_mg`, the name [[graft.GraftExtensions]]
+  * registers.
   */
 case class MisraGriesAgg(
     child: Expression,

@@ -11,24 +11,23 @@ import org.apache.spark.sql.types._
 /** Native SimHash signature aggregate: one pass over a group's 64-bit
   * token hashes -> the 64-bit SimHash signature.
   *
-  * The expression form (Dedup.withSimHash's fallback) evaluates 64
+  * The expression form evaluates 64
   * separate conditional-sum aggregates per row — 64 CASE trees, 64 sum
   * buffers, 64 codegen columns flowing through partial and final
   * aggregation. This aggregate keeps ONE long[64] counter buffer per
   * group and updates it with a tight bit-shift loop per row; partial
   * aggregation, shuffle of 512-byte buffers, and merge-by-addition come
   * from TypedImperativeAggregate. Semantics are bit-identical to the
-  * fallback (and to the DuckDB oracle that replays it): bit b counts
+  * expression form (and to the DuckDB oracle that replays it): bit b counts
   * +1 when (h >> b) & 1 = 1 else -1, a NULL hash contributes -1 to every
   * bit (the CASE's ELSE branch), and the signature sets bit b iff its
   * counter is strictly positive. An empty group evaluates to signature 0
-  * (all counters 0, none strictly positive) — same as the fallback's
-  * null sums.
+  * (all counters 0, none strictly positive) — same as the expression
+  * form's null sums.
   *
-  * Registered as `graft_simhash` by [[graft.GraftExtensions]]; callers go
-  * through Dedup.withSimHash, which falls back to the 64-sum expression
-  * form when the extension isn't installed — sessions without it lose
-  * only speed, never answers.
+  * Dedup.withSimHash builds it through [[Native.simHash]]; SQL callers
+  * reach it as `graft_simhash`, the name [[graft.GraftExtensions]]
+  * registers.
   */
 case class SimHashAgg(
     child: Expression,

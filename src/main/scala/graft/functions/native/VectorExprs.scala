@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the embedding hot path.
   *
-  * The HOF forms (`zip_with` + `aggregate`, Similarity.scala) are
+  * The HOF forms (`zip_with` + `aggregate`) are
   * codegen'd by Spark but still allocate an intermediate array and
   * evaluate an interpreted-ish lambda per element; for a pairwise join
   * kernel evaluated millions of times per task, a fused primitive loop
@@ -21,13 +21,12 @@ import org.apache.spark.sql.types._
   * (brute verify inside LSH buckets, IVF cell scans) where it pays.
   * They preserve
   * the HOF semantics bit-for-bit: same element order, same double
-  * accumulation, null on length mismatch or null element — so every
-  * DuckDB oracle stays valid whichever form a session picks.
+  * accumulation, null on length mismatch or null element — so a DuckDB
+  * oracle replaying the HOF fold stays valid.
   *
-  * Registered as `graft_dot` / `graft_cosine` by [[graft.GraftExtensions]]
-  * (SparkSessionExtensions — the public extension point); callers go
-  * through Similarity.dot/cosine, which fall back to the HOF form when
-  * the extension isn't installed.
+  * Operators build them as Columns through [[Native]]; SQL callers reach
+  * them as `graft_dot` / `graft_cosine` / `graft_dist2` / `graft_dist2s`,
+  * the names [[graft.GraftExtensions]] registers.
   */
 trait VectorBinaryExpression extends BinaryExpression {
   // ExpectsInputTypes' AbstractDataType/TypeCollection are private[sql];

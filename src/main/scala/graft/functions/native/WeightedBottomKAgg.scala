@@ -32,11 +32,9 @@ import org.apache.spark.sql.types._
   * skip here is the belt to that suspenders). `k` must be a foldable
   * positive INT — the sketch width is a plan-time constant.
   *
-  * Registered as `graft_wbk` by [[graft.GraftExtensions]];
-  * [[graft.operators.Sketches.weightedBottomKByKey]] goes through it
-  * when the extension is installed and falls back to the keyed-window
-  * exact tier otherwise — sessions without it lose only shuffle bytes
-  * and sort work, never answers.
+  * [[graft.operators.Sketches.weightedBottomKByKey]] builds it through
+  * [[Native.weightedBottomK]]; SQL callers reach it as `graft_wbk`, the
+  * name [[graft.GraftExtensions]] registers.
   */
 case class WeightedBottomKAgg(
     pExpr: Expression,

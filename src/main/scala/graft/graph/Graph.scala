@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.native.Native
 import graft.operators.Fixpoint
 
 /** Graph operators over edge DataFrames (src, dst[, w]).
@@ -935,14 +936,11 @@ object Graph {
     * sketch state is k longs per node at ANY graph size.
     *
     * Per round: each node's sketch absorbs its out-neighbors' sketches
-    * — explode to (node, hash), distinct (map-side combinable), keep
-    * the k smallest per node under one keyed window, re-pack. Bottom-k
-    * of a union IS the bottom-k of unioned bottom-k's, so truncation
-    * per round is lossless for the estimator. Two node-keyed shuffles
-    * per round. (A custom TypedImperativeAggregate that
-    * truncates partial states to k would halve the shuffled bytes —
-    * the production refinement; the window formulation keeps every
-    * intermediate bounded and portable.)
+    * — explode to (node, hash), then one node-keyed native bottom-k
+    * aggregate ([[graft.functions.native.BottomKAgg]]) keeps the k
+    * smallest per node. Bottom-k of a union IS the bottom-k of unioned
+    * bottom-k's, so truncation per round — and per partial state — is
+    * lossless for the estimator. One node-keyed shuffle per round.
     *
     * Estimator: with fewer than k distinct hashes the sketch IS the
     * set (exact count); at k, |R| ≈ (k−1)·2⁶⁰ / kth-smallest (hashes
@@ -971,22 +969,17 @@ object Graph {
     val out = (1 to maxHops).map { h =>
       val contrib = e.join(shjHint(state), e("dst") === state("node"))
         .select(e("src").as("node"), col("kmv"))
-      // ONE node-keyed shuffle per round. Preferred: the native
+      // ONE node-keyed shuffle per round, through the native
       // graft_bottomk aggregate — its PARTIAL states are already
       // truncated to k (bottom-k of a union is the bottom-k of unioned
       // bottom-k's), so the exchange ships ≤8k bytes per group however
-      // many distinct hashes a partition saw. Fallback: collect_set +
-      // sort + slice — value-identical, but partial states carry every
-      // distinct hash (a first cut spelled the round as distinct →
-      // keyed window → collect_list: THREE wide shuffles with sorts;
-      // steady 70.3 s → 14.7 s at sf0.1 from collapsing to one).
+      // many distinct hashes a partition saw (a first cut spelled the
+      // round as distinct → keyed window → collect_list: THREE wide
+      // shuffles with sorts; steady 70.3 s → 14.7 s at sf0.1 from
+      // collapsing to one).
       val hashes = state.select(col("node"), explode(col("kmv")).as("h"))
         .unionByName(contrib.select(col("node"), explode(col("kmv")).as("h")))
-      val bottomK =
-        if (graft.GraftExtensions.has(edges.sparkSession, "graft_bottomk"))
-          call_function("graft_bottomk", col("h"), lit(k))
-        else slice(array_sort(collect_set(col("h"))), 1, k)
-      state = s.round(hashes.groupBy("node").agg(bottomK.as("kmv")))
+      state = s.round(hashes.groupBy("node").agg(Native.bottomK(col("h"), k).as("kmv")))
       val row = state.agg(count(lit(1)).as("n"),
         coalesce(sum(round(estCol, 4).cast("decimal(38,4)")).cast("double"),
           lit(0.0)).as("p"))

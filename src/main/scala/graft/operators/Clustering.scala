@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.native.Native
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed Lloyd k-means over an embedding column — the clustering
@@ -32,32 +33,20 @@ import org.apache.spark.sql.functions._
 object Clustering {
 
   /** Argmin-cluster column for a literal centroid matrix. The per-
-    * centroid distance uses the native fused kernel (`graft_dist2`) when
-    * available: the HOF form is an interpreted CodegenFallback per row
-    * per centroid, and the native form's centroid literal rides the
-    * codegen `references` array, so Lloyd rounds re-literalizing the
-    * centroids reuse ONE compiled source (r09 §11 / r10 verdict item 3).
-    * Same ascending fold, same null semantics → bit-identical. */
-  private def assignColumn(s: SparkSession, vec: Column,
-      cents: IndexedSeq[Seq[Double]]): Column = {
+    * centroid distance is the native fused kernel (`graft_dist2`): its
+    * centroid literal rides the codegen `references` array, so Lloyd
+    * rounds re-literalizing the centroids reuse ONE compiled source
+    * (r09 §11 / r10 verdict item 3). */
+  private def assignColumn(vec: Column, cents: IndexedSeq[Seq[Double]]): Column = {
     val scored = cents.zipWithIndex.map { case (cv, cid) =>
-      struct(round(distToLit(s, vec, cv), 6).as("d"), lit(cid).as("c"))
+      struct(round(distToLit(vec, cv), 6).as("d"), lit(cid).as("c"))
     }
     least(scored: _*).getField("c")
   }
 
-  /** Squared L2 against one literal centroid — native kernel or the
-    * bit-identical HOF fallback, chosen by the session `s` the column
-    * runs in. */
-  private def distToLit(s: SparkSession, vec: Column, cv: Seq[Double]): Column =
-    if (graft.GraftExtensions.has(s, "graft_dist2"))
-      call_function("graft_dist2", vec, typedLit(cv))
-    else {
-      val w = array(cv.map(lit): _*)
-      aggregate(
-        zip_with(vec, w, (x, c) => (x - c) * (x - c)),
-        lit(0.0), (acc, v) => acc + v)
-    }
+  /** Squared L2 against one literal centroid. */
+  private def distToLit(vec: Column, cv: Seq[Double]): Column =
+    Native.dist2(vec, typedLit(cv))
 
   /** Runs `iters` Lloyd rounds and returns the final (id, cluster)
     * assignment. `dims` must match the vector length (mismatches
@@ -72,7 +61,7 @@ object Clustering {
     val pts = prep(points, idCol, vecCol)
     var cents = initCentroids(pts, k)
     for (_ <- 1 to iters) cents = lloydRound(pts, cents, k)
-    pts.withColumn("cluster", assignColumn(pts.sparkSession, col("__v"), cents))
+    pts.withColumn("cluster", assignColumn(col("__v"), cents))
       .select(col("__id").as(idCol), col("cluster").cast("long").as("cluster"))
   }
 
@@ -92,7 +81,7 @@ object Clustering {
     * 6 dp; an empty cluster keeps its previous centroid. */
   private def lloydRound(pts: DataFrame, cents: IndexedSeq[Seq[Double]],
       k: Int): IndexedSeq[Seq[Double]] = {
-    val rows = pts.withColumn("cluster", assignColumn(pts.sparkSession, col("__v"), cents))
+    val rows = pts.withColumn("cluster", assignColumn(col("__v"), cents))
       .select(col("cluster"), posexplode(col("__v")).as(Seq("pos", "x")))
       .groupBy("cluster", "pos")
       .agg(round(sum(col("x").cast("decimal(28,12)")).cast("double")
@@ -143,7 +132,7 @@ object Clustering {
       it += 1
       done = shift < tol
     }
-    pts.withColumn("cluster", assignColumn(pts.sparkSession, col("__v"), cents))
+    pts.withColumn("cluster", assignColumn(col("__v"), cents))
       .select(col("__id").as(idCol), col("cluster").cast("long").as("cluster"),
         lit(it).as("iters"), round(lit(shift), 6).as("shift"))
   }
@@ -190,7 +179,7 @@ object Clustering {
       (0L, seed.getLong(0), None))
     for (r <- 1 until k) {
       val far = pts
-        .select(col("__id"), col("__v"), minDistColumn(spark, col("__v"), centers).as("d"))
+        .select(col("__id"), col("__v"), minDistColumn(col("__v"), centers).as("d"))
         .orderBy(col("d").desc, col("__id")).limit(1)
         .collect()(0)
       picks += ((r.toLong, far.getLong(0), Some(far.getDouble(2))))
@@ -215,8 +204,8 @@ object Clustering {
     // the min distance IS the assigned center's distance (argmin), so one
     // literal projection yields both columns
     val assigned = pts
-      .withColumn("cluster", assignColumn(pts.sparkSession, col("__v"), cents))
-      .withColumn("d", minDistColumn(pts.sparkSession, col("__v"), cents))
+      .withColumn("cluster", assignColumn(col("__v"), cents))
+      .withColumn("d", minDistColumn(col("__v"), cents))
       .groupBy(col("cluster").cast("long").as("round"))
       .agg(count(lit(1)).as("n_assigned"), max(col("d")).as("coverage"))
     picks.join(assigned, "round")
@@ -225,9 +214,8 @@ object Clustering {
   }
 
   /** Min 6-dp-rounded squared-L2 distance to a literal center matrix. */
-  private def minDistColumn(s: SparkSession, vec: Column,
-      cents: IndexedSeq[IndexedSeq[Double]]): Column = {
-    val ds = cents.map(cv => round(distToLit(s, vec, cv), 6))
+  private def minDistColumn(vec: Column, cents: IndexedSeq[IndexedSeq[Double]]): Column = {
+    val ds = cents.map(cv => round(distToLit(vec, cv), 6))
     if (ds.size == 1) ds.head else least(ds: _*)
   }
 
@@ -290,7 +278,7 @@ object Clustering {
       .join(assigned.withColumnRenamed(idCol, "__id"), "__id")
     // norms once per vector BELOW the join, not per pair (q44 pattern)
     val side = withVec.withColumn("__n",
-      Similarity.norm(points.sparkSession, col("__v")))
+      Similarity.norm(col("__v")))
     val a = side.select(col("__id").as("id1"), col("__v").as("v1"),
       col("__n").as("n1"), col("cluster"))
     val b = side.select(col("__id").as("id2"), col("__v").as("v2"),
@@ -299,7 +287,7 @@ object Clustering {
     val dropped = a.join(b, Seq("cluster"))
       .where(col("id1") < col("id2"))
       .where(when(nn > 0,
-        Similarity.dot(points.sparkSession, col("v1"), col("v2")) / nn)
+        Similarity.dot(col("v1"), col("v2")) / nn)
         >= threshold)
       .select(col("id2").as("__id")).distinct()
     withVec.join(dropped.withColumn("__drop", lit(true)), Seq("__id"), "left")
@@ -335,7 +323,7 @@ object Clustering {
         transform(col(vecCol), x => x.cast("double")).as("__v"))
       .join(assigned.withColumnRenamed(idCol, "__id"), "__id")
     val a = pts
-      .withColumn("__n", Similarity.norm(points.sparkSession, col("__v")))
+      .withColumn("__n", Similarity.norm(col("__v")))
       .select(col("__id").as("id1"), col("__v").as("v1"),
         col("__n").as("n1"), col("cluster"))
     // b side: codes + decoded-norm scalar ONLY — the decoded vector
@@ -343,8 +331,8 @@ object Clustering {
     // is fiction (a projection computed under the join ships its output)
     val b = pts
       .withColumn("__codes",
-        Quantization.pqCodes(points.sparkSession, col("__v"), codebook, m, dims))
-      .withColumn("n2", Similarity.norm(points.sparkSession,
+        Quantization.pqCodes(col("__v"), codebook, m, dims))
+      .withColumn("n2", Similarity.norm(
         Quantization.decode(col("__codes"), codebook, m, dims)))
       .select(col("__id").as("id2"), col("__codes"), col("n2"), col("cluster"))
     val nn = col("n1") * col("n2")
@@ -353,7 +341,7 @@ object Clustering {
       // decode inline in the predicate: it references both sides, so it
       // stays in the join condition and evaluates post-exchange per pair
       .where(when(nn > 0,
-        Similarity.dot(points.sparkSession, col("v1"),
+        Similarity.dot(col("v1"),
           Quantization.decode(col("__codes"), codebook, m, dims)) / nn)
         >= threshold)
       .select(col("id2").as("__id")).distinct()

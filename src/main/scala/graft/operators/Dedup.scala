@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.Text
+import graft.functions.native.Native
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow}
@@ -285,33 +286,17 @@ object Dedup {
     */
   def withSimHash(df: DataFrame, idCol: String, textCol: String,
                   out: String = "simhash"): DataFrame = {
-    // one row per token, 64 conditional sums per document — NOT a 64-way
-    // bit explode (64x the rows and a 320k-group shuffle; measured ~5x
-    // slower). Map-side partial aggregation collapses each doc's tokens
-    // before the shuffle.
+    // one row per token, one 64-counter aggregate per document — NOT a
+    // 64-way bit explode (64x the rows and a 320k-group shuffle; measured
+    // ~5x slower). Map-side partial aggregation collapses each doc's
+    // tokens before the shuffle.
     val toks = df.select(col(idCol).as("id"), explode(Text.tokens(col(textCol))).as("tok"))
       .withColumn("h", Text.md5Hash64(col("tok"), 0))
-    // native one-buffer aggregate when GraftExtensions is installed
-    // (bit-identical semantics, see SimHashAgg); 64 conditional sums as
-    // the extension-free fallback
-    // helper key gets a reserved name: joining on "id" then drop("id")
+    // the helper key gets a reserved name: joining on "id" then drop("id")
     // would also drop the caller's column when idCol == "id"
-    val bits =
-      if (graft.GraftExtensions.has(df.sparkSession, "graft_simhash"))
-        toks.groupBy("id")
-          .agg(call_function("graft_simhash", col("h")).as(out))
-          .select(col("id").as("__simhash_id"), col(out))
-      else {
-        val bitSums = (0 until 64).map { b =>
-          sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"b$b")
-        }
-        val sig = (0 until 64).map { b =>
-          when(col(s"b$b") > 0, lit(1L << b)).otherwise(0L)
-        }.reduce(_ + _)
-        toks.groupBy("id")
-          .agg(bitSums.head, bitSums.tail: _*)
-          .select(col("id").as("__simhash_id"), sig.as(out))
-      }
+    val bits = toks.groupBy("id")
+      .agg(Native.simHash(col("h")).as(out))
+      .select(col("id").as("__simhash_id"), col(out))
     df.join(bits, df(idCol) === col("__simhash_id"), "left")
       .drop("__simhash_id")
   }
@@ -479,13 +464,13 @@ object Dedup {
     // candidate pair)
     val s = df.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("bucket",
-        Similarity.hyperplaneSketch(df.sparkSession, col("v"), planes, dims))
-      .withColumn("nrm", Similarity.norm(df.sparkSession, col("v")))
+        Similarity.hyperplaneSketch(col("v"), planes, dims))
+      .withColumn("nrm", Similarity.norm(col("v")))
     val a = s.as("a"); val b = s.as("b")
     val nn = col("a.nrm") * col("b.nrm")
     a.join(b, col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
       .withColumn("cos",
-        when(nn > 0, Similarity.dot(df.sparkSession, col("a.v"), col("b.v")) / nn))
+        when(nn > 0, Similarity.dot(col("a.v"), col("b.v")) / nn))
       .where(col("cos") >= threshold)
       .select(col("a.id").as("id1"), col("b.id").as("id2"),
         round(col("cos"), 6).as("cos"))

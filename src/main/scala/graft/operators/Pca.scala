@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.native.Native
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -131,18 +132,7 @@ object Pca {
   def project(emb: DataFrame, vecCol: String,
               loadings: Seq[Double]): DataFrame = {
     require(loadings.nonEmpty, "project needs a non-empty component")
-    // native fused dot against the literal component when the session
-    // carries the extension (HOF twin = interpreted CodegenFallback per
-    // row); same fold order and null semantics → bit-identical score
-    val dot =
-      if (graft.GraftExtensions.has(emb.sparkSession, "graft_dot"))
-        call_function("graft_dot", col(vecCol), typedLit(loadings))
-      else {
-        val lits = array(loadings.map(lit): _*)
-        aggregate(
-          zip_with(col(vecCol), lits, (x, w) => x.cast("double") * w),
-          lit(0.0), (acc, e) => acc + e)
-      }
+    val dot = Native.dot(col(vecCol), typedLit(loadings))
     emb.where(size(col(vecCol)) === loadings.size)
       .withColumn("score", round(dot, 6))
   }

@@ -17,6 +17,10 @@ import org.apache.spark.sql.types._
   */
 object Profiler {
 
+  /** Inputs up to this size are spread over a hash key before
+    * [[corrMatrix]]'s decimal pass (see there). */
+  private val SpreadMaxBytes = BigInt(1L << 30)
+
   def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile needs at least one column")
     // count/null/min/max: all columns in ONE aggregation row, one scan.
@@ -98,11 +102,9 @@ object Profiler {
     // data-scale shuffle, so it is skipped.
     val projected = df.select(cols.map(col): _*)
     val np = df.sparkSession.sparkContext.defaultParallelism
-    val spreadMax = BigInt(df.sparkSession.conf
-      .get("spark.graft.profiler.spreadMaxBytes", (1L << 30).toString))
     val small =
       (try projected.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case _: Throwable => BigInt(Long.MaxValue) }) <= spreadMax
+      catch { case _: Throwable => BigInt(Long.MaxValue) }) <= SpreadMaxBytes
     val spread =
       if (small)
         projected.repartition(np, pmod(xxhash64(cols.map(col): _*),

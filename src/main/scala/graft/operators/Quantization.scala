@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.native.Native
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Product quantization for embedding columns (Jégou/Douze/Schmid,
@@ -68,7 +69,7 @@ object Quantization {
     var cb = initCodebook(df, idCol, vecCol, k)
     val pts = df.select(transform(col(vecCol), x => x.cast("double")).as("__v"))
     for (_ <- 1 to iters) {
-      val rows = pts.withColumn("__c", pqCodes(df.sparkSession, col("__v"), cb, m, dims))
+      val rows = pts.withColumn("__c", pqCodes(col("__v"), cb, m, dims))
         .select(col("__c"), posexplode(col("__v")).as(Seq("pos", "x")))
         // pos is 0-based; its subspace owns the code that updates it
         .withColumn("code",
@@ -122,45 +123,27 @@ object Quantization {
 
   /** Squared-L2 distance between a vector slice [lo, lo+len) and a
     * literal codeword slice (ascending dimension order — the oracle's
-    * list order). Native fused kernel (`graft_dist2s`) when the session
-    * carries GraftExtensions: the HOF twin below is a CodegenFallback
-    * pair evaluated INTERPRETED per row per codeword (r09's measured PQ
-    * hot path), while the native form is one primitive loop whose
-    * codeword rides the codegen `references` array — so the generated
-    * source is identical across codebooks and Janino compiles ONCE per
-    * operator shape, not once per training round (the r09 §11
+    * list order): the native fused kernel (`graft_dist2s`), one primitive
+    * loop whose codeword rides the codegen `references` array — so the
+    * generated source is identical across codebooks and Janino compiles
+    * ONCE per operator shape, not once per training round (the r09 §11
     * unroll-to-literals failure, fixed the way the r09 verdict
-    * prescribed). Both forms widen elements to double in the same
-    * ascending fold with the same null semantics → bit-identical. The
-    * choice follows `session`, the session the column runs in. */
-  private def sliceDist(session: SparkSession, vec: Column,
-      word: IndexedSeq[Double], lo: Int, len: Int): Column =
-    if (graft.GraftExtensions.has(session, "graft_dist2s"))
-      call_function("graft_dist2s", vec,
-        typedLit(word.slice(lo, lo + len)), lit(lo))
-    else {
-      val sub = slice(transform(vec, x => x.cast("double")),
-        lit(lo + 1), lit(len))
-      val w = array(word.slice(lo, lo + len).map(lit): _*)
-      aggregate(zip_with(sub, w, (x, c) => (x - c) * (x - c)),
-        lit(0.0), (acc, v) => acc + v)
-    }
+    * prescribed). */
+  private def sliceDist(vec: Column, word: IndexedSeq[Double], lo: Int,
+      len: Int): Column =
+    Native.dist2s(vec, typedLit(word.slice(lo, lo + len)), lo)
 
   /** PQ codes as one array<int> column of length `m`: per subspace, the
     * argmin codeword over the 6-dp-rounded squared-L2 distance, ties to
     * the smaller code. `dims` must match the vector length (same caller
-    * contract as kmeansAssign). `session` is the session the column runs
-    * in; it picks the native kernel or the HOF fallback (see sliceDist). */
-  def pqCodes(session: SparkSession, vec: Column,
-              codebook: IndexedSeq[IndexedSeq[Double]],
+    * contract as kmeansAssign). */
+  def pqCodes(vec: Column, codebook: IndexedSeq[IndexedSeq[Double]],
               m: Int, dims: Int): Column = {
     require(m > 0 && dims % m == 0, s"dims $dims must split into $m subspaces")
     val len = dims / m
-    // the double-widening lives inside sliceDist (native kernels widen
-    // per element; the HOF fallback transforms) — identical values
     val codes = (0 until m).map { mi =>
       val scored = codebook.indices.map { k =>
-        struct(round(sliceDist(session, vec, codebook(k), mi * len, len), 6).as("d"),
+        struct(round(sliceDist(vec, codebook(k), mi * len, len), 6).as("d"),
           lit(k).as("c"))
       }
       least(scored: _*).getField("c")
@@ -222,9 +205,8 @@ object Quantization {
   /** Exact squared-L2 against a literal query (the recall yardstick the
     * catalog query reports beside the ADC estimate) — sliceDist over the
     * full dimension range. */
-  def exactDist(session: SparkSession, vec: Column,
-      query: IndexedSeq[Double]): Column =
-    sliceDist(session, vec, query, 0, query.length)
+  def exactDist(vec: Column, query: IndexedSeq[Double]): Column =
+    sliceDist(vec, query, 0, query.length)
 
   // -------------------------------------------------------- scalar (int8)
 

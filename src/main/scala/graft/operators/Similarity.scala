@@ -1,49 +1,25 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.native.Native
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (Array[Float]).
   * Brute-force cosine top-k as the exact baseline; LSH-bucketed ANN as
-  * the scale path. All vector math via higher-order functions
-  * (zip_with/aggregate) — codegen'd, no UDFs.
+  * the scale path. All vector math runs on graft's native kernels
+  * ([[graft.functions.native.Native]]) — codegen'd, no UDFs.
   */
 object Similarity {
 
-  /** True when the given session carries the GraftExtensions-injected
-    * native kernels (graft_dot / graft_cosine). Checked at plan-build
-    * time on the driver — cheap, and lets every call site transparently
-    * upgrade to the fused codegen loop while sessions without the
-    * extension (e.g. an embedding host's bare session) keep the
-    * semantically identical HOF plan. Callers pass the session the plan
-    * is built against (df.sparkSession) — NOT the thread-local active
-    * session, which in a multi-session process may disagree about the
-    * extension and turn the intended silent fallback into an
-    * unresolved-function analysis error. */
-  private def nativeAvailable(s: org.apache.spark.sql.SparkSession): Boolean =
-    graft.GraftExtensions.has(s, "graft_dot")
+  /** Dot product of two array columns, computed in double: the fused
+    * native kernel ([[graft.functions.native.DotProduct]]). */
+  def dot(a: Column, b: Column): Column = Native.dot(a, b)
 
-  /** Dot product of two array columns, computed in double. Fused native
-    * kernel when GraftExtensions is installed in `s` (the session the
-    * plan is built against); zip_with/aggregate HOF otherwise (same
-    * element order + accumulation → identical results). */
-  def dot(s: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column =
-    if (nativeAvailable(s)) call_function("graft_dot", a, b)
-    else aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(s: org.apache.spark.sql.SparkSession, a: Column): Column =
-    sqrt(dot(s, a, a))
+  def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity; null when either norm is 0. */
-  def cosine(s: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column =
-    if (nativeAvailable(s)) call_function("graft_cosine", a, b)
-    else {
-      val d = dot(s, a, b)
-      val nn = norm(s, a) * norm(s, b)
-      when(nn > 0, d / nn)
-    }
+  def cosine(a: Column, b: Column): Column = Native.cosine(a, b)
 
   /** Exact top-k neighbors for each probe vector: probes (small) are
     * broadcast against the corpus; rank by (cosine desc, id) for a total
@@ -53,17 +29,16 @@ object Similarity {
   def bruteForceTopK(
       corpus: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
       probeIdCol: String, k: Int): DataFrame = {
-    val ss = corpus.sparkSession
     // norms are per-vector, not per-pair: compute them BEFORE the join
     // (cosine() inline would re-reduce both arrays for every candidate)
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-      norm(ss, col(vecCol)).as("__cn"))
+      norm(col(vecCol)).as("__cn"))
     val p = probes.select(col(probeIdCol).as("probe_id"), col(vecCol).as("__pv"),
-      norm(ss, col(vecCol)).as("__pn"))
+      norm(col(vecCol)).as("__pn"))
     val scored = c.join(broadcast(p), col("neighbor_id") =!= col("probe_id"))
       .withColumn("cos",
         when(col("__cn") * col("__pn") > 0,
-          dot(ss, col("__cv"), col("__pv")) / (col("__cn") * col("__pn"))))
+          dot(col("__cv"), col("__pv")) / (col("__cn") * col("__pn"))))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -91,20 +66,18 @@ object Similarity {
   /** Deterministic random-hyperplane sign sketch: bucket = integer of
     * sign(v . w_p) bits. The plane matrix is precomputed on the driver and
     * shipped as an array literal — the per-row work is `planes` fused
-    * zip_with/aggregate reductions, nothing else. (The earlier form derived
+    * native dot products, nothing else. (The earlier form derived
     * each weight with md5+conv PER ROW per plane per dimension; measured
-    * ~8x slower on the ANN query.) `session` is the session the column
-    * runs in (see dotLit).
+    * ~8x slower on the ANN query.)
     */
-  def hyperplaneSketch(session: SparkSession, vec: Column, planes: Int,
-      dims: Int): Column = {
+  def hyperplaneSketch(vec: Column, planes: Int, dims: Int): Column = {
     val signs = (0 until planes).map { p =>
-      val proj = dotLit(session, vec, (0 until dims).map(i => planeWeight(p, i)))
+      val proj = dotLit(vec, (0 until dims).map(i => planeWeight(p, i)))
       when(proj >= 0, shiftleft(lit(1L), p)).otherwise(0L)
     }
-    // a dims mismatch null-pads the zip_with, nulls the projection, and
-    // would drop every vector into bucket 0 — turning the LSH equi-join
-    // into a full self-join with no error. Fail loudly instead.
+    // a dims mismatch nulls the projection and would drop every vector
+    // into bucket 0 — turning the LSH equi-join into a full self-join
+    // with no error. Fail loudly instead.
     when(size(vec) === dims, signs.reduce(_ + _))
       .otherwise(raise_error(concat(
         lit(s"hyperplaneSketch: expected $dims-dim vector, got "),
@@ -133,16 +106,7 @@ object Similarity {
     * [[writeIvfIndex]]/[[ivfPartitionedTopK]]. */
   private def assignCells(df: DataFrame, outId: String, n: Int,
       centroids: DataFrame): DataFrame = {
-    // native fused squared-L2 when the session carries the extension —
-    // the HOF twin is an interpreted CodegenFallback per (row, cell)
-    // pair of the cross join; identical fold order and null semantics
-    val d2 =
-      if (graft.GraftExtensions.has(df.sparkSession, "graft_dist2"))
-        call_function("graft_dist2", col("__v"), col("centroid"))
-      else aggregate(
-        zip_with(col("__v"), col("centroid"),
-          (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
-        lit(0.0), (acc, v) => acc + v)
+    val d2 = Native.dist2(col("__v"), col("centroid"))
     val w = Window.partitionBy(col(outId)).orderBy(col("__cd"), col("cell"))
     df.crossJoin(broadcast(centroids))
       .withColumn("__cd", d2)
@@ -155,28 +119,26 @@ object Similarity {
       corpus: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
       probeIdCol: String, centroids: DataFrame, k: Int,
       nprobe: Int = 1): DataFrame = {
-    val ss = corpus.sparkSession
     val c = assignCells(
       corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__v"),
-        norm(ss, col(vecCol)).as("__cn")), "neighbor_id", 1, centroids)
+        norm(col(vecCol)).as("__cn")), "neighbor_id", 1, centroids)
       .withColumnRenamed("__v", "__cv")
     val p = assignCells(
       probes.select(col(probeIdCol).as("probe_id"), col(vecCol).as("__v"),
-        norm(ss, col(vecCol)).as("__pn")), "probe_id", nprobe, centroids)
+        norm(col(vecCol)).as("__pn")), "probe_id", nprobe, centroids)
       .withColumnRenamed("__v", "__pv")
-    ivfScore(ss, c, p, k)
+    ivfScore(c, p, k)
   }
 
   /** The IVF search tail shared by the inline and partitioned paths:
     * cell equi-join against the broadcast probe table, exact cosine,
     * per-probe top-k. */
-  private def ivfScore(ss: org.apache.spark.sql.SparkSession,
-      cells: DataFrame, p: DataFrame, k: Int): DataFrame = {
+  private def ivfScore(cells: DataFrame, p: DataFrame, k: Int): DataFrame = {
     val scored = cells.join(broadcast(p), Seq("cell"))
       .where(col("neighbor_id") =!= col("probe_id"))
       .withColumn("cos",
         when(col("__cn") * col("__pn") > 0,
-          dot(ss, col("__cv"), col("__pv")) / (col("__cn") * col("__pn"))))
+          dot(col("__cv"), col("__pv")) / (col("__cn") * col("__pn"))))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -203,10 +165,9 @@ object Similarity {
     * then rewrites only the receiving cells). */
   def indexRows(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame): DataFrame = {
-    val ss = corpus.sparkSession
     assignCells(
       corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__v"),
-        norm(ss, col(vecCol)).as("__cn")), "neighbor_id", 1, centroids)
+        norm(col(vecCol)).as("__cn")), "neighbor_id", 1, centroids)
       .withColumnRenamed("__v", "__cv")
   }
 
@@ -227,23 +188,21 @@ object Similarity {
       probes: DataFrame, probeIdCol: String, vecCol: String,
       centroids: DataFrame, indexPath: String, k: Int,
       nprobe: Int = 1): DataFrame = {
-    val ss = probes.sparkSession
-    val idx = ss.read.parquet(indexPath)
+    val idx = probes.sparkSession.read.parquet(indexPath)
     val p = assignCells(
       probes.select(col(probeIdCol).as("probe_id"), col(vecCol).as("__v"),
-        norm(ss, col(vecCol)).as("__pn")), "probe_id", nprobe, centroids)
+        norm(col(vecCol)).as("__pn")), "probe_id", nprobe, centroids)
       .withColumnRenamed("__v", "__pv")
-    ivfScore(ss, idx, p, k)
+    ivfScore(idx, p, k)
   }
 
   def lshTopK(
       corpus: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
       probeIdCol: String, k: Int, planes: Int = 6, dims: Int = 64,
       multiProbe: Boolean = false): DataFrame = {
-    val ss = corpus.sparkSession
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-        norm(ss, col(vecCol)).as("__cn"))
-      .withColumn("bucket", hyperplaneSketch(ss, col("__cv"), planes, dims))
+        norm(col(vecCol)).as("__cn"))
+      .withColumn("bucket", hyperplaneSketch(col("__cv"), planes, dims))
     // multi-probe: each probe also searches the `planes` buckets one
     // hyperplane-sign flip away (the classic recall knob — a vector near
     // a plane lands on either side with near-even odds, so the 1-bit
@@ -257,8 +216,8 @@ object Similarity {
     // re-evaluation trap — benign here only because probes are small,
     // but free to avoid).
     val pBase = probes.select(col(probeIdCol).as("probe_id"),
-        col(vecCol).as("__pv"), norm(ss, col(vecCol)).as("__pn"))
-      .withColumn("__sig", hyperplaneSketch(ss, col("__pv"), planes, dims))
+        col(vecCol).as("__pv"), norm(col(vecCol)).as("__pn"))
+      .withColumn("__sig", hyperplaneSketch(col("__pv"), planes, dims))
     val probeBuckets: Column =
       if (multiProbe)
         explode(concat(
@@ -276,7 +235,7 @@ object Similarity {
       .where(col("neighbor_id") =!= col("probe_id"))
       .withColumn("cos",
         when(col("__cn") * col("__pn") > 0,
-          dot(ss, col("__cv"), col("__pv")) / (col("__cn") * col("__pn"))))
+          dot(col("__cv"), col("__pv")) / (col("__cn") * col("__pn"))))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -292,29 +251,16 @@ object Similarity {
     * instead of sign bits. The fold is an index-ordered sequential
     * aggregate, so an oracle replaying it with an ordered list_reduce
     * gets bit-identical doubles. */
-  def rpProject(session: SparkSession, vec: Column, rDims: Int,
-      dims: Int): Column =
+  def rpProject(vec: Column, rDims: Int, dims: Int): Column =
     array((0 until rDims).map { p =>
-      dotLit(session, vec, (0 until dims).map(i => planeWeight(p, i)))
+      dotLit(vec, (0 until dims).map(i => planeWeight(p, i)))
     }: _*)
 
-  /** Dot product against a LITERAL weight vector — the native fused
-    * kernel when the column's session carries the extension (the
-    * literal rides the codegen `references` array: one compiled source
-    * per operator shape however many distinct weight vectors appear),
-    * HOF otherwise. `session` is the session the column runs in (the
-    * caller's DataFrame's), never the thread's active one — see
-    * [[graft.GraftExtensions.has]]. Bit-identical either way: same
-    * ascending fold, same widen-to-double, same null semantics. */
-  private def dotLit(session: SparkSession, vec: Column,
-      weights: Seq[Double]): Column =
-    if (graft.GraftExtensions.has(session, "graft_dot"))
-      call_function("graft_dot", vec, typedLit(weights))
-    else {
-      val w = array(weights.map(lit): _*)
-      aggregate(zip_with(vec, w, (v, wi) => v.cast("double") * wi),
-        lit(0.0), (acc, v) => acc + v)
-    }
+  /** Dot product against a LITERAL weight vector: the literal rides the
+    * codegen `references` array, so one compiled source serves an
+    * operator shape however many distinct weight vectors appear. */
+  private def dotLit(vec: Column, weights: Seq[Double]): Column =
+    Native.dot(vec, typedLit(weights))
 
   /** RP-ANN: candidates ranked by cosine in the rDims projected space
     * (rDims multiplications per pair instead of dims), then the top
@@ -329,16 +275,15 @@ object Similarity {
              vecCol: String, probeIdCol: String, dims: Int, rDims: Int,
              cand: Int, k: Int): DataFrame = {
     require(cand >= k, "candidate pool must cover k")
-    val ss = corpus.sparkSession
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-      rpProject(ss, col(vecCol), rDims, dims).as("__cp"))
+      rpProject(col(vecCol), rDims, dims).as("__cp"))
     val p = probes.select(col(probeIdCol).as("probe_id"), col(vecCol).as("__pv"),
-      rpProject(ss, col(vecCol), rDims, dims).as("__pp"))
+      rpProject(col(vecCol), rDims, dims).as("__pp"))
     val projScore = c.join(broadcast(p), col("neighbor_id") =!= col("probe_id"))
       .withColumn("__pcos", {
-        val d = dot(ss, col("__cp"), col("__pp"))
-        val nn = sqrt(dot(ss, col("__cp"), col("__cp"))) *
-          sqrt(dot(ss, col("__pp"), col("__pp")))
+        val d = dot(col("__cp"), col("__pp"))
+        val nn = sqrt(dot(col("__cp"), col("__cp"))) *
+          sqrt(dot(col("__pp"), col("__pp")))
         when(nn > 0, d / nn)
       })
     val wc = Window.partitionBy(col("probe_id"))
@@ -346,9 +291,9 @@ object Similarity {
     val candidates = projScore.withColumn("__cr", row_number().over(wc))
       .where(col("__cr") <= cand)
     val exact = candidates.withColumn("cos", {
-      val d = dot(ss, col("__cv"), col("__pv"))
-      val nn = sqrt(dot(ss, col("__cv"), col("__cv"))) *
-        sqrt(dot(ss, col("__pv"), col("__pv")))
+      val d = dot(col("__cv"), col("__pv"))
+      val nn = sqrt(dot(col("__cv"), col("__cv"))) *
+        sqrt(dot(col("__pv"), col("__pv")))
       when(nn > 0, d / nn)
     })
     val wr = Window.partitionBy(col("probe_id"))
@@ -420,14 +365,13 @@ object Similarity {
       : DataFrame = {
     require(selectK >= 1 && candK >= selectK,
       "mmrSelect needs 1 <= selectK <= candK")
-    val ss = corpus.sparkSession
     val cand = bruteForceTopK(corpus, probes, idCol, vecCol, probeIdCol,
         candK)
       .select(col("probe_id"), col("rank"),
         col("neighbor_id").as("cand_id"), col("cos").as("rel"))
       .localCheckpoint()
     val cv = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("__v"),
-      norm(ss, col(vecCol)).as("__n"))
+      norm(col(vecCol)).as("__n"))
     val withVec = cand.select(col("probe_id"), col("cand_id"))
       .join(cv, Seq("cand_id"))
     val a = withVec.select(col("probe_id"), col("cand_id").as("id1"),
@@ -438,7 +382,7 @@ object Similarity {
         col("probe_id") === col("pb") && col("id1") =!= col("id2"))
       .select(col("probe_id"), col("id1").as("cand_id"), col("id2"),
         round(when(col("n1") * col("n2") > 0,
-          dot(ss, col("v1"), col("v2")) / (col("n1") * col("n2"))), 6)
+          dot(col("v1"), col("v2")) / (col("n1") * col("n2"))), 6)
           .as("sim"))
       .localCheckpoint()
     var sel = cand.where(col("rank") === 1)

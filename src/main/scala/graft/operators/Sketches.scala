@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.native.Native
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -324,14 +325,11 @@ object Sketches {
   /** PER-GROUP weighted bottom-k sketch — [[weightedBottomK]] with the
     * group key riding the aggregation, the sketch that replaces
     * [[Robust.weightedMedian]]'s per-key sort when groups are too large
-    * to sort at 100 TB. With the graft extension installed this goes
-    * through the native `graft_wbk` TypedImperativeAggregate
+    * to sort at 100 TB. It runs the native `graft_wbk`
+    * TypedImperativeAggregate
     * ([[graft.functions.native.WeightedBottomKAgg]]): ≤(k+1)-slot
     * partial states, so the exchange ships the SKETCH per group, never
-    * the group. Sessions without it fall back to the keyed-window
-    * formulation — value-identical (the spec pins it), but the window
-    * sorts whole groups: the usual extension contract, lose shuffle
-    * bytes and sort work, never answers.
+    * the group.
     *
     * Returns (keys..., p, h, v, w): ≤ k+1 rows per key under the total
     * order (p desc, h, v) — k sample rows plus the threshold row. */
@@ -351,22 +349,13 @@ object Sketches {
       .withColumn("p", col("w") /
         ((pmod(col("h"), lit(two53)) + lit(1L)).cast("double") /
           lit(two53.toDouble)))
-    if (graft.GraftExtensions.has(df.sparkSession, "graft_wbk"))
-      base.groupBy(keys.map(col): _*)
-        .agg(call_function("graft_wbk", col("p"), col("h"), col("v"),
-          col("w"), lit(k)).as("__s"))
-        .select((keys.map(col) :+ explode(col("__s")).as("__r")): _*)
-        .select((keys.map(col) ++ Seq(col("__r.p").as("p"),
-          col("__r.h").as("h"), col("__r.v").as("v"),
-          col("__r.w").as("w"))): _*)
-    else {
-      val w0 = Window.partitionBy(keys.map(col): _*)
-        .orderBy(col("p").desc, col("h"), col("v"))
-      base.withColumn("__rk", row_number().over(w0))
-        .where(col("__rk") <= k + 1)
-        .select((keys.map(col) ++
-          Seq(col("p"), col("h"), col("v"), col("w"))): _*)
-    }
+    base.groupBy(keys.map(col): _*)
+      .agg(Native.weightedBottomK(col("p"), col("h"), col("v"), col("w"), k)
+        .as("__s"))
+      .select((keys.map(col) :+ explode(col("__s")).as("__r")): _*)
+      .select((keys.map(col) ++ Seq(col("__r.p").as("p"),
+        col("__r.h").as("h"), col("__r.v").as("v"),
+        col("__r.w").as("w"))): _*)
   }
 
   /** Per-key weighted quantiles from a [[weightedBottomKByKey]] frame —
@@ -441,48 +430,27 @@ object Sketches {
     * applies the threshold, so the emitted counts are exact and the
     * output is deterministic/oracle-checkable even though summary
     * contents are merge-order-dependent.
-    *
-    * Sessions without the extension fall back to the exact census
-    * groupBy — identical answers, unbounded shuffle key-space (the usual
-    * extension contract: lose shuffle bytes, never answers).
     */
   def heavyHitters(df: DataFrame, keyCol: Column, phi: Double,
                    k: Int = 512): DataFrame = {
     require(phi > 1.0 / (k + 1),
       s"phi=$phi must exceed 1/(k+1)=${1.0 / (k + 1)} for the MG superset guarantee")
-    val spark = df.sparkSession
     val keyed = df.select(keyCol.cast("string").as("key"))
-    val thresholdOf = (n: Long) => math.ceil(phi * n).toLong
-    if (graft.GraftExtensions.has(spark, "graft_mg")) {
-      // pass 1: bounded summary + exact n in ONE scan and one one-row agg
-      val row = keyed
-        .agg(call_function("graft_mg", col("key"), lit(k)).as("mg"),
-          count(col("key")).as("n"))
-        .head()
-      val n = row.getLong(1)
-      val cands = row.getSeq[org.apache.spark.sql.Row](0).map(_.getString(0))
-      val t = thresholdOf(n)
-      if (cands.isEmpty)
-        return keyed.limit(0).select(col("key"),
-          lit(0L).as("cnt"), lit(0.0).as("share"))
+    // pass 1: bounded summary + exact n in ONE scan and one one-row agg
+    val row = keyed
+      .agg(Native.misraGries(col("key"), k).as("mg"), count(col("key")).as("n"))
+      .head()
+    val n = row.getLong(1)
+    val cands = row.getSeq[org.apache.spark.sql.Row](0).map(_.getString(0))
+    if (cands.isEmpty)
+      keyed.limit(0).select(col("key"), lit(0L).as("cnt"), lit(0.0).as("share"))
+    else
       // pass 2: exact count of candidates only — the filter is a literal
       // in-set predicate, map-side, so the shuffle carries <= k keys
       keyed.where(col("key").isInCollection(cands))
         .groupBy("key").agg(count(lit(1)).as("cnt"))
-        .where(col("cnt") >= t)
+        .where(col("cnt") >= math.ceil(phi * n).toLong)
         .select(col("key"), col("cnt"),
           round(col("cnt") / lit(n.toDouble), 6).as("share"))
-    } else {
-      import graft.operators.Guards
-      val tot = keyed.agg(count(col("key")).as("n"))
-        .withColumn("__k", Guards.constKey(col("n")))
-      keyed.where(col("key").isNotNull)
-        .groupBy("key").agg(count(lit(1)).as("cnt"))
-        .withColumn("__k", Guards.constKey(col("key")))
-        .join(broadcast(tot), "__k")
-        .where(col("cnt") >= ceil(lit(phi) * col("n")).cast("long"))
-        .select(col("key"), col("cnt"),
-          round(col("cnt") / col("n").cast("double"), 6).as("share"))
-    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.native.Native
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -10,9 +11,10 @@ import org.apache.spark.sql.functions._
   * the key's first event against the event value.
   *
   * Distance = symmetric discrete Hausdorff: H(A,B) = max(h(A,B), h(B,A)),
-  * h(A,B) = max over a of min over b of euclidean((t,v)). Computed
-  * entirely with codegen'd array HOFs on the grouped point arrays — no
-  * UDF, no per-point row explosion at compare time.
+  * h(A,B) = max over a of min over b of euclidean((t,v)). Computed by
+  * the fused native kernel ([[graft.functions.native.HausdorffDistance]])
+  * on the grouped point arrays — no UDF, no per-point row explosion at
+  * compare time.
   *
   * Scale shape: pairwise comparison is blocked by a MIN-VALUE CELL of
   * width `cellWidth`, probing each key's own and adjacent cells. This is
@@ -78,13 +80,6 @@ object TrajectorySim {
           p("v").as("v"))))
       .select(col("id"), col("traj"), col("min_v"))
 
-  /** max over a in A of min over b in B of dist(a, b) */
-  private def directed(a: Column, b: Column): Column =
-    array_max(transform(a, p =>
-      array_min(transform(b, q =>
-        sqrt((p("t") - q("t")) * (p("t") - q("t")) +
-          (p("v") - q("v")) * (p("v") - q("v")))))))
-
   /** Top-k most-similar trajectories per probe key:
     * (id1, rk, id2, hausdorff). `isProbe` selects the probe set against
     * the trajectory frame's `id` column — probe-set-sized work, the ANN
@@ -105,14 +100,8 @@ object TrajectorySim {
       .select(col("id").as("id1"), col("traj").as("ta"), col("cell"))
     val cands = t
       .select(col("id").as("id2"), col("traj").as("tb"), cell.as("cell"))
-    // fused early-break native kernel when the extension is installed
-    // (bit-identical value: the break skips work that cannot change the
-    // max — see HausdorffDistance); nested-HOF fallback otherwise
-    val h =
-      if (graft.GraftExtensions.has(events.sparkSession, "graft_hausdorff"))
-        call_function("graft_hausdorff", col("ta"), col("tb"))
-      else greatest(directed(col("ta"), col("tb")),
-        directed(col("tb"), col("ta")))
+    // fused early-break native kernel (see HausdorffDistance)
+    val h = Native.hausdorff(col("ta"), col("tb"))
     // no pair dedup: the probe's three cells are distinct values and a
     // candidate sits in exactly one cell, so each (id1, id2) pair joins
     // at most once — a dropDuplicates would add a full shuffle of the

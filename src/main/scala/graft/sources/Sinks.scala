@@ -4,7 +4,7 @@ import graft.operators.Fixpoint
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.functions.{coalesce, col, concat_ws, lit, nullif}
+import org.apache.spark.sql.functions.{array, coalesce, col, lit, nullif, typedLit}
 
 /** K1 — partitioned parquet sink with idempotent partition rebuild
   * (SURVEY.md §2.2). The reference appends to per-year HDF5 files with
@@ -26,23 +26,22 @@ object Sinks {
     rm(new java.io.File(path))
   }
 
-  private val KeySep = "\u0000"
-  private val NullKey = "\u0001"
-
-  /** A partition tuple as one string key, Spark-side from the partition
-    * columns; [[partitionKeyOf]] builds the same key driver-side from the
-    * values' string forms (the partition column cast to string, or a
-    * directory name's unescaped value). Values are joined with `\u0000`,
-    * so ("a b", "c") and ("a", "b c") stay apart. A null value — and "",
-    * which the partitioned writer files under the same default directory
-    * and reads back as null — keys as `\u0001`, where `concat_ws` alone
-    * would drop it and `String.valueOf` would render "null". */
+  /** A partition tuple as one key, Spark-side from the partition
+    * columns: the array of the values' string forms (the partition
+    * column cast to string). [[partitionKeyOf]] builds the same key
+    * driver-side from collected string forms or a directory name's
+    * unescaped value. "" keys as null: the partitioned writer files both
+    * under the same default directory and reads it back as null. Keying
+    * on the tuple itself, not on a joined string, keeps every distinct
+    * tuple apart whatever characters its values hold. */
   private[graft] def partitionKey(partitionCols: Seq[String]): Column =
-    concat_ws(KeySep, partitionCols.map(c =>
-      coalesce(nullif(col(c).cast("string"), lit("")), lit(NullKey))): _*)
+    array(partitionCols.map(c => nullif(col(c).cast("string"), lit(""))): _*)
 
-  private[graft] def partitionKeyOf(values: Seq[String]): String =
-    values.map(v => if (v == null || v.isEmpty) NullKey else v).mkString(KeySep)
+  private[graft] def partitionKeyOf(values: Seq[String]): Seq[String] =
+    values.map(v => if (v == null || v.isEmpty) null else v)
+
+  /** [[partitionKeyOf]] as a literal to compare with [[partitionKey]]. */
+  private def keyLit(values: Seq[String]): Column = typedLit(partitionKeyOf(values))
 
   /** Rows are clustered by the partition columns before the write: without
     * it, EVERY upstream task holding rows of a partition value opens its
@@ -156,7 +155,7 @@ object Sinks {
       if (affected.nonEmpty) {
         val pTuple = partitionKey(partitionCols)
         // pruned base read: only affected partitions' files are opened
-        val pruned = base.where(pTuple.isin(affected.map(partitionKeyOf): _*))
+        val pruned = base.where(pTuple.isin(affected.map(keyLit): _*))
         val survivors = pruned.join(chKeys, keyCols, "left_anti")
         val incoming = deleteCol.map(d => ch.where(!col(d)).drop(d))
           .getOrElse(ch)
@@ -174,7 +173,7 @@ object Sinks {
         // emptied partitions: affected but absent from the output — their
         // stale directories survive dynamic overwrite and must go
         val remaining = out.select(pTuple).distinct().collect()
-          .map(_.getString(0)).toSet
+          .map(_.getSeq[String](0)).toSet
         affected.filterNot(v => remaining.contains(partitionKeyOf(v)))
           .foreach { v =>
             val dir = partitionCols.zip(v)
@@ -240,7 +239,7 @@ object Sinks {
       val dataCols = base.columns.filterNot(partitionCols.contains)
       val pTuple = partitionKey(partitionCols)
       // directory names → the values the scan reads back
-      val key = affected.map(vals => vals -> partitionKeyOf(vals.map(v =>
+      val key = affected.map(vals => vals -> keyLit(vals.map(v =>
         if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
         else ExternalCatalogUtils.unescapePathName(v)))).toMap
       val pruned = base.where(pTuple.isin(affected.map(key): _*))

@@ -3,6 +3,7 @@ package org.apache.spark.sql
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.StructType
 
 /** Spark internals graft reaches from inside Spark's package. */
@@ -16,6 +17,11 @@ object GraftFrames {
   def fromInternal(spark: SparkSession, rows: RDD[InternalRow],
                    schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** A Catalyst expression as a Column, and a Column's expression: how
+    * operators build graft's native kernels with no function lookup. */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** Drop RDD `id`'s blocks and its persistence entry without
     * `RDD.unpersist`'s warning for locally checkpointed RDDs. */

@@ -61,7 +61,7 @@ class LookupCascadeSpec extends SparkSpec {
   test("hyperplaneSketch: dims mismatch fails loudly instead of bucket 0") {
     val vecs = Seq((1L, Array(1.0f, 2.0f, 3.0f))).toDF("id", "v")
     val ex = intercept[Exception] {
-      vecs.select(Similarity.hyperplaneSketch(spark, col("v"), 4, 8)).collect()
+      vecs.select(Similarity.hyperplaneSketch(col("v"), 4, 8)).collect()
     }
     assert(ex.getMessage.contains("hyperplaneSketch") ||
       Option(ex.getCause).exists(_.getMessage.contains("hyperplaneSketch")))

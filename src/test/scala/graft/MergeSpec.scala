@@ -93,12 +93,12 @@ class MergeSpec extends SparkSpec {
     // report the unpruned listing by definition)
     val pTuple = Sinks.partitionKey(Seq("yr"))
     val pruned = spark.read.parquet(path)
-      .where(pTuple.isin(Sinks.partitionKeyOf(Seq("2021"))))
+      .where(pTuple.isin(typedLit(Sinks.partitionKeyOf(Seq("2021")))))
     val qe = pruned.queryExecution
     assert(qe.toRdd.count() == 2)
     val scan = qe.executedPlan.collectLeaves().head
     assert(scan.toString.contains("PartitionFilters") &&
-      scan.toString.contains("concat_ws"),
+      scan.toString.contains("array("),
       s"partition-attribute predicate missing from the scan:\n$scan")
     val numFiles = scan.metrics.get("numFiles").map(_.value)
     val want = files(path, "yr=2021").size.toLong

@@ -143,7 +143,7 @@ class NativeExprSpec extends SparkSpec {
       val df = spark.range(10).select(col("id"),
         transform(sequence(lit(0), lit(7)),
           i => (i.cast("double") + col("id")).cast("float")).as("v"))
-      df.select(Quantization.pqCodes(spark, col("v"), cb, 2, 8).as("codes"))
+      df.select(Quantization.pqCodes(col("v"), cb, 2, 8).as("codes"))
         .queryExecution.executedPlan
         .asInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]
         .doCodeGen()._2.body
@@ -158,7 +158,7 @@ class NativeExprSpec extends SparkSpec {
 
   test("Similarity.dot routes through the native kernel when available") {
     val df = Seq((1L, Array(1.0f, 2.0f))).toDF("id", "v")
-    val plan = df.select(Similarity.dot(df.sparkSession, col("v"), col("v")))
+    val plan = df.select(Similarity.dot(col("v"), col("v")))
       .queryExecution.analyzed.toString
     assert(plan.contains("graft_dot"))
   }
@@ -277,8 +277,6 @@ class NativeExprSpec extends SparkSpec {
     val e = pairs.toDF("src", "dst")
     val nat = Graph.neighborhoodFunction(e, k = 8, maxHops = 3)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(graft.GraftExtensions.has(spark, "graft_bottomk"),
-      "spec session must carry the extension for this A/B to mean anything")
     // compare against the directly-spelled collect_set fallback
     val state0 = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
@@ -304,32 +302,103 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("operators pick the native kernel from the DataFrame's session, even on a thread with none") {
-    import graft.operators.{Clustering, Dedup, Quantization}
-    import org.apache.spark.sql.{DataFrame, SparkSession}
-    val df = Seq((1L, Seq(0.0, 0.0, 1.0, 2.0)), (2L, Seq(10.0, 10.0, 3.0, 1.0)),
-      (3L, Seq(0.5, 0.0, 1.0, 2.5))).toDF("id", "v")
+    import graft.graph.Graph
+    import graft.operators.{Clustering, Dedup, Pca, Quantization, Sketches, TrajectorySim}
+    import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val names = Seq("graft_dot", "graft_cosine", "graft_dist2", "graft_dist2s",
+      "graft_simhash", "graft_hausdorff", "graft_bottomk", "graft_mg", "graft_wbk")
+    // the second input: a session that registers none of the SQL names
+    val bare = spark.newSession()
+    names.foreach(n => bare.sql(s"DROP TEMPORARY FUNCTION $n"))
+    assert(!names.exists(bare.catalog.functionExists), "names still registered")
     val cb = IndexedSeq(IndexedSeq(0.0, 0.0, 1.0, 2.0), IndexedSeq(9.0, 9.0, 3.0, 1.0))
-    var built: Seq[DataFrame] = Nil
-    var failure: Throwable = null
-    // the new thread inherits this thread's active session; it drops
-    // it, and the process default is cleared, so nothing but the
-    // DataFrame names a session
-    val t = new Thread(() => try {
-      SparkSession.clearActiveSession()
-      built = Seq(
-        Clustering.kmeansAssign(df, "id", "v", k = 2, iters = 1),
-        Dedup.embeddingNearDupPairs(df, "id", "v", 0.9, planes = 4, dims = 4),
-        df.select(Quantization.pqCodes(df.sparkSession, col("v"), cb, 2, 4)))
-    } catch { case e: Throwable => failure = e })
-    SparkSession.clearDefaultSession()
-    try { t.start(); t.join() }
-    finally SparkSession.setDefaultSession(spark)
-    if (failure != null) throw failure
-    // the HOF fallback would show as aggregate(zip_with(...))
-    val plans = built.map(_.queryExecution.analyzed.toString)
-    plans.foreach(p => assert(!p.contains("zip_with"), p))
-    assert(plans(0).contains("graft_dist2"), plans(0))
-    assert(plans(1).contains("graft_dot"), plans(1))
-    assert(plans(2).contains("graft_dist2s"), plans(2))
+
+    /** Every operator that used to fork on the session, built and run on
+      * a thread where nothing but the DataFrames names a session: the
+      * frames' analyzed plans, every plan the operators ran on the way
+      * (heavyHitters and neighborhoodFunction collect inside), and the
+      * rows. */
+    def run(ss: SparkSession): (Seq[(String, String)], Seq[String], Seq[Set[Row]]) = {
+      import ss.implicits._
+      val df = Seq((1L, Seq(0.0, 0.0, 1.0, 2.0)), (2L, Seq(10.0, 10.0, 3.0, 1.0)),
+        (3L, Seq(0.5, 0.0, 1.0, 2.5))).toDF("id", "v")
+      val cents = Seq((0, Seq(0.0, 0.0, 1.0, 2.0)), (1, Seq(9.0, 9.0, 3.0, 1.0)))
+        .toDF("cell", "centroid")
+      val docs = Seq((1L, "alpha beta gamma"), (2L, "alpha beta delta"))
+        .toDF("doc_id", "text")
+      val ts = (m: Long) => new java.sql.Timestamp(m * 60000L)
+      val events = Seq((1L, ts(0), 1L, 10.0), (1L, ts(1), 2L, 10.0),
+          (2L, ts(0), 3L, 10.0), (2L, ts(1), 4L, 13.0))
+        .toDF("user_id", "ts", "event_id", "value")
+      val keyed = Seq(("a", "x", 1.0, 2.0), ("a", "y", 2.0, 1.0), ("b", "z", 3.0, 1.0))
+        .toDF("key", "id", "vv", "ww")
+      val edges = Seq(("a", "b"), ("b", "c"), ("c", "a")).toDF("src", "dst")
+      val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          ran.add(qe.analyzed.toString)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      ss.listenerManager.register(listener)
+      var built: Seq[(String, DataFrame)] = Nil
+      var collected: Seq[DataFrame] = Nil
+      var failure: Throwable = null
+      // the new thread inherits this thread's active session; it drops
+      // it, and the process default is cleared, so nothing but the
+      // DataFrame names a session
+      val t = new Thread(() => try {
+        SparkSession.clearActiveSession()
+        built = Seq(
+          "graft_dist2" -> Clustering.kmeansAssign(df, "id", "v", k = 2, iters = 1),
+          "graft_dot" -> Dedup.embeddingNearDupPairs(df, "id", "v", 0.9,
+            planes = 4, dims = 4),
+          "graft_dist2s" -> df.select(Quantization.pqCodes(col("v"), cb, 2, 4)),
+          "graft_dot" -> df.select(Similarity.dot(col("v"), col("v"))),
+          "graft_cosine" -> df.select(Similarity.cosine(col("v"), col("v"))),
+          "graft_dist2" -> Similarity.ivfTopK(df, df, "id", "v", "id", cents, k = 2),
+          "graft_dot" -> Similarity.rpTopK(df, df, "id", "v", "id", dims = 4,
+            rDims = 2, cand = 2, k = 1),
+          "graft_dot" -> Pca.project(df, "v", Seq(0.5, 0.5, 0.5, 0.5)),
+          "graft_simhash" -> Dedup.withSimHash(docs, "doc_id", "text"),
+          "graft_hausdorff" -> TrajectorySim.hausdorffTopK(events, "user_id", "ts",
+            "event_id", "value", k = 1, isProbe = lit(true), cellWidth = 100.0),
+          "graft_wbk" -> Sketches.weightedBottomKByKey(keyed, Seq("key"), col("id"),
+            col("vv"), col("ww"), k = 1, seed = 7))
+        collected = Seq(
+          Sketches.heavyHitters(keyed, col("key"), phi = 0.4, k = 4),
+          Graph.neighborhoodFunction(edges, k = 2, maxHops = 2))
+      } catch { case e: Throwable => failure = e })
+      SparkSession.clearDefaultSession()
+      try { t.start(); t.join() }
+      finally SparkSession.setDefaultSession(spark)
+      if (failure != null) throw failure
+      val rows = (built.map(_._2) ++ collected).map(_.collect().toSet)
+      // the listener bus delivers in order but asynchronously: once a
+      // last marked query arrives, every earlier one has
+      ss.range(1).select(lit("end of run").as("marker")).collect()
+      try eventually(timeout(60.seconds)) {
+        assert(ran.toArray.exists(_.toString.contains("end of run")))
+      } finally ss.listenerManager.unregister(listener)
+      val ranPlans = ran.toArray.map(_.toString).toSeq
+      (built.map { case (k, f) => k -> f.queryExecution.analyzed.toString } ++
+        Seq("graft_mg", "graft_bottomk").map(k =>
+          k -> ranPlans.find(_.contains(k)).getOrElse(ranPlans.mkString("\n"))),
+        ranPlans, rows)
+    }
+
+    val (withNames, _, expected) = run(spark)
+    val (withoutNames, ranBare, got) = run(bare)
+    for ((plans, input) <- Seq(withNames -> "registered", withoutNames -> "bare");
+         (kernel, p) <- plans) {
+      assert(!p.contains("zip_with"), s"$input: $p")
+      assert(p.contains(kernel), s"$input session: $kernel missing from\n$p")
+    }
+    assert(!ranBare.exists(p => p.contains("collect_set") || p.contains("zip_with")),
+      ranBare.mkString("\n"))
+    assert(got == expected, "rows differ between the two sessions")
   }
 }

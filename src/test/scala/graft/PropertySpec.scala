@@ -237,8 +237,8 @@ class PropertySpec extends SparkSpec {
           .toDF("vec_id", "embedding")
         val out = df.select(col("vec_id"),
             Quantization.adcScore(
-              Quantization.pqCodes(spark, col("embedding"), cb, 4, 8), table).as("a"),
-            Quantization.exactDist(spark, col("embedding"), query).as("e"))
+              Quantization.pqCodes(col("embedding"), cb, 4, 8), table).as("a"),
+            Quantization.exactDist(col("embedding"), query).as("e"))
           .as[(Long, Double, Double)].collect()
         // a vector that IS codeword j encodes to j in every subspace, so
         // its ADC distance is the subspace decomposition of the exact

@@ -21,7 +21,7 @@ class QuantizationSpec extends SparkSpec {
       (3L, Seq(0.5f, 0.5f, 10.0f, 10.0f))  // sub1 EQUIDISTANT -> cw0
     ).toDF("vec_id", "embedding")
     val out = df.select(col("vec_id"),
-        Quantization.pqCodes(spark, col("embedding"), cb, m = 2, dims = 4).as("codes"))
+        Quantization.pqCodes(col("embedding"), cb, m = 2, dims = 4).as("codes"))
       .orderBy("vec_id").as[(Long, Seq[Int])].collect().toSeq
     assert(out == Seq((1L, Seq(0, 1)), (2L, Seq(1, 0)), (3L, Seq(0, 0))))
   }
@@ -35,8 +35,8 @@ class QuantizationSpec extends SparkSpec {
     val df = Seq((1L, Seq(0.1f, 0.0f, -9.0f, -9.0f))).toDF("vec_id", "embedding")
     val out = df.select(
         Quantization.adcScore(
-          Quantization.pqCodes(spark, col("embedding"), cb, 2, 4), table).as("a"),
-        round(Quantization.exactDist(spark, col("embedding"), query), 6).as("e"))
+          Quantization.pqCodes(col("embedding"), cb, 2, 4), table).as("a"),
+        round(Quantization.exactDist(col("embedding"), query), 6).as("e"))
       .as[(Double, Double)].collect().head
     // codes [0,1]: approx = 1.0 + 200.0; exact = 0.9^2 + 0 + 81 + 81
     assert(out._1 == 201.0)
@@ -105,13 +105,13 @@ class QuantizationSpec extends SparkSpec {
     def recall(cb: IndexedSeq[IndexedSeq[Double]]): Double = {
       val per = queries.map { query =>
         val exactTop = e.select(col("vec_id"),
-            Quantization.exactDist(spark, col("embedding"), query).as("d"))
+            Quantization.exactDist(col("embedding"), query).as("d"))
           .orderBy(col("d"), col("vec_id")).limit(20)
           .as[(Long, Double)].collect().map(_._1).toSet
         val table = Quantization.adcTable(query, cb, 8)
         val approxTop = e.select(col("vec_id"),
             Quantization.adcScore(
-              Quantization.pqCodes(spark, col("embedding"), cb, 8, 64), table).as("a"))
+              Quantization.pqCodes(col("embedding"), cb, 8, 64), table).as("a"))
           .orderBy(col("a"), col("vec_id")).limit(20)
           .as[(Long, Double)].collect().map(_._1).toSet
         approxTop.intersect(exactTop).size / 20.0
@@ -149,12 +149,12 @@ class QuantizationSpec extends SparkSpec {
       (3L, Seq(0.5f, 0.5f, 10.0f, 10.0f))
     ).toDF("vec_id", "embedding")
     vecs.select(col("vec_id"),
-        Quantization.pqCodes(spark, col("embedding"), cb, 2, 4).as("codes"))
+        Quantization.pqCodes(col("embedding"), cb, 2, 4).as("codes"))
       .write.mode("overwrite").parquet(dir)
     val table = Quantization.adcTable(IndexedSeq(1.0, 0.0, 0.0, 0.0), cb, 2)
     val direct = vecs.select(col("vec_id"),
         Quantization.adcScore(
-          Quantization.pqCodes(spark, col("embedding"), cb, 2, 4), table).as("a"))
+          Quantization.pqCodes(col("embedding"), cb, 2, 4), table).as("a"))
       .as[(Long, Double)].collect().toSeq.sortBy(_._1)
     val fromIndex = spark.read.parquet(dir)
       .select(col("vec_id"), Quantization.adcScore(col("codes"), table).as("a"))

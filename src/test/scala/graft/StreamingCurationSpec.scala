@@ -74,7 +74,7 @@ class StreamingCurationSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_stream_pq").toString
     vecs.write.mode("overwrite").parquet(dir)
     def pipeline(df: DataFrame): DataFrame = df
-      .withColumn("codes", Quantization.pqCodes(spark, col("embedding"), cb, 2, 4))
+      .withColumn("codes", Quantization.pqCodes(col("embedding"), cb, 2, 4))
       .withColumn("approx_d", Quantization.adcScore(col("codes"), table))
       .select("vec_id", "codes", "approx_d")
     val batch = pipeline(spark.read.parquet(dir))

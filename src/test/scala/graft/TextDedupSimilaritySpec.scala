@@ -134,7 +134,7 @@ class TextDedupSimilaritySpec extends SparkSpec {
     val a = df.select(col("vec_id").as("id1"), col("embedding").as("e1"))
     val b = df.select(col("vec_id").as("id2"), col("embedding").as("e2"))
     val brute = a.join(b, col("id1") < col("id2"))
-      .withColumn("cos", Similarity.cosine(spark, col("e1"), col("e2")))
+      .withColumn("cos", Similarity.cosine(col("e1"), col("e2")))
       .where(col("cos") >= 0.9)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(bucketed.subsetOf(brute), "bucketed pairs must be exact-verified")
