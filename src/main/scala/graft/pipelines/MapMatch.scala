@@ -1,9 +1,9 @@
 package graft.pipelines
 
 import graft.graph.{Graph, Viterbi}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftFrames, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import scala.collection.mutable.ArrayBuffer
 
@@ -22,11 +22,14 @@ import scala.collection.mutable.ArrayBuffer
   * Floyd–Warshall leaves it — a dense time array and a predecessor array
   * ([[MapMatch.Skim]]) behind a `Map` view — so it broadcasts as two
   * primitive arrays and a link path is rebuilt only for the legs the
-  * decoder picks. Two stages are per-group kernels: the Viterbi DP, one
-  * `flatMapGroups` per trip (kernel in graph/Viterbi.scala), and the
-  * travel-time allocation with its consecutive-link merge, one pass per
-  * trip in (leg, pos) order. Candidate projection and link stats are
-  * relational plans.
+  * decoder picks. Candidate projection is a per-point map-side kernel
+  * against a grid index of the links, also shipped as primitive arrays:
+  * no join, window or exchange. Two stages are per-group kernels: the
+  * Viterbi DP, one `flatMapGroups` per trip (kernel in
+  * graph/Viterbi.scala), and the travel-time allocation with its
+  * consecutive-link merge, one pass per trip in (leg, pos) order. Link
+  * stats is a relational aggregate. Each step builds its output with one
+  * projection.
   *
   * Skim convention: skim(s, e) = free-flow seconds over the best link
   * sequence s..e INCLUSIVE of both endpoint links' full traversal, so the
@@ -221,38 +224,84 @@ object MapMatch {
     new SkimMap(new Skim(ids, sortedIds, sortedIds.map(idx), time, predFlat))
   }
 
-  /** G1 — candidate link states per GPS point, relationally: each point
-    * is projected only onto the links sharing its `distLimit`-sized grid
-    * cell, then the `n` nearest within `distLimit` are kept, ranked by
-    * (distance, link_id) for a total order (HwyNetwork.py:297-330: offset
-    * t along the segment clamped to [0,1], perpendicular distance).
-    *
-    * Grid pruning (the Spark-shaped version of the reference's rtree bbox
-    * probe, HwyNetwork.py:370-388): every link is replicated on the
-    * driver to each cell overlapped by its bbox expanded by `distLimit`.
-    * A point within `distLimit` of a segment lies inside that expanded
-    * bbox, so its own cell is in the link's replication set — the
-    * (cell_x, cell_y) equi-join is therefore EXACT (a superset of the
-    * true candidates, refined by the distance filter) and plans as a
-    * BroadcastHashJoin: per-point work is the links near its cell, not
-    * the whole network.
-    * `points` must carry (tripCol, ptCol, tsCol, xCol, yCol).
-    */
-  def candidateStates(
-      points: DataFrame, links: Seq[Link], tripCol: String, ptCol: String,
-      xCol: String, yCol: String,
-      n: Int = ProjectNumLinks, distLimit: Double = ProjectDistLimit): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
+  /** The links grid-indexed by `distLimit`-sized cell, as primitive
+    * arrays: the cells (`cellX(k)`, `cellY(k)`) ascending, cell k holding
+    * the link indices `at(start(k) until start(k + 1))` in `links` order,
+    * and each link's id, endpoints and length by index. */
+  private final class CellIndex(distLimit: Double,
+      cellX: Array[Long], cellY: Array[Long],
+      start: Array[Int], at: Array[Int], id: Array[Long],
+      ax: Array[Double], ay: Array[Double], bx: Array[Double],
+      by: Array[Double], len: Array[Double]) extends Serializable {
+
+    /** Index of cell (cx, cy), -1 when no link is replicated there. */
+    private def find(cx: Long, cy: Long): Int = {
+      var lo = 0; var hi = cellX.length - 1
+      while (lo <= hi) {
+        val mid = (lo + hi) >>> 1
+        val c = if (cellX(mid) != cx) java.lang.Long.compare(cellX(mid), cx)
+          else java.lang.Long.compare(cellY(mid), cy)
+        if (c == 0) return mid
+        if (c < 0) lo = mid + 1 else hi = mid - 1
+      }
+      -1
+    }
+
+    /** One point's candidates: the `n` first of its cell's links within
+      * `distLimit`, by (cand_dist, link_id), as (link_id, t, dist)
+      * triples in rank order. Each step is the relational expression's
+      * own double arithmetic (see candidateStates). */
+    def candidates(x: Double, y: Double, n: Int,
+        ansi: Boolean): Array[(Long, Double, Double)] = {
+      val k = find(math.floor(x / distLimit).toLong,
+        math.floor(y / distLimit).toLong)
+      if (k < 0) return Array.empty
+      val kept = ArrayBuffer.empty[(Long, Double, Double)]
+      var j = start(k)
+      while (j < start(k + 1)) {
+        val i = at(j)
+        val den = len(i) * len(i)
+        // x / 0.0 under ANSI raises; otherwise it is NULL, and
+        // greatest(NULL, 0.0) is 0.0
+        val t =
+          if (den == 0.0) {
+            if (ansi) throw GraftFrames.divideByZero()
+            0.0
+          } else {
+            val t0 = ((x - ax(i)) * (bx(i) - ax(i)) + (y - ay(i)) * (by(i) - ay(i))) / den
+            val g = if (sqlCompare(0.0, t0) > 0) 0.0 else t0
+            if (sqlCompare(1.0, g) < 0) 1.0 else g
+          }
+        val px = ax(i) + t * (bx(i) - ax(i))
+        val py = ay(i) + t * (by(i) - ay(i))
+        val d = math.sqrt(StrictMath.pow(x - px, 2.0) + StrictMath.pow(y - py, 2.0))
+        if (sqlCompare(d, distLimit) <= 0) kept += ((id(i), t, d))
+        j += 1
+      }
+      kept.sortInPlaceWith { (a, b) =>
+        val c = sqlCompare(a._3, b._3)
+        if (c != 0) c < 0 else a._1 < b._1
+      }
+      kept.take(n).toArray
+    }
+  }
+
+  /** Spark's order on doubles: NaN above every number, -0.0 == 0.0. */
+  private def sqlCompare(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** The grid index of `links` with `distLimit`-sized cells, pruned to
+    * each link's corridor (HwyNetwork.py:370-388's rtree bbox probe,
+    * Spark-shaped). Every link is replicated to each cell overlapped by
+    * its bbox expanded by `distLimit`, keeping a cell iff its center is
+    * within distLimit + half-diagonal of the segment: a point within
+    * `distLimit` of a segment lies in that expanded bbox, and any point
+    * of a cell within `distLimit` of the link puts the center inside
+    * that radius, so a point's own cell holds every link it can match
+    * (a superset, refined by the distance test), while a long diagonal
+    * link is replicated to a band of cells linear in its length. */
+  private def cellIndex(links: Seq[Link], distLimit: Double): CellIndex = {
     val cell = distLimit
-    // replicate each link to the cells of its expanded bbox, PRUNED to
-    // the segment's corridor: a long diagonal link's bbox is quadratic
-    // in cells while the link passes near only a linear band of them.
-    // Keep a cell iff its center is within distLimit + half-diagonal of
-    // the segment — any point of the cell within distLimit of the link
-    // puts the center inside that radius, so the kept set is a strict
-    // superset of the cells that can ever satisfy the distance refine
-    // (exactness unchanged, replication linear in link length).
     def segDist(px: Double, py: Double, l: Link): Double = {
       val dx = l.bx - l.ax; val dy = l.by - l.ay
       val len2 = dx * dx + dy * dy
@@ -262,7 +311,7 @@ object MapMatch {
       math.hypot(px - (l.ax + t * dx), py - (l.ay + t * dy))
     }
     val corridor = distLimit + cell * math.sqrt(2) / 2
-    val linkDf = links.flatMap { l =>
+    val entries = links.zipWithIndex.flatMap { case (l, i) =>
       val x0 = math.floor((math.min(l.ax, l.bx) - distLimit) / cell).toLong
       val x1 = math.floor((math.max(l.ax, l.bx) + distLimit) / cell).toLong
       val y0 = math.floor((math.min(l.ay, l.by) - distLimit) / cell).toLong
@@ -270,27 +319,75 @@ object MapMatch {
       for {
         cx <- x0 to x1; cy <- y0 to y1
         if segDist((cx + 0.5) * cell, (cy + 0.5) * cell, l) <= corridor
-      } yield (l.linkId, l.ax, l.ay, l.bx, l.by, l.len, cx, cy)
-    }.toDF("link_id", "ax", "ay", "bx", "by", "len", "__gcx", "__gcy")
-    val t0 = (((col(xCol) - col("ax")) * (col("bx") - col("ax")) +
-               (col(yCol) - col("ay")) * (col("by") - col("ay"))) /
-              (col("len") * col("len")))
-    val t = least(greatest(t0, lit(0.0)), lit(1.0))
-    val px = col("ax") + t * (col("bx") - col("ax"))
-    val py = col("ay") + t * (col("by") - col("ay"))
-    val dist = sqrt(pow(col(xCol) - px, 2) + pow(col(yCol) - py, 2))
-    val w = Window.partitionBy(col(tripCol), col(ptCol))
-      .orderBy(col("cand_dist"), col("link_id"))
-    points
-      .withColumn("__gcx", floor(col(xCol) / cell).cast("long"))
-      .withColumn("__gcy", floor(col(yCol) / cell).cast("long"))
-      .join(broadcast(linkDf), Seq("__gcx", "__gcy"))
-      .withColumn("cand_dist", dist)
-      .where(col("cand_dist") <= distLimit)
-      .withColumn("offset_ratio", t)
-      .withColumn("cand_rank", row_number().over(w))
-      .where(col("cand_rank") <= n)
-      .drop("ax", "ay", "bx", "by", "len", "__gcx", "__gcy")
+      } yield (cx, cy, i)
+    }.sorted.toArray
+    val first = entries.indices.filter(e => e == 0 ||
+      entries(e)._1 != entries(e - 1)._1 || entries(e)._2 != entries(e - 1)._2)
+    new CellIndex(distLimit, first.map(entries(_)._1).toArray, first.map(entries(_)._2).toArray,
+      (first :+ entries.length).toArray, entries.map(_._3),
+      links.map(_.linkId).toArray, links.map(_.ax).toArray, links.map(_.ay).toArray,
+      links.map(_.bx).toArray, links.map(_.by).toArray, links.map(_.len).toArray)
+  }
+
+  /** G1 — candidate link states per GPS point (HwyNetwork.py:297-330):
+    * each point is projected onto the links of its `distLimit`-sized grid
+    * cell (offset t along the segment clamped to [0,1], distance to the
+    * projection), and the `n` nearest within `distLimit` are kept, ranked
+    * by (cand_dist, link_id) for a total order. Returns the point's
+    * columns followed by link_id, cand_dist, offset_ratio (= t) and
+    * cand_rank (1-based).
+    *
+    * A per-point map-side kernel, as the reference probes its rtree one
+    * point at a time: one `mapPartitions` over the points against the
+    * grid index of [[cellIndex]], shipped with the task as primitive
+    * arrays. No join, window or exchange, so the candidates stay in the
+    * points' partitions.
+    *
+    * Per-row contract: each input row is ranked on its own, so rows that
+    * share (tripCol, ptCol) each get their own ranks 1..n. (The
+    * relational form this replaced ranked such rows together in one
+    * window, in no deterministic order among them.) tripCol and ptCol
+    * name the point for the decoder; the kernel does not read them.
+    *
+    * Exactness: the index is the relational form's cell-replicated link
+    * table, and each candidate is computed with that plan's expressions'
+    * own arithmetic, so the rows are the same to the bit.
+    *   - Coordinates are cast to double as Spark promotes integer and
+    *     decimal operands; a null coordinate yields no rows.
+    *   - The cell key is `floor(c / distLimit)` as a long: NaN → 0,
+    *     ±Inf → Long.MaxValue/MinValue.
+    *   - t = least(greatest(t0, 0.0), 1.0) with NaN the largest value;
+    *     the distance is `sqrt(pow(dx, 2) + pow(dy, 2))` with
+    *     `StrictMath.pow`; `cand_dist <= distLimit` and the ranking
+    *     order doubles as Spark does.
+    *   - A zero-length link divides by zero: under ANSI that raises
+    *     DIVIDE_BY_ZERO, otherwise t is 0.
+    */
+  def candidateStates(
+      points: DataFrame, links: Seq[Link], tripCol: String, ptCol: String,
+      xCol: String, yCol: String,
+      n: Int = ProjectNumLinks, distLimit: Double = ProjectDistLimit): DataFrame = {
+    val index = cellIndex(links, distLimit)
+    val ansi = points.sparkSession.conf.get(SQLConf.ANSI_ENABLED.key).toBoolean
+    val width = points.schema.length
+    val prepared = points.select(col("*"),
+      col(xCol).cast("double").as("__mm_x"), col(yCol).cast("double").as("__mm_y"))
+    val outSchema = StructType(points.schema.fields ++ Seq(
+      StructField("link_id", LongType, nullable = false),
+      // nullable as Spark types `sqrt`, though never null here
+      StructField("cand_dist", DoubleType),
+      StructField("offset_ratio", DoubleType, nullable = false),
+      StructField("cand_rank", IntegerType, nullable = false)))
+    prepared.mapPartitions { rows =>
+      rows.flatMap { r =>
+        if (r.isNullAt(width) || r.isNullAt(width + 1)) Iterator.empty
+        else index.candidates(r.getDouble(width), r.getDouble(width + 1),
+            n, ansi).iterator.zipWithIndex.map {
+          case ((linkId, t, d), rank) =>
+            Row.fromSeq((0 until width).map(r.get) ++ Seq[Any](linkId, d, t, rank + 1))
+        }
+      }
+    }(Encoders.row(outSchema))
   }
 
   /** Per-trip observation assembly: points in time order with the point
@@ -462,8 +559,8 @@ object MapMatch {
     legs.where(col("moved")).groupByKey(_.trip)(Encoders.STRING)
       .flatMapGroups((trip: String, it: Iterator[Leg]) => allocateTrip(trip, it, ff))(
         Encoders.row(AllocSchema))
-      .withColumn("start_ts", to_timestamp(col("start_s")))
-      .drop("start_s")
+      .select(col("trip"), col("run"), col("link_id"), col("traversal_ratio"),
+        col("travel_time"), to_timestamp(col("start_s")).as("start_ts"))
   }
 
   /** One trip's allocation and merge; sums accumulate from 0.0 in
@@ -514,8 +611,8 @@ object MapMatch {
   def linkStats(traversals: DataFrame): DataFrame =
     traversals
       .where(col("traversal_ratio") > 0.75)
-      .withColumn("full_tt", col("travel_time") / col("traversal_ratio"))
-      .withColumn("hour", hour(col("start_ts")))
+      .select(col("link_id"), hour(col("start_ts")).as("hour"),
+        (col("travel_time") / col("traversal_ratio")).as("full_tt"))
       .groupBy("link_id", "hour")
       .agg(count(lit(1)).as("observations"),
         avg("full_tt").as("tt_mean"),

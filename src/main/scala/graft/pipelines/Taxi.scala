@@ -1,7 +1,10 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, GraftFrames, Row}
+import org.apache.spark.sql.catalyst.analysis.{caseInsensitiveResolution,
+  caseSensitiveResolution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import scala.collection.mutable.ArrayBuffer
 
@@ -187,11 +190,20 @@ object Taxi {
     val scanned = sorted.mapPartitions(rows => segmentSorted(rows, width, nVeh,
       () => new Scan[Row](speedThresholdMph, stationarySeconds,
         maxSecondsBetween, maxFeetBetween)))(Encoders.row(outSchema))
-    // withColumn, as the relational form added them: a caller column of
-    // the same name is replaced in place
-    SegFields.foldLeft(scanned) { (df, f) =>
-      df.withColumn(f.name, col("__seg_" + f.name))
-    }.drop(SegFields.map("__seg_" + _.name): _*)
+    // one projection with withColumn's semantics, as the relational form
+    // added the columns: a caller column of an output's name (under the
+    // session's resolver) is replaced in place, the others are appended
+    val same =
+      if (points.sparkSession.conf.get(SQLConf.CASE_SENSITIVE.key).toBoolean)
+        caseSensitiveResolution
+      else caseInsensitiveResolution
+    val (caller, seg) = scanned.queryExecution.analyzed.output.splitAt(width)
+    def out(k: Int) = GraftFrames.column(seg(k)).as(SegFields(k).name)
+    scanned.select(caller.map { a =>
+      val k = SegFields.indexWhere(f => same(a.name, f.name))
+      if (k < 0) GraftFrames.column(a) else out(k)
+    } ++ SegFields.indices.filterNot(k =>
+      caller.exists(a => same(a.name, SegFields(k).name))).map(out): _*)
   }
 
   /** Segments one partition sorted by (vehicle, ts, tie): rows arrive as

@@ -1,10 +1,12 @@
 package graft.sources
 
 import graft.operators.Fixpoint
+import java.nio.charset.Charset
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{array, coalesce, col, lit, nullif, typedLit}
+import scala.util.control.NonFatal
 
 /** K1 — partitioned parquet sink with idempotent partition rebuild
   * (SURVEY.md §2.2). The reference appends to per-year HDF5 files with
@@ -53,12 +55,46 @@ object Sinks {
     * serves, one file per partition is the right layout. */
   def writePartitioned(
       df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.repartition(partitionCols.map(df.col): _*)
+    try df.repartition(partitionCols.map(df.col): _*)
       .write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(path)
+    catch {
+      case NonFatal(e) => throw unnameable(df, partitionCols, e).getOrElse(e)
+    }
+
+  /** After a failed partitioned write, the partition values no directory
+    * can be named after, as an IllegalArgumentException that names each
+    * column, its offending values as code points, and why, with the
+    * write's failure as its cause; None when every value can be named.
+    * Spark's path escaping leaves NUL in a directory name, which the file
+    * system refuses (`Mkdirs failed`), and a value the JVM's file-name
+    * encoding (`sun.jnu.encoding`, from the locale) cannot encode fails
+    * as an `InvalidPathException`. Runs one job, on the failure path
+    * only. */
+  private def unnameable(df: DataFrame, partitionCols: Seq[String],
+      cause: Throwable): Option[IllegalArgumentException] = {
+    val names = Charset.forName(System.getProperty("sun.jnu.encoding"))
+    val values = df.select(partitionCols.map(c => col(c).cast("string")): _*)
+      .distinct().collect()
+    def points(v: String) =
+      v.codePoints().toArray.map(c => f"U+$c%04X").mkString("[", " ", "]")
+    val bad = partitionCols.indices.flatMap { i =>
+      val vs = values.iterator.map(_.getString(i)).filter(_ != null).toSeq.distinct.sorted
+      val (nul, rest) = vs.partition(_.contains('\u0000'))
+      Seq(nul -> "NUL (U+0000) cannot appear in a directory name",
+        rest.filterNot(names.newEncoder().canEncode(_)) ->
+          s"the file-name encoding ${names.name} (sun.jnu.encoding) cannot encode them")
+        .collect { case (offending, why) if offending.nonEmpty =>
+          s"partition column ${partitionCols(i)}: ${offending.map(points).mkString(", ")}: $why"
+        }
+    }
+    if (bad.isEmpty) None
+    else Some(new IllegalArgumentException(
+      s"cannot name a directory after these partition values: ${bad.mkString("; ")}", cause))
+  }
 
   /** K1+ — bucketed table sink: pre-shuffle a fact table by its join key
     * at WRITE time (hash buckets + per-bucket sort), so every subsequent

@@ -4,6 +4,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.errors.QueryExecutionErrors
 import org.apache.spark.sql.types.StructType
 
 /** Spark internals graft reaches from inside Spark's package. */
@@ -26,4 +27,8 @@ object GraftFrames {
   /** Drop RDD `id`'s blocks and its persistence entry without
     * `RDD.unpersist`'s warning for locally checkpointed RDDs. */
   def unpersist(sc: SparkContext, id: Int): Unit = sc.unpersistRDD(id, blocking = false)
+
+  /** The error ANSI division by zero raises (DIVIDE_BY_ZERO), for a
+    * kernel that evaluates a `/` of a plan it replaced. */
+  def divideByZero(): ArithmeticException = QueryExecutionErrors.divideByZeroError(null)
 }

@@ -12,10 +12,11 @@ import org.scalacheck.rng.Seed
   * points, and write, merge (with the emptied-partition cleanup) and
   * compaction against a driver-side model over the same values less
   * `\u0000`, which Spark's partitioned writer cannot put in a directory
-  * name (the last case pins that it fails loudly), and less any value
-  * the JVM's file-name encoding (`sun.jnu.encoding`, from the locale)
-  * cannot encode: under a POSIX locale that is every non-ASCII value,
-  * and the write fails the same way. Generators run with
+  * name, and less any value the JVM's file-name encoding
+  * (`sun.jnu.encoding`, from the locale) cannot encode: under a POSIX
+  * locale that is every non-ASCII value. The last two cases pin that
+  * such a write fails with an IllegalArgumentException naming the
+  * column, the values' code points and the reason. Generators run with
   * fixed seeds (the PropertySpec convention); the hand-written tuples
   * are the ones a string key joined with `\u0000`, null as `\u0001`,
   * confuses.
@@ -154,9 +155,37 @@ class SinkKeyPropertySpec extends SparkSpec {
     }
   }
 
+  /** The write's failure names the column, the values as code points
+    * and the reason, and keeps the writer's own failure as its cause. */
+  private def unnameable(column: String, points: String, reason: String)(f: => Unit): Unit = {
+    val e = intercept[IllegalArgumentException](f)
+    Seq(s"partition column $column: $points", reason).foreach(part =>
+      assert(e.getMessage.contains(part), s"'$part' not in: ${e.getMessage}"))
+    assert(e.getCause != null)
+  }
+
   test("a NUL in a partition value fails the write loudly") {
-    intercept[org.apache.spark.SparkException] {
-      write(Scratch.dir("sinkkey_nul"), Seq((1L, "x", "a\u0000b", "c")))
+    unnameable("p1", "[U+0061 U+0000 U+0062]", "NUL (U+0000) cannot appear") {
+      write(Scratch.dir("sinkkey_nul"), Seq((1L, "x", "a\u0000b", "c"), (2L, "y", "a", "c")))
+    }
+    val path = Scratch.dir("sinkkey_nul_merge")
+    write(path, Seq((1L, "x", "a", "c")))
+    unnameable("p2", "[U+0000]", "NUL (U+0000) cannot appear") {
+      Sinks.mergeIntoPartitioned(path,
+        Seq((1L, "y", "a", "\u0000")).toDF("k", "v", "p1", "p2"), Seq("k"), Seq("p1", "p2"))
+    }
+  }
+
+  test("a value the file-name encoding cannot encode fails the write by name, or writes") {
+    val names = java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+    val path = Scratch.dir("sinkkey_encoding")
+    val rows = Seq((1L, "x", "a", "x\ud83d\ude8c y"))
+    if (names.newEncoder().canEncode("\ud83d\ude8c")) {
+      write(path, rows)
+      assert(state(path) == rows.toSet)
+    } else unnameable("p2", "[U+0078 U+1F68C U+0020 U+0079]",
+        s"the file-name encoding ${names.name} (sun.jnu.encoding) cannot encode them") {
+      write(path, rows)
     }
   }
 }

@@ -107,6 +107,151 @@ class TaxiKernelParitySpec extends SparkSpec {
     bothSeg(df, Seq("cab_id"), Seq("cab_id", "pt"))
   }
 
+  test("segmentation: caller columns named like outputs are replaced in place") {
+    // `speed`, `trip_id` and (under the default case-insensitive
+    // resolver) `Feet` are replaced where they stand; the other outputs
+    // are appended in order, as the withColumn fold placed them
+    val df = walk(51, cabs = 6, points = 30, nulls = true)
+      .withColumn("speed", lit("caller"))
+      .withColumn("trip_id", col("pt").cast("int"))
+      .withColumn("Feet", lit(1.5))
+    val got = Taxi.segmentPoints(df, Seq("cab_id"), "ts", "pt", "x", "y", "status")
+    assert(got.columns.toSeq == Seq("cab_id", "fleet", "pt", "t", "x", "y",
+      "status", "ts", "speed", "trip_id", "feet", "seconds", "status_chg",
+      "fwd_stationary", "bwd_stationary", "is_break"))
+    assert(got.schema("speed").dataType == org.apache.spark.sql.types.DoubleType)
+    assert(got.schema("trip_id").dataType == org.apache.spark.sql.types.LongType)
+    bothSeg(df, Seq("cab_id"), Seq("cab_id", "pt"))
+  }
+
+  // ------------------------------------------------------------ candidates
+
+  private val grid = TaxiKernelParitySpec.gridLinks
+
+  private def bothCand(pts: DataFrame, ls: Seq[Link], n: Int = MapMatch.ProjectNumLinks,
+      distLimit: Double = MapMatch.ProjectDistLimit): Unit =
+    sameRows(
+      MapMatch.candidateStates(pts, ls, "trip", "pt", "x", "y", n, distLimit),
+      TaxiReference.candidateStates(pts, ls, "trip", "pt", "x", "y", n, distLimit),
+      Seq("trip", "pt", "cand_rank"))
+
+  /** Seeded points over the bench grid's 11,200 ft square and its
+    * margin: a third within a few feet of a link, the rest anywhere. */
+  private def gridPoints(seed: Int, count: Int): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    (0 until count).map { i =>
+      val (x, y) =
+        if (i % 3 == 0) {
+          val l = grid(rnd.nextInt(grid.length)); val f = rnd.nextDouble()
+          (l.ax + f * (l.bx - l.ax) + rnd.nextGaussian() * 5,
+            l.ay + f * (l.by - l.ay) + rnd.nextGaussian() * 5)
+        } else (rnd.nextDouble() * 11800 - 300, rnd.nextDouble() * 11800 - 300)
+      (s"t${i % 17}", i.toLong, i * 10.0, x, y)
+    }.toDF("trip", "pt", "ts", "x", "y")
+  }
+
+  test("candidates: seeded points on the 8x8 bench grid") {
+    Seq(61, 62, 63).foreach(seed => bothCand(gridPoints(seed, 1500), grid))
+  }
+
+  test("candidates: seeded points on a network of diagonal links") {
+    // links of any heading and length, a few shorter than a cell, whose
+    // lengths are not exact as the grid's are
+    val rnd = new scala.util.Random(64)
+    val net = (1 to 120).map { i =>
+      val ax = rnd.nextDouble() * 11000; val ay = rnd.nextDouble() * 11000
+      val len = if (i % 10 == 0) rnd.nextDouble() * 100 else rnd.nextDouble() * 3000
+      val a = rnd.nextDouble() * 2 * math.Pi
+      Link(i.toLong, ax, ay, ax + len * math.cos(a), ay + len * math.sin(a), len / 36.7)
+    }
+    Seq(65, 66).foreach(seed => bothCand(gridPoints(seed, 1500), net))
+  }
+
+  test("candidates: cell edges, link endpoints and points exactly distLimit away") {
+    val b = 1600.0
+    val xy = Seq(
+      // cell edges: multiples of the 150 ft cell, on and off the links
+      (150.0, 0.0), (300.0, 150.0), (1650.0, 1500.0), (-150.0, -150.0),
+      (4800.0, 4650.0), (149.99999999999997, 150.0),
+      // link endpoints: grid nodes, the corner and the far edge
+      (0.0, 0.0), (b, b), (7 * b, 7 * b), (3 * b, 0.0), (0.0, 7 * b),
+      // exactly 150 ft from a link: perpendicular, and off an endpoint
+      (800.0, 150.0), (800.0, -150.0), (b + 90.0, 120.0), (-90.0, -120.0),
+      (7 * b + 150.0, 2400.0), (800.0, 150.00000000000003),
+      // between two parallel links, 150 ft from neither
+      (800.0, 800.0))
+    bothCand(xy.zipWithIndex.map { case ((x, y), i) => ("e", i.toLong, x, y) }
+      .toDF("trip", "pt", "x", "y"), grid)
+  }
+
+  test("candidates: null, NaN and infinite coordinates") {
+    val inf = Double.PositiveInfinity
+    val xy: Seq[(Option[Double], Option[Double])] = Seq(
+      (None, Some(10.0)), (Some(10.0), None), (None, None),
+      (Some(Double.NaN), Some(10.0)), (Some(10.0), Some(Double.NaN)),
+      (Some(Double.NaN), Some(Double.NaN)), (Some(inf), Some(0.0)),
+      (Some(-inf), Some(0.0)), (Some(0.0), Some(inf)), (Some(0.0), Some(-inf)),
+      (Some(inf), Some(-inf)), (Some(10.0), Some(10.0)))
+    bothCand(xy.zipWithIndex.map { case ((x, y), i) => ("n", i.toLong, x, y) }
+      .toDF("trip", "pt", "x", "y"), grid)
+  }
+
+  test("candidates: integer and decimal coordinate columns") {
+    val pts = gridPoints(71, 600)
+    bothCand(pts.withColumn("x", col("x").cast("int")).withColumn("y", col("y").cast("int")),
+      grid)
+    bothCand(pts.withColumn("x", col("x").cast("decimal(12,3)"))
+      .withColumn("y", col("y").cast("decimal(12,3)")), grid)
+    bothCand(pts.withColumn("x", col("x").cast("long")), grid)
+  }
+
+  test("candidates: non-default n and distLimit") {
+    val pts = gridPoints(81, 800)
+    Seq((1, 150.0), (2, 400.0), (8, 900.0), (3, 75.5), (0, 150.0))
+      .foreach { case (n, d) => bothCand(pts, grid, n, d) }
+  }
+
+  test("candidates: a zero-length link fails or projects as the relational form does") {
+    val withDot = grid :+ Link(999L, 800.0, 40.0, 800.0, 40.0, 0.0)
+    val far = Seq(("z", 0L, 5000.0, 3200.0), ("z", 1L, 3210.0, 80.0)).toDF("trip", "pt", "x", "y")
+    val near = Seq(("z", 2L, 790.0, 30.0), ("z", 3L, 800.0, 40.0)).toDF("trip", "pt", "x", "y")
+    // points whose cells do not hold the link never divide by its length
+    bothCand(far, withDot)
+    def divideByZero(f: => Any): Boolean = {
+      val e = intercept[Exception](f)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("DIVIDE_BY_ZERO")))
+    }
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      spark.conf.set("spark.sql.ansi.enabled", "true")
+      assert(divideByZero(TaxiReference.candidateStates(near, withDot, "trip", "pt", "x", "y")
+        .collect()))
+      assert(divideByZero(MapMatch.candidateStates(near, withDot, "trip", "pt", "x", "y")
+        .collect()))
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      bothCand(near.union(far), withDot)
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
+  test("candidates: rows that share (trip, pt) are ranked each on its own") {
+    // two readings of one point id, 20 ft apart: the kernel ranks each
+    // as the reference projects each GPS point; the relational window
+    // ranked the pair together
+    val dup = Seq(("d", 7L, 0.0, 800.0, 30.0), ("d", 7L, 1.0, 800.0, 50.0),
+      ("d", 8L, 2.0, 1610.0, 20.0)).toDF("trip", "pt", "ts", "x", "y")
+    val got = MapMatch.candidateStates(dup, grid, "trip", "pt", "x", "y")
+    val ranks = got.groupBy("ts").agg(collect_list("cand_rank").as("r"))
+      .as[(Double, Seq[Int])].collect().toMap.view.mapValues(_.sorted).toMap
+    assert(ranks.keySet == Set(0.0, 1.0, 2.0))
+    assert(ranks.values.forall(r => r == (1 to r.length)), ranks)
+    // each row's candidates are the reference's for that row alone
+    sameRows(got.withColumn("tag", col("ts")),
+      TaxiReference.candidateStates(dup, grid, "ts", "pt", "x", "y")
+        .withColumn("tag", col("ts")),
+      Seq("tag", "cand_rank"))
+  }
+
   // ------------------------------------------------------------ allocation
 
   private val links = Seq(

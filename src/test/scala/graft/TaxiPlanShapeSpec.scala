@@ -6,13 +6,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 /** Locks the shape of the taxi kernels: segmentation and allocation each
-  * run as one shuffle into a per-group scan, with no window operator, and
-  * the skim of the benchmark's 224-link grid ships as primitive arrays,
-  * not as a serialized map of every pair's path. */
+  * run as one shuffle into a per-group scan, with no window operator,
+  * candidate projection runs map-side with no exchange, window or join,
+  * and the skim of the benchmark's 224-link grid ships as primitive
+  * arrays, not as a serialized map of every pair's path. */
 class TaxiPlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -46,6 +48,20 @@ class TaxiPlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Leg("b", 1, 10.0, 20.0, Seq(3L), 0.1, 0.9, moved = true)).toDS()
     assertOneShuffleNoWindow(MapMatch.allocateTravelTimes(legs,
       TaxiKernelParitySpec.gridLinks))
+  }
+
+  test("candidateStates: no exchange, no window, no join") {
+    val pts = (0 until 60).map(i => (s"t${i % 4}", i.toLong, i * 173.0 % 11200, i * 311.0 % 11200))
+      .toDF("trip", "pt", "x", "y")
+    val cands = MapMatch.candidateStates(pts, TaxiKernelParitySpec.gridLinks,
+      "trip", "pt", "x", "y")
+    val plan = executed(cands)
+    assert(cands.count() > 0)
+    val shuffles = collect(plan) { case s: ShuffleExchangeExec => s }
+    val windows = collect(plan) { case w: WindowExec => w }
+    val joins = collect(plan) { case j: BaseJoinExec => j }
+    assert(shuffles.isEmpty && windows.isEmpty && joins.isEmpty,
+      s"${shuffles.length} shuffles, ${windows.length} windows, ${joins.length} joins in\n$plan")
   }
 
   test("the 224-link grid's skim Java-serializes to under 1 MB") {

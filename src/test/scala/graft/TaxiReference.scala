@@ -8,9 +8,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The relational forms the taxi kernels replaced, kept verbatim as test
-  * references: the six-window-spec segmentation, the window/groupBy
-  * allocation and merge, and the skim as a materialized `Map` of every
-  * reachable pair. TaxiKernelParitySpec holds the kernels to them. */
+  * references: the six-window-spec segmentation, the broadcast-join and
+  * window candidate projection, the window/groupBy allocation and merge,
+  * and the skim as a materialized `Map` of every reachable pair.
+  * TaxiKernelParitySpec holds the kernels to them. */
 object TaxiReference {
   import graft.pipelines.Taxi.{SpeedThresholdMph, StationarySeconds,
     MaxSecondsBetween, MaxFeetBetween}
@@ -94,6 +95,62 @@ object TaxiReference {
     bst.withColumn("is_break", isBreak)
       .withColumn("trip_id", run(sum(col("is_break"))))
       .drop("__fr", "__fg", "__s2", "__sp2", "__br", "__bg")
+  }
+
+  def candidateStates(
+      points: DataFrame, links: Seq[Link], tripCol: String, ptCol: String,
+      xCol: String, yCol: String,
+      n: Int = MapMatch.ProjectNumLinks,
+      distLimit: Double = MapMatch.ProjectDistLimit): DataFrame = {
+    val spark = points.sparkSession
+    import spark.implicits._
+    val cell = distLimit
+    // replicate each link to the cells of its expanded bbox, PRUNED to
+    // the segment's corridor: a long diagonal link's bbox is quadratic
+    // in cells while the link passes near only a linear band of them.
+    // Keep a cell iff its center is within distLimit + half-diagonal of
+    // the segment — any point of the cell within distLimit of the link
+    // puts the center inside that radius, so the kept set is a strict
+    // superset of the cells that can ever satisfy the distance refine
+    // (exactness unchanged, replication linear in link length).
+    def segDist(px: Double, py: Double, l: Link): Double = {
+      val dx = l.bx - l.ax; val dy = l.by - l.ay
+      val len2 = dx * dx + dy * dy
+      val t = if (len2 == 0) 0.0
+        else math.max(0.0, math.min(1.0,
+          ((px - l.ax) * dx + (py - l.ay) * dy) / len2))
+      math.hypot(px - (l.ax + t * dx), py - (l.ay + t * dy))
+    }
+    val corridor = distLimit + cell * math.sqrt(2) / 2
+    val linkDf = links.flatMap { l =>
+      val x0 = math.floor((math.min(l.ax, l.bx) - distLimit) / cell).toLong
+      val x1 = math.floor((math.max(l.ax, l.bx) + distLimit) / cell).toLong
+      val y0 = math.floor((math.min(l.ay, l.by) - distLimit) / cell).toLong
+      val y1 = math.floor((math.max(l.ay, l.by) + distLimit) / cell).toLong
+      for {
+        cx <- x0 to x1; cy <- y0 to y1
+        if segDist((cx + 0.5) * cell, (cy + 0.5) * cell, l) <= corridor
+      } yield (l.linkId, l.ax, l.ay, l.bx, l.by, l.len, cx, cy)
+    }.toDF("link_id", "ax", "ay", "bx", "by", "len", "__gcx", "__gcy")
+    val t0 = (((col(xCol) - col("ax")) * (col("bx") - col("ax")) +
+               (col(yCol) - col("ay")) * (col("by") - col("ay"))) /
+              (col("len") * col("len")))
+    val t = least(greatest(t0, lit(0.0)), lit(1.0))
+    val px = col("ax") + t * (col("bx") - col("ax"))
+    val py = col("ay") + t * (col("by") - col("ay"))
+    val dist = sqrt(pow(col(xCol) - px, 2) + pow(col(yCol) - py, 2))
+    val w = Window.partitionBy(col(tripCol), col(ptCol))
+      .orderBy(col("cand_dist"), col("link_id"))
+    points
+      .withColumn("__gcx", floor(col(xCol) / cell).cast("long"))
+      .withColumn("__gcy", floor(col(yCol) / cell).cast("long"))
+      .join(broadcast(linkDf), Seq("__gcx", "__gcy"))
+      .withColumn("cand_dist", dist)
+      .where(col("cand_dist") <= distLimit)
+      .withColumn("offset_ratio", t)
+      .withColumn("cand_rank", row_number().over(w))
+      .where(col("cand_rank") <= n)
+      .drop("ax", "ay", "bx", "by", "len", "__gcx", "__gcy")
   }
 
   def allocateTravelTimes(legs: Dataset[Leg], links: Seq[Link]): DataFrame = {
