@@ -7696,10 +7696,7 @@ object Queries {
       // summed task time (10.2 s steady, ~0.9 busy cores). Construct them
       // on a small thread pool so those driver actions overlap (opt guide
       // §2.6 — concurrent jobs back-fill each other's stragglers); the
-      // union itself is unchanged, so the result is bit-identical. The
-      // pool forks here, outside any IterPlan.withLoopPlanning region:
-      // forking inside one and waiting on the pool would deadlock the
-      // branches on the session's loop-planning lock.
+      // union itself is unchanged, so the result is bit-identical.
       val branches = Seq(
         () => recall("q29_ann_lsh", q29AnnLsh.run(s, d)),
         () => recall("q109_ann_multiprobe", q109AnnMultiprobe.run(s, d)),

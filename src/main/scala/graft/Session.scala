@@ -16,6 +16,9 @@ object Session {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    // events.ts may be parquet TIMESTAMP(NANOS), which Spark has no type
+    // for: read it as raw long nanos (Tables.events truncates to µs)
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // object-typed aggregates (graft_bottomk, graft_simhash) keep tiny
     // ≤8k-byte buffers per group; the default 128-key fallback turns
     // every such aggregation sort-based and spills the exploded input

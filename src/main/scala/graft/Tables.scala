@@ -23,7 +23,8 @@ object Tables {
     * generations; normalize all of them to session-zone TIMESTAMP so every
     * downstream operator sees one type:
     *  - TIMESTAMP(NANOS), which Spark has no type for: read as raw long
-    *    nanos (legacy conf) and truncate to microseconds — exactly what
+    *    nanos (`spark.sql.legacy.parquet.nanosAsLong`, set by
+    *    [[graft.Session.local]]) and truncate to microseconds — exactly what
     *    DuckDB's µs-native TIMESTAMP does, so oracle comparisons agree.
     *    Integer `div` keeps full precision (a double roundtrip would
     *    corrupt epoch-nanos magnitudes).
@@ -33,7 +34,6 @@ object Tables {
     *  - TIMESTAMP (µs, UTC-adjusted): pass through.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -19,6 +19,8 @@ import org.apache.spark.sql.functions._
   *    recurrence stay bit-identical;
   *  - centroids live on the driver between rounds (k x dims doubles,
   *    config-scale) and ship back as literals.
+  * This is product-quantizer training with one subspace: the rounds run
+  * through [[Quantization.lloyd]] with m = 1.
   *
   * Scale shape per round: one full pass over the points (k x dims fused
   * multiply-adds per row, whole-stage codegen) and one shuffle of
@@ -49,51 +51,33 @@ object Clustering {
     Native.dist2(vec, typedLit(cv))
 
   /** Runs `iters` Lloyd rounds and returns the final (id, cluster)
-    * assignment. `dims` must match the vector length (mismatches
-    * null-pad the zip_with and would mis-assign silently — the caller's
-    * schema is the contract, as with hyperplaneSketch). An empty cluster
-    * keeps its previous centroid.
+    * assignment. Every vector must have the init centroids' length (a
+    * mismatched one is mis-assigned silently — the caller's schema is the
+    * contract, as with hyperplaneSketch). An empty cluster keeps its
+    * previous centroid.
     */
   def kmeansAssign(points: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): DataFrame =
-    IterPlan.withLoopPlanning(points.sparkSession) {
-    require(k >= 2, "k-means needs k >= 2")
-    val pts = prep(points, idCol, vecCol)
-    var cents = initCentroids(pts, k)
-    for (_ <- 1 to iters) cents = lloydRound(pts, cents, k)
-    pts.withColumn("cluster", assignColumn(col("__v"), cents))
+    withCluster(points, idCol, vecCol, rounds(points, idCol, vecCol, k)
+      .drop(iters).next()._1)
       .select(col("__id").as(idCol), col("cluster").cast("long").as("cluster"))
-  }
 
   private def prep(points: DataFrame, idCol: String, vecCol: String) =
     points.select(col(idCol).as("__id"),
       transform(col(vecCol), x => x.cast("double")).as("__v"))
 
-  /** Deterministic init: the embeddings of the k smallest ids — a
-    * bounded k-row collect. */
-  private def initCentroids(pts: DataFrame, k: Int): IndexedSeq[Seq[Double]] =
-    pts.orderBy(col("__id")).limit(k)
-      .select(col("__v")).collect()
-      .map(_.getSeq[Double](0).toIndexedSeq).toIndexedSeq
-
-  /** One Lloyd round: assignment under the literal previous centroids,
-    * then exact-decimal means (partition-order-independent) rounded to
-    * 6 dp; an empty cluster keeps its previous centroid. */
-  private def lloydRound(pts: DataFrame, cents: IndexedSeq[Seq[Double]],
-      k: Int): IndexedSeq[Seq[Double]] = {
-    val rows = pts.withColumn("cluster", assignColumn(col("__v"), cents))
-      .select(col("cluster"), posexplode(col("__v")).as(Seq("pos", "x")))
-      .groupBy("cluster", "pos")
-      .agg(round(sum(col("x").cast("decimal(28,12)")).cast("double")
-        / count(lit(1)), 6).as("m"))
-      .collect()
-    val byCluster = rows.groupBy(_.getInt(0))
-    (0 until k).map { cid =>
-      byCluster.get(cid)
-        .map(_.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq)
-        .getOrElse(cents(cid))
-    }
+  /** The Lloyd rounds from the embeddings of the k smallest ids, each
+    * with its centroid shift ([[Quantization.lloyd]] with m = 1). */
+  private def rounds(points: DataFrame, idCol: String, vecCol: String, k: Int) = {
+    require(k >= 2, "k-means needs k >= 2")
+    Quantization.lloyd(points, idCol, vecCol, k, m = 1, dims = None)
   }
+
+  /** The caller's points with their cluster under the final centroids. */
+  private def withCluster(points: DataFrame, idCol: String, vecCol: String,
+      cents: IndexedSeq[Seq[Double]]): DataFrame =
+    prep(points, idCol, vecCol)
+      .withColumn("cluster", assignColumn(col("__v"), cents))
 
   /** [[kmeansAssign]] with a convergence stop — the production Lloyd
     * contract (the round count a corpus needs depends on its geometry,
@@ -112,27 +96,11 @@ object Clustering {
     * arithmetic a SQL oracle replays with DECIMAL sums, so the stop
     * decision is engine-portable (q185's gated unroll). */
   def kmeansAssignConverged(points: DataFrame, idCol: String, vecCol: String,
-      k: Int, tol: Double, maxIter: Int): DataFrame =
-    IterPlan.withLoopPlanning(points.sparkSession) {
-    require(k >= 2, "k-means needs k >= 2")
+      k: Int, tol: Double, maxIter: Int): DataFrame = {
     require(tol > 0 && maxIter >= 1, "need tol > 0 and maxIter >= 1")
-    val pts = prep(points, idCol, vecCol)
-    var cents = initCentroids(pts, k)
-    var it = 0
-    var shift = Double.NaN
-    var done = false
-    while (!done && it < maxIter) {
-      val next = lloydRound(pts, cents, k)
-      val exact = cents.flatten.zip(next.flatten).map { case (a, b) =>
-        java.math.BigDecimal.valueOf(math.abs(a - b))
-          .setScale(6, java.math.RoundingMode.HALF_UP)
-      }.foldLeft(java.math.BigDecimal.ZERO)(_ add _)
-      shift = exact.doubleValue()
-      cents = next
-      it += 1
-      done = shift < tol
-    }
-    pts.withColumn("cluster", assignColumn(col("__v"), cents))
+    val ((cents, shift), it) = rounds(points, idCol, vecCol, k).zipWithIndex
+      .find { case ((_, s), i) => s < tol || i == maxIter }.get
+    withCluster(points, idCol, vecCol, cents)
       .select(col("__id").as(idCol), col("cluster").cast("long").as("cluster"),
         lit(it).as("iters"), round(lit(shift), 6).as("shift"))
   }
@@ -223,19 +191,7 @@ object Clustering {
     * shifts for `maxIter` Lloyd rounds — how q185's tolerance was sized. */
   private[graft] def kmeansShiftTrace(points: DataFrame, idCol: String,
       vecCol: String, k: Int, maxIter: Int): Seq[Double] =
-    IterPlan.withLoopPlanning(points.sparkSession) {
-    val pts = prep(points, idCol, vecCol)
-    var cents = initCentroids(pts, k)
-    (1 to maxIter).map { _ =>
-      val next = lloydRound(pts, cents, k)
-      val exact = cents.flatten.zip(next.flatten).map { case (a, b) =>
-        java.math.BigDecimal.valueOf(math.abs(a - b))
-          .setScale(6, java.math.RoundingMode.HALF_UP)
-      }.foldLeft(java.math.BigDecimal.ZERO)(_ add _)
-      cents = next
-      exact.doubleValue()
-    }
-  }
+    rounds(points, idCol, vecCol, k).slice(1, maxIter + 1).map(_._2).toIndexedSeq
 
   /** Per-cell mean vectors from an existing label/cluster column — the
     * coarse-quantizer build for IVF-family indexes. Means use exact
@@ -272,9 +228,7 @@ object Clustering {
   def semDeDup(points: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, threshold: Double): DataFrame = {
     val assigned = kmeansAssign(points, idCol, vecCol, k, iters)
-    val withVec = points
-      .select(col(idCol).as("__id"),
-        transform(col(vecCol), x => x.cast("double")).as("__v"))
+    val withVec = prep(points, idCol, vecCol)
       .join(assigned.withColumnRenamed(idCol, "__id"), "__id")
     // norms once per vector BELOW the join, not per pair (q44 pattern)
     val side = withVec.withColumn("__n",
@@ -318,9 +272,7 @@ object Clustering {
       codebook: IndexedSeq[IndexedSeq[Double]], m: Int, dims: Int,
       threshold: Double): DataFrame = {
     val assigned = kmeansAssign(points, idCol, vecCol, k, iters)
-    val pts = points
-      .select(col(idCol).as("__id"),
-        transform(col(vecCol), x => x.cast("double")).as("__v"))
+    val pts = prep(points, idCol, vecCol)
       .join(assigned.withColumnRenamed(idCol, "__id"), "__id")
     val a = pts
       .withColumn("__n", Similarity.norm(col("__v")))

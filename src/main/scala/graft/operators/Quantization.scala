@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.native.Native
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftFrames}
 import org.apache.spark.sql.functions._
 
 /** Product quantization for embedding columns (Jégou/Douze/Schmid,
@@ -15,13 +15,12 @@ import org.apache.spark.sql.functions._
   * math per candidate at query time.
   *
   * Everything here is deterministic and engine-portable (the
-  * [[Clustering]] discipline): codebooks are the subvectors of the K
-  * smallest ids (a bounded K-row collect — the init stage of per-subspace
-  * Lloyd; production training would run [[Clustering.kmeansAssign]]
-  * rounds per subspace and ship the same literal shape), distances are
-  * rounded to 6 dp with ties broken by code id, and the ADC table is
-  * driver-computed in the same ascending-dimension order the SQL oracle
-  * replays.
+  * [[Clustering]] discipline): codebooks start from the vectors of the
+  * K smallest ids (a bounded K-row collect) and train by per-subspace
+  * Lloyd rounds ([[trainCodebook]]; Clustering's k-means is the same
+  * recurrence with one subspace, m = 1), distances are rounded to 6 dp
+  * with ties broken by code id, and the ADC table is driver-computed in
+  * the same ascending-dimension order the SQL oracle replays.
   *
   * Scale shape: encode and ADC scoring are PURE map-side projections over
   * literal codebook/table matrices (no join, no shuffle — the vectors
@@ -49,11 +48,12 @@ object Quantization {
     * projection, [[pqCodes]]), explode to (dim, value) pairs, key each by
     * (dim, code-of-its-subspace), and take decimal-exact means — so a
     * round costs one corpus scan plus one bounded shuffle of
-    * (partitions x dims x k) partial sums, the [[Clustering.kmeansAssign]]
-    * shape, NOT m separate per-subspace jobs. A (dim, code) cell with no
-    * assigned rows keeps its previous value (empty-cluster rule, same as
-    * kmeansAssign). Means round to 6 dp each round boundary, so two
-    * engines replaying the recurrence stay bit-identical.
+    * (partitions x dims x k) partial sums, NOT m separate per-subspace
+    * jobs. A (dim, code) cell with no assigned rows keeps its previous
+    * value (the empty-cluster rule). Means round to 6 dp each round
+    * boundary, so two engines replaying the recurrence stay
+    * bit-identical. With m = 1 this is Lloyd k-means, and
+    * [[Clustering.kmeansAssign]] runs it ([[lloyd]]).
     *
     * Scale shape: centroid state is k x dims doubles on the driver
     * (config-scale); the corpus-side work per round is a whole-stage-
@@ -62,28 +62,55 @@ object Quantization {
     */
   def trainCodebook(df: DataFrame, idCol: String, vecCol: String,
                     k: Int, m: Int, dims: Int,
-                    iters: Int): IndexedSeq[IndexedSeq[Double]] =
-    IterPlan.withLoopPlanning(df.sparkSession) {
+                    iters: Int): IndexedSeq[IndexedSeq[Double]] = {
     require(m > 0 && dims % m == 0, s"dims $dims must split into $m subspaces")
-    val len = dims / m
-    var cb = initCodebook(df, idCol, vecCol, k)
-    val pts = df.select(transform(col(vecCol), x => x.cast("double")).as("__v"))
-    for (_ <- 1 to iters) {
-      val rows = pts.withColumn("__c", pqCodes(col("__v"), cb, m, dims))
-        .select(col("__c"), posexplode(col("__v")).as(Seq("pos", "x")))
-        // pos is 0-based; its subspace owns the code that updates it
-        .withColumn("code",
-          element_at(col("__c"), (col("pos") / len).cast("int") + 1))
-        .groupBy(col("pos"), col("code"))
-        .agg(round(sum(col("x").cast("decimal(28,12)")).cast("double")
-          / count(lit(1)), 6).as("mean"))
-        .collect()
-      val byKey = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-      cb = (0 until k).map { c =>
-        (0 until dims).map(i => byKey.getOrElse((i, c), cb(c)(i)))
-      }
+    lloyd(df, idCol, vecCol, k, m, Some(dims)).drop(iters).next()._1
+  }
+
+  /** The Lloyd recurrence behind [[trainCodebook]] and Clustering's
+    * k-means (m = 1, `dims` the seed's width): element r is the codebook
+    * after r rounds and that round's shift, Σ round(|c − c′|, 6) over
+    * every (code, dim) summed as exact decimals (element 0 is the
+    * [[initCodebook]] seed, shift NaN). Each element past the seed runs
+    * one round when it is taken. */
+  private[operators] def lloyd(df: DataFrame, idCol: String, vecCol: String,
+      k: Int, m: Int, dims: Option[Int])
+      : Iterator[(IndexedSeq[IndexedSeq[Double]], Double)] = {
+    val init = initCodebook(df, idCol, vecCol, k)
+    val d = dims.getOrElse(init.head.length)
+    val vecs = df.select(transform(col(vecCol), x => x.cast("double")).as("__v"))
+    Iterator.iterate((init, Double.NaN)) { case (cb, _) =>
+      val next = lloydRound(vecs, cb, m, d)
+      val shift = cb.flatten.zip(next.flatten).map { case (a, b) =>
+        java.math.BigDecimal.valueOf(math.abs(a - b))
+          .setScale(6, java.math.RoundingMode.HALF_UP)
+      }.foldLeft(java.math.BigDecimal.ZERO)(_ add _)
+      (next, shift.doubleValue())
     }
-    cb
+  }
+
+  /** One round: code every row under `cb`, then the exact-decimal mean of
+    * each (dim, code) cell, rounded to 6 dp; an empty cell keeps its
+    * previous value. The round is one partial-aggregated scan with
+    * nothing for adaptive execution to re-decide, so it runs under a
+    * static plan: AQE's re-planning after the exchange would be pure
+    * latency (q93 1.28 → 1.47 s at sf0.1 on 4 cores with it). */
+  private def lloydRound(vecs: DataFrame, cb: IndexedSeq[IndexedSeq[Double]],
+      m: Int, dims: Int): IndexedSeq[IndexedSeq[Double]] = {
+    val len = dims / m
+    val rows = GraftFrames.collectStatic(vecs
+      .withColumn("__c", pqCodes(col("__v"), cb, m, dims))
+      .select(col("__c"), posexplode(col("__v")).as(Seq("pos", "x")))
+      // pos is 0-based; its subspace owns the code that updates it
+      .withColumn("code",
+        element_at(col("__c"), (col("pos") / len).cast("int") + 1))
+      .groupBy(col("pos"), col("code"))
+      .agg(round(sum(col("x").cast("decimal(28,12)")).cast("double")
+        / count(lit(1)), 6).as("mean")))
+    val byKey = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+    cb.indices.map { c =>
+      (0 until dims).map(i => byKey.getOrElse((i, c), cb(c)(i)))
+    }
   }
 
   /** Deterministic content-addressed sample: keep rows whose md5-derived

@@ -3,8 +3,10 @@ package org.apache.spark.sql
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.errors.QueryExecutionErrors
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.types.StructType
 
 /** Spark internals graft reaches from inside Spark's package. */
@@ -18,6 +20,24 @@ object GraftFrames {
   def fromInternal(spark: SparkSession, rows: RDD[InternalRow],
                    schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** `df`'s rows, computed by a static plan: the physical plan its own
+    * session prepares without adaptive execution, the way Spark prepares
+    * a subquery's. No conf is written, so every other query on the
+    * session, on this thread or another, plans as it would have. (A
+    * clone of the session with AQE off plans the same, but each clone's
+    * tasks compile the query's generated classes again.) */
+  def collectStatic(df: DataFrame): Array[Row] = {
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+    // with the session's conf and class loader, as its own queries run:
+    // Spark caches generated classes per class loader
+    session.withActive(session.artifactManager.withResources(
+      SQLExecution.withSQLConfPropagated(session) {
+        QueryExecution.prepareExecutedPlan(session, df.queryExecution.sparkPlan)
+          .executeCollect().map(toRow)
+      }))
+  }
 
   /** A Catalyst expression as a Column, and a Column's expression: how
     * operators build graft's native kernels with no function lookup. */

@@ -12,6 +12,7 @@ object TestSession {
     .config("spark.sql.extensions", "graft.GraftExtensions")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
